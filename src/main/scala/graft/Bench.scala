@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line `{"metric":...,"queries":{name:sec,...}}`.
@@ -71,30 +72,13 @@ import org.apache.spark.sql.SparkSession
   * truncated the r9 headline, so the file is now the artifact of record.
   * Stdout still carries the contract line, printed LAST so a tail capture
   * keeps the headline.
+  *
+  * Failures are counted, never timed: a query (or warm-up, or rerun) that
+  * throws gets no reading, is listed under `failed` in every output line,
+  * stays out of totals and rerun logic, and the main exits 1 once the
+  * artifact is written.
   */
 object Bench {
-
-  private def newSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkEntry.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The bounded second-phase global ranks (Sampling.weightedSample /
-    // capPerStratum, TextAnalysis.bm25TopK — inputs provably ≤
-    // n×partitions / k rows; see SCALE.md "bounded global ranks") trip
-    // WindowExec's blanket all-to-one warning on every plan build; at
-    // bench/production volume that buries real signals, so demote that
-    // one logger. A constant partition key cannot silence it instead:
-    // EliminateWindowPartitions folds it away.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    spark
-  }
 
   /** Process CPU time in seconds (-1 if the platform bean is unavailable). */
   private def cpuSeconds(): Double =
@@ -147,19 +131,52 @@ object Bench {
   final case class Reading(name: String, wall: Double, cpu: Double,
       gc: Double, peakMb: Long)
 
-  private def time(spark: SparkSession, sfDir: String, qnames: Seq[String],
-                   isolate: Boolean = false): Seq[Reading] =
-    qnames.map { name =>
-      if (isolate) spark.catalog.clearCache()
+  /** One reading for `name`, or None when it failed. `prepare` runs
+    * untimed (a build the timed part probes) and returns the query, which
+    * is forced through a noop write inside the clock. A failure is printed
+    * and left to the caller to list: it is counted, never timed.
+    */
+  private[graft] def timeOne(name: String)(prepare: => () => DataFrame): Option[Reading] =
+    try {
+      val query = prepare
       heapPools.foreach(_.resetPeakUsage())
       val g0 = gcSeconds()
       val c0 = cpuSeconds()
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-      Reading(name, (System.nanoTime() - t0) / 1e9, cpuSeconds() - c0,
-        gcSeconds() - g0, peakHeapMb())
+      query().write.format("noop").mode("overwrite").save()
+      Some(Reading(name, (System.nanoTime() - t0) / 1e9, cpuSeconds() - c0,
+        gcSeconds() - g0, peakHeapMb()))
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: $e")
+        None
     }
+
+  /** The readings of the names that ran, and the names that failed. */
+  private[graft] def time(spark: SparkSession, qnames: Seq[String],
+      isolate: Boolean = false)(query: String => DataFrame): (Seq[Reading], Seq[String]) = {
+    val out = qnames.map { name =>
+      if (isolate) spark.catalog.clearCache()
+      name -> timeOne(name)(() => query(name))
+    }
+    (out.flatMap(_._2), out.collect { case (name, None) => name })
+  }
+
+  private def timeQueries(spark: SparkSession, sfDir: String, qnames: Seq[String],
+      isolate: Boolean = false): (Seq[Reading], Seq[String]) =
+    time(spark, qnames, isolate)(SparkEntry.queries(_)(spark, sfDir))
+
+  /** JIT + parquet-footer warmup on the cheap headline head, so timings
+    * measure the engine, not first-run class loading. Returns the failed
+    * warm-up's name (`warmup:<query>`), if it failed.
+    */
+  private[graft] def warmUp(spark: SparkSession, dir: String): Seq[String] = {
+    val q = SparkEntry.benchQueries.head
+    timeOne(s"warmup:$q")(() => SparkEntry.queries(q)(spark, dir)).fold(Seq(s"warmup:$q"))(_ => Nil)
+  }
+
+  private def failedJson(failed: Seq[String]): String =
+    failed.map("\"" + _ + "\"").mkString("[", ",", "]")
 
   private def json(r: Seq[(String, Double)]): String =
     r.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
@@ -214,10 +231,11 @@ object Bench {
     } finally java.nio.file.Files.deleteIfExists(outFile)
   }
 
-  /** Run one extras family in a fresh child JVM; returns the readings, or
-    * None if the child could not run (caller falls back in-process).
+  /** Run one extras family in a fresh child JVM; returns the readings and
+    * the failed names, or None if the child could not run (caller falls
+    * back in-process).
     */
-  private def runGroupInChild(fam: String, qs: Seq[String]): Option[Seq[Reading]] = {
+  private def runGroupInChild(fam: String, qs: Seq[String]): Option[(Seq[Reading], Seq[String])] = {
     val outFile = java.nio.file.Files.createTempFile(s"bench_$fam", ".json")
     val logDir = new java.io.File("target/bench_logs")
     logDir.mkdirs()
@@ -240,7 +258,9 @@ object Bench {
       val m = pat.findAllMatchIn(txt)
         .map(x => x.group(1) -> Reading(x.group(1), x.group(2).toDouble,
           x.group(3).toDouble, x.group(4).toDouble, x.group(5).toLong)).toMap
-      if (qs.forall(m.contains)) Some(qs.map(m)) else {
+      val failed = "\"failed\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt).toSeq
+        .flatMap(f => "\"([^\"]+)\"".r.findAllMatchIn(f.group(1)).map(_.group(1)))
+      if (qs.forall(q => m.contains(q) || failed.contains(q))) Some((qs.flatMap(m.get), failed)) else {
         System.err.println(s"[bench] child $fam output incomplete (see $log)"); None
       }
     } catch {
@@ -349,30 +369,35 @@ object Bench {
     sys.env.get("SPARK_GRAFT_BENCH_GROUP").foreach { csv =>
       val out = sys.env("SPARK_GRAFT_BENCH_OUT")
       val qs = csv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-      val spark = newSession()
-      // JIT + parquet-footer warmup on the cheap headline head so child
-      // numbers measure the query, not first-run class loading (same
-      // warmup ONLY-mode rep-1 cold runs get).
-      try SparkEntry.queries(SparkEntry.benchQueries.head)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      val r = time(spark, sfDir, qs, isolate = true)
-      val body = r.map { rd =>
+      val spark = SparkEntry.localSession(32)
+      // same warmup ONLY-mode rep-1 cold runs get; the child exits 0 and
+      // lists failures in its file — the parent lists them and sets the
+      // exit code
+      val warmFailed = warmUp(spark, sfDir)
+      val (r, failed) = timeQueries(spark, sfDir, qs, isolate = true)
+      val body = (r.map { rd =>
         "\"" + rd.name +
           f"""\":{"w":${rd.wall}%.3f,"c":${rd.cpu}%.3f,"g":${rd.gc}%.3f,"h":${rd.peakMb}}"""
-      }.mkString("{", ",", "}")
+      } :+ s""""failed":${failedJson(warmFailed ++ failed)}""").mkString("{", ",", "}")
       java.nio.file.Files.write(java.nio.file.Paths.get(out),
         body.getBytes("UTF-8"))
       spark.stop()
       return
     }
 
-    val spark = newSession()
+    val spark = SparkEntry.localSession(32)
     val names = SparkEntry.benchQueries
-    // JIT + parquet-footer warmup on a cheap query so timings measure the
-    // engine, not first-run class loading.
-    try SparkEntry.queries(names.head)(spark, sfDir).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    // every failed name, in run order: listed in the artifact, kept out of
+    // totals and reruns, and the exit code once the artifact is written
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
+    failed ++= warmUp(spark, sfDir)
+    def finish(): Unit = {
+      spark.stop()
+      if (failed.nonEmpty) {
+        System.err.println(s"[bench] ${failed.size} failed: ${failed.mkString(", ")}")
+        sys.exit(1)
+      }
+    }
 
     // dev mode for per-op variance brackets: SPARK_GRAFT_BENCH_ONLY=a,b
     // [SPARK_GRAFT_BENCH_REPS=3] runs just those queries N times each and
@@ -383,15 +408,18 @@ object Bench {
       val qs = csv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
       val unknown = qs.filterNot(SparkEntry.queries.contains)
       require(unknown.isEmpty, s"unknown bench queries: ${unknown.mkString(", ")}")
-      val runs = (1 to reps).map(_ => time(spark, sfDir, qs))
+      val runs = (1 to reps).map { _ =>
+        val (r, f) = timeQueries(spark, sfDir, qs)
+        failed ++= f
+        r
+      }
       val byQ = qs.map { q =>
-        val walls = runs.map(_.find(_.name == q).get.wall)
-        val cpus = runs.map(_.find(_.name == q).get.cpu)
-        "\"" + q + "\":{\"wall\":[" + walls.map(t => f"$t%.3f").mkString(",") +
-          "],\"cpu\":[" + cpus.map(t => f"$t%.3f").mkString(",") + "]}"
+        val rs = runs.flatMap(_.find(_.name == q))
+        "\"" + q + "\":{\"wall\":[" + rs.map(r => f"${r.wall}%.3f").mkString(",") +
+          "],\"cpu\":[" + rs.map(r => f"${r.cpu}%.3f").mkString(",") + "]}"
       }.mkString("{", ",", "}")
-      println(s"""{"metric":"reps","reps":$reps,"queries":$byQ,"sf":"$sfDir"}""")
-      spark.stop()
+      println(s"""{"metric":"reps","reps":$reps,"queries":$byQ,"failed":${failedJson(failed.toSeq)},"sf":"$sfDir"}""")
+      finish()
       return
     }
 
@@ -408,9 +436,11 @@ object Bench {
       require(unknown.isEmpty, s"unknown bench queries: ${unknown.mkString(", ")}")
       val solo = qs.flatMap { q =>
         val r = runGroupInChild(s"solo_$q", Seq(q))
-        r.foreach(rd => System.err.println(
-          f"[bench] solo $q%-28s ${rd.head.wall}%7.2f s (gc ${rd.head.gc}%5.2f)"))
-        r.map(rd => q -> rd.head)
+        r.foreach { case (_, f) => failed ++= f }
+        val rd = r.flatMap(_._1.headOption)
+        rd.foreach(rd => System.err.println(
+          f"[bench] solo $q%-28s ${rd.wall}%7.2f s (gc ${rd.gc}%5.2f)"))
+        rd.map(q -> _)
       }
       val out = solo.map { case (q, rd) =>
         "\"" + q + f"""\":{"wall":${rd.wall}%.3f,"cpu":${rd.cpu}%.3f,"gc":${rd.gc}%.3f}"""
@@ -418,8 +448,8 @@ object Bench {
       new java.io.File("target").mkdirs()
       java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_solo.json"),
         out.getBytes("UTF-8"))
-      println(s"""{"metric":"solo","n":${solo.size},"out":"target/bench_solo.json"}""")
-      spark.stop()
+      println(s"""{"metric":"solo","n":${solo.size},"failed":${failedJson(failed.toSeq)},"out":"target/bench_solo.json"}""")
+      finish()
       return
     }
 
@@ -432,7 +462,8 @@ object Bench {
     // hold; flipping isolation on now would re-baseline all 11 headline
     // numbers mid-optimization-phase for zero information. Solo-cold truth
     // lives in BRACKETS.json's `solo` column (SPARK_GRAFT_BENCH_SOLO).
-    val results3 = time(spark, sfDir, names)
+    val (results3, headlineFailed) = timeQueries(spark, sfDir, names)
+    failed ++= headlineFailed
     val results = results3.map(r => r.name -> r.wall)
     val resultsCpu = results3.map(r => r.name -> r.cpu)
     val resultsGc = results3.map(r => r.name -> r.gc)
@@ -455,7 +486,8 @@ object Bench {
       .flatMap { b =>
         System.err.println(f"[bench] headline total $total%.2f s > 1.5x " +
           f"committed median ${b.fam}%.2f s — rerunning headline family in a fresh child")
-        runGroupInChild("headline", names).map { rr =>
+        runGroupInChild("headline", names).map { case (rr, rf) =>
+          failed ++= rf.map("rerun:" + _)
           val rTotal = rr.map(_.wall).sum
           val per = rr.map(r => "\"" + r.name + f"\":${r.wall}%.3f")
             .mkString("{", ",", "}")
@@ -469,8 +501,8 @@ object Bench {
     // extras — the end-of-round triple run that seeds the __headline_*
     // brackets without paying the ~30-min extras sweep.
     if (sys.env.get("SPARK_GRAFT_BENCH_HEADLINE").contains("1")) {
-      println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${json(results)},"queries_cpu":${json(resultsCpu)},"queries_gc":${json(resultsGc)},"headline_rerun":$headlineRerunJson,"sf":"$sfDir"}""")
-      spark.stop()
+      println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${json(results)},"queries_cpu":${json(resultsCpu)},"queries_gc":${json(resultsGc)},"headline_rerun":$headlineRerunJson,"failed":${failedJson(failed.toSeq)},"sf":"$sfDir"}""")
+      finish()
       return
     }
 
@@ -491,12 +523,13 @@ object Bench {
       val (load0, mem0) = (loadAvg(), memAvailMb())
       val t0 = System.nanoTime()
       val viaChild = if (noChild) None else runGroupInChild(fam, qs)
-      val r = viaChild.getOrElse {
+      val (r, famFailed) = viaChild.getOrElse {
         if (!noChild) System.err.println(s"[bench] $fam: in-process fallback")
         spark.catalog.clearCache()
         System.gc()
-        time(spark, sfDir, qs, isolate = true)
+        timeQueries(spark, sfDir, qs, isolate = true)
       }
+      failed ++= famFailed
       val wall = (System.nanoTime() - t0) / 1e9
       val (load1, mem1) = (loadAvg(), memAvailMb())
       famModes(fam) = if (viaChild.isDefined) "child-jvm" else "in-process"
@@ -556,8 +589,10 @@ object Bench {
       val b = brackets(r.name)
       System.err.println(f"[bench] rerun ${r.name}: first ${r.wall}%.2f s vs " +
         f"family bracket ${b.fam}%.2f — fresh child")
-      runGroupInChild(s"rerun_${r.name}", Seq(r.name)).map { rr =>
-        val r2 = rr.head
+      runGroupInChild(s"rerun_${r.name}", Seq(r.name)).flatMap { case (rr, rf) =>
+        failed ++= rf.map("rerun:" + _)
+        rr.headOption
+      }.map { r2 =>
         val soloJson = b.solo.map(s =>
           f""","bracket_solo":$s%.3f,"rerun_vs_solo":${r2.wall / s}%.2f""").getOrElse("")
         r.name -> (f"""{"bracket_family":${b.fam}%.3f$soloJson,""" +
@@ -610,7 +645,7 @@ object Bench {
         brackets.get(s"__headline_${r.name}").map(b => r.wall / b.fam)))
     System.err.println(s"[bench] run_quality: $runQualityJson")
     val fullJson =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${json(results)},"queries_cpu":${json(resultsCpu)},"queries_gc":${json(resultsGc)},"headline_rerun":$headlineRerunJson,"extra_queries":${json(extras)},"extra_queries_cpu":${json(extrasCpu)},"extra_queries_gc":${json(extrasGc)},"extra_queries_peak_mb":$peakJson,"extras_isolation":"$isolation","extras_isolation_families":$famJson,"families":$famDiagJson,"reruns":$rerunsJson,"reruns_skipped":$rerunsSkippedJson,"run_quality":$runQualityJson,"serve_qps":$serveJson,"serve_rerun":$serveRerunJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${json(results)},"queries_cpu":${json(resultsCpu)},"queries_gc":${json(resultsGc)},"headline_rerun":$headlineRerunJson,"extra_queries":${json(extras)},"extra_queries_cpu":${json(extrasCpu)},"extra_queries_gc":${json(extrasGc)},"extra_queries_peak_mb":$peakJson,"extras_isolation":"$isolation","extras_isolation_families":$famJson,"families":$famDiagJson,"reruns":$rerunsJson,"reruns_skipped":$rerunsSkippedJson,"run_quality":$runQualityJson,"serve_qps":$serveJson,"serve_rerun":$serveRerunJson,"failed":${failedJson(failed.toSeq)},"sf":"$sfDir"}"""
     // File of record (the driver's stdout tail truncated the r9 headline).
     new java.io.File("target").mkdirs()
     java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_result.json"),
@@ -621,7 +656,7 @@ object Bench {
     // Compact headline LAST so any tail capture keeps it even when the
     // full line exceeds the capture window.
     val contractLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${json(results)},"sf":"$sfDir","full_result":"BENCH_FULL.json"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${json(results)},"failed":${failedJson(failed.toSeq)},"sf":"$sfDir","full_result":"BENCH_FULL.json"}"""
     println(contractLine)
     // r18 (17 rounds of PERF artifacts carry "parsed": null — the driver
     // has never recovered the contract line from sbt-decorated stdout):
@@ -631,6 +666,6 @@ object Bench {
     System.err.println(s"BENCH_JSON $contractLine")
     java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_line.json"),
       contractLine.getBytes("UTF-8"))
-    spark.stop()
+    finish()
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** Session settings every entry point needs (the driver may build its own
-    * session; Verify/Bench call this).
+    * session; [[localSession]] calls this).
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder = {
     val base = b
@@ -36,11 +36,53 @@ object SparkEntry {
     // experiment, spark.graft.corpusCacheLevel for cache footprint). The
     // driver's bench sets nothing, so recorded numbers stay comparable.
     sys.env.get("SPARK_GRAFT_CONF").fold(base) { csv =>
-      csv.split(';').filter(_.contains('=')).foldLeft(base) { (bb, kv) =>
-        val i = kv.indexOf('=')
-        bb.config(kv.take(i).trim, kv.drop(i + 1).trim)
-      }
+      val (applied, dropped) = confOverlay(csv)
+      System.err.println("[graft] SPARK_GRAFT_CONF applied: " +
+        applied.map { case (k, v) => s"$k=$v" }.mkString("[", ", ", "]") +
+        (if (dropped.isEmpty) "" else
+          dropped.map("'" + _ + "'").mkString("; dropped malformed: [", ", ", "]")))
+      applied.foldLeft(base) { case (bb, (k, v)) => bb.config(k, v) }
     }
+  }
+
+  /** Splits a `SPARK_GRAFT_CONF` value into the `(key, value)` pairs it
+    * applies and the segments it drops. Segments are `;`-separated
+    * `key=value`; a non-blank segment with no `=` or an empty key is
+    * malformed. Blank segments (a trailing `;`) are neither.
+    */
+  private[graft] def confOverlay(csv: String): (Seq[(String, String)], Seq[String]) = {
+    val (ok, bad) = csv.split(';').toSeq.map(_.trim).filter(_.nonEmpty)
+      .partition(_.indexOf('=') > 0)
+    (ok.map { kv =>
+      val i = kv.indexOf('=')
+      kv.take(i).trim -> kv.drop(i + 1).trim
+    }, bad)
+  }
+
+  /** The local session every main builds. `SPARK_GRAFT_CPUS` (else
+    * `defaultCpus`) sets both the `local[n]` master and the shuffle
+    * partitions; the UI is off; [[configure]] adds the engine confs.
+    */
+  def localSession(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = configure(
+      SparkSession.builder()
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // The bounded second-phase global ranks (Sampling.weightedSample /
+    // capPerStratum, TextAnalysis.bm25TopK — inputs provably ≤
+    // n×partitions / k rows; see SCALE.md "bounded global ranks") trip
+    // WindowExec's blanket all-to-one warning on every plan build; at
+    // bench/production volume that buries real signals, so demote that
+    // one logger. A constant partition key cannot silence it instead:
+    // EliminateWindowPartitions folds it away.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+    spark
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

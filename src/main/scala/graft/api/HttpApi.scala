@@ -32,10 +32,13 @@ final class HttpApi(store: SeriesStore, token: Option[String] = None, maxRows: I
   private def translations = TranslationLog.translations
   private def fallbacks = TranslationLog.fallbacks
   private var server: HttpServer = _
+  // request handlers; non-daemon threads, so stop() must shut it down or
+  // a JVM whose main returns never exits
+  private val pool = Executors.newFixedThreadPool(4)
 
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    server.setExecutor(pool)
     server.createContext("/status", (ex: HttpExchange) => respond(ex, 200, """{"status":"ok"}"""))
     server.createContext("/metrics", (ex: HttpExchange) => handleSafely(ex)(handleMetrics))
     // debug endpoints (http.zig:87-119): compat stats + pg catalog dump
@@ -59,7 +62,10 @@ final class HttpApi(store: SeriesStore, token: Option[String] = None, maxRows: I
     server.getAddress.getPort
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    pool.shutdownNow()
+  }
 
   // ------------------------------------------------------------- handlers
 

@@ -82,15 +82,4 @@ object Tables {
       col("value").as("value")
     )
   }
-
-  /** Tag catalog: distinct (series, series_id, tags) — the Spark-side
-    * replacement for the reference's inverted tag index
-    * (`/root/reference/src/sydra/storage/tags.zig:4-76`): a tiny dimension
-    * table that predicate pushdown + broadcast semi-join handles at any
-    * scale.
-    */
-  def seriesCatalog(spark: SparkSession, dir: String): DataFrame =
-    seriesView(spark, dir).groupBy("series_id")
-      .agg(first("series").as("series"), first("tags").as("tags"))
-      .select("series", "series_id", "tags")
 }

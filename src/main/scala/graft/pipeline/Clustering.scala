@@ -103,10 +103,12 @@ object Clustering {
     */
   def fitCentroids(emb: DataFrame, k: Int, iters: Int,
       plusPlusSeeding: Boolean = false): Array[Seq[Double]] = {
-    // skip the fit-scoped persist when the caller already holds the input
-    // cached (Pq.fit's block slices, IvfIndex.buildPq's shared parsed
-    // corpus — r18): re-persisting a cheap projection of a cached frame
-    // only duplicates the columnar copy.
+    // skip the fit-scoped persist when the caller passes the cached frame
+    // ITSELF (IvfIndex.build/buildPq's shared parsed corpus — r18):
+    // re-persisting it would only duplicate the columnar copy.
+    // `storageLevel` sees the frame's own cache entry only, so a
+    // projection or slice of a cached frame (Pq.fit's block slices) reads
+    // as uncached and is persisted again here.
     val preCached = emb.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val e =
       if (preCached) parsed(emb)

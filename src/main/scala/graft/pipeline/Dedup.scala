@@ -456,7 +456,7 @@ object Dedup {
     * quadratic again (n²/k). The gate's k=8 is sized for the sf0.01/0.1
     * corpus (~60–250 vectors/cluster); at 100 TB pick k ≈ n / 200 and
     * feed [[Clustering.fitCentroids]] a sampled fit if the k×dim driver
-    * state matters. ScaleSmoke's `semdedup` op records the k∝n curve
+    * state matters. ScaleBench's `semdedup` op records the k∝n curve
     * (docs ×2 ⇒ time ~×2, SCALE.md).
     */
   def semDedup(emb: DataFrame, k: Int = 8, iters: Int = 2,

@@ -90,9 +90,9 @@ object Graph {
     // round's unmaterialized checkpoint chains into the next round's
     // stage materialization and the deferred result stages re-enter
     // instead of amortizing. (The convergence-probe loops in
-    // Dedup/coreNumbers/kCore are different: there a count/isEmpty action
-    // follows the cut in the SAME round, so the lazy mark rides that job
-    // for free — measured faster there, slower here.)
+    // Dedup/coreNumbers/kCore, where a count/isEmpty action follows the
+    // cut in the SAME round, were tried lazy too and measured slower as
+    // well — 1.01–1.25× warm, OPTIMIZATION_r18.md §3 — so they stay eager.)
     else df.localCheckpoint(true)
 
   /** Personalized PageRank: teleport mass goes to the `seeds` node set

@@ -618,7 +618,8 @@ object Similarity {
     // it first (localCheckpoint/persist): static estimates of a literal
     // projection read ~0 bytes, and Catalyst then broadcasts the
     // candidate frame itself — measured as an 8 GiB-driver OOM in the
-    // ScaleSmoke clustered fixture before it was materialized. (A
+    // ScaleBench `knn_graph_banded_clustered` fixture before it was
+    // materialized. (A
     // blanket shuffle_hash pin was tried and rejected: it forces three
     // shuffles of the candidate volume that the broadcast plan never
     // pays — 43→131 s vs 23→31 s on the uniform smoke curve.)

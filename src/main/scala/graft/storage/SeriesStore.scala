@@ -135,9 +135,13 @@ final class SeriesStore(val spark: SparkSession, val root: String,
 
   /** Append points. Input needs (series, tags, time, value); series_id/seq
     * derived here. Mirrors flush: per-series sort by ts, hour bucketing
-    * (`engine.zig:317-369`).
+    * (`engine.zig:317-369`). A missing column or one whose type differs
+    * from [[schema]] is rejected before anything is written: parquet keeps
+    * whatever type it is given, so a DOUBLE `time` would write segments
+    * every later scan rejects.
     */
   def append(points: DataFrame): Unit = {
+    SeriesStore.checkPointTypes(points.schema, schema)
     // seq is a strictly-increasing PER-BATCH constant: later appends always
     // win compaction's last-wins dedup over earlier ones (the property the
     // reference's WAL/manifest order provides). Order among duplicate keys
@@ -255,6 +259,28 @@ final class SeriesStore(val spark: SparkSession, val root: String,
 }
 
 object SeriesStore {
+  /** Throws IllegalArgumentException naming the first of series, tags,
+    * time, value that `input` lacks or types differently from `store`
+    * (nullability aside).
+    */
+  private def checkPointTypes(input: StructType, store: StructType): Unit = {
+    def loose(t: DataType): DataType = t match {
+      case m: MapType => MapType(m.keyType, m.valueType, valueContainsNull = true)
+      case other => other
+    }
+    Seq("series", "tags", "time", "value").foreach { c =>
+      val want = store(c).dataType
+      input.find(_.name.equalsIgnoreCase(c)) match {
+        case None => throw new IllegalArgumentException(
+          s"append needs column '$c' (${want.simpleString}); got ${input.simpleString}")
+        case Some(f) if loose(f.dataType) != loose(want) =>
+          throw new IllegalArgumentException(
+            s"append column '$c' is ${f.dataType.simpleString}, the store's is ${want.simpleString}")
+        case _ =>
+      }
+    }
+  }
+
   private val lastSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Strictly increasing, wall-clock anchored (so ordering also holds

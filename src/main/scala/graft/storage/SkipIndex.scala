@@ -453,8 +453,8 @@ object SkipIndex {
   /** Whether the manifest carries the r16 `k=v` tag bloom — memoized
     * like [[hasNameBloom]]. Scans themselves tolerate its absence
     * (tag pruning just contributes nothing); this is for callers that
-    * want to know whether tag probes will actually prune (ScaleSmoke's
-    * curve setup, operator tooling).
+    * want to know whether tag probes will actually prune (operator
+    * tooling; ScaleBench's `tag_skip_probe` builds a fresh manifest).
     */
   def hasTagBloom(spark: SparkSession, manifestDir: String): Boolean =
     MetaCache.cached(manifestDir, "hasTagBloom") {

@@ -618,7 +618,7 @@ object Engine {
       // is the inclusive range [elo, ehi - 1]. Route through the skip
       // manifest when one exists: scanRange's spark.read.parquet(segDir)
       // must LIST the whole segments table before pruning — at 100 TB
-      // (or ScaleSmoke's 3,400 hour dirs: measured 16 s vs 2 s) that
+      // (or the ScaleBench store's 3,400 hour dirs: measured 16 s vs 2 s) that
       // per-query listing dwarfs the ≤24-hour edge read the hybrid is
       // supposed to be, while the manifest hands back the edge hours'
       // explicit file list for one metadata read. Pruning is a superset

@@ -59,8 +59,6 @@ object FunctionRegistry {
 
   def isAggregate(name: String): Boolean =
     lookup(name).exists(_.kind == Aggregate)
-  def isWindow(name: String): Boolean =
-    lookup(name).exists(_.kind == WindowFn) || name.equalsIgnoreCase("fill_forward")
 
   /** Arity check → invalid_function_arity (`functions.zig:84-149`). */
   def checkArity(name: String, n: Int): Unit = lookup(name) match {

@@ -270,8 +270,4 @@ final class Parser(tokens: Seq[Token]) {
 object Parser {
   def parse(input: String): Statement =
     new Parser(Lexer.tokenize(input)).parseStatement()
-  def parseExpression(input: String): Expr = {
-    val p = new Parser(Lexer.tokenize(input))
-    p.parseExpr()
-  }
 }

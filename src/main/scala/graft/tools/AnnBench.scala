@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.pipeline.IvfIndex
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** ANN serving benchmark: build the at-rest IVFPQ index once, then
@@ -16,14 +15,7 @@ import org.apache.spark.sql.functions.col
 object AnnBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkEntry.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession(32)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val nVec = emb.count()
     val idx = java.nio.file.Files.createTempDirectory("graft-annbench").toString + "/index"

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.api.{HttpApi, PgWireServer}
 import graft.storage.{Config, Ingest, Maintenance, SeriesStore, SydraImport}
-import org.apache.spark.sql.SparkSession
 
 /** Unified CLI mirroring the reference's subcommand surface
   * (`/root/reference/src/sydra/server.zig:9-31`):
@@ -27,7 +26,7 @@ object Cli {
   def main(args: Array[String]): Unit = {
     val cfg = Config.loadOrDefault()
     val cmd = args.headOption.getOrElse("serve")
-    val spark = session()
+    val spark = graft.SparkEntry.localSession(4)
     val store = new SeriesStore(spark, cfg.dataDir)
     try run(cmd, args.drop(1), cfg, store)
     finally if (cmd != "serve" && cmd != "pgwire") spark.stop()
@@ -139,12 +138,4 @@ object Cli {
       ()
     }
   }
-
-  private def session(): SparkSession =
-    graft.SparkEntry.configure(
-      SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
 }

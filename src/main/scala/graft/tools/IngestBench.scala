@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import graft.storage.SeriesStore
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ingest throughput benchmark mirroring the reference harness shape
@@ -16,14 +15,7 @@ object IngestBench {
   def main(args: Array[String]): Unit = {
     val ops = args.headOption.map(_.toLong).getOrElse(200000L)
     val nSeries = args.lift(1).map(_.toInt).getOrElse(128)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkEntry.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession(32)
     val root = java.nio.file.Files.createTempDirectory("graft-ingest-bench").toString
     val store = new SeriesStore(spark, root)
     // one day of data spread over nSeries series, ~ops points

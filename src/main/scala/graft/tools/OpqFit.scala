@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Train the OPQ rotation on the embeddings table and record it as
   * `OPQ_ROTATION.txt` (one row per line, 1e-6-rounded — the frozen
@@ -14,14 +13,7 @@ import org.apache.spark.sql.SparkSession
 object OpqFit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkEntry.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession(32)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val r = graft.pipeline.Pq.fitOpq(emb, m = 4, ksub = 16, iters = 1, sweeps = 2)
     val out = args.headOption.getOrElse("OPQ_ROTATION.txt")

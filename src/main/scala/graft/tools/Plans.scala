@@ -2,21 +2,46 @@ package graft.tools
 
 import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
-/** Writes PLANS.md: the formatted physical plan of each headline query —
-  * the artifact to eyeball for pushdown/pruning/broadcast/top-K shape.
+/** Formatted physical plans of registry queries.
+  *
+  *  - `Plans [sfDir]` writes PLANS.md: the headline queries plus the
+  *    listed shape-critical gates — the artifact to eyeball for
+  *    pushdown/pruning/broadcast/top-K shape.
+  *  - `Plans <sfDir> <outDir> <suffix> q...` writes each named query's
+  *    plan to `<outDir>/<q>_<suffix>.txt` — the before/after dumps that
+  *    back a plan claim (e.g. `plans/r17/`).
   */
 object Plans {
+  private def plan(spark: SparkSession, sfDir: String, name: String): String =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkEntry.configure(
-      SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val dump = args.drop(1).toList
+    if (dump.nonEmpty && dump.size < 3) {
+      System.err.println(s"usage: Plans [sfDir] | Plans <sfDir> <outDir> <suffix> q...  (got: ${args.mkString(" ")})")
+      sys.exit(2)
+    }
+    val unknown = dump.drop(2).filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = SparkEntry.localSession(4)
+    dump match {
+      case outDir :: suffix :: names =>
+        new java.io.File(outDir).mkdirs()
+        names.foreach { n =>
+          val txt = plan(spark, sfDir, n)
+          Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), txt)
+          println(s"[plans] wrote $outDir/${n}_$suffix.txt (${txt.length} chars)")
+        }
+      case _ => writePlansMd(spark, sfDir)
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(spark: SparkSession, sfDir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the headline queries\n\n")
     sb.append(s"Generated by `graft.tools.Plans` on `$sfDir`. The properties to\n")
@@ -130,12 +155,9 @@ object Plans {
           "q_sql_tag_skip_or", "q_sql_rollup_edge_window")
         .filterNot(SparkEntry.benchQueries.contains)
     names.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
-        .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
+      sb.append(s"\n## $name\n\n```\n${plan(spark, sfDir, name)}```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${names.size} queries)")
-    spark.stop()
   }
 }

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.storage.{SeriesStore, SketchCells, SkipIndex}
 import graft.sydraql.{CompileOptions, Engine}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit, map}
 
 /** Dashboard-QPS serving benchmark — the latency number the cell tier
@@ -81,15 +80,8 @@ object ServeBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_SERVE_REPS", "20").toInt
-    val spark = graft.SparkEntry.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession(32)
 
     // the gate fixture store: events → (series=event_type, tag user=%8)
     val tb = System.nanoTime()

@@ -100,6 +100,24 @@ class ApiSpec extends AnyFunSuite {
     } finally TranslationLog.enabled = true
   }
 
+  test("stop() ends the API's request threads, so a JVM whose main returns can exit") {
+    def liveUserThreads(): Set[Thread] = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && !t.isDaemon).toSet
+    }
+    val before = liveUserThreads()
+    val api = new HttpApi(new SeriesStore(spark, Files.createTempDirectory("graft-api").toString))
+    val port = api.start()
+    (1 to 8).foreach(_ => assert(get(port, "/status", tok = None).statusCode() === 200))
+    assert((liveUserThreads() -- before).nonEmpty, "serving runs on non-daemon threads")
+    api.stop()
+    val deadline = System.nanoTime() + 10000000000L
+    while ((liveUserThreads() -- before).nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    val left = liveUserThreads() -- before
+    assert(left.isEmpty, s"threads still alive after stop(): ${left.map(_.getName).mkString(", ")}")
+  }
+
   test("HTTP API: ingest -> range -> find -> sydraql -> sql -> metrics") {
     val store = new SeriesStore(spark, Files.createTempDirectory("graft-api").toString)
     val api = new HttpApi(store, token = Some("t0"))

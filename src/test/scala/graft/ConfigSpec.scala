@@ -1,6 +1,7 @@
 package graft
 
 import graft.storage.{Config, Ingest, SeriesStore}
+import graft.tools.ScaleBench
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -198,5 +199,39 @@ class ConfigSpec extends AnyFunSuite {
       (1 to 55).map(_ => (2.0, 0.8, 1.0)) ++ (1 to 105).map(_ => (1.1, 0.02, 1.0)),
       headlineContended)
     assert(!gcHeavy.contains("\"verdict\":\"contended\""))
+  }
+
+  test("a throwing bench query is listed as failed and gets no reading") {
+    val (readings, failed) = Bench.time(spark, Seq("ok", "boom", "ok2")) {
+      case "boom" => throw new IllegalStateException("query blew up")
+      case _ => spark.range(10).toDF()
+    }
+    assert(readings.map(_.name) === Seq("ok", "ok2"))
+    assert(failed === Seq("boom"))
+    // a failure inside the query's lazy plan (at the noop write) counts too
+    val (none, lateFailed) = Bench.time(spark, Seq("late")) { _ =>
+      spark.range(3).selectExpr("assert_true(id < 0) as x")
+    }
+    assert(none.isEmpty && lateFailed === Seq("late"))
+  }
+
+  test("ScaleBench rejects mult outside 1..26 and unknown names before any work") {
+    val ok = Seq("q_pricing_summary", "pagerank")
+    ScaleBench.check(1, ok)
+    ScaleBench.check(26, ok)
+    val over = intercept[IllegalArgumentException](ScaleBench.check(27, ok))
+    assert(over.getMessage.contains("1..26"))
+    intercept[IllegalArgumentException](ScaleBench.check(0, ok))
+    val unknown = intercept[IllegalArgumentException](
+      ScaleBench.check(2, Seq("q_pricing_summary", "no_such_op", "q_nope")))
+    assert(unknown.getMessage.contains("no_such_op, q_nope"))
+  }
+
+  test("SPARK_GRAFT_CONF parse: applied pairs and dropped malformed segments") {
+    val (applied, dropped) = SparkEntry.confOverlay(
+      " spark.a = 1 ;novalue; =orphan;spark.b=x=y;;spark.c= ;")
+    assert(applied === Seq("spark.a" -> "1", "spark.b" -> "x=y", "spark.c" -> ""))
+    assert(dropped === Seq("novalue", "=orphan"))
+    assert(SparkEntry.confOverlay("") === ((Nil, Nil)))
   }
 }

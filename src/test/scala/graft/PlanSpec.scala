@@ -380,7 +380,7 @@ class PlanSpec extends AnyFunSuite {
     assert(hdf.head().getDouble(0) === 8.0)
     // with a skip manifest present the edges route through its explicit
     // edge-hour file list (no full segments listing at plan time — the
-    // ScaleSmoke-measured 2×~8 s saving) and the answer is unchanged
+    // ScaleBench-measured 2×~8 s saving) and the answer is unchanged
     graft.storage.SkipIndex.build(store, graft.storage.SkipIndex.dirFor(store))
     val (hdf2, praw2) = planOf(
       s"select percentile_approx(value, 0.5) as p50a from cpu where time >= ${86400 + 3600} and time < ${3 * 86400}")

@@ -301,6 +301,25 @@ class StorageSpec extends AnyFunSuite {
     assert(cat(bucketed) === cat(flat))
   }
 
+  test("append rejects a wrong column type before writing; the store still scans") {
+    val store = new SeriesStore(spark, tmp())
+    Ingest.batch(store, writeNdjson(Seq(
+      """{"series":"cpu","ts":1000,"value":1.5,"tags":{"host":"a"}}""")))
+    val hours0 = store.partitions()
+    val doubleTime = spark.range(3).select(lit("cpu").as("series"),
+      map(lit("host"), lit("a")).as("tags"), (col("id") / 2 + 2000).as("time"),
+      col("id").cast("double").as("value"))
+    val e = intercept[IllegalArgumentException](store.append(doubleTime))
+    assert(e.getMessage.contains("'time'") && e.getMessage.contains("double") &&
+      e.getMessage.contains("bigint"), e.getMessage)
+    val noTags = spark.range(1).select(lit("cpu").as("series"), col("id").as("time"),
+      col("id").cast("double").as("value"))
+    assert(intercept[IllegalArgumentException](store.append(noTags)).getMessage.contains("'tags'"))
+    assert(store.partitions() === hours0)
+    assert(store.scan().select("time", "value").collect().map(r => (r.getLong(0), r.getDouble(1)))
+      .toSeq === Seq((1000L, 1.5)))
+  }
+
   test("reopening a store with a mismatched layout fails with an actionable message") {
     import spark.implicits._
     val pts = Seq(("m.a", Map("h" -> "1"), 1700000000L, Some(1.0)))
