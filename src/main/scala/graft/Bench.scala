@@ -112,7 +112,7 @@ object Bench {
   private def loadAvg(): Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString
       .split(" ").head.toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
 
   /** MemAvailable from /proc/meminfo, in MB (-1 if unreadable). */
   private def memAvailMb(): Long =
@@ -123,7 +123,7 @@ object Bench {
           l.split("\\s+")(1).toLong / 1024
       }.getOrElse(-1L)
       finally src.close()
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   /** One timed reading per query: wall, process-CPU delta, GC-time delta,
     * and peak heap MB over the query (pool peaks reset per query).
@@ -174,6 +174,20 @@ object Bench {
     val q = SparkEntry.benchQueries.head
     timeOne(s"warmup:$q")(() => SparkEntry.queries(q)(spark, dir)).fold(Seq(s"warmup:$q"))(_ => Nil)
   }
+
+  /** Best-effort duplicate of a result line under `target/`: stdout and
+    * BENCH_FULL.json are the outputs of record, so a failed copy is
+    * logged and must not skip the session stop or fail the run.
+    */
+  private def copyToTarget(name: String, content: String): Unit =
+    try {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
+      java.nio.file.Files.write(java.nio.file.Paths.get("target", name),
+        content.getBytes("UTF-8"))
+      ()
+    } catch {
+      case NonFatal(e) => System.err.println(s"[bench] target/$name not written: $e")
+    }
 
   private def failedJson(failed: Seq[String]): String =
     failed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -647,11 +661,9 @@ object Bench {
     val fullJson =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${json(results)},"queries_cpu":${json(resultsCpu)},"queries_gc":${json(resultsGc)},"headline_rerun":$headlineRerunJson,"extra_queries":${json(extras)},"extra_queries_cpu":${json(extrasCpu)},"extra_queries_gc":${json(extrasGc)},"extra_queries_peak_mb":$peakJson,"extras_isolation":"$isolation","extras_isolation_families":$famJson,"families":$famDiagJson,"reruns":$rerunsJson,"reruns_skipped":$rerunsSkippedJson,"run_quality":$runQualityJson,"serve_qps":$serveJson,"serve_rerun":$serveRerunJson,"failed":${failedJson(failed.toSeq)},"sf":"$sfDir"}"""
     // File of record (the driver's stdout tail truncated the r9 headline).
-    new java.io.File("target").mkdirs()
-    java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_result.json"),
-      fullJson.getBytes("UTF-8"))
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       fullJson.getBytes("UTF-8"))
+    copyToTarget("bench_result.json", fullJson)
     println(fullJson)
     // Compact headline LAST so any tail capture keeps it even when the
     // full line exceeds the capture window.
@@ -664,8 +676,7 @@ object Bench {
     // stderr line any tail-grep recovers without `[info] ` stripping, and
     // a file whose SOLE content is the line.
     System.err.println(s"BENCH_JSON $contractLine")
-    java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_line.json"),
-      contractLine.getBytes("UTF-8"))
+    copyToTarget("bench_line.json", contractLine)
     finish()
   }
 }

@@ -94,10 +94,19 @@ object SparkEntry {
     Registry.all.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
+    * the same parquet tables. Omitted for non-SQL-expressible ops. A
+    * lookup builds only the oracle it reads; iterating builds them all.
     */
   def oracleSql: Map[String, String] =
-    Registry.all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    new scala.collection.immutable.AbstractMap[String, String] {
+      private val qs = Registry.byName
+      def get(k: String): Option[String] = qs.get(k).flatMap(_.oracle.sql)
+      def iterator: Iterator[(String, String)] =
+        qs.iterator.flatMap { case (k, q) => q.oracle.sql.map(k -> _) }
+      def removed(k: String): Map[String, String] = iterator.toMap - k
+      def updated[V >: String](k: String, v: V): Map[String, V] =
+        iterator.toMap.updated(k, v)
+    }
 
   /** Headline subset for Bench. */
   def benchQueries: Seq[String] = Registry.all.filter(_.bench).map(_.name)

@@ -13,6 +13,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** The reference's HTTP surface rebuilt on the JDK server (zero extra
   * deps): ingest, range query, tag find, sydraQL, SQL-compat, metrics,
@@ -179,7 +180,7 @@ final class HttpApi(store: SeriesStore, token: Option[String] = None, maxRows: I
         phases.get(k).map(p => (p.endTimeMs - p.startTimeMs) * 1000).getOrElse(0L)
       stats.put("optimize_us", us("optimization"))
       stats.put("physical_us", us("planning"))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     stats.put("pipeline_us", pipelineUs)
     stats.put("rows_emitted", rows.length)
     stats.put("trace_id", res.stats.traceId)
@@ -197,7 +198,7 @@ final class HttpApi(store: SeriesStore, token: Option[String] = None, maxRows: I
           o.put("name", name)
           o.put("rows_out", rowsOut)
         }
-    } catch { case _: Throwable => () } // stats are best-effort
+    } catch { case NonFatal(_) => () } // stats are best-effort
     respond(ex, 200, mapper.writeValueAsString(out))
   }
 

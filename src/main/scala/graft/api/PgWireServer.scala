@@ -8,6 +8,7 @@ import java.util.concurrent.Executors
 import graft.storage.{Ingest, SeriesStore}
 import graft.sydraql.{CompileOptions, Engine, QueryError}
 import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 import PgProtocol._
 
@@ -52,7 +53,7 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
 
   def stop(): Unit = {
     if (server != null) server.close()
-    connections.forEach(s => try s.close() catch { case _: Throwable => () })
+    connections.forEach(s => try s.close() catch { case NonFatal(_) => () })
     pool.shutdownNow()
   }
 
@@ -63,11 +64,11 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
         connections.add(sock)
         // close the race with stop(): if it swept `connections` between
         // accept() and add(), this socket would otherwise leak its thread
-        if (server.isClosed) { try sock.close() catch { case _: Throwable => () }; return }
+        if (server.isClosed) { try sock.close() catch { case NonFatal(_) => () }; return }
         pool.submit(new Runnable {
           def run(): Unit =
             try handleConnection(sock)
-            catch { case _: Throwable => () } // connection-scoped; never kill the acceptor
+            catch { case NonFatal(_) => () } // connection-scoped; never kill the acceptor
             finally { connections.remove(sock); sock.close() }
         })
       }
@@ -736,7 +737,7 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
         writeNoticeResponse(out, s"operator=$name rows_out=$rowsOut elapsed_us=$elapsedUs")
         if (name.toLowerCase.contains("scan")) rowsScanned += math.max(rowsOut, 0L)
       }
-    } catch { case _: Throwable => () } // stats are best-effort
+    } catch { case NonFatal(_) => () } // stats are best-effort
 
     val streamMs = (System.nanoTime() - startNs) / 1000000
     writeNoticeResponse(out,

@@ -14,11 +14,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
+    oracle: Oracle,
     bench: Boolean = false,
     // timed by Bench under "extra_queries" — outside the
     // baseline-comparable total, watched for per-op regressions
     benchExtra: Boolean = false)
+
+/** A gate's DuckDB oracle SQL, built on first read: an oracle embedding
+  * a repo artifact (`q_ann_opq`'s frozen rotation) must not make listing
+  * the registry, or reading another gate's oracle, depend on that file.
+  * Every `Q(..., Some(sql), ...)` converts implicitly, unevaluated.
+  */
+final class Oracle(sql0: => Option[String]) {
+  lazy val sql: Option[String] = sql0
+}
+
+object Oracle {
+  import scala.language.implicitConversions
+  implicit def fromOption(sql: => Option[String]): Oracle = new Oracle(sql)
+}
 
 object Registry {
   def all: Seq[Q] =

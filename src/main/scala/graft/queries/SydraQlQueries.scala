@@ -533,7 +533,7 @@ object SydraQlQueries {
 
     // Value-stat skip routing through the LANGUAGE (r13): on a store
     // with a skip manifest, a top-level `value >= X` conjunct routes the
-    // scan through SkipIndex.thresholdScan — files whose max_value stat
+    // scan's probe through SkipIndex.scan — files whose max_value stat
     // cannot match are never opened (the anomaly sweep; StorageSpec pins
     // the file counts, this gate pins that routing never changes rows).
     Q("q_sql_value_skip",
@@ -1727,8 +1727,8 @@ object SydraQlQueries {
         graft.storage.SkipIndex.build(store, mdir)
         val sid = s.range(1).select(graft.core.Functions.seriesId(
           lit("click"), map(lit("user"), lit("3"))).as("sid")).head().getLong(0)
-        val probe = graft.storage.SkipIndex.probeScan(
-          store, mdir, T0 + 6 * 3600, T0 + 18 * 3600, sid)
+        val probe = graft.storage.SkipIndex.scan(store, mdir, graft.storage.ScanProbe(
+          lo = Some(T0 + 6 * 3600), hi = Some(T0 + 18 * 3600), seriesId = Some(sid)))
         probe.df.select(col("time"), col("value")).orderBy("time", "value")
       },
       Some(s"""$svSql
@@ -1747,8 +1747,8 @@ object SydraQlQueries {
         val store = rawFixture(s, dir, T0, T0 + 2 * 86400)
         val mdir = s"target/gate-tmp/skipv-${dir.replace('/', '_')}/m"
         graft.storage.SkipIndex.build(store, mdir)
-        val sweep = graft.storage.SkipIndex.thresholdScan(
-          store, mdir, T0, T0 + 86400, 99.0)
+        val sweep = graft.storage.SkipIndex.scan(store, mdir, graft.storage.ScanProbe(
+          lo = Some(T0), hi = Some(T0 + 86400), vlo = Some(99.0)))
         sweep.df.select(col("series"), col("time"), col("value"))
           .orderBy("series", "time", "value")
       },

@@ -360,14 +360,14 @@ object Maintenance {
       SketchCells.autoRefresh(store, hours.map(dayOf).distinct)
     }
 
-  /** What a [[deleteRowsBounded]] call did: which hour partitions were
+  /** What a [[deleteRows]] call did: which hour partitions were
     * rewritten, how many rows the rewrites removed (`deletedRows` —
     * derived per partition as metadata-count-before − survivors, so the
     * engine's DELETE response needs no separate matched-row scan), and —
     * when the discovery ran through the skip manifest — how many
     * candidate data files the manifest let it scan out of the store's
     * total (`scannedFiles = totalFiles = -1` on the unrouted path). The
-    * file counts exist so tests can PIN that a time-bounded delete's
+    * file counts exist so tests can PIN that a bounded delete's
     * discovery is pruned I/O, not a full-store scan.
     */
   final case class DeleteReport(rewrittenHours: Seq[Long],
@@ -377,55 +377,26 @@ object Maintenance {
     * the hour partitions that may contain matches — survivors for ALL of
     * them written in ONE job (r14), then swapped in per-partition with
     * the crash-safe rename discipline; derived tiers refreshed after.
+    *
+    * Affected-partition DISCOVERY reads [[SeriesStore.scanPruned]] of
+    * `probe` — the same pruned read as the matching SELECT (the engine
+    * builds both probes with one walker): skip-manifest file pruning on
+    * every probe dimension when the store has a manifest, hour-bucket
+    * pruning on the time bounds otherwise. `probe` must be implied by
+    * `predicate`; it prunes what is READ during discovery, never what is
+    * deleted — the exact predicate decides row fate on whatever survives
+    * pruning, so a too-wide probe costs I/O only.
     */
-  def deleteRows(store: SeriesStore, predicate: org.apache.spark.sql.Column): Unit = {
-    deleteRowsBounded(store, predicate, None, None); ()
-  }
-
-  /** [[deleteRows]] with the predicate's conservative time bounds made
-    * explicit (inclusive; the engine extracts them from the DELETE's
-    * WHERE conjuncts): affected-partition DISCOVERY consults the store's
-    * data-skipping manifest when one exists — candidate files prune on
-    * manifest time-range stats (one metadata read) before any data file
-    * is opened, the same routing the engine's SELECTs use — and falls
-    * back to hour-bucket partition arithmetic otherwise. A known
-    * single-series target (`seriesId`, the engine's `by_id` selector)
-    * additionally prunes on the manifest's series bloom. Bounds prune
-    * what is READ during discovery, never what is deleted: the exact
-    * predicate decides row fate on whatever survives pruning, so a
-    * too-wide bound costs I/O only.
-    */
-  def deleteRowsBounded(store: SeriesStore,
-      predicate: org.apache.spark.sql.Column,
-      loTs: Option[Long], hiTs: Option[Long],
-      seriesId: Option[Long] = None): DeleteReport = {
+  def deleteRows(store: SeriesStore, predicate: org.apache.spark.sql.Column,
+      probe: ScanProbe = ScanProbe()): DeleteReport = {
     val spark = store.spark
-    val skipDir = SkipIndex.dirFor(store)
-    val routed = (loTs.nonEmpty || hiTs.nonEmpty || seriesId.nonEmpty) &&
-      SkipIndex.exists(spark, skipDir)
-    val (discovery, scanned, totalF) =
-      if (routed) {
-        // a known single-series delete (`delete from by_id(N) …`) adds
-        // the manifest's series bloom to the time-overlap pruning — the
-        // same probe the engine's by_id SELECTs use
-        val s = seriesId match {
-          case Some(id) => SkipIndex.probeScan(store, skipDir,
-            loTs.getOrElse(Long.MinValue), hiTs.getOrElse(Long.MaxValue), id)
-          case None => SkipIndex.rangeScan(store, skipDir,
-            loTs.getOrElse(Long.MinValue), hiTs.getOrElse(Long.MaxValue))
-        }
-        (s.df, s.filesRead, s.filesTotal)
-      } else {
-        val base = store.scan()
-        val b1 = loTs.fold(base)(l =>
-          base.filter(col("hour_bucket") >= Math.floorDiv(l, 3600L) * 3600L))
-        (hiTs.fold(b1)(h => b1.filter(col("hour_bucket") <= h)), -1, -1)
-      }
+    val discovery = store.scanPruned(probe)
     // cast: the routed path re-infers hour_bucket from dir names (int
     // when values fit), the store schema carries it as long
-    val affected = discovery.filter(predicate)
+    val affected = discovery.df.filter(predicate)
       .select(col("hour_bucket").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
+    val (scanned, totalF) = (discovery.filesRead, discovery.filesTotal)
     if (affected.isEmpty) return DeleteReport(Nil, scanned, totalF)
     val segRoot = s"${store.root}/segments"
     recoverSwaps(spark, segRoot)

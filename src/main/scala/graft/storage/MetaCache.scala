@@ -28,7 +28,7 @@ package graft.storage
   * swap protocol's reader-quiescence stance).
   *
   * Query-scope stat batching (r16): one routed query hits several
-  * cached keys on the SAME dir (exists, filesTotal, hasNameBloom, the
+  * cached keys on the SAME dir (exists, filesTotal, manifest rows, the
   * cell tier's schema keys), and a per-lookup marker read re-adds the
   * per-query round-trips the memo exists to remove. [[Engine
   * .executeOnStore]] wraps each query in [[scoped]], which snapshots

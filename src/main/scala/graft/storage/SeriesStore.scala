@@ -214,13 +214,25 @@ final class SeriesStore(val spark: SparkSession, val root: String,
     * pruning on time (inclusive bounds, `segment.zig:156,172`).
     */
   def scanRange(startTs: Long, endTs: Long): DataFrame =
-    // floorDiv, not %: hour_bucket is written with pmod (floor semantics),
-    // so a negative (pre-1970) startTs must floor too or valid negative
-    // hour partitions get pruned away
     scan().filter(
-      col("hour_bucket") >= Math.floorDiv(startTs, 3600L) * 3600L &&
+      col("hour_bucket") >= SeriesStore.hourFloor(startTs) &&
         col("hour_bucket") <= endTs &&
         col("time") >= startTs && col("time") <= endTs)
+
+  /** Rows satisfying `probe`, pruned the store-convention way: through
+    * the skip manifest at [[SkipIndex.dirFor]] when one exists (files
+    * pruned on every probe dimension), else through hour-partition
+    * pruning on the probe's time bounds. Either way the probe's exact
+    * residual runs on what is read, and the frame carries `hour_bucket`.
+    * This is the one routed read behind the engine's SELECTs, the served
+    * hybrid's raw edges and DELETE discovery.
+    */
+  def scanPruned(probe: ScanProbe): SkipIndex.SkipScan = {
+    val dir = SkipIndex.dirFor(this)
+    if (probe.isEmpty || SkipIndex.exists(spark, dir)) SkipIndex.scan(this, dir, probe)
+    else SkipIndex.SkipScan(
+      scanRange(probe.startTs, probe.endTs).filter(probe.residual), -1, -1)
+  }
 
   /** The sydraQL source view (series, series_id, tags, time, value). */
   def source(): DataFrame = scan().select("series", "series_id", "tags", "time", "value")
@@ -279,6 +291,18 @@ object SeriesStore {
         case _ =>
       }
     }
+  }
+
+  /** The hour partition holding `ts` — floorDiv, not %: hour_bucket is
+    * written with pmod (floor semantics), so a negative (pre-1970) `ts`
+    * must floor too or valid negative hour partitions get pruned away.
+    * Clamped to `Long.MinValue` in the first partial hour, where the
+    * floor itself is below the Long range and the product would wrap to
+    * a huge positive bound that prunes every partition.
+    */
+  private[storage] def hourFloor(ts: Long): Long = {
+    val h = Math.floorDiv(ts, 3600L)
+    if (h < Long.MinValue / 3600L) Long.MinValue else h * 3600L
   }
 
   private val lastSeq = new java.util.concurrent.atomic.AtomicLong()

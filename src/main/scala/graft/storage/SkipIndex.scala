@@ -86,36 +86,6 @@ object SkipIndex {
       }.reduce(_ && _),
       lit(true))
 
-  /** Tag-equality pruning predicate over CNF groups (r16 conjuncts,
-    * r17 OR-groups): `tags` is an AND of groups, each group an OR of
-    * `k=v` pairs — a plain conjunct `tag.k = 'v'` is a singleton group,
-    * a top-level disjunct that is PURELY tag equalities (`tag.host='a'
-    * or tag.host='b'`, the dashboard multi-select) probes as the UNION
-    * of its pair probes, which is superset-safe because the true WHERE
-    * implies the disjunction. A file survives iff every group has at
-    * least one probe-positive pair. A manifest predating the tag bloom
-    * (no column) or a carried row (NULL) prunes nothing — superset
-    * contract, the exact residual runs on what is read.
-    */
-  private def tagPred(m: DataFrame, tags: Seq[Seq[(String, String)]]) =
-    if (tags.isEmpty || !m.columns.contains("bloom_tags")) lit(true)
-    else tags.map { group =>
-      group.map { case (k, v) =>
-        bloomMayContain("bloom_tags", localPositions(s"$k=$v"))
-      }.reduce(_ || _)
-    }.reduce(_ && _)
-
-  /** The exact row-level residual for the CNF tag groups — one shared
-    * definition so every scan's residual semantics (null tag key →
-    * false, like the compiler's try_element_at equality; an OR-group
-    * keeps any row matching one of its pairs) stay identical.
-    */
-  private def tagResidual(tags: Seq[Seq[(String, String)]]) =
-    tags.map { group =>
-      group.map { case (k, v) => try_element_at(col("tags"), lit(k)) === v }
-        .reduce(_ || _)
-    }.foldLeft(lit(true))(_ && _)
-
   /** One manifest row, driver-resident (see [[cachedRows]]). Nullable
     * blooms mirror an in-place-upgraded manifest's carried rows; null
     * value stats mirror an all-null-value file.
@@ -125,11 +95,10 @@ object SkipIndex {
       bloom: Array[Long], bloomName: Array[Long], bloomTags: Array[Long])
 
   /** A manifest small enough to mirror on the driver is cached as rows
-    * (~400 B each; the default 200k cap ≈ 80 MB) — beyond the cap the
-    * Spark-side filter path stays.
+    * (~400 B each; 200k ≈ 80 MB) — beyond the cap the Spark-side filter
+    * path stays.
     */
-  private val MaxCachedRows =
-    sys.env.getOrElse("SPARK_GRAFT_MANIFEST_CACHE_ROWS", "200000").toInt
+  private val MaxCachedRows = 200000
 
   /** Driver-cached manifest rows (r16), keyed on the dir's refresh
     * generation via [[MetaCache]]. The manifest is metadata-sized BY
@@ -140,62 +109,64 @@ object SkipIndex {
     * QPS). With the rows driver-resident, survivor selection is a local
     * array filter: ZERO jobs on the probe path, the same driver-side
     * snapshot-cache tradeoff Delta and Iceberg make. Bounded by
-    * [[MaxCachedRows]]: a beyond-cap manifest keeps the Spark path — the
+    * `maxRows`: a beyond-cap manifest keeps the Spark path — the
     * per-query job is amortized at that file count, and the driver heap
     * is not the place for an unbounded metadata mirror.
     */
-  private def cachedRows(spark: SparkSession,
-      manifestDir: String): Option[Array[ManifestRow]] = {
-    // resolved BEFORE entering the memo's compute: a cached() load that
-    // itself calls cached() is a nested computeIfAbsent on one
+  private def cachedRows(spark: SparkSession, manifestDir: String,
+      maxRows: Int): Option[Array[ManifestRow]] =
+    // the total is resolved BEFORE entering the memo's compute: a cached()
+    // load that itself calls cached() is a nested computeIfAbsent on one
     // ConcurrentHashMap — the JDK throws "Recursive update" when the two
     // keys share a bin. Sequential lookups are safe.
-    val total = filesTotal(spark, manifestDir)
-    MetaCache.cached(manifestDir, "rows") {
-      if (total > MaxCachedRows)
-        Option.empty[Array[ManifestRow]]
-      else {
-        val m = read(spark, manifestDir)
-        def arrOr(c: String) =
-          if (m.columns.contains(c)) col(c) else lit(null).cast("array<long>")
-        val rows = m.select(col("file"), col("min_time"), col("max_time"),
-          col("min_value"), col("max_value"), col("bloom"),
-          arrOr("bloom_name"), arrOr("bloom_tags"))
-          .collect().map { r =>
-            def words(i: Int): Array[Long] =
-              if (r.isNullAt(i)) null
-              else r.getSeq[Long](i).toArray
-            ManifestRow(r.getString(0), r.getLong(1), r.getLong(2),
-              vNull = r.isNullAt(3),
-              if (r.isNullAt(3)) 0d else r.getDouble(3),
-              if (r.isNullAt(4)) 0d else r.getDouble(4),
-              words(5), words(6), words(7))
-          }
-        Some(rows)
-      }
-    }
-  }
+    if (filesTotal(spark, manifestDir) > maxRows) None
+    else Some(MetaCache.cached(manifestDir, "rows") {
+      val m = read(spark, manifestDir)
+      def arrOr(c: String) =
+        if (m.columns.contains(c)) col(c) else lit(null).cast("array<long>")
+      m.select(col("file"), col("min_time"), col("max_time"),
+        col("min_value"), col("max_value"), col("bloom"),
+        arrOr("bloom_name"), arrOr("bloom_tags"))
+        .collect().map { r =>
+          def words(i: Int): Array[Long] =
+            if (r.isNullAt(i)) null
+            else r.getSeq[Long](i).toArray
+          ManifestRow(r.getString(0), r.getLong(1), r.getLong(2),
+            vNull = r.isNullAt(3),
+            if (r.isNullAt(3)) 0d else r.getDouble(3),
+            if (r.isNullAt(4)) 0d else r.getDouble(4),
+            words(5), words(6), words(7))
+        }
+    })
 
-  /** Surviving files + manifest total under time ∧ blooms ∧ value-stat
-    * pruning — driver-local when the rows are cached ([[cachedRows]]),
-    * else the Spark-side filter. Both paths implement the SAME
-    * semantics: NULL blooms cannot prune (upgrade carry-forward), NULL
-    * value stats fail a finite-bound value filter (an all-null file
-    * cannot match a value residual), and every filter is a superset of
-    * the exact residual run on what is read.
+  /** Surviving files + manifest total for `probe`: time overlap ∧ id,
+    * name and tag blooms ∧ value stats — driver-local when the rows are
+    * cached ([[cachedRows]]), else the Spark-side filter (`maxCachedRows`
+    * exists so tests can force that path). Both evaluators implement
+    * the SAME semantics: a missing bloom column or a NULL bloom cannot
+    * prune (upgrade carry-forward), NULL value stats fail a value bound
+    * (an all-null file cannot match a value residual), and a tag group
+    * survives when any of its pairs may be present. Every filter is a
+    * superset of the probe's exact residual run on what is read.
     */
-  private def prune(store: SeriesStore, manifestDir: String,
-      startTs: Long, endTs: Long,
-      idPos: Option[Seq[Int]], namePos: Option[Seq[Int]],
-      minValue: Double, maxValue: Double,
-      tags: Seq[Seq[(String, String)]]): (Array[String], Int) = {
+  private[graft] def prune(store: SeriesStore, manifestDir: String,
+      probe: ScanProbe,
+      maxCachedRows: Int = MaxCachedRows): (Array[String], Int) = {
     val spark = store.spark
-    val hasV = !minValue.isNegInfinity || !maxValue.isPosInfinity
-    cachedRows(spark, manifestDir) match {
+    val (startTs, endTs) = (probe.startTs, probe.endTs)
+    val (minValue, maxValue) = (probe.vlo.getOrElse(Double.NegativeInfinity),
+      probe.vhi.getOrElse(Double.PositiveInfinity))
+    val hasV = probe.vlo.nonEmpty || probe.vhi.nonEmpty
+    // probe-side bit positions on the driver (r16) — the shared XXH64
+    // kernel [[localPositions]], FunctionsSpec-pinned bit-identical to
+    // the build expressions; r15 paid a Spark job per probe for parity
+    val idPos = probe.seriesId.map(localPositions(_))
+    val namePos = probe.series.map(localPositions(_))
+    val tagPos = probe.tags.map(_.map { case (k, v) => localPositions(s"$k=$v") })
+    cachedRows(spark, manifestDir, maxCachedRows) match {
       case Some(rows) =>
         def bloomOk(arr: Array[Long], pos: Seq[Int]): Boolean =
           arr == null || pos.forall(p => (arr(p / 64) & (1L << (p % 64))) != 0L)
-        val tagPos = tags.map(_.map { case (k, v) => localPositions(s"$k=$v") })
         val files = rows.filter { r =>
           r.minTime <= endTs && r.maxTime >= startTs &&
             idPos.forall(bloomOk(r.bloom, _)) &&
@@ -210,15 +181,15 @@ object SkipIndex {
         // carried row's NULL, which bloomMayContain already tolerates) —
         // a missing column prunes nothing, matching the driver path's
         // arrOr(null) semantics instead of throwing AnalysisException.
-        def bloomGuard(c: String, pos: Option[Seq[Int]]) =
-          pos.filter(_ => m.columns.contains(c))
-            .map(bloomMayContain(c, _)).getOrElse(lit(true))
+        def mayContain(c: String, pos: Seq[Int]) =
+          if (m.columns.contains(c)) bloomMayContain(c, pos) else lit(true)
         val cond = col("min_time") <= endTs && col("max_time") >= startTs &&
-          bloomGuard("bloom", idPos) &&
-          bloomGuard("bloom_name", namePos) &&
+          idPos.fold(lit(true))(mayContain("bloom", _)) &&
+          namePos.fold(lit(true))(mayContain("bloom_name", _)) &&
           (if (hasV) col("max_value") >= minValue && col("min_value") <= maxValue
           else lit(true)) &&
-          tagPred(m, tags)
+          tagPos.map(_.map(mayContain("bloom_tags", _)).reduce(_ || _))
+            .foldLeft(lit(true))(_ && _)
         (m.filter(cond).select("file").collect().map(_.getString(0)),
           filesTotal(spark, manifestDir))
     }
@@ -332,8 +303,9 @@ object SkipIndex {
   }
 
   /** Engine-integration convention (r12): a store's own manifest lives at
-    * `<root>/skipindex`. [[graft.sydraql.Engine.executeOnStore]] routes
-    * `by_id()` and time-bounded scans through it when present, and
+    * `<root>/skipindex`. [[SeriesStore.scanPruned]] — the engine's
+    * SELECTs, served hybrid edges and DELETE discovery — prunes through
+    * it when present, and
     * [[SeriesStore.append]] keeps it fresh for the hours a batch touches
     * (a stale manifest after an append would silently MISS the new files;
     * since r13 [[Maintenance]]'s delete/retention/compaction paths run
@@ -367,25 +339,6 @@ object SkipIndex {
     if (hours.nonEmpty && exists(store.spark, dir)) refresh(store, dir, hours)
   }
 
-  /** Time-range-only pruned scan (no series predicate — the `by name` /
-    * all-series engine route): files whose [min_time, max_time] overlaps
-    * the inclusive range, further pruned by the tag bloom when `tags`
-    * equality pairs are passed (r16). Same contract as [[probeScan]]:
-    * pruning is I/O-only, the exact residual filter runs on what is read.
-    */
-  def rangeScan(store: SeriesStore, manifestDir: String,
-      startTs: Long, endTs: Long,
-      tags: Seq[Seq[(String, String)]] = Nil): SkipScan = {
-    val (survivors, total) = prune(store, manifestDir, startTs, endTs,
-      idPos = None, namePos = None,
-      Double.NegativeInfinity, Double.PositiveInfinity, tags)
-    SkipScan(
-      readFiles(store, survivors)
-        .filter(col("time") >= startTs && col("time") <= endTs &&
-          tagResidual(tags)),
-      survivors.length, total)
-  }
-
   def read(spark: SparkSession, manifestDir: String): DataFrame = {
     Maintenance.recoverSwaps(spark, manifestDir) // heal a died-mid-swap refresh
     spark.read.parquet(s"$manifestDir/m")
@@ -407,111 +360,20 @@ object SkipIndex {
       spark.read.option("basePath", base).parquet(files.toIndexedSeq: _*)
     }
 
-  /** Rows of `series_id = seriesId` with `startTs <= time <= endTs`
-    * (inclusive, the [[SeriesStore.scanRange]] convention), reading only
-    * files whose manifest entry overlaps the range AND whose bloom may
-    * contain the series — AND (r14, when finite `minValue`/`maxValue`
-    * bounds are passed) whose min/max_value stats can match, so
-    * `by_id(N) … and value >= X` prunes on time ∧ bloom ∧ value stats
-    * instead of losing the value dimension to the selector match.
-    * Identical rows to the full-scan filter — the manifest changes what
-    * is READ, never what is true. The value-stat filter and residual are
-    * only applied for FINITE bounds: an infinite default must not touch
-    * the value column at all (a `value >= -∞` residual would drop
-    * null-valued rows a plain probe serves).
+  /** The one manifest-pruned scan: rows of `store` that satisfy
+    * `probe`, reading only the files [[prune]] keeps (one prune, one
+    * residual — pruning changes what is READ, never what is true, so the
+    * rows equal the full-scan filter by `probe.residual`). Frames carry
+    * the store columns plus `hour_bucket`. An empty probe prunes nothing
+    * and reads the plain store scan without consulting the manifest
+    * (`filesRead = filesTotal = -1`). Callers that follow the
+    * store-convention manifest use [[SeriesStore.scanPruned]].
     */
-  def probeScan(store: SeriesStore, manifestDir: String,
-      startTs: Long, endTs: Long, seriesId: Long,
-      minValue: Double = Double.NegativeInfinity,
-      maxValue: Double = Double.PositiveInfinity): SkipScan = {
-    // probe-side bit positions on the driver (r16) — the shared XXH64
-    // kernel [[localPositions]], FunctionsSpec-pinned bit-identical to
-    // the build expressions; r15 paid a Spark job per probe for parity
-    val hasV = !minValue.isNegInfinity || !maxValue.isPosInfinity
-    val (survivors, total) = prune(store, manifestDir, startTs, endTs,
-      idPos = Some(localPositions(seriesId)), namePos = None,
-      minValue, maxValue, Nil)
-    val residual = col("series_id") === seriesId &&
-      col("time") >= startTs && col("time") <= endTs &&
-      (if (hasV) col("value") >= minValue && col("value") <= maxValue
-      else lit(true))
-    SkipScan(readFiles(store, survivors).filter(residual),
-      survivors.length, total)
-  }
-
-  /** Whether the manifest carries the r15 name bloom — memoized like
-    * [[exists]] (build/refresh bump the generation); a pre-r15 manifest
-    * routes name selectors through [[rangeScan]]/[[thresholdScan]] until
-    * its next refresh upgrades it.
-    */
-  def hasNameBloom(spark: SparkSession, manifestDir: String): Boolean =
-    MetaCache.cached(manifestDir, "hasNameBloom") {
-      java.lang.Boolean.valueOf(
-        read(spark, manifestDir).columns.contains("bloom_name"))
-    }.booleanValue()
-
-  /** Whether the manifest carries the r16 `k=v` tag bloom — memoized
-    * like [[hasNameBloom]]. Scans themselves tolerate its absence
-    * (tag pruning just contributes nothing); this is for callers that
-    * want to know whether tag probes will actually prune (operator
-    * tooling; ScaleBench's `tag_skip_probe` builds a fresh manifest).
-    */
-  def hasTagBloom(spark: SparkSession, manifestDir: String): Boolean =
-    MetaCache.cached(manifestDir, "hasTagBloom") {
-      java.lang.Boolean.valueOf(
-        read(spark, manifestDir).columns.contains("bloom_tags"))
-    }.booleanValue()
-
-  /** [[probeScan]] for a NAME selector (`from cpu.load`): files whose
-    * [min_time, max_time] overlaps the range AND whose name bloom may
-    * contain `series` AND (finite bounds only) whose value stats can
-    * match. A name maps to every tag combination under it — the name
-    * bloom is over file-distinct names, so pruning is exactly as sharp
-    * as the by_id bloom on single-tagset fixtures and still correct
-    * (a superset) when one name spans many series_ids. `tags` (r16)
-    * composes `tag.k = 'v'` conjuncts via the tag bloom — `from cpu.load
-    * where tag.host = 'a'` prunes inside the name's files instead of at
-    * name granularity only. Residual filters run on what is read, like
-    * every routed scan.
-    */
-  def nameScan(store: SeriesStore, manifestDir: String,
-      startTs: Long, endTs: Long, series: String,
-      minValue: Double = Double.NegativeInfinity,
-      maxValue: Double = Double.PositiveInfinity,
-      tags: Seq[Seq[(String, String)]] = Nil): SkipScan = {
-    val hasV = !minValue.isNegInfinity || !maxValue.isPosInfinity
-    val (survivors, total) = prune(store, manifestDir, startTs, endTs,
-      idPos = None, namePos = Some(localPositions(series)),
-      minValue, maxValue, tags)
-    val residual = col("series") === series &&
-      col("time") >= startTs && col("time") <= endTs &&
-      (if (hasV) col("value") >= minValue && col("value") <= maxValue
-      else lit(true)) &&
-      tagResidual(tags)
-    SkipScan(readFiles(store, survivors).filter(residual),
-      survivors.length, total)
-  }
-
-  /** Rows with `minValue <= value <= maxValue` in `[startTs, endTs]`
-    * across ALL series — the anomaly sweep ("every point above threshold
-    * last week"). Time predicates prune by range overlap; the value
-    * bounds prune on the per-file `max_value`/`min_value` stats, which
-    * parquet row-group stats cannot do without opening every footer.
-    * Same contract as [[probeScan]]: pruning is I/O-only, exact residual
-    * filters run on what is read. (`maxValue` defaults to +∞ — the
-    * pre-r13 single-threshold form.)
-    */
-  def thresholdScan(store: SeriesStore, manifestDir: String,
-      startTs: Long, endTs: Long, minValue: Double,
-      maxValue: Double = Double.PositiveInfinity,
-      tags: Seq[Seq[(String, String)]] = Nil): SkipScan = {
-    val (survivors, total) = prune(store, manifestDir, startTs, endTs,
-      idPos = None, namePos = None, minValue, maxValue, tags)
-    SkipScan(
-      readFiles(store, survivors).filter(col("value") >= minValue &&
-        col("value") <= maxValue &&
-        col("time") >= startTs && col("time") <= endTs &&
-        tagResidual(tags)),
-      survivors.length, total)
-  }
+  def scan(store: SeriesStore, manifestDir: String, probe: ScanProbe): SkipScan =
+    if (probe.isEmpty) SkipScan(store.scan(), -1, -1)
+    else {
+      val (survivors, total) = prune(store, manifestDir, probe)
+      SkipScan(readFiles(store, survivors).filter(probe.residual),
+        survivors.length, total)
+    }
 }

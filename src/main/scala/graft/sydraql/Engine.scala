@@ -72,25 +72,57 @@ object Engine {
       options: CompileOptions = CompileOptions()): DataFrame =
     execute(spark, source, sydraql, options).df
 
-  /** Conservative time bounds from a WHERE's TOP-LEVEL conjuncts: only
-    * bare `time <op> <int literal>` comparisons count (anything under
-    * OR/NOT, function-wrapped, or non-literal is ignored — pruning must
-    * be a SUPERSET of the true predicate, which the compiler re-applies
-    * exactly on whatever is read). `>` widens to `>=` / `<` to `<=` for
-    * the same reason.
+  /** A WHERE's TOP-LEVEL conjuncts — the only terms routing reads:
+    * anything under OR/NOT is not implied by the WHERE on its own.
     */
-  private def timeBounds(where: Option[Ast.Expr]): (Option[Long], Option[Long]) = {
-    def conj(e: Ast.Expr): Seq[Ast.Expr] = e match {
-      case Ast.Binary(Ast.And, l, r) => conj(l) ++ conj(r)
+  private def conjuncts(where: Option[Ast.Expr]): Seq[Ast.Expr] = {
+    def go(e: Ast.Expr): Seq[Ast.Expr] = e match {
+      case Ast.Binary(Ast.And, l, r) => go(l) ++ go(r)
       case x => Seq(x)
     }
-    var lo: Option[Long] = None
-    var hi: Option[Long] = None
-    def tighten(op: Ast.BinOp, v: Long): Unit = op match {
-      case Ast.Ge | Ast.Gt => lo = Some(lo.fold(v)(math.max(_, v)))
-      case Ast.Le | Ast.Lt => hi = Some(hi.fold(v)(math.min(_, v)))
-      case Ast.Eq => tighten(Ast.Ge, v); tighten(Ast.Le, v)
-      case _ => ()
+    where.toSeq.flatMap(go)
+  }
+
+  /** `tag.<k> = '<literal>'` in either operand order. Keys keep their
+    * written case — the compiler's residual `try_element_at(tags, <key>)`
+    * is case-sensitive the same way, so probe and match semantics agree.
+    */
+  private def tagEquality(e: Ast.Expr): Option[(String, String)] = e match {
+    case Ast.Binary(Ast.Eq, id: Ast.Ident, Ast.StringLit(v))
+      if id.parts.length == 2 && id.parts.head.equalsIgnoreCase("tag") =>
+      Some((id.parts(1), v))
+    case Ast.Binary(Ast.Eq, Ast.StringLit(v), id: Ast.Ident)
+      if id.parts.length == 2 && id.parts.head.equalsIgnoreCase("tag") =>
+      Some((id.parts(1), v))
+    case _ => None
+  }
+
+  /** The store scan probe of a selector plus WHERE, from one walk over
+    * the WHERE's top-level conjuncts. Every extracted term is implied by
+    * the true predicate, so pruning on it is a SUPERSET — the compiler
+    * (or DELETE's exact predicate) re-applies the full WHERE on whatever
+    * is read:
+    *  - `time`/`value` `<op> <literal>` comparisons, in either operand
+    *    order, tighten inclusive bounds; `>`/`<` widen to `>=`/`<=`;
+    *  - a `tag.<k> = '<literal>'` conjunct is a singleton tag group; an
+    *    OR whose EVERY disjunct is a tag equality (r17 — `tag.host = 'a'
+    *    or tag.host = 'b'`, the dashboard multi-select) is one group
+    *    pruned as the union of its pairs; a mixed disjunct (`tag.host =
+    *    'a' or value > 5`) is not implied by its tag terms and extracts
+    *    nothing.
+    */
+  private[graft] def scanProbe(from: Option[Ast.Selector],
+      where: Option[Ast.Expr]): graft.storage.ScanProbe = {
+    def tighten[T](b: (Option[T], Option[T]), op: Ast.BinOp, v: T)(
+        implicit o: Ordering[T]): (Option[T], Option[T]) = {
+      val lo = Some(b._1.fold(v)(o.max(_, v)))
+      val hi = Some(b._2.fold(v)(o.min(_, v)))
+      op match {
+        case Ast.Ge | Ast.Gt => (lo, b._2)
+        case Ast.Le | Ast.Lt => (b._1, hi)
+        case Ast.Eq => (lo, hi)
+        case _ => b
+      }
     }
     def flip(op: Ast.BinOp): Ast.BinOp = op match {
       case Ast.Ge => Ast.Le
@@ -99,153 +131,35 @@ object Engine {
       case Ast.Lt => Ast.Gt
       case o => o
     }
-    where.toSeq.flatMap(conj).foreach {
-      case Ast.Binary(op, id: Ast.Ident, Ast.IntLit(v))
-        if id.full.equalsIgnoreCase("time") => tighten(op, v)
-      case Ast.Binary(op, Ast.IntLit(v), id: Ast.Ident)
-        if id.full.equalsIgnoreCase("time") => tighten(flip(op), v)
-      case _ => ()
-    }
-    (lo, hi)
-  }
-
-  /** Conservative VALUE bounds from the WHERE's top-level conjuncts —
-    * the [[timeBounds]] contract (superset pruning, `>`/`<` widened)
-    * applied to `value <op> <numeric literal>` comparisons, feeding the
-    * manifest's min/max_value file-stat pruning.
-    */
-  private def valueBounds(where: Option[Ast.Expr]): (Option[Double], Option[Double]) = {
-    def conj(e: Ast.Expr): Seq[Ast.Expr] = e match {
-      case Ast.Binary(Ast.And, l, r) => conj(l) ++ conj(r)
-      case x => Seq(x)
-    }
-    var lo: Option[Double] = None
-    var hi: Option[Double] = None
-    def tighten(op: Ast.BinOp, v: Double): Unit = op match {
-      case Ast.Ge | Ast.Gt => lo = Some(lo.fold(v)(math.max(_, v)))
-      case Ast.Le | Ast.Lt => hi = Some(hi.fold(v)(math.min(_, v)))
-      case Ast.Eq => tighten(Ast.Ge, v); tighten(Ast.Le, v)
-      case _ => ()
-    }
-    def flip(op: Ast.BinOp): Ast.BinOp = op match {
-      case Ast.Ge => Ast.Le
-      case Ast.Gt => Ast.Lt
-      case Ast.Le => Ast.Ge
-      case Ast.Lt => Ast.Gt
-      case o => o
-    }
-    def num(e: Ast.Expr): Option[Double] = e match {
-      case Ast.IntLit(v) => Some(v.toDouble)
-      case Ast.FloatLit(v) => Some(v)
-      case _ => None
-    }
-    where.toSeq.flatMap(conj).foreach {
-      case Ast.Binary(op, id: Ast.Ident, r)
-        if id.full.equalsIgnoreCase("value") && num(r).isDefined =>
-        tighten(op, num(r).get)
-      case Ast.Binary(op, l, id: Ast.Ident)
-        if id.full.equalsIgnoreCase("value") && num(l).isDefined =>
-        tighten(flip(op), num(l).get)
-      case _ => ()
-    }
-    (lo, hi)
-  }
-
-  /** Tag-equality CNF groups from the WHERE's TOP-LEVEL conjuncts —
-    * the [[timeBounds]] contract: each extracted group is a predicate
-    * the true WHERE implies, so pruning on it stays a superset. A plain
-    * `tag.<k> = '<literal>'` conjunct (r16) is a singleton group; a
-    * conjunct that is an OR whose EVERY disjunct is a tag equality
-    * (r17 — `tag.host = 'a' or tag.host = 'b'`, the dashboard
-    * multi-select) is a group pruned as the UNION of its pair probes.
-    * A mixed disjunct (`tag.host = 'a' or value > 5`) is NOT implied by
-    * its tag terms alone and extracts nothing. Keys keep their written
-    * case — the compiler's residual `try_element_at(tags, <key>)` is
-    * case-sensitive the same way, so probe and match semantics agree.
-    */
-  private def tagEquals(where: Option[Ast.Expr]): Seq[Seq[(String, String)]] = {
-    def conj(e: Ast.Expr): Seq[Ast.Expr] = e match {
-      case Ast.Binary(Ast.And, l, r) => conj(l) ++ conj(r)
-      case x => Seq(x)
-    }
-    def tagEq(e: Ast.Expr): Option[(String, String)] = e match {
-      case Ast.Binary(Ast.Eq, id: Ast.Ident, Ast.StringLit(v))
-        if id.parts.length == 2 && id.parts.head.equalsIgnoreCase("tag") =>
-        Some((id.parts(1), v))
-      case Ast.Binary(Ast.Eq, Ast.StringLit(v), id: Ast.Ident)
-        if id.parts.length == 2 && id.parts.head.equalsIgnoreCase("tag") =>
-        Some((id.parts(1), v))
-      case _ => None
-    }
-    // a pure-OR-of-tag-equalities disjunct, or None if any leaf is not one
     def orGroup(e: Ast.Expr): Option[Seq[(String, String)]] = e match {
       case Ast.Binary(Ast.Or, l, r) =>
         for (a <- orGroup(l); b <- orGroup(r)) yield a ++ b
-      case other => tagEq(other).map(Seq(_))
+      case other => tagEquality(other).map(Seq(_))
     }
-    where.toSeq.flatMap(conj).flatMap(orGroup)
-  }
-
-  /** Route a SELECT's source through the store's data-skipping manifest
-    * ([[graft.storage.SkipIndex.dirFor]]) when one exists: `by_id()`
-    * probes prune on time overlap + the series bloom, name/all-series
-    * scans with time bounds prune on overlap alone. Pruning changes what
-    * is READ, never what is true — the compiler applies the query's full
-    * WHERE to whatever comes back, so the routed source only has to be a
-    * superset of the matching rows. No manifest, no selector, no bounds →
-    * the plain source view, byte-identical behavior to pre-r12.
-    */
-  private def routedSource(store: graft.storage.SeriesStore,
-      s: Ast.Select): DataFrame = {
-    import graft.storage.SkipIndex
-    val spark = store.spark
-    val dir = SkipIndex.dirFor(store)
-    lazy val srcCols = Seq("series", "series_id", "tags", "time", "value")
-    if (!SkipIndex.exists(spark, dir)) return store.source()
-    val (lo, hi) = timeBounds(s.where)
-    val (vlo, vhi) = valueBounds(s.where)
-    // tag-equality conjuncts (r16) compose with every non-by_id route
-    // below via the manifest's k=v tag bloom (by_id's series bloom
-    // already subsumes the series' tags — one series_id, one tagset)
-    val tagEqs = tagEquals(s.where)
-    s.from match {
-      case Some(Ast.ById(id)) =>
-        // r14: value-threshold conjuncts COMPOSE with the by_id probe —
-        // the most selective shape ("this series above X last month")
-        // prunes on time ∧ bloom ∧ min/max_value stats at once
-        SkipIndex.probeScan(store, dir,
-            lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue), id,
-            vlo.getOrElse(Double.NegativeInfinity),
-            vhi.getOrElse(Double.PositiveInfinity))
-          .df.select(srcCols.map(org.apache.spark.sql.functions.col): _*)
-      case Some(Ast.ByName(n)) if SkipIndex.hasNameBloom(spark, dir) =>
-        // r15: name selectors prune on the manifest's NAME bloom like
-        // by_id prunes on the id bloom (time ∧ bloom ∧ value stats) —
-        // `from cpu.load` used to read every time-overlapping file
-        SkipIndex.nameScan(store, dir,
-            lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue), n,
-            vlo.getOrElse(Double.NegativeInfinity),
-            vhi.getOrElse(Double.PositiveInfinity), tagEqs)
-          .df.select(srcCols.map(org.apache.spark.sql.functions.col): _*)
-      case _ if vlo.nonEmpty || vhi.nonEmpty =>
-        // value-stat pruning (r13): `where value >= X` sweeps skip every
-        // file whose max_value stat says it cannot match — the anomaly
-        // sweep that footer stats alone cannot serve without opening
-        // every file; composes with the time overlap bounds
-        SkipIndex.thresholdScan(store, dir,
-            lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue),
-            vlo.getOrElse(Double.NegativeInfinity),
-            vhi.getOrElse(Double.PositiveInfinity), tagEqs)
-          .df.select(srcCols.map(org.apache.spark.sql.functions.col): _*)
-      case _ if lo.nonEmpty || hi.nonEmpty || tagEqs.nonEmpty =>
-        // time overlap ∧ (r16) tag bloom; a tag-only WHERE still routes —
-        // `where tag.host = 'a'` with no time bounds prunes to the
-        // host's files instead of reading the store
-        SkipIndex.rangeScan(store, dir,
-            lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue), tagEqs)
-          .df.select(srcCols.map(org.apache.spark.sql.functions.col): _*)
-      case _ => store.source()
+    var time = (Option.empty[Long], Option.empty[Long])
+    var value = (Option.empty[Double], Option.empty[Double])
+    val tags = Seq.newBuilder[Seq[(String, String)]]
+    conjuncts(where).foreach { c =>
+      val cmp = c match {
+        case Ast.Binary(op, id: Ast.Ident, lit) => Some((id.full, op, lit))
+        case Ast.Binary(op, lit, id: Ast.Ident) => Some((id.full, flip(op), lit))
+        case _ => None
+      }
+      cmp match {
+        case Some((n, op, Ast.IntLit(v))) if n.equalsIgnoreCase("time") =>
+          time = tighten(time, op, v)
+        case Some((n, op, Ast.IntLit(v))) if n.equalsIgnoreCase("value") =>
+          value = tighten(value, op, v.toDouble)(Ordering.Double.IeeeOrdering)
+        case Some((n, op, Ast.FloatLit(v))) if n.equalsIgnoreCase("value") =>
+          value = tighten(value, op, v)(Ordering.Double.IeeeOrdering)
+        case _ => orGroup(c).foreach(tags += _)
+      }
     }
+    graft.storage.ScanProbe(lo = time._1, hi = time._2,
+      vlo = value._1, vhi = value._2,
+      seriesId = from.collect { case Ast.ById(id) => id },
+      series = from.collect { case Ast.ByName(n) => n },
+      tags = tags.result())
   }
 
   /** Rollup-routing rule (r12): serve a sydraQL sketch aggregate from the
@@ -365,25 +279,18 @@ object Engine {
     // other conjunct means the cells can't answer → raw route.
     var tagEq: Option[(String, String)] = None
     val bounds: Option[(Long, Long)] = {
-      def conj(e: Ast.Expr): Seq[Ast.Expr] = e match {
-        case Ast.Binary(Ast.And, l, r) => conj(l) ++ conj(r)
-        case x => Seq(x)
-      }
       var lo: Option[Long] = None
       var hi: Option[Long] = None
       var ok = true
-      s.where.toSeq.flatMap(conj).foreach {
-        case Ast.Binary(Ast.Ge, t: Ast.Ident, Ast.IntLit(l))
-          if t.full.equalsIgnoreCase("time") && lo.isEmpty => lo = Some(l)
-        case Ast.Binary(Ast.Lt, t: Ast.Ident, Ast.IntLit(h))
-          if t.full.equalsIgnoreCase("time") && hi.isEmpty => hi = Some(h)
-        case Ast.Binary(Ast.Eq, id: Ast.Ident, Ast.StringLit(v))
-          if id.parts.length == 2 && id.parts.head.equalsIgnoreCase("tag") &&
-            tagEq.isEmpty => tagEq = Some((id.parts(1), v))
-        case Ast.Binary(Ast.Eq, Ast.StringLit(v), id: Ast.Ident)
-          if id.parts.length == 2 && id.parts.head.equalsIgnoreCase("tag") &&
-            tagEq.isEmpty => tagEq = Some((id.parts(1), v))
-        case _ => ok = false
+      conjuncts(s.where).foreach { c =>
+        (c, tagEquality(c)) match {
+          case (_, te @ Some(_)) if tagEq.isEmpty => tagEq = te
+          case (Ast.Binary(Ast.Ge, t: Ast.Ident, Ast.IntLit(l)), None)
+            if t.full.equalsIgnoreCase("time") && lo.isEmpty => lo = Some(l)
+          case (Ast.Binary(Ast.Lt, t: Ast.Ident, Ast.IntLit(h)), None)
+            if t.full.equalsIgnoreCase("time") && hi.isEmpty => hi = Some(h)
+          case _ => ok = false
+        }
       }
       (lo, hi) match {
         case (Some(l), Some(h)) if ok && l < h => Some((l, h))
@@ -613,29 +520,18 @@ object Engine {
     // subtree + exchange per query (the serve-latency floor the hybrid
     // pays over the cells-only path). One partial row per
     // (day [, tag value]) per edge — KB.
-    def edgeRows(elo: Long, ehi: Long): DataFrame = {
+    def edgeRows(elo: Long, ehi: Long): DataFrame =
       // time is integer seconds and bounds are inclusive, so [elo, ehi)
-      // is the inclusive range [elo, ehi - 1]. Route through the skip
-      // manifest when one exists: scanRange's spark.read.parquet(segDir)
-      // must LIST the whole segments table before pruning — at 100 TB
-      // (or the ScaleBench store's 3,400 hour dirs: measured 16 s vs 2 s) that
-      // per-query listing dwarfs the ≤24-hour edge read the hybrid is
-      // supposed to be, while the manifest hands back the edge hours'
-      // explicit file list for one metadata read. Pruning is a superset
-      // either way — the exact [elo, ehi) filter is applied below.
-      val skipDir = graft.storage.SkipIndex.dirFor(store)
-      val scan0 =
-        if (graft.storage.SkipIndex.exists(spark, skipDir))
-          graft.storage.SkipIndex.rangeScan(store, skipDir, elo, ehi - 1,
-            tagEq.toSeq.map(Seq(_))).df
-        else store.scanRange(elo, ehi - 1)
-      tagEq.foldLeft(
-        selFiltered(scan0).filter(col("time") >= elo && col("time") < ehi)) {
-        case (df, (k, v)) => df.filter(
-          org.apache.spark.sql.functions.try_element_at(
-            col("tags"), lit(k)) === v)
-      }
-    }
+      // is the inclusive range [elo, ehi - 1]. The store's pruned scan
+      // prunes through the skip manifest when one exists: scanRange's
+      // spark.read.parquet(segDir) must LIST the whole segments table
+      // before pruning — at 100 TB (or the ScaleBench store's 3,400 hour
+      // dirs: measured 16 s vs 2 s) that per-query listing dwarfs the
+      // ≤24-hour edge read the hybrid is supposed to be, while the
+      // manifest hands back the edge hours' explicit file list for one
+      // metadata read. The probe's residual is the exact edge filter.
+      store.scanPruned(scanProbe(s.from, None).copy(lo = Some(elo),
+        hi = Some(ehi - 1), tags = tagEq.toSeq.map(Seq(_)))).df
     def edgePartials(raw: DataFrame): DataFrame = {
       import org.apache.spark.sql.functions.{count, max, min, pmod, struct, sum, when}
       val eAggs: Seq[org.apache.spark.sql.Column] =
@@ -743,8 +639,8 @@ object Engine {
   }
 
   /** Execute against a [[graft.storage.SeriesStore]]: SELECT/EXPLAIN read
-    * the store's source view — routed through the store's data-skipping
-    * manifest when one exists ([[routedSource]]), and sketch aggregates
+    * the store's source view — pruned by the WHERE's [[scanProbe]]
+    * through [[graft.storage.SeriesStore.scanPruned]], and sketch aggregates
     * served from the at-rest cell store when the shape coarsens its keys
     * ([[sketchServed]]) — INSERT appends; DELETE rewrites affected hour
     * partitions. The reference parses+validates INSERT/DELETE but never
@@ -805,8 +701,9 @@ object Engine {
           case _ =>
             // raw route: reuse the parse/validate this method already
             // did (and their measured times) — compile only
-            executeAst(spark,
-              sel.map(routedSource(store, _)).getOrElse(store.source()),
+            executeAst(spark, sel.fold(store.source())(s =>
+                store.scanPruned(scanProbe(s.from, s.where)).df
+                  .select("series", "series_id", "tags", "time", "value")),
               ast, options, (t1 - t0) / 1000, (t2 - t1) / 1000)
         }
       case Ast.Insert(series, cols, rows) =>
@@ -839,22 +736,14 @@ object Engine {
           case Ast.ByName(n) => col("series") === n
         }
         val pred = where.map(w => selPred && compiler.scalar(w)).getOrElse(selPred)
-        // same conservative WHERE time bounds the SELECT route extracts:
-        // the matched-row count and the delete's affected-partition
-        // discovery both prune through the skip manifest when one exists
-        // (deleteRowsBounded routes internally; the tier refresh after the
-        // rewrite keeps manifest + sketch cells consistent)
-        val (lo, hi) = timeBounds(where)
-        val sid = sel match {
-          case Ast.ById(id) => Some(id)
-          case _ => None
-        }
-        // one pruned pass does everything: deleteRowsBounded's discovery
-        // routes through the skip manifest (time overlap + by_id bloom)
-        // and its per-partition rewrite tallies the removed rows — no
-        // separate matched-row count scan
+        // one pruned pass does everything: discovery reads the same
+        // pruned scan as the matching SELECT (skip manifest when one
+        // exists, hour pruning otherwise) and the per-partition rewrite
+        // tallies the removed rows — no separate matched-row count scan;
+        // the tier refresh after the rewrite keeps manifest + sketch
+        // cells consistent
         val st = statsOf("delete") // predicate compiled; the rewrite is execution
-        val report = Maintenance.deleteRowsBounded(store, pred, lo, hi, sid)
+        val report = Maintenance.deleteRows(store, pred, scanProbe(Some(sel), where))
         import spark.implicits._
         QueryResult(Seq(report.deletedRows).toDF("deleted"), st)
     }

@@ -4,7 +4,7 @@ import graft.{Bench, SparkEntry}
 import graft.core.Tables
 import graft.operators.{AsofJoin, RangeJoin}
 import graft.pipeline.{Dedup, Graph, IvfIndex, Similarity, TextIndex}
-import graft.storage.{Maintenance, SeriesStore, SketchCells, SkipIndex}
+import graft.storage.{Maintenance, ScanProbe, SeriesStore, SketchCells, SkipIndex}
 import graft.sydraql.{CompileOptions, Engine}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -361,7 +361,8 @@ object ScaleBench {
       val s = servedStore(c)
       val sid = c.spark.range(1).select(graft.core.Functions.seriesId(
         lit("click"), map(lit("user"), lit("3"))).as("s")).head().getLong(0)
-      () => SkipIndex.probeScan(s, SkipIndex.dirFor(s), halfDay._1, halfDay._2, sid).df
+      () => SkipIndex.scan(s, SkipIndex.dirFor(s), ScanProbe(lo = Some(halfDay._1),
+        hi = Some(halfDay._2), seriesId = Some(sid))).df
     },
     // the tag-keyed cell tier: one partial-aggregated pass over the points
     "tag_cells_build" -> { (c: Ctx) =>
@@ -410,7 +411,7 @@ object ScaleBench {
       s.append(timeAxisPoints(c))
       SkipIndex.build(s, SkipIndex.dirFor(s))
       () => {
-        val report = Maintenance.deleteRowsBounded(s, col("value") >= 300, Some(0L), None)
+        val report = Maintenance.deleteRows(s, col("value") >= 300, ScanProbe(lo = Some(0L)))
         c.spark.range(report.rewrittenHours.length.toLong)
           .select(lit(report.deletedRows).as("deleted"))
       }

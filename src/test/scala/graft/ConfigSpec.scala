@@ -227,11 +227,40 @@ class ConfigSpec extends AnyFunSuite {
     assert(unknown.getMessage.contains("no_such_op, q_nope"))
   }
 
+  test("registry lookups need no OPQ rotation file unless q_ann_opq's oracle is read") {
+    // a child JVM on this classpath, started where OPQ_ROTATION.txt is absent
+    val dir = Files.createTempDirectory("graft-no-opq").toFile
+    val java = s"${System.getProperty("java.home")}/bin/java"
+    val pb = new ProcessBuilder(java, "-Xmx256m", "-cp",
+      System.getProperty("java.class.path"), RegistryLookups.getClass.getName.stripSuffix("$"))
+      .directory(dir).redirectErrorStream(true)
+    val proc = pb.start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    assert(proc.waitFor() === 0, out)
+    assert(out.linesIterator.exists(l =>
+      l.startsWith("bench ") && l.split("[ ,]").contains("q_pricing_summary")), out)
+    assert(out.contains("oracle q_pricing_summary true"), out)
+    assert(out.contains("opq oracle needs the file"), out)
+  }
+
   test("SPARK_GRAFT_CONF parse: applied pairs and dropped malformed segments") {
     val (applied, dropped) = SparkEntry.confOverlay(
       " spark.a = 1 ;novalue; =orphan;spark.b=x=y;;spark.c= ;")
     assert(applied === Seq("spark.a" -> "1", "spark.b" -> "x=y", "spark.c" -> ""))
     assert(dropped === Seq("novalue", "=orphan"))
     assert(SparkEntry.confOverlay("") === ((Nil, Nil)))
+  }
+}
+
+/** Child-JVM main for the OPQ laziness test: lists the headline queries
+  * and reads two oracles without OPQ_ROTATION.txt in the working dir.
+  */
+object RegistryLookups {
+  def main(args: Array[String]): Unit = {
+    println("bench " + SparkEntry.benchQueries.mkString(","))
+    assert(SparkEntry.queries.contains("q_ann_opq"))
+    println("oracle q_pricing_summary " + SparkEntry.oracleSql.contains("q_pricing_summary"))
+    try { SparkEntry.oracleSql.get("q_ann_opq"); println("opq oracle read without the file") }
+    catch { case e: Exception => println(s"opq oracle needs the file: ${e.getMessage}") }
   }
 }

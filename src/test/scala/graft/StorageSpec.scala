@@ -1,6 +1,6 @@
 package graft
 
-import graft.storage.{Ingest, Maintenance, SeriesStore}
+import graft.storage.{Ingest, Maintenance, ScanProbe, SeriesStore}
 import graft.sydraql.{CompileOptions, Engine}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -655,7 +655,8 @@ class StorageSpec extends AnyFunSuite {
     val sid = spark.range(1).select(graft.core.Functions.seriesId(
       lit("cpu"), map(lit("host"), lit("cpu"))).as("s")).head().getLong(0)
     // window covers hours 1-2 only -> 4 files by time, 2 of them bloom-pruned
-    val probe = SkipIndex.probeScan(store, mdir, 3600L, 2 * 3600L + 10, sid)
+    val probe = SkipIndex.scan(store, mdir,
+      ScanProbe(lo = Some(3600L), hi = Some(2 * 3600L + 10), seriesId = Some(sid)))
     assert(probe.filesTotal === 8)
     assert(probe.filesRead === 2,
       s"expected time pruning to 4 files then bloom pruning to 2, got ${probe.filesRead}")
@@ -668,12 +669,14 @@ class StorageSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(got.toSeq === full.toSeq)
     // a series the store never saw: bloom prunes every file, empty frame
-    val ghost = SkipIndex.probeScan(store, mdir, 0L, 100 * 3600L, sid + 12345L)
+    val ghost = SkipIndex.scan(store, mdir,
+      ScanProbe(lo = Some(0L), hi = Some(100 * 3600L), seriesId = Some(sid + 12345L)))
     assert(ghost.filesRead === 0 && ghost.df.isEmpty)
     // value-threshold sweep: only files whose max_value clears the bar
     // (values are the hour index 0..3 -> threshold 2.5 keeps hour 3's
     // two files)
-    val sweep = SkipIndex.thresholdScan(store, mdir, 0L, 100 * 3600L, 2.5)
+    val sweep = SkipIndex.scan(store, mdir,
+      ScanProbe(lo = Some(0L), hi = Some(100 * 3600L), vlo = Some(2.5)))
     assert(sweep.filesRead === 2 && sweep.filesTotal === 8)
     assert(sweep.df.select("value").as[Double].collect().toSeq === Seq(3.0, 3.0))
   }
@@ -698,12 +701,12 @@ class StorageSpec extends AnyFunSuite {
     val sid = sidOf(probeName)
     SkipIndex.build(store, SkipIndex.dirFor(store))
     // time+bloom-only probe over the full span: the probe series' 4 files
-    val plain = SkipIndex.probeScan(store, SkipIndex.dirFor(store),
-      0L, 100 * 3600L, sid)
+    val plain = SkipIndex.scan(store, SkipIndex.dirFor(store),
+      ScanProbe(lo = Some(0L), hi = Some(100 * 3600L), seriesId = Some(sid)))
     assert(plain.filesRead === 4 && plain.filesTotal === 8)
     // value bounds compose: STRICTLY fewer files than time+bloom alone
-    val bounded = SkipIndex.probeScan(store, SkipIndex.dirFor(store),
-      0L, 100 * 3600L, sid, minValue = 2.5)
+    val bounded = SkipIndex.scan(store, SkipIndex.dirFor(store),
+      ScanProbe(lo = Some(0L), hi = Some(100 * 3600L), seriesId = Some(sid), vlo = Some(2.5)))
     assert(bounded.filesRead === 1,
       s"value stats must prune below the ${plain.filesRead}-file time+bloom probe, " +
         s"got ${bounded.filesRead}")
@@ -832,7 +835,7 @@ class StorageSpec extends AnyFunSuite {
     def run(ql: String) = Engine.executeOnStore(store, ql, CompileOptions(now = 0L)).df
     // value >= 2.5 with a NAME selector: since r15 the name bloom
     // composes with the value stats — only cpu's hour-3 file survives
-    // (pre-r15 this fell to thresholdScan and read mem's too)
+    // (pre-r15 this pruned on value stats alone and read mem's too)
     val top = run("select time, value from cpu where time >= 0 and value >= 2.5 order by time")
     assert(top.inputFiles.length === 1,
       s"name+value route must read 1 of 8 files, got ${top.inputFiles.length}")
@@ -853,7 +856,7 @@ class StorageSpec extends AnyFunSuite {
       === Seq((10L, 0.0), (3 * 3600L + 10, 3.0)))
     // selector-less value sweep (r15 made it reachable: a FROM-less
     // select referencing source columns compiles against the WHOLE
-    // source, not OneRow): the engine route reaches thresholdScan — both
+    // source, not OneRow): the engine route prunes on value stats — both
     // series' hour-3 files survive the value stats, 2 of 8 read
     val sweep = run("select time, value where time >= 0 and value >= 2.5 order by time")
     assert(sweep.inputFiles.length === 2,
@@ -886,11 +889,11 @@ class StorageSpec extends AnyFunSuite {
     // delete host c from day 1: the report pins that DISCOVERY read only
     // the 3 files overlapping the bound (of 5 total) — manifest-pruned
     // I/O, not a full-store scan
-    val rep = Maintenance.deleteRowsBounded(store,
+    val rep = Maintenance.deleteRows(store,
       col("series") === "m" &&
         try_element_at(col("tags"), lit("host")) === "c" &&
         col("time") >= d1 && col("time") < 2 * d1,
-      Some(d1), Some(2 * d1))
+      ScanProbe(lo = Some(d1), hi = Some(2 * d1)))
     assert(rep.scannedFiles === 3 && rep.totalFiles === 5,
       s"bounded delete discovery must prune through the manifest, got $rep")
     assert(rep.rewrittenHours === Seq(d1 + 7200L) && rep.deletedRows === 1L)
@@ -917,6 +920,112 @@ class StorageSpec extends AnyFunSuite {
     val empty = Engine.executeOnStore(store,
       s"select time, value from m where time >= 0 and time < $d1", opts).df
     assert(empty.count() === 0)
+    // a NAME-selector DELETE with value bounds: discovery prunes on the
+    // same probe as the matching SELECT (name bloom ∧ time ∧ value
+    // stats), not on time alone, and deletes exactly what a store
+    // without tiers deletes. A second series adds a file to each of m's
+    // two remaining hours (4 files).
+    store.append(Seq(("n", d1 + 200L, 5.0, "a"), ("n", d1 + 3800L, 6.0, "b"))
+      .toDF("series", "time", "value", "host")
+      .withColumn("tags", map(lit("host"), col("host")))
+      .select("series", "tags", "time", "value"))
+    val plain = new SeriesStore(spark, tmp())
+    plain.append(store.scan().select("series", "tags", "time", "value"))
+    val ql = s"delete from m where time >= $d1 and value >= 3.5"
+    val probe = graft.sydraql.Parser.parse(ql) match {
+      case graft.sydraql.Ast.Delete(sel, where) => Engine.scanProbe(Some(sel), where)
+      case other => fail(s"not a delete: $other")
+    }
+    assert(probe === ScanProbe(lo = Some(d1), vlo = Some(3.5), series = Some("m")))
+    val timeOnly = SkipIndex.scan(store, SkipIndex.dirFor(store), ScanProbe(lo = Some(d1)))
+    val byProbe = Maintenance.deleteRows(store,
+      col("series") === "m" && col("time") >= d1 && col("value") >= 3.5, probe)
+    assert(timeOnly.filesRead === 4 && byProbe.scannedFiles === 1,
+      s"name ∧ value discovery must read m's one 4.0 file of the 4 time-pruned, got $byProbe")
+    val unrouted = Engine.executeOnStore(plain, ql, opts).df.head().getLong(0)
+    assert(byProbe.deletedRows === 1L && unrouted === 1L)
+    def rowsOf(st: SeriesStore) = st.source().select("series", "time", "value")
+      .orderBy("series", "time").collect().map(_.toSeq).toSeq
+    assert(rowsOf(store) === rowsOf(plain))
+  }
+
+  test("scanRange from Long.MinValue keeps every hour partition") {
+    import spark.implicits._
+    val store = new SeriesStore(spark, tmp())
+    store.append(Seq(("m", -7200L, 1.0), ("m", 0L, 2.0), ("m", 5 * 3600L + 1, 3.0))
+      .toDF("series", "time", "value")
+      .withColumn("tags", map().cast("map<string,string>"))
+      .select("series", "tags", "time", "value"))
+    // the hour floor of a start within an hour of Long.MinValue is below
+    // the Long range; unclamped, it wrapped to a huge positive bound
+    assert(store.scanRange(Long.MinValue, Long.MaxValue).count() === 3)
+    assert(store.scanRange(Long.MinValue + 1, 0L).count() === 2)
+  }
+
+  test("prune: driver-cached rows and the Spark-side filter keep the same files for every probe") {
+    import graft.storage.{MetaCache, SkipIndex}
+    import spark.implicits._
+    val store = new SeriesStore(spark, tmp())
+    // 4 hours x 3 single-tagset appends (values = hour index) plus one
+    // all-null-value file: 13 files that every dimension can tell apart
+    def pts(series: String, host: String, off: Long) =
+      (0 until 4).map(h => (series, h * 3600L + off, h.toDouble)).toDF("series", "time", "value")
+        .withColumn("tags", map(lit("host"), lit(host)))
+        .select("series", "tags", "time", "value")
+    store.append(pts("cpu", "a", 10))
+    store.append(pts("cpu", "b", 11))
+    store.append(pts("mem", "a", 20))
+    store.append(Seq(("nul", 30L)).toDF("series", "time")
+      .select(col("series"), map(lit("host"), lit("a")).as("tags"), col("time"),
+        lit(null).cast("double").as("value")))
+    def sidOf(name: String, host: String) = spark.range(1).select(graft.core.Functions
+      .seriesId(lit(name), map(lit("host"), lit(host))).as("s")).head().getLong(0)
+    val withBlooms = tmp() + "/blooms"
+    SkipIndex.build(store, withBlooms)
+    // the same manifest before the r15/r16 blooms existed, and after one
+    // hour's in-place upgrade (carried rows keep NULL blooms)
+    def legacy(dir: String): String = {
+      SkipIndex.build(store, dir)
+      val m = SkipIndex.read(spark, dir).drop("bloom_name", "bloom_tags")
+      val (rows, schema) = (m.collect(), m.schema)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir + "/m"))
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq), schema)
+        .coalesce(1).write.parquet(dir + "/m")
+      MetaCache.invalidate(dir)
+      dir
+    }
+    val noBlooms = legacy(tmp() + "/legacy")
+    val upgraded = legacy(tmp() + "/upgraded")
+    SkipIndex.refresh(store, upgraded, Seq(3600L))
+    val probes = Seq(
+      ScanProbe(),
+      ScanProbe(lo = Some(3600L), hi = Some(2 * 3600L + 10)),
+      ScanProbe(hi = Some(0L)),
+      ScanProbe(seriesId = Some(sidOf("cpu", "a"))),
+      ScanProbe(seriesId = Some(sidOf("ghost", "a"))),
+      ScanProbe(series = Some("cpu")),
+      ScanProbe(series = Some("ghost")),
+      ScanProbe(vlo = Some(2.5)),
+      ScanProbe(vhi = Some(0.5)),
+      ScanProbe(vlo = Some(0.5), vhi = Some(1.5)),
+      ScanProbe(tags = Seq(Seq("host" -> "b"))),
+      ScanProbe(tags = Seq(Seq("host" -> "a"), Seq("host" -> "b"))),
+      ScanProbe(tags = Seq(Seq("host" -> "b", "host" -> "zz"))),
+      ScanProbe(lo = Some(0L), hi = Some(2 * 3600L + 20), series = Some("cpu"),
+        vlo = Some(0.5), tags = Seq(Seq("host" -> "a"))))
+    for (dir <- Seq(withBlooms, noBlooms, upgraded); p <- probes) {
+      val (cached, total) = SkipIndex.prune(store, dir, p)
+      val (filtered, total2) = SkipIndex.prune(store, dir, p, maxCachedRows = -1)
+      assert(cached.sorted.toSeq === filtered.sorted.toSeq, s"$dir $p")
+      assert(total === 13 && total2 === 13)
+    }
+    // the matrix compares real pruning: blooms cut files where present
+    def kept(dir: String, p: ScanProbe) = SkipIndex.prune(store, dir, p)._1.length
+    assert(kept(withBlooms, ScanProbe(series = Some("cpu"))) === 8)
+    assert(kept(noBlooms, ScanProbe(series = Some("cpu"))) === 13)
+    assert(kept(withBlooms, ScanProbe(tags = Seq(Seq("host" -> "b")))) === 4)
+    assert(kept(upgraded, ScanProbe(tags = Seq(Seq("host" -> "b")))) === 11)
+    assert(kept(withBlooms, ScanProbe(vlo = Some(2.5))) === 3)
   }
 
   test("by_id delete discovery adds the series bloom to time pruning") {
@@ -933,9 +1042,9 @@ class StorageSpec extends AnyFunSuite {
     val sid = spark.range(1).select(graft.core.Functions.seriesId(
       lit("cpu"), map(lit("host"), lit("cpu"))).as("s")).head().getLong(0)
     // time bound keeps hours 1-2 (4 files); the bloom halves it to cpu's 2
-    val rep = Maintenance.deleteRowsBounded(store,
+    val rep = Maintenance.deleteRows(store,
       col("series_id") === sid && col("time") >= 3600L && col("time") <= 2 * 3600L + 10,
-      Some(3600L), Some(2 * 3600L + 10), seriesId = Some(sid))
+      ScanProbe(lo = Some(3600L), hi = Some(2 * 3600L + 10), seriesId = Some(sid)))
     assert(rep.scannedFiles === 2 && rep.totalFiles === 8,
       s"bloom + time discovery must scan cpu's 2 overlapping files, got $rep")
     assert(rep.rewrittenHours === Seq(3600L, 7200L))
@@ -965,7 +1074,7 @@ class StorageSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     val report = try {
-      val r = Maintenance.deleteRowsBounded(store, pred, None, None)
+      val r = Maintenance.deleteRows(store, pred)
       Thread.sleep(2000) // listener bus is async
       r
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -1138,13 +1247,15 @@ class StorageSpec extends AnyFunSuite {
     store.append(pts("mem", 20))
     val mdir = tmp() + "/manifest"
     SkipIndex.build(store, mdir)
-    assert(SkipIndex.hasNameBloom(spark, mdir))
+    assert(SkipIndex.read(spark, mdir).columns.contains("bloom_name"))
     val sid = spark.range(1).select(graft.core.Functions.seriesId(
       lit("cpu"), map(lit("host"), lit("cpu"))).as("s")).head().getLong(0)
     // THE pin: the name scan reads exactly the files the by_id probe
     // reads on this fixture (one tagset per name -> same file set)
-    val probe = SkipIndex.probeScan(store, mdir, 3600L, 2 * 3600L + 10, sid)
-    val byName = SkipIndex.nameScan(store, mdir, 3600L, 2 * 3600L + 10, "cpu")
+    val probe = SkipIndex.scan(store, mdir,
+      ScanProbe(lo = Some(3600L), hi = Some(2 * 3600L + 10), seriesId = Some(sid)))
+    val byName = SkipIndex.scan(store, mdir,
+      ScanProbe(lo = Some(3600L), hi = Some(2 * 3600L + 10), series = Some("cpu")))
     assert(byName.filesTotal === 8)
     assert(byName.filesRead === probe.filesRead,
       s"name scan must prune like the id probe: ${byName.filesRead} vs ${probe.filesRead}")
@@ -1154,10 +1265,12 @@ class StorageSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(got.toSeq === Seq((3610L, 1.0), (7210L, 2.0)))
     // a name the store never saw: every file pruned
-    val ghost = SkipIndex.nameScan(store, mdir, 0L, 100 * 3600L, "ghost.series")
+    val ghost = SkipIndex.scan(store, mdir,
+      ScanProbe(lo = Some(0L), hi = Some(100 * 3600L), series = Some("ghost.series")))
     assert(ghost.filesRead === 0 && ghost.df.isEmpty)
     // value bounds compose like the by_id probe's (r14 shape)
-    val bounded = SkipIndex.nameScan(store, mdir, 0L, 100 * 3600L, "cpu", 2.5)
+    val bounded = SkipIndex.scan(store, mdir,
+      ScanProbe(lo = Some(0L), hi = Some(100 * 3600L), series = Some("cpu"), vlo = Some(2.5)))
     assert(bounded.filesRead === 1, "value stats prune inside the name's files")
     assert(bounded.df.select("value").as[Double].collect().toSeq === Seq(3.0))
     // the ENGINE routes `from <name>` through the name bloom: same
@@ -1273,8 +1386,8 @@ class StorageSpec extends AnyFunSuite {
     SkipIndex.build(store, mdir)
     // scan-level pin: time (hours 0-2: 9 files) ∧ name (cpu: 6) ∧ tag
     // (host=a: 3)
-    val scanned = SkipIndex.nameScan(store, mdir, 0L, 2 * 3600L + 20, "cpu",
-      tags = Seq(Seq("host" -> "a")))
+    val scanned = SkipIndex.scan(store, mdir, ScanProbe(lo = Some(0L),
+      hi = Some(2 * 3600L + 20), series = Some("cpu"), tags = Seq(Seq("host" -> "a"))))
     assert(scanned.filesTotal === 12)
     assert(scanned.filesRead === 3,
       s"name ∧ time ∧ tag bloom must read 3 of 12 files, got ${scanned.filesRead}")
@@ -1419,7 +1532,7 @@ class StorageSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(legacyRows.toIndexedSeq), legacySchema)
       .coalesce(1).write.parquet(mdir + "/m")
     graft.storage.MetaCache.invalidate(mdir)
-    assert(!SkipIndex.hasNameBloom(spark, mdir))
+    assert(!SkipIndex.read(spark, mdir).columns.contains("bloom_name"))
     // refresh ONE hour: the upgrade must be O(touched hours) — carried
     // rows gain NULL blooms (unionByName fill), only hour 3's rows are
     // recomputed with real ones
@@ -1433,7 +1546,8 @@ class StorageSpec extends AnyFunSuite {
       "carried rows must keep NULL blooms — a full rebuild here would hide O(store) work")
     // a NULL bloom means "cannot prune": the name scan reads the carried
     // files (superset) and the fresh hour prunes — rows stay exact
-    val scanned = SkipIndex.nameScan(store, mdir, 0L, 4 * 3600L, "cpu")
+    val scanned = SkipIndex.scan(store, mdir,
+      ScanProbe(lo = Some(0L), hi = Some(4 * 3600L), series = Some("cpu")))
     assert(scanned.filesRead === 7,
       s"6 carried (unprunable) + 1 fresh pruned file, got ${scanned.filesRead}")
     assert(scanned.df.select("time", "value").orderBy("time")
@@ -1441,11 +1555,12 @@ class StorageSpec extends AnyFunSuite {
       === (0 until 4).map(h => (h * 3600L + 10, h.toDouble)))
     // ghost probe: fresh hour pruned by bloom, carried hours read-and-
     // residual-dropped — correct empty result either way
-    val ghost = SkipIndex.nameScan(store, mdir, 0L, 4 * 3600L, "ghost")
+    val ghost = SkipIndex.scan(store, mdir,
+      ScanProbe(lo = Some(0L), hi = Some(4 * 3600L), series = Some("ghost")))
     assert(ghost.filesRead === 6 && ghost.df.isEmpty)
     // tag pruning likewise: NULL-tolerant on carried rows
-    val tagScan = SkipIndex.rangeScan(store, mdir, 0L, 4 * 3600L,
-      tags = Seq(Seq("host" -> "cpu")))
+    val tagScan = SkipIndex.scan(store, mdir, ScanProbe(lo = Some(0L),
+      hi = Some(4 * 3600L), tags = Seq(Seq("host" -> "cpu"))))
     assert(tagScan.filesRead === 7)
     assert(tagScan.df.count() === 4)
   }

@@ -1804,7 +1804,8 @@ class StreamingSpec extends AnyFunSuite {
     // and it probes correctly: series 'cpu', hours 1-2 window
     val sid = spark.range(1).select(graft.core.Functions.seriesId(
       lit("cpu"), map(lit("host"), lit("cpu"))).as("s")).head().getLong(0)
-    val probe = SkipIndex.probeScan(store, mdir, 3600L, 2 * 3600L + 1800, sid)
+    val probe = SkipIndex.scan(store, mdir, graft.storage.ScanProbe(
+      lo = Some(3600L), hi = Some(2 * 3600L + 1800), seriesId = Some(sid)))
     assert(probe.filesRead < probe.filesTotal, "pruning evidence")
     val got = probe.df.select("time", "value").orderBy("time")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
