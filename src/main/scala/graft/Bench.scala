@@ -241,7 +241,7 @@ object Bench {
       if (txt.contains("\"metric\":\"serve_qps\"")) Some(txt)
       else { System.err.println(s"[bench] serve child output incomplete (see $log)"); None }
     } catch {
-      case e: Throwable => System.err.println(s"[bench] serve child spawn failed: $e"); None
+      case NonFatal(e) => System.err.println(s"[bench] serve child spawn failed: $e"); None
     } finally java.nio.file.Files.deleteIfExists(outFile)
   }
 
@@ -278,7 +278,7 @@ object Bench {
         System.err.println(s"[bench] child $fam output incomplete (see $log)"); None
       }
     } catch {
-      case e: Throwable => System.err.println(s"[bench] child $fam spawn failed: $e"); None
+      case NonFatal(e) => System.err.println(s"[bench] child $fam spawn failed: $e"); None
     } finally java.nio.file.Files.deleteIfExists(outFile)
   }
 
@@ -308,7 +308,7 @@ object Bench {
         .map(m => m.group(1) -> Bracket(m.group(2).toDouble, None)).toMap
       flat ++ objs // object form wins for queries present in both
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] BRACKETS.json unreadable: $e"); Map.empty
     }
   }

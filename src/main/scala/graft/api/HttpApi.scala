@@ -192,8 +192,8 @@ final class HttpApi(store: SeriesStore, token: Option[String] = None, maxRows: I
     try {
       val ops = stats.putArray("operators")
       org.apache.spark.sql.graftshim.GraftShim
-        .operatorStats(limited.asInstanceOf[org.apache.spark.sql.classic.DataFrame])
-        .foreach { case (name, rowsOut) =>
+        .operatorStatsTimed(limited.asInstanceOf[org.apache.spark.sql.classic.DataFrame])
+        .foreach { case (name, rowsOut, _) =>
           val o = ops.addObject()
           o.put("name", name)
           o.put("rows_out", rowsOut)

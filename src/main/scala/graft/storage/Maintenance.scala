@@ -146,14 +146,11 @@ object Maintenance {
           (col("time") - pmod(col("time"), lit(step))).as("bucket"))
         .agg(sum(col("value")).as("sum_v"), count(col("value")).as("n"),
           min(col("value")).as("min_v"), max(col("value")).as("max_v"))
-      val saved = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try roll.write.mode(SaveMode.Overwrite)
+      // dynamic mode as a WRITER option: a session-conf set would leak to
+      // every concurrent partitioned Overwrite on the shared session
+      roll.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("hour_bucket").parquet(s"$dir/rollup")
-      finally saved match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
     }
     // hours DROPPED from the store (retention) leave stale rollup
     // partitions — remove them so the rollup tracks deletes too

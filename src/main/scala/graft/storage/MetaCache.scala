@@ -1,10 +1,12 @@
 package graft.storage
 
+import scala.util.control.NonFatal
+
 /** Per-(dir, refresh-generation) memo for serving-path METADATA — tier
   * existence checks, cell-schema key lists, manifest file totals.
   *
   * Why: every engine-served query was paying 3–4 filesystem round-trips
-  * of pure metadata (`SketchCells.exists` + `ndvTagsOf` parquet schema
+  * of pure metadata (`SketchCells.exists` + an NDV-key parquet schema
   * open + `groupTagsOf` directory listing, and each routed skip-scan's
   * `m.count()` evidence) — single-digit ms locally, but at dashboard QPS
   * against an object store those are avoidable remote calls on EVERY
@@ -129,7 +131,7 @@ private[graft] object MetaCache {
       // as long as the failure persists, so it warns once per dir,
       // mirroring the marker-WRITE failure path below.
       case _: java.io.FileNotFoundException => "absent"
-      case e: Throwable =>
+      case NonFatal(e) =>
         if (markerReadFailures.add(dir))
           System.err.println(s"[graft] MetaCache: failed to read generation " +
             s"marker in $dir — this JVM may serve stale cross-JVM metadata " +
@@ -187,7 +189,7 @@ private[graft] object MetaCache {
       // an unexpected marker-write failure keeps same-JVM readers
       // correct (the counter bumped) but leaves OTHER JVMs serving
       // stale metadata until the next successful stamp — loud, once
-      case e: Throwable =>
+      case NonFatal(e) =>
         if (markerWriteFailures.add(dir))
           System.err.println(s"[graft] MetaCache: failed to persist generation " +
             s"marker in $dir — cross-JVM readers may serve stale metadata " +

@@ -1,29 +1,39 @@
 package graft.storage
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** At-rest t-digest cell store for a [[SeriesStore]] — the engine-facing
-  * slice of the sketch tier: one few-KB mergeable digest per
-  * (series, day) cell, day-PARTITIONED parquet, so any later quantile
-  * over a day-aligned window is a partition-pruned read + blob merge —
-  * never a raw-point rescan. `q_ts_tdigest` gates the sketch math; this
-  * object gives the store a PLACE for the cells and
-  * [[graft.sydraql.Engine]] a routing rule: a sydraQL
-  * `percentile_approx` whose group keys coarsen the (series, day) cell
-  * keys is served from here instead of the raw scan.
+/** At-rest day-cell store for a [[SeriesStore]] — the engine-facing
+  * slice of the sketch tier: one row of mergeable partials per
+  * (series, day) cell, day-PARTITIONED parquet, so any later aggregate
+  * over a day-aligned window is a partition-pruned read + partial merge
+  * — never a raw-point rescan. `q_ts_tdigest` gates the sketch math;
+  * this object gives the store a PLACE for the cells and
+  * [[graft.sydraql.Engine]] a routing rule: a sydraQL aggregate whose
+  * group keys coarsen the (series, day) cell keys is served from here
+  * instead of the raw scan.
+  *
+  * The cell format is defined ONCE, here: [[partials]] is the table of
+  * partial columns — each with its aggregate over raw points and its
+  * merge aggregate over partials — and [[servedAggs]] (plus
+  * [[quantileServed]]/[[ndvServed]]) the table of served aggregates —
+  * the partials each reads and its final column. The batch build and
+  * [[refresh]] ([[cellsOf]]), the streaming twin
+  * ([[graft.streaming.StreamOps.tdigestCellMaintenance]]: [[cellsOf]] +
+  * [[mergeCells]]) and the engine's served and hybrid merges all read
+  * these two tables, so the writers and the reader cannot drift apart.
   *
   * Scale shape: the build is one partial-aggregated pass over the store
-  * (digest state is bounded per cell); the store is O(series × days)
-  * KB-sized rows; serving reads only the probed days' partitions
-  * (PlanSpec pins the PartitionFilters). Append freshness follows the
-  * skip-manifest stance ([[SkipIndex.dirFor]]): [[SeriesStore.append]]
-  * recomputes the touched days when the store exists — a stale cell
-  * would silently under-count, the one failure mode that isn't loud.
-  * Since r13 every [[Maintenance]] mutator (deleteRows, retention,
-  * compaction) runs the same refresh hook for what it touched, so
-  * engine DELETEs and TTL sweeps can no longer leave the cells serving
-  * deleted rows.
+  * per table (digest state is bounded per cell); the store is
+  * O(series × days) KB-sized rows; serving reads only the probed days'
+  * partitions (PlanSpec pins the PartitionFilters). Append freshness
+  * follows the skip-manifest stance ([[SkipIndex.dirFor]]):
+  * [[SeriesStore.append]] recomputes the touched days when the store
+  * exists — a stale cell would silently under-count, the one failure
+  * mode that isn't loud. Since r13 every [[Maintenance]] mutator
+  * (deleteRows, retention, compaction) runs the same refresh hook for
+  * what it touched, so engine DELETEs and TTL sweeps can no longer leave
+  * the cells serving deleted rows.
   */
 object SketchCells {
 
@@ -50,88 +60,176 @@ object SketchCells {
     */
   def invalidate(dir: String): Unit = MetaCache.invalidate(dir)
 
-  /** Basic-aggregate columns every cell carries beside `n_rows` (r14) —
-    * the mergeable partials that let the engine serve
-    * `avg/sum/count/min/max(value)` EXACTLY from the tier (avg = merged
-    * sum / merged non-null count; min/max/count merge losslessly). The
-    * reference's own RollupHint breadcrumb
-    * (`/root/reference/src/sydra/query/plan.zig:19-21`,
-    * `physical.zig:47-54`) marks exactly these plans for pre-aggregated
-    * serving; the sketch columns served only the approximate half until
-    * now.
+  /** One cell partial: its column, its aggregate over raw points
+    * (`time`, `value`, `tags`), and its merge aggregate over a frame of
+    * partials carrying that column.
     */
-  private[graft] val basicCols = Seq("sum_v", "min_v", "max_v", "n_vals",
-    "fl_first", "fl_last", "nn_first", "nn_last")
+  private[graft] final case class Partial(name: String, raw: Column, merge: Column)
 
-  private def basicAggs = Seq(
-    sum(col("value")).as("sum_v"),
-    min(col("value")).as("min_v"),
-    max(col("value")).as("max_v"),
-    count(col("value")).as("n_vals"), // non-null count — the avg/count(value) denominator
-    // first/last partials: min/max over struct(time, value) IS the raw
-    // route's min_by/max_by on (time, value) — lexicographic struct
-    // ordering, value tiebreak included — and the struct min of day
-    // minima is the window's min, so first/last coarsen like min/max.
-    // Two variants because the language's aggregates disagree on nulls:
-    // first()/last() rank null-valued rows (fl_*), delta()/rate() skip
-    // them (nn_*, the orderedExtremes contract) — serving must be
-    // raw-route-exact on EITHER, whatever the store holds
-    min(struct(col("time").as("t"), col("value").as("v"))).as("fl_first"),
-    max(struct(col("time").as("t"), col("value").as("v"))).as("fl_last"),
-    min(when(col("value").isNotNull,
-      struct(col("time").as("t"), col("value").as("v")))).as("nn_first"),
-    max(when(col("value").isNotNull,
-      struct(col("time").as("t"), col("value").as("v")))).as("nn_last"))
+  /** The cell's day: the epoch-second floor every writer groups by. */
+  private[graft] def day: Column = col("time") - pmod(col("time"), lit(86400L))
 
-  private def cellsOf(scan: DataFrame, ndvTags: Seq[String]): DataFrame = {
-    // NDV cells are THETA sketches (lgK 12), the SAME estimator family —
-    // same lgK, same exact-mode range — as the raw-scan `ndv()` route
-    // (Compiler's ThetaSketch.agg): creating or dropping the cell tier
-    // must never change what a query returns merely by switching
-    // estimator (the r12 HLL cells did exactly that past the sparse
-    // range). The value is cast to string exactly as the raw route casts
-    // its argument, so both routes hash identical bytes.
-    val aggs = Seq(first(col("series")).as("series"),
-      graft.functions.TDigest.agg(col("value")).as("td"),
-      count(lit(1)).as("n_rows")) ++ basicAggs ++
-      ndvTags.map(k => graft.functions.ThetaSketch.agg(
-        try_element_at(col("tags"), lit(k)).cast("string")).as(s"theta_$k"))
-    scan
-      .groupBy(col("series_id"),
-        (col("time") - pmod(col("time"), lit(86400L))).as("day"))
+  /** A tag tier's cell key: the value of tag `k` (NULL where absent). */
+  private[graft] def tagval(k: String): Column =
+    try_element_at(col("tags"), lit(k)).as("tagval")
+
+  private def point = struct(col("time").as("t"), col("value").as("v"))
+
+  /** The partial table, in on-disk column order (between the cell keys
+    * and `day`). Beside the t-digest and `n_rows`, the basic partials
+    * (r14) let the engine serve `avg/sum/count/min/max(value)` EXACTLY
+    * (avg = merged sum / merged non-null count; min/max/counts merge
+    * losslessly) — the reference's own RollupHint breadcrumb
+    * (`src/sydra/query/plan.zig:19-21`, `physical.zig:47-54`) marks
+    * exactly these plans for pre-aggregated serving.
+    *
+    * first/last partials: min/max over struct(time, value) IS the raw
+    * route's min_by/max_by on (time, value) — lexicographic struct
+    * ordering, value tiebreak included — and the struct min of day
+    * minima is the window's min, so first/last coarsen like min/max.
+    * Two variants because the language's aggregates disagree on nulls:
+    * first()/last() rank null-valued rows (fl_*), delta()/rate() skip
+    * them (nn_*, the orderedExtremes contract) — serving must be
+    * raw-route-exact on EITHER, whatever the store holds.
+    *
+    * NDV partials (`theta_<k>`, one per key in `thetaKeys`) are THETA
+    * sketches (lgK 12), the SAME estimator family — same lgK, same
+    * exact-mode range — as the raw-scan `ndv()` route (Compiler's
+    * ThetaSketch.agg): creating or dropping the cell tier must never
+    * change what a query returns merely by switching estimator (the r12
+    * HLL cells did exactly that past the sparse range). The value is
+    * cast to string exactly as the raw route casts its argument, so both
+    * routes hash identical bytes; merge = blob union.
+    */
+  private[graft] def partials(thetaKeys: Seq[String]): Seq[Partial] = Seq(
+    Partial("series", first(col("series")), first(col("series"))),
+    Partial("td", graft.functions.TDigest.agg(col("value")),
+      graft.functions.TDigest.mergeAgg(col("td"))),
+    Partial("n_rows", count(lit(1)), sum(col("n_rows"))),
+    Partial("sum_v", sum(col("value")), sum(col("sum_v"))),
+    Partial("min_v", min(col("value")), min(col("min_v"))),
+    Partial("max_v", max(col("value")), max(col("max_v"))),
+    // non-null count — the avg/count(value) denominator
+    Partial("n_vals", count(col("value")), sum(col("n_vals"))),
+    Partial("fl_first", min(point), min(col("fl_first"))),
+    Partial("fl_last", max(point), max(col("fl_last"))),
+    Partial("nn_first", min(when(col("value").isNotNull, point)), min(col("nn_first"))),
+    Partial("nn_last", max(when(col("value").isNotNull, point)), max(col("nn_last")))) ++
+    thetaKeys.map(k => Partial(s"theta_$k",
+      graft.functions.ThetaSketch.agg(try_element_at(col("tags"), lit(k)).cast("string")),
+      graft.functions.ThetaSketch.unionAgg(col(s"theta_$k"))))
+
+  /** The rows of [[partials]] named in `names`, in table order. */
+  private[graft] def partialsNamed(names: Set[String]): Seq[Partial] =
+    partials(names.toSeq.filter(_.startsWith("theta_"))
+      .map(_.stripPrefix("theta_")).sorted).filter(p => names(p.name))
+
+  /** One served aggregate: the partials it reads, and its final column
+    * given each partial's MERGED column (`m(name)`).
+    */
+  private[graft] final case class Served(reads: Seq[String],
+      result: (String => Column) => Column)
+
+  private def nnDelta(m: String => Column) =
+    m("nn_last").getField("v") - m("nn_first").getField("v")
+
+  /** The served-aggregate table, keyed by the sydraQL call over `value`.
+    * avg = merged sum / merged non-null count — the raw route's exact
+    * value up to double fold order (the gates' rounding discipline); the
+    * others merge losslessly. delta/rate read the null-skipping extremes
+    * (orderedExtremes parity): subtractions of exact point values,
+    * bit-exact vs raw.
+    */
+  private[graft] val servedAggs: Map[String, Served] = Map(
+    "avg" -> Served(Seq("sum_v", "n_vals"), m => m("sum_v") / m("n_vals")),
+    "sum" -> Served(Seq("sum_v"), _("sum_v")),
+    "min" -> Served(Seq("min_v"), _("min_v")),
+    "max" -> Served(Seq("max_v"), _("max_v")),
+    "count()" -> Served(Seq("n_rows"), _("n_rows")),
+    "count(value)" -> Served(Seq("n_vals"), _("n_vals")),
+    "first" -> Served(Seq("fl_first"), _("fl_first").getField("v")),
+    "last" -> Served(Seq("fl_last"), _("fl_last").getField("v")),
+    "delta" -> Served(Seq("nn_first", "nn_last", "n_vals"),
+      m => when(m("n_vals") >= 1, nnDelta(m))),
+    "rate" -> Served(Seq("nn_first", "nn_last", "n_vals"), { m =>
+      val dt = m("nn_last").getField("t") - m("nn_first").getField("t")
+      when(m("n_vals") >= 2 && dt > 0, nnDelta(m) / dt.cast("double"))
+    }))
+
+  /** `percentile_approx(value, p)`: the merged t-digest's quantile. */
+  private[graft] def quantileServed(p: Double): Served =
+    Served(Seq("td"), m => graft.functions.TDigest.quantileOf(m("td"), p))
+
+  /** `ndv(tag.k)`: the merged theta union's estimate, cast to double —
+    * the raw ndv route's type, so routing never changes the result
+    * schema.
+    */
+  private[graft] def ndvServed(k: String): Served =
+    Served(Seq(s"theta_$k"), m =>
+      graft.functions.ThetaSketch.estimate(m(s"theta_$k")).cast("double"))
+
+  /** On-disk column order of a td (`tagged` = false) or tag-tier table. */
+  private def layout(tagged: Boolean, thetaKeys: Seq[String]): Seq[Column] =
+    (Seq("series_id", "series") ++ (if (tagged) Seq("tagval") else Nil) ++
+      partials(thetaKeys).map(_.name).filterNot(_ == "series") :+ "day").map(col)
+
+  /** Fresh cells of raw `points`: the raw aggregates per
+    * (series_id, day) — or, for tag tier `tagKey`, per
+    * (series_id, tagval, day) — in on-disk column order.
+    */
+  private[graft] def cellsOf(points: DataFrame, tagKey: Option[String],
+      thetaKeys: Seq[String]): DataFrame = {
+    val aggs = partials(thetaKeys).map(p => p.raw.as(p.name))
+    points
+      .groupBy((Seq(col("series_id")) ++ tagKey.map(tagval) :+ day.as("day")): _*)
       .agg(aggs.head, aggs.tail: _*)
-      .select((Seq(col("series_id"), col("series"), col("td"), col("n_rows")) ++
-        basicCols.map(col) ++ ndvTags.map(k => col(s"theta_$k")) :+ col("day")): _*)
+      .select(layout(tagKey.isDefined, thetaKeys): _*)
   }
 
-  /** Tag-tier layout: one t-digest per (series, day, tag `k`=v), its own
-    * day-partitioned table per key — the tier that serves
-    * `percentile_approx … GROUP BY tag.k` without a raw rescan.
+  /** Merge a frame of cells (same layout, possibly several rows per
+    * cell) into one row per cell with the merge aggregates.
+    */
+  private[graft] def mergeCells(cells: DataFrame, tagged: Boolean,
+      thetaKeys: Seq[String]): DataFrame = {
+    val aggs = partials(thetaKeys).map(p => p.merge.as(p.name))
+    cells
+      .groupBy((Seq("series_id") ++ (if (tagged) Seq("tagval") else Nil) :+ "day").map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .select(layout(tagged, thetaKeys): _*)
+  }
+
+  /** Loud legacy guard for incremental writers ([[refresh]], the
+    * streaming twin), returning the table's theta keys: they write
+    * recomputed day partitions with the CURRENT schema while untouched
+    * days keep theirs — on a table whose schema predates it (r12 `hll_*`
+    * NDV cells, or pre-r14 cells without the basic partials) that would
+    * leave inconsistent per-partition schemas, and which columns a later
+    * read sees would depend on which footer Spark samples. Mixed schemas
+    * are a silent-corruption mode; demand the rebuild instead.
+    */
+  private[graft] def requireCurrent(path: String, cols: Seq[String]): Seq[String] = {
+    if (cols.exists(_.startsWith("hll_")))
+      throw new IllegalStateException(
+        s"cell table at $path carries pre-r13 hll_* NDV cells; an incremental " +
+          "update would mix schemas across day partitions — rebuild via " +
+          "SketchCells.build (NDV cells are theta sketches since r13)")
+    val missing = partials(Nil).map(_.name).filterNot(cols.contains)
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"cell table at $path lacks the partial columns " +
+          s"(${missing.mkString(", ")}); an incremental update would mix " +
+          "schemas across day partitions — rebuild via SketchCells.build")
+    cols.filter(_.startsWith("theta_")).map(_.stripPrefix("theta_"))
+  }
+
+  /** Tag-tier layout: one cell per (series, day, tag `k`=v), its own
+    * day-partitioned table per key — the tier that serves `GROUP BY
+    * tag.k` (and `tag.k = 'v'` filters) without a raw rescan. Since r14
+    * the tag tier also carries the store's theta NDV cells, so
+    * `ndv(tag.j) … GROUP BY tag.k` — "distinct users per host per day" —
+    * merges KB blobs instead of rescanning raw points.
     */
   def tagDir(dir: String, k: String): String = s"$dir/tdtag/$k"
-
-  /** One cell per (series, day, tag `k`=v). Since r14 the tag tier also
-    * carries the store's theta NDV cells (`ndvTags`, same estimator
-    * family/lgK discipline as [[cellsOf]]) so `ndv(tag.j) … GROUP BY
-    * tag.k` — "distinct users per host per day" — merges KB blobs
-    * instead of rescanning raw points.
-    */
-  private def tagCellsOf(scan: DataFrame, k: String,
-      ndvTags: Seq[String]): DataFrame = {
-    val aggs = Seq(first(col("series")).as("series"),
-      graft.functions.TDigest.agg(col("value")).as("td"),
-      count(lit(1)).as("n_rows")) ++ basicAggs ++
-      ndvTags.map(j => graft.functions.ThetaSketch.agg(
-        try_element_at(col("tags"), lit(j)).cast("string")).as(s"theta_$j"))
-    scan
-      .groupBy(col("series_id"),
-        try_element_at(col("tags"), lit(k)).as("tagval"),
-        (col("time") - pmod(col("time"), lit(86400L))).as("day"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select((Seq(col("series_id"), col("series"), col("tagval"),
-        col("td"), col("n_rows")) ++ basicCols.map(col) ++
-        ndvTags.map(j => col(s"theta_$j")) :+ col("day")): _*)
-  }
 
   /** Build (overwrite) the full cell store: one t-digest per
     * (series, day), plus — per `ndvTags` key — a theta sketch of that
@@ -146,7 +244,7 @@ object SketchCells {
   def build(store: SeriesStore, dir: String, ndvTags: Seq[String] = Seq.empty,
       groupTags: Seq[String] = Seq.empty): Unit = {
     require(!store.isEmpty, s"store at ${store.root} has no flushed segments")
-    cellsOf(store.scan(), ndvTags)
+    cellsOf(store.scan(), None, ndvTags)
       .write.mode(SaveMode.Overwrite)
       // full rebuild replaces the WHOLE store: static overwrite explicitly,
       // so a session whose conf defaults to dynamic can never leave
@@ -156,7 +254,7 @@ object SketchCells {
     groupTags.foreach { k =>
       // the tag tier carries the SAME theta NDV keys as the td table, so
       // any NDV a global window can serve, a tag-grouped one can too
-      tagCellsOf(store.scan(), k, ndvTags)
+      cellsOf(store.scan(), Some(k), ndvTags)
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "static")
         .partitionBy("day").parquet(tagDir(dir, k))
@@ -180,17 +278,6 @@ object SketchCells {
   def readTag(spark: SparkSession, dir: String, k: String): DataFrame =
     spark.read.parquet(tagDir(dir, k))
 
-  /** Tag keys whose theta NDV cells the store carries (from the cell
-    * schema). A pre-r13 store's `hll_*` columns are NOT reported — its
-    * ndv queries fall through to the raw route (correct, just unserved)
-    * until the store is rebuilt with the theta cells.
-    */
-  def ndvTagsOf(spark: SparkSession, dir: String): Seq[String] =
-    MetaCache.cached(dir, "ndvTags") {
-      read(spark, dir).columns.toSeq
-        .filter(_.startsWith("theta_")).map(_.stripPrefix("theta_"))
-    }
-
   /** Recompute ONLY `days`' cells from the store (hour-partition-pruned
     * scan) and overwrite exactly those day partitions — the incremental
     * ingest path (same dynamic-partition-overwrite shape as the
@@ -207,39 +294,15 @@ object SketchCells {
     * the emptied day's old cells behind — the same bounded crash window
     * as a crash before any refresh; the next refresh of that day heals it.)
     */
-  /** Loud legacy guard: an incremental refresh writes recomputed day
-    * partitions with [[cellsOf]]'s CURRENT schema while untouched days
-    * keep theirs — on a store whose schema predates it (r12 `hll_*` NDV
-    * cells, or pre-r14 cells without the basic-aggregate columns) that
-    * would leave the table with inconsistent per-partition schemas, and
-    * which columns a later read sees would depend on which footer Spark
-    * samples. Mixed schemas are a silent-corruption mode; demand the
-    * rebuild instead.
-    */
-  private def requireCurrentSchema(spark: SparkSession, path: String,
-      cols: Seq[String]): Unit = {
-    if (cols.exists(_.startsWith("hll_")))
-      throw new IllegalStateException(
-        s"cell store at $path carries pre-r13 hll_* NDV cells; an incremental " +
-          "refresh would mix schemas across day partitions — rebuild via " +
-          "SketchCells.build (NDV cells are theta sketches since r13)")
-    if (!basicCols.forall(cols.contains))
-      throw new IllegalStateException(
-        s"cell store at $path lacks the basic-aggregate columns " +
-          s"(${basicCols.mkString(", ")}); an incremental refresh would mix " +
-          "schemas across day partitions — rebuild via SketchCells.build")
-  }
-
   def refresh(store: SeriesStore, dir: String, days: Seq[Long]): Unit = {
     if (days.isEmpty) return
     val spark = store.spark
-    requireCurrentSchema(spark, s"$dir/td", read(spark, dir).columns.toSeq)
-    groupTagsOf(spark, dir).foreach(k =>
-      requireCurrentSchema(spark, tagDir(dir, k),
-        readTag(spark, dir, k).columns.toSeq))
-    val dayCol = (col("time") - pmod(col("time"), lit(86400L)))
-    val touched = store.scan().filter(dayCol.isin(days: _*))
-    val remaining = touched.select(dayCol.as("day")).distinct()
+    // each table is self-describing: recompute it with ITS theta keys
+    val ndvKeys = requireCurrent(s"$dir/td", read(spark, dir).columns.toSeq)
+    val tiers = groupTagsOf(spark, dir).map(k =>
+      k -> requireCurrent(tagDir(dir, k), readTag(spark, dir, k).columns.toSeq))
+    val touched = store.scan().filter(day.isin(days: _*))
+    val remaining = touched.select(day.as("day")).distinct()
       .collect().map(_.getLong(0)).toSet
     // one sweep per table (td + each group-tag tier): dynamic-overwrite
     // the recomputed days, drop the emptied ones
@@ -254,13 +317,8 @@ object SketchCells {
         fs.delete(new org.apache.hadoop.fs.Path(root, s"day=$d"), true)
       }
     }
-    sweep(s"$dir/td", cellsOf(touched, ndvTagsOf(spark, dir)))
-    groupTagsOf(spark, dir).foreach { k =>
-      // each tag tier is self-describing: recompute with ITS theta keys
-      val tagNdv = readTag(spark, dir, k).columns.toSeq
-        .filter(_.startsWith("theta_")).map(_.stripPrefix("theta_"))
-      sweep(tagDir(dir, k), tagCellsOf(touched, k, tagNdv))
-    }
+    sweep(s"$dir/td", cellsOf(touched, None, ndvKeys))
+    tiers.foreach { case (k, nk) => sweep(tagDir(dir, k), cellsOf(touched, Some(k), nk)) }
     // everything emptied → no partitions left to read; drop the whole
     // store (td + tag tiers) so exists() turns false and the engine
     // falls through to the raw route

@@ -1611,8 +1611,8 @@ object StreamOps {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // Tier COLUMN SETS, read once per stream (r15, ADVICE): checkSchema
-    // was opening every tier's parquet footer on every micro-batch for
+    // Tier COLUMN SETS, read once per stream (r15, ADVICE): the legacy
+    // guard was opening every tier's parquet footer on every micro-batch for
     // pure validation — metadata round-trips that scale with the tag
     // tier count. The stream itself writes the same columns each batch,
     // so the sets cannot change underneath it; an out-of-band rebuild
@@ -1640,128 +1640,56 @@ object StreamOps {
           // deterministic double-counting. Validate-then-stage-then-
           // publish shrinks that to the transient-write-failure window
           // the scaladoc's rebuild contract already covers.
-          val groupKs = graft.storage.SketchCells.groupTagsOf(spark, path)
+          val cells = graft.storage.SketchCells
+          val groupKs = cells.groupTagsOf(spark, path)
           val fs = new org.apache.hadoop.fs.Path(cellDir)
             .getFileSystem(spark.sessionState.newHadoopConf())
           val tdExists = fs.exists(new org.apache.hadoop.fs.Path(cellDir))
           // ALL schema validation runs here, before any aggregation or
-          // write: legacy hll_* cells (r12 estimator family) and
-          // pre-r14 stores without the basic partials are refused — a
-          // dynamic overwrite would mix schemas across day partitions
-          def checkSchema(where: String, cols: Seq[String]): Seq[String] = {
-            require(!cols.exists(_.startsWith("hll_")),
-              s"$where carries pre-r13 hll_* NDV cells — rebuild via " +
-                "SketchCells.build (NDV cells are theta sketches since r13)")
-            require(Seq("sum_v", "min_v", "max_v", "n_vals", "fl_first",
-                "fl_last", "nn_first", "nn_last").forall(cols.contains),
-              s"$where lacks the r14 basic-aggregate partial columns — " +
-                "rebuild via SketchCells.build")
-            cols.filter(_.startsWith("theta_")).map(_.stripPrefix("theta_"))
-          }
-          // theta NDV cells (r14): maintained per batch like the digests
-          // — each table's own theta_<k> keys come from ITS schema, the
-          // per-batch sketch is built by the raw route's aggregator
-          // (same family/lgK), and merge = blob union
-          val ndvKs: Seq[String] =
-            if (tdExists) checkSchema(s"cell store at $cellDir", tierCols(cellDir))
+          // write: the store's one legacy guard refuses hll_* cells and
+          // tables without the current partials (a dynamic overwrite
+          // would mix schemas across day partitions) and hands back each
+          // table's own theta_<k> NDV keys (r14) — maintained per batch
+          // like the digests, merge = blob union
+          val ndvKs =
+            if (tdExists) cells.requireCurrent(cellDir, tierCols(cellDir))
             else Seq.empty
-          val tierNdv: Seq[(String, Seq[String])] = groupKs.map { k =>
-            val tDir = graft.storage.SketchCells.tagDir(path, k)
-            (k, checkSchema(s"tag cell tier $tDir", tierCols(tDir)))
-          }
+          // (table dir, tag-tier key, theta keys): td first, then each tier
+          val tables: Seq[(String, Option[String], Seq[String])] =
+            (cellDir, None, ndvKs) +: groupKs.map { k =>
+              val tDir = cells.tagDir(path, k)
+              (tDir, Some(k), cells.requireCurrent(tDir, tierCols(tDir)))
+            }
           if (groupKs.nonEmpty || ndvKs.nonEmpty)
             require(b.columns.contains("tags"),
               "this cell store carries tag-keyed tiers or theta NDV cells (" +
                 (groupKs ++ ndvKs).distinct.mkString(", ") +
                 ") but the stream batch has no tags column — feed " +
                 "(series, series_id, tags, time, value)")
-          // the basic-aggregate partials every r14 cell carries beside
-          // n_rows (sum/min/max merge losslessly; counts add) — the
-          // engine's exact avg/sum/count/min/max serving stays fresh
-          // under continuous ingest like the digests
-          def freshAggs(nk: Seq[String]) = Seq(first(col("series")).as("series"),
-            graft.functions.TDigest.agg(col("value")).as("td"),
-            count(lit(1)).as("n_rows"),
-            sum(col("value")).as("sum_v"),
-            min(col("value")).as("min_v"), max(col("value")).as("max_v"),
-            count(col("value")).as("n_vals"),
-            min(struct(col("time").as("t"), col("value").as("v"))).as("fl_first"),
-            max(struct(col("time").as("t"), col("value").as("v"))).as("fl_last"),
-            min(when(col("value").isNotNull,
-              struct(col("time").as("t"), col("value").as("v")))).as("nn_first"),
-            max(when(col("value").isNotNull,
-              struct(col("time").as("t"), col("value").as("v")))).as("nn_last")) ++
-            nk.map(k => graft.functions.ThetaSketch.agg(
-              try_element_at(col("tags"), lit(k)).cast("string")).as(s"theta_$k"))
-          def mergeAggs(nk: Seq[String]) = Seq(first(col("series")).as("series"),
-            graft.functions.TDigest.mergeAgg(col("td")).as("td"),
-            sum(col("n_rows")).as("n_rows"),
-            sum(col("sum_v")).as("sum_v"),
-            min(col("min_v")).as("min_v"), max(col("max_v")).as("max_v"),
-            sum(col("n_vals")).as("n_vals"),
-            min(col("fl_first")).as("fl_first"), max(col("fl_last")).as("fl_last"),
-            min(col("nn_first")).as("nn_first"), max(col("nn_last")).as("nn_last")) ++
-            nk.map(k => graft.functions.ThetaSketch.unionAgg(
-              col(s"theta_$k")).as(s"theta_$k"))
-          def outCols(nk: Seq[String], tagval: Boolean): Seq[org.apache.spark.sql.Column] =
-            (Seq(col("series_id"), col("series")) ++
-              (if (tagval) Seq(col("tagval")) else Seq.empty) ++
-              Seq(col("td"), col("n_rows"),
-                col("sum_v"), col("min_v"), col("max_v"), col("n_vals"),
-                col("fl_first"), col("fl_last"),
-                col("nn_first"), col("nn_last")) ++
-              nk.map(k => col(s"theta_$k")) :+ col("day"))
-          val fresh = b
-            .groupBy(col("series_id"),
-              (col("time") - pmod(col("time"), lit(86400L))).as("day"))
-            .agg(freshAggs(ndvKs).head, freshAggs(ndvKs).tail: _*)
-            .select(outCols(ndvKs, tagval = false): _*)
           // touched days: metadata-sized (bounded by the batch's day span)
-          val days = fresh.select("day").distinct()
-            .collect().map(_.getLong(0))
-          val existing =
-            if (!tdExists) fresh.limit(0)
-            else spark.read.parquet(cellDir)
-              .filter(col("day").isin(days.toSeq: _*)) // partition-pruned
-              .select(fresh.columns.map(col).toSeq: _*)
-          val merged = existing.unionByName(fresh)
-            .groupBy(col("series_id"), col("day"))
-            .agg(mergeAggs(ndvKs).head, mergeAggs(ndvKs).tail: _*)
-            .select(outCols(ndvKs, tagval = false): _*)
-            // materialize BEFORE any overwrite — the plan reads the same
-            // path it is about to replace, and staging must complete
-            // before the first publish
-            .localCheckpoint(true)
-          // tag-keyed tiers (SketchCells groupTags, r13): build + STAGE
-          // each tier's merged frame before anything is written; each
-          // tier maintains ITS OWN theta NDV keys (r14)
-          val tagMerged: Seq[(String, DataFrame)] = tierNdv.map { case (k, nk) =>
-            val tDir = graft.storage.SketchCells.tagDir(path, k)
-            val freshT = b
-              .groupBy(col("series_id"),
-                try_element_at(col("tags"), lit(k)).as("tagval"),
-                (col("time") - pmod(col("time"), lit(86400L))).as("day"))
-              .agg(freshAggs(nk).head, freshAggs(nk).tail: _*)
-              .select(outCols(nk, tagval = true): _*)
-            val curT = spark.read.parquet(tDir)
-              .filter(col("day").isin(days.toSeq: _*)) // partition-pruned
-              .select(freshT.columns.map(col).toSeq: _*)
-            val mergedT = curT.unionByName(freshT)
-              .groupBy(col("series_id"), col("tagval"), col("day"))
-              .agg(mergeAggs(nk).head, mergeAggs(nk).tail: _*)
-              .select(outCols(nk, tagval = true): _*)
-              .localCheckpoint(true)
-            (tDir, mergedT)
+          val days = b.select(cells.day).distinct().collect().map(_.getLong(0))
+          // per table (td, then each tag tier — r13): the batch's fresh
+          // cells MERGED with the touched days' stored cells, then STAGED
+          // before anything is written
+          val staged: Seq[(String, DataFrame)] = tables.map { case (dir, tagKey, nk) =>
+            val fresh = cells.cellsOf(b, tagKey, nk)
+            val current =
+              if (tagKey.isEmpty && !tdExists) fresh.limit(0)
+              else spark.read.parquet(dir)
+                .filter(col("day").isin(days.toSeq: _*)) // partition-pruned
+                .select(fresh.columns.map(col).toSeq: _*)
+            (dir, cells.mergeCells(current.unionByName(fresh), tagKey.isDefined, nk)
+              // materialize BEFORE any overwrite — the plan reads the same
+              // path it is about to replace, and staging must complete
+              // before the first publish
+              .localCheckpoint(true))
           }
           // PUBLISH: every input validated, every merged frame already
           // materialized — nothing after this point recomputes
-          merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("day").parquet(cellDir)
-          tagMerged.foreach { case (tDir, m) =>
+          staged.foreach { case (dir, m) =>
             m.write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("day").parquet(tDir)
+              .partitionBy("day").parquet(dir)
           }
           // writer hook: the engine's serving-metadata memo (existence,
           // key lists) must reload after an out-of-build publish

@@ -298,43 +298,37 @@ object Engine {
       }
     }
     if (bounds.isEmpty) return None
-    // every projection is either THE bucket key (aliased), an aliased
-    // percentile_approx(value, <literal>), an aliased ndv(tag.<k>) whose
-    // theta cells the store carries, or — since r14 — an aliased basic
-    // aggregate over value (`avg sum min max count(value) count()`),
-    // served EXACTLY from the cells' mergeable partials (sum_v/min_v/
-    // max_v/n_vals beside n_rows: min of day-mins IS the window min,
-    // counts add, avg = merged sum / merged non-null count — the
-    // reference's own RollupHint shape, plan.zig:19-21, finally serving
-    // the aggregates dashboards ask most). Anything else → raw route.
+    // every projection is either THE bucket key (aliased) or an aliased
+    // aggregate from the cell store's served-aggregate table
+    // (SketchCells.servedAggs): percentile_approx(value, <literal>),
+    // ndv(tag.<k>) whose theta cells the store carries, or — since r14 —
+    // a basic aggregate over value (`avg sum min max count(value)
+    // count() first last delta rate`), served EXACTLY from the cells'
+    // mergeable partials — the reference's own RollupHint shape,
+    // plan.zig:19-21. Anything else → raw route.
     sealed trait P
     case class Grp(alias: String, k: GK) extends P
-    case class Quant(alias: String, p: Double) extends P
-    case class Ndv(alias: String, key: String) extends P
-    case class Bas(alias: String, kind: String) extends P
+    case class Agg(alias: String, a: SketchCells.Served) extends P
     val projs: Seq[Option[P]] = s.projections.map {
       case Ast.Projection(c, Some(alias)) if groupKeys.exists(_.e == c) =>
         Some(Grp(alias, groupKeys.find(_.e == c).get))
       case Ast.Projection(
           Ast.Call("percentile_approx", Seq(v: Ast.Ident, p)), Some(alias))
         if v.full.equalsIgnoreCase("value") =>
-        p match {
-          case Ast.FloatLit(f) if f >= 0 && f <= 1 => Some(Quant(alias, f))
-          case Ast.IntLit(i) if i >= 0 && i <= 1 => Some(Quant(alias, i.toDouble))
+        (p match {
+          case Ast.FloatLit(f) if f >= 0 && f <= 1 => Some(f)
+          case Ast.IntLit(i) if i >= 0 && i <= 1 => Some(i.toDouble)
           case _ => None
-        }
+        }).map(f => Agg(alias, SketchCells.quantileServed(f)))
       case Ast.Projection(Ast.Call("ndv", Seq(id: Ast.Ident)), Some(alias))
         if id.parts.length == 2 && id.parts.head.equalsIgnoreCase("tag") =>
-        Some(Ndv(alias, id.parts(1)))
-      case Ast.Projection(Ast.Call(fn, Seq(v: Ast.Ident)), Some(alias))
-        if Seq("avg", "sum", "min", "max", "first", "last",
-          "delta", "rate").contains(fn) && v.full.equalsIgnoreCase("value") =>
-        Some(Bas(alias, fn))
+        Some(Agg(alias, SketchCells.ndvServed(id.parts(1))))
       case Ast.Projection(Ast.Call("count", Seq()), Some(alias)) =>
-        Some(Bas(alias, "count_rows"))
-      case Ast.Projection(Ast.Call("count", Seq(v: Ast.Ident)), Some(alias))
+        Some(Agg(alias, SketchCells.servedAggs("count()")))
+      case Ast.Projection(Ast.Call(fn, Seq(v: Ast.Ident)), Some(alias))
         if v.full.equalsIgnoreCase("value") =>
-        Some(Bas(alias, "count_vals"))
+        SketchCells.servedAggs.get(if (fn == "count") "count(value)" else fn)
+          .map(Agg(alias, _))
       case _ => None
     }
     if (projs.exists(_.isEmpty) ||
@@ -347,12 +341,6 @@ object Engine {
     // route, which handles it fine
     val grpProjKeys = ps.collect { case Grp(_, k) => k }
     if (grpProjKeys.distinct.length != grpProjKeys.length) return None
-    // every requested NDV key must have its theta cells in the SERVING
-    // table — checked on the base read's schema below (the td table
-    // carries `ndvTags` theta cells; since r14 tag tiers carry the same
-    // set, so "distinct users per host" serves too; a pre-r14 tag tier
-    // without them falls through)
-    val ndvKeys = ps.collect { case Ndv(_, k) => k }.distinct
     // every group key must be projected under an alias (the serving
     // frame's column names come from them)
     val grpAliases: Map[GK, String] = ps.collect { case Grp(a, k) => k -> a }.toMap
@@ -436,57 +424,21 @@ object Engine {
       }).filter(col("day") >= dLo && col("day") < dHi)) {
       case (df, (_, v)) => df.filter(col("tagval") === v)
     }
-    // basic aggregates need the r14 mergeable-partial columns and NDV
-    // projections need their theta cells IN THIS TABLE; a store predating
-    // either lacks them — fall through to the raw route (correct, just
-    // unserved) until it is rebuilt. The schema is already open (the
-    // read above), so these checks cost no extra metadata round-trip.
-    val basics = ps.collect { case Bas(_, k) => k }.toSet
-    val needCols = basics.flatMap {
-      case "avg" => Seq("sum_v", "n_vals")
-      case "sum" => Seq("sum_v")
-      case "min" => Seq("min_v")
-      case "max" => Seq("max_v")
-      case "count_rows" => Seq("n_rows")
-      case "count_vals" => Seq("n_vals")
-      case "first" => Seq("fl_first")
-      case "last" => Seq("fl_last")
-      case _ => Seq("nn_first", "nn_last", "n_vals") // delta / rate
-    }
-    if (!needCols.forall(base.columns.contains)) return None
-    if (!ndvKeys.forall(j => base.columns.contains(s"theta_$j"))) return None
-    // one merge aggregate carries every served blob and partial: the
-    // t-digest (when any quantile is projected), one THETA union per
-    // requested tag key — the raw route's estimator family at the raw
-    // route's lgK, so tier presence changes which blobs merge, never
-    // which estimator answers (cast to double — the raw ndv route's
-    // type, so routing never changes the result schema either) — and the
-    // basic partials actually requested (sum of day sums, min of day
-    // mins, max of day maxes, row/non-null counts add)
-    val needSum = basics.contains("avg") || basics.contains("sum")
-    val needRate = basics.contains("delta") || basics.contains("rate")
-    val needNv = basics.contains("avg") || basics.contains("count_vals") || needRate
-    val aggs =
-      (if (ps.exists(_.isInstanceOf[Quant]))
-        Seq(graft.functions.TDigest.mergeAgg(col("td")).as("__td"))
-      else Seq.empty) ++
-        ndvKeys.map(k => graft.functions.ThetaSketch.estimate(
-          graft.functions.ThetaSketch.unionAgg(col(s"theta_$k")))
-          .cast("double").as(s"__ndv_$k")) ++
-        (if (needSum) Seq(org.apache.spark.sql.functions.sum(col("sum_v")).as("__sum")) else Seq.empty) ++
-        (if (basics.contains("min")) Seq(org.apache.spark.sql.functions.min(col("min_v")).as("__min")) else Seq.empty) ++
-        (if (basics.contains("max")) Seq(org.apache.spark.sql.functions.max(col("max_v")).as("__max")) else Seq.empty) ++
-        (if (basics.contains("count_rows")) Seq(org.apache.spark.sql.functions.sum(col("n_rows")).as("__nr")) else Seq.empty) ++
-        (if (needNv) Seq(org.apache.spark.sql.functions.sum(col("n_vals")).as("__nv")) else Seq.empty) ++
-        // first/last: struct min/max of the day partials — the earliest
-        // day's earliest (time, value) IS the window's
-        (if (basics.contains("first")) Seq(org.apache.spark.sql.functions.min(col("fl_first")).as("__ff")) else Seq.empty) ++
-        (if (basics.contains("last")) Seq(org.apache.spark.sql.functions.max(col("fl_last")).as("__fl")) else Seq.empty) ++
-        // delta/rate read the null-skipping extremes (orderedExtremes
-        // parity); subtractions of exact point values — bit-exact vs raw
-        (if (needRate) Seq(
-          org.apache.spark.sql.functions.min(col("nn_first")).as("__nnf"),
-          org.apache.spark.sql.functions.max(col("nn_last")).as("__nnl")) else Seq.empty)
+    // the partials the projected aggregates read must exist IN THIS
+    // TABLE: a store predating the r14 basic partials, or a tier without
+    // a requested NDV key's theta cells, lacks them — fall through to
+    // the raw route (correct, just unserved) until it is rebuilt. The
+    // schema is already open (the read above), so this check costs no
+    // extra metadata round-trip.
+    val needed = SketchCells.partialsNamed(ps.collect { case Agg(_, a) => a.reads }
+      .flatten.toSet)
+    if (!needed.forall(p => base.columns.contains(p.name))) return None
+    // one merge aggregate carries every needed partial, merged by the
+    // cell store's own merge aggregates (digest merge, theta union — the
+    // raw route's estimator family at the raw route's lgK, so tier
+    // presence changes which blobs merge, never which estimator answers
+    // — sums, struct min/max, counts add)
+    val aggs = needed.map(p => p.merge.as("__" + p.name))
     // group columns in declaration order: the bucket key is the same
     // floor expression the compiler emits for time_bucket, over the
     // cell's day — exact because step is a day multiple; the tag key is
@@ -502,24 +454,21 @@ object Engine {
           .as(grpAliases(k))
       case k @ TagG(_, _) => col("tagval").as(grpAliases(k))
     }
-    // the columns the merge aggregate actually reads — both tiers of the
-    // hybrid project exactly these, so the union stays KB-sized
-    val aggInputCols: Seq[String] =
-      (if (ps.exists(_.isInstanceOf[Quant])) Seq("td") else Seq.empty) ++
-        ndvKeys.map(k => s"theta_$k") ++ needCols.toSeq.sorted
-    val readCols = Seq("day") ++ tagKeyOpt.map(_ => "tagval").toSeq ++ aggInputCols
+    // the keys plus the partials the merge aggregate actually reads —
+    // both tiers of the hybrid project exactly these, so the union stays
+    // KB-sized
+    val readCols = Seq("day") ++ tagKeyOpt.map(_ => "tagval").toSeq ++ needed.map(_.name)
     // ragged-edge partials (r14, single-aggregate since r16): the raw
     // rows of each sub-day edge union FIRST and aggregate in ONE
     // partial-building groupBy into the SAME partial shapes the cells
-    // carry — built by the raw route's own aggregators (TDigest.agg /
-    // ThetaSketch.agg / sum / min / max / counts / struct extremes), so
-    // merging them with cell blobs never mixes estimator families. The
-    // leading edge lies wholly in day dLo−86400 and the trailing edge
-    // in day dHi, so one day-keyed groupBy yields exactly the per-edge
-    // rows the r14 two-subtree plan produced — minus one aggregation
-    // subtree + exchange per query (the serve-latency floor the hybrid
-    // pays over the cells-only path). One partial row per
-    // (day [, tag value]) per edge — KB.
+    // carry — built by the cell table's own raw aggregates, so merging
+    // them with cell blobs never mixes estimator families. The leading
+    // edge lies wholly in day dLo−86400 and the trailing edge in day
+    // dHi, so one day-keyed groupBy yields exactly the per-edge rows the
+    // r14 two-subtree plan produced — minus one aggregation subtree +
+    // exchange per query (the serve-latency floor the hybrid pays over
+    // the cells-only path). One partial row per (day [, tag value]) per
+    // edge — KB.
     def edgeRows(elo: Long, ehi: Long): DataFrame =
       // time is integer seconds and bounds are inclusive, so [elo, ehi)
       // is the inclusive range [elo, ehi - 1]. The store's pruned scan
@@ -533,34 +482,9 @@ object Engine {
       store.scanPruned(scanProbe(s.from, None).copy(lo = Some(elo),
         hi = Some(ehi - 1), tags = tagEq.toSeq.map(Seq(_)))).df
     def edgePartials(raw: DataFrame): DataFrame = {
-      import org.apache.spark.sql.functions.{count, max, min, pmod, struct, sum, when}
-      val eAggs: Seq[org.apache.spark.sql.Column] =
-        (if (ps.exists(_.isInstanceOf[Quant]))
-          Seq(graft.functions.TDigest.agg(col("value")).as("td"))
-        else Seq.empty) ++
-          ndvKeys.map(k => graft.functions.ThetaSketch.agg(
-            org.apache.spark.sql.functions.try_element_at(
-              col("tags"), lit(k)).cast("string")).as(s"theta_$k")) ++
-          needCols.toSeq.sorted.map {
-            case "sum_v" => sum(col("value")).as("sum_v")
-            case "min_v" => min(col("value")).as("min_v")
-            case "max_v" => max(col("value")).as("max_v")
-            case "n_rows" => count(lit(1)).as("n_rows")
-            case "n_vals" => count(col("value")).as("n_vals")
-            case "fl_first" =>
-              min(struct(col("time").as("t"), col("value").as("v"))).as("fl_first")
-            case "fl_last" =>
-              max(struct(col("time").as("t"), col("value").as("v"))).as("fl_last")
-            case "nn_first" => min(when(col("value").isNotNull,
-              struct(col("time").as("t"), col("value").as("v")))).as("nn_first")
-            case "nn_last" => max(when(col("value").isNotNull,
-              struct(col("time").as("t"), col("value").as("v")))).as("nn_last")
-          }
-      val gcols = Seq((col("time") - pmod(col("time"), lit(86400L))).as("day")) ++
-        tagKeyOpt.map(k => org.apache.spark.sql.functions.try_element_at(
-          col("tags"), lit(k)).as("tagval")).toSeq
-      raw.groupBy(gcols: _*).agg(eAggs.head, eAggs.tail: _*)
-        .select(readCols.map(col): _*)
+      val eAggs = needed.map(p => p.raw.as(p.name))
+      raw.groupBy((Seq(SketchCells.day.as("day")) ++ tagKeyOpt.map(SketchCells.tagval)): _*)
+        .agg(eAggs.head, eAggs.tail: _*)
     }
     val edges = Seq((l, dLo), (dHi, h)).filter { case (a, b) => a < b }
     val unioned =
@@ -572,28 +496,7 @@ object Engine {
       else unioned.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*)
     val out = merged.select(ps.map {
       case Grp(a, _) => col(a)
-      case Quant(a, p) => graft.functions.TDigest.quantileOf(col("__td"), p).as(a)
-      case Ndv(a, k) => col(s"__ndv_$k").as(a)
-      // avg = merged sum / merged non-null count — the raw route's exact
-      // value up to double fold order (the gates' rounding discipline);
-      // the others merge losslessly
-      case Bas(a, "avg") => (col("__sum") / col("__nv")).as(a)
-      case Bas(a, "sum") => col("__sum").as(a)
-      case Bas(a, "min") => col("__min").as(a)
-      case Bas(a, "max") => col("__max").as(a)
-      case Bas(a, "count_rows") => col("__nr").as(a)
-      case Bas(a, "first") => col("__ff").getField("v").as(a)
-      case Bas(a, "last") => col("__fl").getField("v").as(a)
-      case Bas(a, "delta") =>
-        org.apache.spark.sql.functions.when(col("__nv") >= 1,
-          col("__nnl").getField("v") - col("__nnf").getField("v")).as(a)
-      case Bas(a, "rate") => {
-        val dt = col("__nnl").getField("t") - col("__nnf").getField("t")
-        org.apache.spark.sql.functions.when(col("__nv") >= 2 && dt > 0,
-          (col("__nnl").getField("v") - col("__nnf").getField("v")) /
-            dt.cast("double")).as(a)
-      }
-      case Bas(a, _) => col("__nv").as(a) // count_vals
+      case Agg(a, agg) => agg.result(n => col("__" + n)).as(a)
     }: _*)
     // fill between the projection and the sort — the compiler's exact
     // placement (grouped → fill → project → order → offset → limit);
@@ -607,11 +510,7 @@ object Engine {
         if (bkOpt.isEmpty) return None
         val (bkName, st) = bkOpt.get
         val fkeys = groupKeys.collect { case k: TagG => grpAliases(k) }
-        val vcols = ps.collect {
-          case Quant(a, _) => a
-          case Ndv(a, _) => a
-          case Bas(a, _) => a
-        }
+        val vcols = ps.collect { case Agg(a, _) => a }
         policy match {
           case Ast.FillConst(Ast.IntLit(v)) =>
             graft.operators.Fill.applyConst(out, bkName, fkeys, st,

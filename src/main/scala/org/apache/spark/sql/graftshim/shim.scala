@@ -17,19 +17,14 @@ object GraftShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Post-execution per-operator stats `(nodeName, numOutputRows)` — the
-    * Spark analog of the reference's per-operator instrumentation
-    * (`operator.zig:30-48`, surfaced in API responses `http.zig:335-395`).
-    * AQE wrappers and query stages are unwrapped to the executed nodes.
-    */
-  def operatorStats(df: org.apache.spark.sql.classic.DataFrame): Seq[(String, Long)] =
-    operatorStatsTimed(df).map { case (name, rows, _) => (name, rows) }
-
-  /** Post-execution `(nodeName, numOutputRows, elapsedUs)`. Elapsed sums
-    * the node's executed timing metrics — Spark records "timing" metrics in
-    * milliseconds and "nsTiming" in nanoseconds — giving the closest Spark
-    * analog of the reference's per-operator `elapsed_us`
-    * (`operator.zig:30-48`). Nodes with no timing metrics report 0.
+  /** Post-execution per-operator stats `(nodeName, numOutputRows,
+    * elapsedUs)` — the Spark analog of the reference's per-operator
+    * instrumentation (`operator.zig:30-48`, surfaced in API responses
+    * `http.zig:335-395`). AQE wrappers and query stages are unwrapped to
+    * the executed nodes. Elapsed sums the node's executed timing metrics
+    * — Spark records "timing" metrics in milliseconds and "nsTiming" in
+    * nanoseconds — giving the closest Spark analog of the reference's
+    * `elapsed_us`. Nodes with no timing metrics report 0.
     */
   def operatorStatsTimed(df: org.apache.spark.sql.classic.DataFrame): Seq[(String, Long, Long)] = {
     import org.apache.spark.sql.execution.SparkPlan

@@ -1120,11 +1120,16 @@ class StorageSpec extends AnyFunSuite {
     SketchCells.refresh(store, SketchCells.dirFor(store), Seq(0L))
     assert(spark.conf.getOption("spark.sql.sources.partitionOverwriteMode") === before,
       "refresh must not mutate session-wide overwrite mode")
+    // the continuous rollup's dynamic overwrite is a writer option too
+    assert(Maintenance.continuousRollup(store, tmp() + "/agg") === Seq(0L, 86400L))
+    assert(spark.conf.getOption("spark.sql.sources.partitionOverwriteMode") === before,
+      "continuousRollup must not mutate session-wide overwrite mode")
   }
 
   test("SketchCells.refresh fails loudly on a legacy-schema store instead of mixing per-partition schemas") {
     import graft.storage.SketchCells
     import org.apache.spark.sql.functions.{col, lit, xxhash64}
+    import org.apache.spark.sql.types._
     import spark.implicits._
     val store = new SeriesStore(spark, tmp())
     store.append(Seq(("m", 100L, 1.0), ("m", 86500L, 2.0))
@@ -1144,6 +1149,32 @@ class StorageSpec extends AnyFunSuite {
     }
     assert(e1.getMessage.contains("rebuild"),
       s"missing basic columns must demand a rebuild: ${e1.getMessage}")
+    // the streaming twin is refused by the SAME guard: one batch of
+    // points against the legacy store fails with refresh's message as
+    // the wrapped cause of the StreamingQueryException
+    val streamIn = tmp()
+    Seq(("m", 200L, 3.0)).toDF("series", "time", "value")
+      .withColumn("tags", map(lit("host"), lit("a")))
+      .withColumn("series_id", graft.core.Functions.seriesId(col("series"), col("tags")))
+      .select("series", "series_id", "tags", "time", "value")
+      .write.mode("append").json(streamIn)
+    val streamSchema = StructType(Seq(StructField("series", StringType),
+      StructField("series_id", LongType),
+      StructField("tags", MapType(StringType, StringType)),
+      StructField("time", LongType), StructField("value", DoubleType)))
+    def streamGuardMessage(): String = {
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        graft.streaming.StreamOps.tdigestCellMaintenance(
+          spark.readStream.schema(streamSchema).json(streamIn), dir, tmp() + "/ck")
+          .awaitTermination(120000)
+        ()
+      }
+      Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case e: IllegalStateException => e.getMessage }
+        .getOrElse(fail(s"stream refusal must wrap the legacy guard's error: $ex"))
+    }
+    assert(streamGuardMessage() === e1.getMessage,
+      "stream and refresh must share one legacy guard")
     // simulate an r12 store: an hll_* NDV column in the cell schema
     val hll = spark.read.parquet(s"$dir/td")
       .withColumn("hll_host", xxhash64(col("series_id")).cast("string").cast("binary")).cache()
@@ -1155,6 +1186,8 @@ class StorageSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("hll"),
       s"hll_* cells must demand a rebuild: ${e2.getMessage}")
+    assert(streamGuardMessage() === e2.getMessage,
+      "stream and refresh must share one legacy guard")
     // a rebuild heals: refresh works again afterwards
     SketchCells.build(store, dir, groupTags = Seq("host"))
     SketchCells.refresh(store, dir, Seq(0L))

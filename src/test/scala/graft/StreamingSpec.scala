@@ -15,6 +15,34 @@ class StreamingSpec extends AnyFunSuite {
     d
   }
 
+  /** Stream-maintained cell table ≡ [[graft.storage.SketchCells.build]]'s
+    * table over the same points: the same on-disk schema (names, order,
+    * types) and, per cell (`keys`), the same exact partials — `sum_v`
+    * within double fold-order tolerance.
+    */
+  private def assertCellsMatchBuild(streamed: String, built: String,
+      keys: Seq[String]): Unit = {
+    val (st, bt) = (spark.read.parquet(streamed), spark.read.parquet(built))
+    assert(st.schema.map(f => (f.name, f.dataType)) ===
+      bt.schema.map(f => (f.name, f.dataType)),
+      s"streamed cells at $streamed must have the build's schema")
+    val exact = Seq("n_rows", "n_vals", "min_v", "max_v",
+      "fl_first", "fl_last", "nn_first", "nn_last")
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.select((keys ++ exact :+ "sum_v").map(col): _*).collect().map { r =>
+        r.toSeq.take(keys.length) ->
+          ((r.toSeq.slice(keys.length, keys.length + exact.length),
+            r.getDouble(keys.length + exact.length)))
+      }.toMap
+    val (sc, bc) = (cells(st), cells(bt))
+    assert(sc.keySet === bc.keySet, s"streamed cells at $streamed: cell keys differ")
+    for ((k, (ex, sum)) <- bc) {
+      assert(sc(k)._1 === ex, s"cell $k: exact partials differ")
+      assert(math.abs(sc(k)._2 - sum) <= 1e-9 * math.max(1.0, math.abs(sum)),
+        s"cell $k: sum_v ${sc(k)._2} vs build $sum")
+    }
+  }
+
   private def streamPoints(dir: java.nio.file.Path) =
     Ingest.normalize(spark.readStream.schema(Ingest.ndjsonSchema).json(dir.toString))
 
@@ -1566,6 +1594,11 @@ class StreamingSpec extends AnyFunSuite {
       .as[(String, Long, Long)].collect().toSet
     assert(perDay === pts.groupBy(p => (p._1, p._2 - p._2 % b))
       .map { case ((s, d), rs) => (s, d, rs.size.toLong) }.toSet)
+    // build ≡ stream: a one-shot build over the same points writes the
+    // same table and the same exact partials
+    val builtDir = Files.createTempDirectory("graft-stream-tdbuilt").toString
+    graft.storage.SketchCells.build(store, builtDir)
+    assertCellsMatchBuild(s"$cellsDir/td", s"$builtDir/td", Seq("series_id", "day"))
     // END-TO-END: the engine routes percentile_approx through the
     // maintained cells (day-aligned window) and the merged-digest answer
     // sits inside the exact ±0.05-quantile window of the raw data
@@ -1631,6 +1664,16 @@ class StreamingSpec extends AnyFunSuite {
       .as[(String, Long, Long)].collect().toSet
     assert(perCell === all.groupBy(p => (p._4, p._2 - p._2 % b))
       .map { case ((h, d), rs) => (h, d, rs.size.toLong) }.toSet)
+    // build ≡ stream, td AND tag tier: a one-shot build over a store of
+    // every point (seed + wave) writes the same tables and partials
+    val allStore = new graft.storage.SeriesStore(spark,
+      Files.createTempDirectory("graft-stream-tagall").toString + "/s")
+    allStore.append(asPts(all))
+    val builtDir = Files.createTempDirectory("graft-stream-tagbuilt").toString
+    graft.storage.SketchCells.build(allStore, builtDir, groupTags = Seq("host"))
+    assertCellsMatchBuild(s"$cellsDir/td", s"$builtDir/td", Seq("series_id", "day"))
+    assertCellsMatchBuild(s"$cellsDir/tdtag/host", s"$builtDir/tdtag/host",
+      Seq("series_id", "tagval", "day"))
     // end-to-end: the engine's tag-grouped quantile serves from the
     // maintained tier within the exact band (raw store lacks the wave —
     // a raw fallthrough would give the WRONG per-host medians here, so
