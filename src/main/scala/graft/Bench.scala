@@ -9,74 +9,36 @@ import scala.util.control.NonFatal
   * Each query is forced end-to-end with a `noop` write (materializes every
   * column, unlike `count()` which lets Catalyst prune the plan).
   *
-  * Extras isolation (round-10 harness fix): the ~100 registry-flagged
-  * extras used to run cache-isolated but in the SAME JVM as the headline
-  * set, and three consecutive driver runs showed a different ANN subset
-  * inflated 3–5× above its ONLY-mode bracket purely from accumulated JVM
-  * pressure (heap churn + code-cache + shuffle-dir residue). Extras now run
-  * in CHILD JVMs — one fresh JVM per frozen ≤12-query family
-  * ([[BenchFamilies]]), same classpath and JVM flags as this process
-  * (we're forked by sbt, so `java.class.path` is the real app classpath) —
-  * which makes every extra's number cold and order-independent, directly
-  * comparable to BASELINE.md's family-cold bracket column. If spawning
-  * fails (constrained environment) the harness falls back to the old
-  * in-process cache-isolated pass and says so on stderr.
+  * Extras isolation: the registry-flagged extras run in CHILD JVMs, one
+  * fresh JVM per frozen ≤12-query family ([[BenchFamilies]]), with the
+  * same classpath and JVM flags as this process (we're forked by sbt, so
+  * `java.class.path` is the real app classpath). In one shared JVM,
+  * accumulated pressure (heap churn, code cache, shuffle-dir residue)
+  * inflated a different subset 3–5× on every run; a fresh JVM per family
+  * makes each reading independent of the families before it. If a child
+  * cannot spawn, that family runs in-process, cache-isolated, and the
+  * artifact says so (`families.<f>.mode`).
   *
-  * Self-diagnosis (round-12 harness fix — three straight rounds of driver
-  * extras readings needed judge forensics to tell machine contention from
-  * regression, because the artifact recorded wall time only):
-  *  - every query records `cpu_s` (process-CPU-time delta) BESIDE wall —
-  *    a contended reading shows wall ≫ cpu, a regression shows wall ≈ cpu;
-  *  - every family records `/proc/loadavg` (1-min) and MemAvailable at
-  *    start and end, so cross-family load spikes are visible in-artifact;
-  *  - after the run, any extra whose wall is > 2× its recorded
-  *    family-cold bracket (`BRACKETS.json`, committed) is re-run ONCE in
-  *    a fresh child JVM and BOTH readings land in the artifact under
-  *    `reruns` — contention cleans up on the rerun, a regression repeats.
-  *  The `extra_queries` values stay the FIRST readings (comparable with
-  *  prior rounds); the new fields only explain them.
-  *
-  * Round-13 completions of that design (the r12 verdict's remaining
-  * attribution gaps):
-  *  - every reading also records `gc` (stop-the-world GC seconds) and
-  *    peak heap MB — a reading whose cpu inflation ≈ its gc inflation is
-  *    memory pressure, distinguishable from a real plan regression in
-  *    the artifact alone;
-  *  - BRACKETS.json covers EVERY extra and carries TWO columns: `fam`
-  *    (family-cold, the trigger column) and `solo` (solo-cold, the
-  *    rerun's like mode) — the rerun verdict is `rerun_vs_solo`, not the
-  *    cross-mode family ratio that read ~2× on a clean rerun;
-  *  - `SPARK_GRAFT_BENCH_SOLO=all` records the solo column (one fresh
-  *    child JVM per extra, serialized).
-  *
-  * Round-14 completion — the HEADLINE gets the same discipline: the
-  * gate's one number is the headline total, and the r13 driver/builder
-  * gap (19.66 vs 13.1–14.1 s) had nothing in-artifact to rerun.
-  * BRACKETS.json now carries the committed end-of-round medians as
-  * `__headline_total` + per-query `__headline_<q>` rows (recorded via
-  * `SPARK_GRAFT_BENCH_HEADLINE=1` triple runs); a run whose total
-  * exceeds 1.5× the committed median re-runs the whole headline family
-  * once in a fresh child JVM and lands both readings under
-  * `headline_rerun` (reported total stays the first reading).
-  *
-  * Round-16 addition — the SERVING surface gets a per-round number: a
-  * [[graft.tools.ServeBench]] child JVM runs the six pinned dashboard
-  * shapes (reps from SPARK_GRAFT_SERVE_REPS, default 5 here) and the
-  * line lands under `serve_qps`, with `__serve_<shape>` brackets and
-  * the same outlier-rerun discipline (`serve_rerun`).
-  * SPARK_GRAFT_BENCH_NOSERVE=1 skips the stage.
+  * Self-diagnosis, readable from the artifact alone:
+  *  - every reading records `cpu` (process-CPU-time delta) beside wall —
+  *    contention lowers cpu/wall across readings, a regression moves one
+  *    query's wall and cpu together;
+  *  - every reading records `gc` (stop-the-world GC seconds) and peak
+  *    heap MB — cpu inflation ≈ gc inflation is memory pressure, not a
+  *    plan regression;
+  *  - every family records its mode, `/proc/loadavg` (1-min) and
+  *    MemAvailable at start and end, so a load spike during a family is
+  *    visible beside its readings.
   *
   * Artifact durability: the full result JSON is written to
-  * `target/bench_result.json` AND `BENCH_FULL.json` (repo root, committed
-  * by the end-of-round sweep) — the driver's 2000-char stdout tail
-  * truncated the r9 headline, so the file is now the artifact of record.
-  * Stdout still carries the contract line, printed LAST so a tail capture
-  * keeps the headline.
+  * `BENCH_FULL.json` (repo root, the artifact of record: a 2000-char
+  * stdout tail truncated the headline once) and copied to
+  * `target/bench_result.json`. Stdout still carries the contract line,
+  * printed LAST so a tail capture keeps the headline.
   *
-  * Failures are counted, never timed: a query (or warm-up, or rerun) that
-  * throws gets no reading, is listed under `failed` in every output line,
-  * stays out of totals and rerun logic, and the main exits 1 once the
-  * artifact is written.
+  * Failures are counted, never timed: a query (or warm-up) that throws
+  * gets no reading, is listed under `failed` in every output line, stays
+  * out of totals, and the main exits 1 once the artifact is written.
   */
 object Bench {
 
@@ -195,17 +157,10 @@ object Bench {
   private def json(r: Seq[(String, Double)]): String =
     r.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
 
-  /** Frozen family composition (round 12): membership + slot pinned in
-    * [[BenchFamilies]] so gate insertions can never shift existing
-    * positions and stale BASELINE.md's family-cold brackets.
-    */
-  private[graft] def extraGroups(extras: Seq[String]): Seq[(String, Seq[String])] =
-    BenchFamilies.groups(extras)
-
   /** Re-create this JVM's flags for a child (we are sbt-forked, so the
     * input args are exactly build.sbt's javaOptions: add-opens + -Xmx).
     */
-  private def childCommand(mainClass: String = "graft.Bench"): Seq[String] = {
+  private def childCommand(): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val javaBin = java.nio.file.Paths.get(
       System.getProperty("java.home"), "bin", "java").toString
@@ -213,36 +168,30 @@ object Bench {
       .getInputArguments.asScala.toSeq.filterNot(a =>
         a.startsWith("-agentlib") || a.startsWith("-javaagent"))
     Seq(javaBin) ++ jvmArgs ++
-      Seq("-cp", System.getProperty("java.class.path"), mainClass)
+      Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")
   }
 
-  /** Run the serving-latency stage ([[graft.tools.ServeBench]]) in a
-    * fresh child JVM; returns its one-line JSON, or None if the child
-    * could not run (the artifact then carries `"serve_qps":{}` — absent,
-    * not silently zero).
+  /** The child-family file a child writes and [[runGroupInChild]] reads:
+    * `{"<q>":{"w":wall,"c":cpu,"g":gc,"h":peakMb},...,"failed":[...]}`.
+    * Seconds keep three decimals.
     */
-  private def runServeInChild(sfDir: String, reps: Int): Option[String] = {
-    val outFile = java.nio.file.Files.createTempFile("bench_serve", ".json")
-    val logDir = new java.io.File("target/bench_logs")
-    logDir.mkdirs()
-    val log = new java.io.File(logDir, "serve.log")
-    try {
-      val pb = new ProcessBuilder(childCommand("graft.tools.ServeBench"): _*)
-      pb.environment().put("SPARK_GRAFT_SERVE_REPS", reps.toString)
-      pb.environment().put("SPARK_GRAFT_SERVE_OUT", outFile.toString)
-      pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(ProcessBuilder.Redirect.to(log))
-      val p = pb.start()
-      val done = p.waitFor(20, java.util.concurrent.TimeUnit.MINUTES)
-      if (!done) { p.destroyForcibly(); System.err.println("[bench] serve child timed out"); return None }
-      if (p.exitValue() != 0) { System.err.println(s"[bench] serve child rc=${p.exitValue()} (see $log)"); return None }
-      val txt = new String(java.nio.file.Files.readAllBytes(outFile), "UTF-8")
-      if (txt.contains("\"metric\":\"serve_qps\"")) Some(txt)
-      else { System.err.println(s"[bench] serve child output incomplete (see $log)"); None }
-    } catch {
-      case NonFatal(e) => System.err.println(s"[bench] serve child spawn failed: $e"); None
-    } finally java.nio.file.Files.deleteIfExists(outFile)
+  private[graft] def encodeFamily(readings: Seq[Reading], failed: Seq[String]): String =
+    (readings.map { rd =>
+      "\"" + rd.name +
+        f"""\":{"w":${rd.wall}%.3f,"c":${rd.cpu}%.3f,"g":${rd.gc}%.3f,"h":${rd.peakMb}}"""
+    } :+ s""""failed":${failedJson(failed)}""").mkString("{", ",", "}")
+
+  /** The readings and failed names of an [[encodeFamily]] file. */
+  private[graft] def decodeFamily(txt: String): (Seq[Reading], Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+    val failed = root.get("failed").elements().asScala.map(_.asText()).toSeq
+    val readings = root.properties().asScala.toSeq.filter(_.getKey != "failed").map { e =>
+      val v = e.getValue
+      Reading(e.getKey, v.get("w").asDouble, v.get("c").asDouble,
+        v.get("g").asDouble, v.get("h").asLong)
+    }
+    (readings, failed)
   }
 
   /** Run one extras family in a fresh child JVM; returns the readings and
@@ -266,120 +215,21 @@ object Bench {
       val done = p.waitFor(20, java.util.concurrent.TimeUnit.MINUTES)
       if (!done) { p.destroyForcibly(); System.err.println(s"[bench] child $fam timed out"); return None }
       if (p.exitValue() != 0) { System.err.println(s"[bench] child $fam rc=${p.exitValue()} (see $log)"); return None }
-      val txt = new String(java.nio.file.Files.readAllBytes(outFile), "UTF-8")
-      val pat = ("\"([^\"]+)\":\\{\"w\":([0-9.\\-]+),\"c\":([0-9.\\-]+)," +
-        "\"g\":([0-9.\\-]+),\"h\":([0-9\\-]+)\\}").r
-      val m = pat.findAllMatchIn(txt)
-        .map(x => x.group(1) -> Reading(x.group(1), x.group(2).toDouble,
-          x.group(3).toDouble, x.group(4).toDouble, x.group(5).toLong)).toMap
-      val failed = "\"failed\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt).toSeq
-        .flatMap(f => "\"([^\"]+)\"".r.findAllMatchIn(f.group(1)).map(_.group(1)))
-      if (qs.forall(q => m.contains(q) || failed.contains(q))) Some((qs.flatMap(m.get), failed)) else {
+      val (rs, failed) = decodeFamily(
+        new String(java.nio.file.Files.readAllBytes(outFile), "UTF-8"))
+      val byName = rs.map(r => r.name -> r).toMap
+      if (qs.forall(q => byName.contains(q) || failed.contains(q))) Some((qs.flatMap(byName.get), failed)) else {
         System.err.println(s"[bench] child $fam output incomplete (see $log)"); None
       }
     } catch {
-      case NonFatal(e) => System.err.println(s"[bench] child $fam spawn failed: $e"); None
+      case NonFatal(e) => System.err.println(s"[bench] child $fam failed: $e"); None
     } finally java.nio.file.Files.deleteIfExists(outFile)
-  }
-
-  /** Per-extra brackets at sf0.1 from the committed BRACKETS.json — the
-    * machine-readable twin of BASELINE.md's bracket tables. Two columns
-    * since r13: `fam` = family-cold (the mode the recorded run uses,
-    * trigger column for the outlier rerun) and `solo` = solo-cold (one
-    * query in a fresh child JVM — the RERUN's like mode, so the rerun
-    * verdict compares against it instead of reading ~2× out-of-band by
-    * construction). Accepts the flat pre-r13 form (`"q": 1.23` = fam
-    * only) and the object form (`"q": {"fam":1.23,"solo":4.56}`).
-    */
-  final case class Bracket(fam: Double, solo: Option[Double])
-
-  private def readBrackets(): Map[String, Bracket] = {
-    val f = java.nio.file.Paths.get("BRACKETS.json")
-    if (!java.nio.file.Files.exists(f)) return Map.empty
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      val obj = ("\"([^\"]+)\":\\s*\\{\\s*\"fam\"\\s*:\\s*([0-9.]+)\\s*" +
-        "(?:,\\s*\"solo\"\\s*:\\s*([0-9.]+)\\s*)?\\}").r
-      val objs = obj.findAllMatchIn(txt).map(m =>
-        m.group(1) -> Bracket(m.group(2).toDouble,
-          Option(m.group(3)).map(_.toDouble))).toMap
-      val flat = "\"([^\"]+)\":\\s*([0-9.]+)".r.findAllMatchIn(txt)
-        .filterNot(m => Set("fam", "solo").contains(m.group(1)))
-        .map(m => m.group(1) -> Bracket(m.group(2).toDouble, None)).toMap
-      flat ++ objs // object form wins for queries present in both
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[bench] BRACKETS.json unreadable: $e"); Map.empty
-    }
-  }
-
-  /** r17: severity-ordered rerun budget (the r16 verdict's #1 — the
-    * registry-order `.take(cap)` dropped the 35 WORST-positioned
-    * outliers unrecorded). Sorts `(name, wall, familyBracket)` by
-    * wall/bracket DESCENDING and splits at `cap`: the head reruns, the
-    * tail is returned for logging + the artifact's `reruns_skipped`
-    * list instead of vanishing. Pure; ConfigSpec pins the ordering.
-    */
-  private[graft] def rerunBudget(outliers: Seq[(String, Double, Double)],
-      cap: Int): (Seq[(String, Double, Double)], Seq[(String, Double, Double)]) =
-    outliers.sortBy { case (_, wall, fam) => -(wall / fam) }.splitAt(math.max(0, cap))
-
-  /** r17: run-level contention verdict (the r16 verdict's What's-missing
-    * #1 — three of the last four driver runs needed judge forensics to
-    * reach a conclusion the artifact's own rows already supported).
-    *
-    * Two independent signals, each the signature contention leaves and a
-    * plan regression does not:
-    *  - EXTRAS: ≥ 25% of bracketed extras over 1.5× their family-cold
-    *    bracket, with flat GC among those outliers (median gc/wall
-    *    < 0.15 — no memory signature; a real regression is selective,
-    *    contention inflates sub-second scans and 40 s graph builds
-    *    alike);
-    *  - HEADLINE: uniform drift — median per-query ratio vs the
-    *    committed `__headline_<q>` brackets ≥ 1.25 AND ≥ 70% of
-    *    headline queries over 1.15× (a single-query regression moves
-    *    the median or the fraction, not both).
-    *
-    * Verdict: "contended" when BOTH fire (r16's signature — 55/160
-    * extras, flat GC, every headline query 1.4–2.3× — auto-classifies);
-    * "clean" when NEITHER comes close (extras frac < 10%, headline
-    * median < 1.25 — the builder's same-HEAD runs classify clean);
-    * "mixed" otherwise (one signal, or a borderline run — read the
-    * rows). Emits the triggering stats beside the verdict so the
-    * classification is auditable from the artifact alone. Pure;
-    * ConfigSpec pins both signatures.
-    *
-    * @param extras (wall, gc, familyBracket) for every BRACKETED extra
-    * @param headlineRatios per-headline-query wall / `__headline_<q>`
-    */
-  private[graft] def runQuality(extras: Seq[(Double, Double, Double)],
-      headlineRatios: Seq[Double]): String = {
-    val over = extras.filter { case (wall, _, fam) => wall > 1.5 * fam }
-    val frac = if (extras.isEmpty) 0.0 else over.size.toDouble / extras.size
-    val gcWall = over.map { case (wall, gc, _) => gc / math.max(wall, 1e-9) }.sorted
-    val gcMedian = if (gcWall.isEmpty) 0.0 else gcWall(gcWall.size / 2)
-    val gcFlat = gcMedian < 0.15
-    val hs = headlineRatios.sorted
-    val hMedian = if (hs.isEmpty) 1.0 else hs(hs.size / 2)
-    val hFrac =
-      if (hs.isEmpty) 0.0 else hs.count(_ > 1.15).toDouble / hs.size
-    val hUniform = hMedian >= 1.25 && hFrac >= 0.7
-    val extrasSignal = frac >= 0.25 && gcFlat
-    val verdict =
-      if (extrasSignal && hUniform) "contended"
-      else if (frac < 0.10 && hMedian < 1.25) "clean"
-      else "mixed"
-    f"""{"verdict":"$verdict","extras_bracketed":${extras.size},""" +
-      f""""extras_over_1p5x":${over.size},"extras_frac":$frac%.3f,""" +
-      f""""outlier_gc_wall_median":$gcMedian%.3f,"gc_flat":$gcFlat,""" +
-      f""""headline_ratio_median":$hMedian%.3f,"headline_frac_over_1p15":$hFrac%.3f,""" +
-      f""""headline_uniform":$hUniform}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    // ---- child mode: time one extras family cold, write JSON, exit ----
+    // ---- child mode: time one extras family cold, write its file, exit ----
     sys.env.get("SPARK_GRAFT_BENCH_GROUP").foreach { csv =>
       val out = sys.env("SPARK_GRAFT_BENCH_OUT")
       val qs = csv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
@@ -389,12 +239,8 @@ object Bench {
       // exit code
       val warmFailed = warmUp(spark, sfDir)
       val (r, failed) = timeQueries(spark, sfDir, qs, isolate = true)
-      val body = (r.map { rd =>
-        "\"" + rd.name +
-          f"""\":{"w":${rd.wall}%.3f,"c":${rd.cpu}%.3f,"g":${rd.gc}%.3f,"h":${rd.peakMb}}"""
-      } :+ s""""failed":${failedJson(warmFailed ++ failed)}""").mkString("{", ",", "}")
       java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        body.getBytes("UTF-8"))
+        encodeFamily(r, warmFailed ++ failed).getBytes("UTF-8"))
       spark.stop()
       return
     }
@@ -402,7 +248,7 @@ object Bench {
     val spark = SparkEntry.localSession(32)
     val names = SparkEntry.benchQueries
     // every failed name, in run order: listed in the artifact, kept out of
-    // totals and reruns, and the exit code once the artifact is written
+    // totals, and the exit code once the artifact is written
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     failed ++= warmUp(spark, sfDir)
     def finish(): Unit = {
@@ -413,10 +259,9 @@ object Bench {
       }
     }
 
-    // dev mode for per-op variance brackets: SPARK_GRAFT_BENCH_ONLY=a,b
-    // [SPARK_GRAFT_BENCH_REPS=3] runs just those queries N times each and
-    // prints all rep timings (rep 1 in a fresh JVM = cold; later = warm).
-    // The driver's standard single-pass output path is untouched.
+    // A/B mode: SPARK_GRAFT_BENCH_ONLY=a,b [SPARK_GRAFT_BENCH_REPS=3] runs
+    // just those queries N times each and prints all rep timings (rep 1
+    // in a fresh JVM = cold; later = warm). The standard pass is untouched.
     sys.env.get("SPARK_GRAFT_BENCH_ONLY").foreach { csv =>
       val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
       val qs = csv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
@@ -437,108 +282,34 @@ object Bench {
       return
     }
 
-    // solo-cold bracket recorder: SPARK_GRAFT_BENCH_SOLO=all (or a,b,c)
-    // runs EACH named extra alone in a fresh child JVM — the rerun pass's
-    // like mode — and writes name -> wall to target/bench_solo.json for
-    // seeding BRACKETS.json's `solo` column. Serialized by construction
-    // (one child at a time); not part of the driver's standard pass.
-    sys.env.get("SPARK_GRAFT_BENCH_SOLO").foreach { csv =>
-      val qs =
-        if (csv == "all") SparkEntry.benchExtraQueries
-        else csv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-      val unknown = qs.filterNot(SparkEntry.queries.contains)
-      require(unknown.isEmpty, s"unknown bench queries: ${unknown.mkString(", ")}")
-      val solo = qs.flatMap { q =>
-        val r = runGroupInChild(s"solo_$q", Seq(q))
-        r.foreach { case (_, f) => failed ++= f }
-        val rd = r.flatMap(_._1.headOption)
-        rd.foreach(rd => System.err.println(
-          f"[bench] solo $q%-28s ${rd.wall}%7.2f s (gc ${rd.gc}%5.2f)"))
-        rd.map(q -> _)
-      }
-      val out = solo.map { case (q, rd) =>
-        "\"" + q + f"""\":{"wall":${rd.wall}%.3f,"cpu":${rd.cpu}%.3f,"gc":${rd.gc}%.3f}"""
-      }.mkString("{", ",", "}")
-      new java.io.File("target").mkdirs()
-      java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_solo.json"),
-        out.getBytes("UTF-8"))
-      println(s"""{"metric":"solo","n":${solo.size},"failed":${failedJson(failed.toSeq)},"out":"target/bench_solo.json"}""")
-      finish()
-      return
-    }
-
-    // HEADLINE pass is deliberately NOT cache-isolated (r18 note, the r17
-    // verdict's honesty ask): q_pl_ngram_jaccard's shingle cache — part of
-    // that operator since its first commit — stays warm for
-    // q_pl_minhash_lsh two slots later, so minhash_lsh's headline reading
-    // is "after ngram_jaccard", not solo-cold. This has been true in EVERY
-    // recorded round (BASELINE.md r1 onward), so cross-round comparisons
-    // hold; flipping isolation on now would re-baseline all 11 headline
-    // numbers mid-optimization-phase for zero information. Solo-cold truth
-    // lives in BRACKETS.json's `solo` column (SPARK_GRAFT_BENCH_SOLO).
-    val (results3, headlineFailed) = timeQueries(spark, sfDir, names)
+    // The headline pass is deliberately NOT cache-isolated:
+    // q_pl_ngram_jaccard's shingle cache stays warm for q_pl_minhash_lsh
+    // two slots later, so minhash_lsh's headline reading is "after
+    // ngram_jaccard", not solo-cold. That has held in every recorded
+    // round (BASELINE.md r1 onward), so cross-round comparisons hold.
+    // ONLY mode with one name gives that query's solo-cold reading (rep 1).
+    val (headline, headlineFailed) = timeQueries(spark, sfDir, names)
     failed ++= headlineFailed
-    val results = results3.map(r => r.name -> r.wall)
-    val resultsCpu = results3.map(r => r.name -> r.cpu)
-    val resultsGc = results3.map(r => r.name -> r.gc)
+    val results = headline.map(r => r.name -> r.wall)
+    val resultsCpu = headline.map(r => r.name -> r.cpu)
+    val resultsGc = headline.map(r => r.name -> r.gc)
     val total = results.map(_._2).sum
-    val brackets = readBrackets()
-
-    // ---- headline rerun discipline (r14): the gate's ONE number is the
-    // headline total, and it previously had no bracket/rerun machinery —
-    // r13's driver read 19.66 s against the builder's 13.1–14.1 s with
-    // nothing in-artifact to rerun. BRACKETS.json now carries the
-    // committed end-of-round medians as `__headline_total` (plus
-    // `__headline_<q>` per-query rows for diagnosis); when this run's
-    // total exceeds 1.5× the committed median, the WHOLE headline family
-    // re-runs once in a fresh child JVM and both readings land in the
-    // artifact. The reported total stays the FIRST reading (comparable
-    // across rounds); the rerun only explains it — contention cleans up,
-    // a regression repeats.
-    val headlineRerunJson = brackets.get("__headline_total")
-      .filter(b => total > 1.5 * b.fam)
-      .flatMap { b =>
-        System.err.println(f"[bench] headline total $total%.2f s > 1.5x " +
-          f"committed median ${b.fam}%.2f s — rerunning headline family in a fresh child")
-        runGroupInChild("headline", names).map { case (rr, rf) =>
-          failed ++= rf.map("rerun:" + _)
-          val rTotal = rr.map(_.wall).sum
-          val per = rr.map(r => "\"" + r.name + f"\":${r.wall}%.3f")
-            .mkString("{", ",", "}")
-          f"""{"bracket_total":${b.fam}%.3f,"first_total":$total%.3f,""" +
-            f""""rerun_total":$rTotal%.3f,"rerun_vs_bracket":${rTotal / b.fam}%.2f,""" +
-            f""""rerun_gc":${rr.map(_.gc).sum}%.3f,"rerun_queries":$per}"""
-        }
-      }.getOrElse("{}")
-
-    // headline-only mode: SPARK_GRAFT_BENCH_HEADLINE=1 stops before the
-    // extras — the end-of-round triple run that seeds the __headline_*
-    // brackets without paying the ~30-min extras sweep.
-    if (sys.env.get("SPARK_GRAFT_BENCH_HEADLINE").contains("1")) {
-      println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${json(results)},"queries_cpu":${json(resultsCpu)},"queries_gc":${json(resultsGc)},"headline_rerun":$headlineRerunJson,"failed":${failedJson(failed.toSeq)},"sf":"$sfDir"}""")
-      finish()
-      return
-    }
 
     // registry-flagged pipeline ops, timed but kept OUT of "total"/
     // "queries" so the headline number stays comparable with the recorded
     // baseline set. Each frozen family runs in a FRESH child JVM (scaladoc
-    // above); SPARK_GRAFT_BENCH_NOCHILD=1 forces the legacy in-process pass.
-    val noChild = sys.env.get("SPARK_GRAFT_BENCH_NOCHILD").contains("1")
-    val groups = extraGroups(SparkEntry.benchExtraQueries)
-    // ACTUAL per-family mode + machine snapshots, recorded — the artifact
-    // must not claim "child-jvm" for a family that silently fell back
-    // in-process, and a load spike during a family must be readable from
-    // the artifact alone (r11's 15 out-of-band extras needed judge
-    // forensics because it wasn't).
+    // above). The ACTUAL per-family mode and machine snapshots are
+    // recorded: the artifact must not claim "child-jvm" for a family that
+    // fell back in-process, and a load spike during a family must be
+    // readable from the artifact alone.
     val famDiag = scala.collection.mutable.LinkedHashMap[String, String]()
     val famModes = scala.collection.mutable.LinkedHashMap[String, String]()
-    val extras3 = groups.flatMap { case (fam, qs) =>
+    val extraReadings = BenchFamilies.groups(SparkEntry.benchExtraQueries).flatMap { case (fam, qs) =>
       val (load0, mem0) = (loadAvg(), memAvailMb())
       val t0 = System.nanoTime()
-      val viaChild = if (noChild) None else runGroupInChild(fam, qs)
+      val viaChild = runGroupInChild(fam, qs)
       val (r, famFailed) = viaChild.getOrElse {
-        if (!noChild) System.err.println(s"[bench] $fam: in-process fallback")
+        System.err.println(s"[bench] $fam: in-process fallback")
         spark.catalog.clearCache()
         System.gc()
         timeQueries(spark, sfDir, qs, isolate = true)
@@ -552,115 +323,26 @@ object Bench {
         f""""mem_avail_start_mb":$mem0,"mem_avail_end_mb":$mem1}"""
       System.err.println(f"[bench] family $fam%-12s ${qs.size}%2d queries " +
         f"${r.map(_.wall).sum}%7.2f s query-time, $wall%7.2f s wall, load $load0%.1f->$load1%.1f" +
-        (if (viaChild.isDefined) " (child JVM)" else " (in-process)"))
+        s" (${famModes(fam)})")
       r
     }
-    val extras = extras3.map(r => r.name -> r.wall)
-    val extrasCpu = extras3.map(r => r.name -> r.cpu)
-    val extrasGc = extras3.map(r => r.name -> r.gc)
-    val extrasPeak = extras3.map(r => r.name -> r.peakMb)
+    val extras = extraReadings.map(r => r.name -> r.wall)
+    val extrasCpu = extraReadings.map(r => r.name -> r.cpu)
+    val extrasGc = extraReadings.map(r => r.name -> r.gc)
     val isolation = famModes.values.toSet.toList match {
       case one :: Nil => one
-      case Nil => if (noChild) "in-process" else "child-jvm"
+      case Nil => "child-jvm"
       case _ => "mixed"
     }
     val famJson = famModes.map { case (f, m) => "\"" + f + "\":\"" + m + "\"" }
       .mkString("{", ",", "}")
     val famDiagJson = famDiag.map { case (f, j) => "\"" + f + "\":" + j }
       .mkString("{", ",", "}")
-
-    // ---- outlier rerun: any extra whose wall is > 2× its FAMILY-COLD
-    // bracket (the trigger column — that is the mode the reading came
-    // from) re-runs ONCE in a fresh child JVM. The rerun runs SOLO-COLD,
-    // so its verdict ratio is taken against the bracket's `solo` column
-    // (its like mode, r13 — judged by the family column a clean rerun
-    // read ~2× out-of-band by construction). Both readings land with
-    // wall+cpu+gc: contention cleans up on the rerun, a regression
-    // repeats; gc ≈ the cpu inflation says memory pressure.
-    // r17 (the r16 verdict's #1): the cap is a BUDGET, not a filter —
-    // outliers sort by wall/bracket DESCENDING so the budget spends on
-    // the worst readings first (r16's registry-order cap dropped the 35
-    // worst-positioned outliers unrecorded, including both centrality
-    // gates the round was supposed to settle), every drop is logged,
-    // and the skipped tail lands in the artifact under `reruns_skipped`.
-    val maxReruns = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_RERUNS", "20").toInt
-    val allOutliers = rerunBudget(
-      extras3.flatMap { r =>
-        brackets.get(r.name).filter(b => r.wall > 2.0 * b.fam)
-          .map(b => (r.name, r.wall, b.fam))
-      }, maxReruns)
-    val outlierByName = extras3.map(r => r.name -> r).toMap
-    val outliers = allOutliers._1.map { case (n, _, _) => outlierByName(n) }
-    val skippedReruns = allOutliers._2
-    skippedReruns.foreach { case (n, wall, fam) =>
-      System.err.println(f"[bench] rerun SKIPPED (cap $maxReruns): $n " +
-        f"first $wall%.2f s = ${wall / fam}%.1fx family bracket $fam%.2f s")
-    }
-    val rerunsSkippedJson = skippedReruns.map { case (n, wall, fam) =>
-      f"""{"name":"$n","first_wall":$wall%.3f,"bracket_family":$fam%.3f,"ratio":${wall / fam}%.2f}"""
-    }.mkString("[", ",", "]")
-    val reruns = outliers.flatMap { r =>
-      val b = brackets(r.name)
-      System.err.println(f"[bench] rerun ${r.name}: first ${r.wall}%.2f s vs " +
-        f"family bracket ${b.fam}%.2f — fresh child")
-      runGroupInChild(s"rerun_${r.name}", Seq(r.name)).flatMap { case (rr, rf) =>
-        failed ++= rf.map("rerun:" + _)
-        rr.headOption
-      }.map { r2 =>
-        val soloJson = b.solo.map(s =>
-          f""","bracket_solo":$s%.3f,"rerun_vs_solo":${r2.wall / s}%.2f""").getOrElse("")
-        r.name -> (f"""{"bracket_family":${b.fam}%.3f$soloJson,""" +
-          f""""first_wall":${r.wall}%.3f,"first_cpu":${r.cpu}%.3f,"first_gc":${r.gc}%.3f,""" +
-          f""""rerun_wall":${r2.wall}%.3f,"rerun_cpu":${r2.cpu}%.3f,"rerun_gc":${r2.gc}%.3f}""")
-      }
-    }
-    val rerunsJson = reruns.map { case (n, j) => "\"" + n + "\":" + j }
+    val peakJson = extraReadings.map(r => "\"" + r.name + s"\":${r.peakMb}")
       .mkString("{", ",", "}")
-
-    // ---- serving-latency stage (r16): the cell tier's whole point is
-    // dashboard-QPS latency, and it previously regressed invisibly — the
-    // cells gate families time fixture BUILDS, not steady-state serves.
-    // One ServeBench child JVM per run (6 pinned shapes × reps, every
-    // arm route-asserted); each shape's served p50 brackets against the
-    // committed `__serve_<shape>` row in BRACKETS.json with the extras'
-    // rerun discipline: an outlier re-runs the whole stage once in a
-    // fresh child, both readings land, the FIRST stays the reported one.
-    val noServe = sys.env.get("SPARK_GRAFT_BENCH_NOSERVE").contains("1")
-    val serveReps = sys.env.getOrElse("SPARK_GRAFT_SERVE_REPS", "5").toInt
-    val serveJson0 = if (noServe) None else {
-      System.err.println("[bench] serve stage (child JVM)")
-      runServeInChild(sfDir, serveReps)
-    }
-    def servedP50s(j: String): Map[String, Double] =
-      "\"([a-z]+)\":\\{\"cells_p50_ms\":([0-9.]+)".r.findAllMatchIn(j)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    val serveRerunJson = serveJson0.flatMap { j =>
-      val outliers = servedP50s(j).filter { case (n, v) =>
-        brackets.get(s"__serve_$n").exists(b => v > 2.0 * b.fam)
-      }
-      if (outliers.isEmpty) None
-      else {
-        System.err.println(s"[bench] serve p50 outliers vs brackets: " +
-          outliers.map { case (n, v) =>
-            f"$n $v%.0f ms vs ${brackets(s"__serve_$n").fam}%.0f"
-          }.mkString(", ") + " — rerunning serve stage in a fresh child")
-        runServeInChild(sfDir, serveReps)
-      }
-    }.getOrElse("{}")
-    val serveJson = serveJson0.getOrElse("{}")
-
-    val peakJson = extrasPeak.map { case (k, v) => "\"" + k + s"""\":$v""" }
-      .mkString("{", ",", "}")
-    // r17: stamped run-level verdict — the artifact classifies ITSELF as
-    // contended/clean/mixed from the same rows a judge would read.
-    val runQualityJson = runQuality(
-      extras3.flatMap(r => brackets.get(r.name).map(b => (r.wall, r.gc, b.fam))),
-      results3.flatMap(r =>
-        brackets.get(s"__headline_${r.name}").map(b => r.wall / b.fam)))
-    System.err.println(s"[bench] run_quality: $runQualityJson")
     val fullJson =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${json(results)},"queries_cpu":${json(resultsCpu)},"queries_gc":${json(resultsGc)},"headline_rerun":$headlineRerunJson,"extra_queries":${json(extras)},"extra_queries_cpu":${json(extrasCpu)},"extra_queries_gc":${json(extrasGc)},"extra_queries_peak_mb":$peakJson,"extras_isolation":"$isolation","extras_isolation_families":$famJson,"families":$famDiagJson,"reruns":$rerunsJson,"reruns_skipped":$rerunsSkippedJson,"run_quality":$runQualityJson,"serve_qps":$serveJson,"serve_rerun":$serveRerunJson,"failed":${failedJson(failed.toSeq)},"sf":"$sfDir"}"""
-    // File of record (the driver's stdout tail truncated the r9 headline).
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${json(results)},"queries_cpu":${json(resultsCpu)},"queries_gc":${json(resultsGc)},"extra_queries":${json(extras)},"extra_queries_cpu":${json(extrasCpu)},"extra_queries_gc":${json(extrasGc)},"extra_queries_peak_mb":$peakJson,"extras_isolation":"$isolation","extras_isolation_families":$famJson,"families":$famDiagJson,"failed":${failedJson(failed.toSeq)},"sf":"$sfDir"}"""
+    // File of record (a stdout tail capture truncated the headline once).
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       fullJson.getBytes("UTF-8"))
     copyToTarget("bench_result.json", fullJson)
@@ -670,9 +352,7 @@ object Bench {
     val contractLine =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${json(results)},"failed":${failedJson(failed.toSeq)},"sf":"$sfDir","full_result":"BENCH_FULL.json"}"""
     println(contractLine)
-    // r18 (17 rounds of PERF artifacts carry "parsed": null — the driver
-    // has never recovered the contract line from sbt-decorated stdout):
-    // duplicate it where no build tool decorates — a sentinel-prefixed
+    // The same line where no build tool decorates it: a sentinel-prefixed
     // stderr line any tail-grep recovers without `[info] ` stripping, and
     // a file whose SOLE content is the line.
     System.err.println(s"BENCH_JSON $contractLine")

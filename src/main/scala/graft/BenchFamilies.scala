@@ -4,12 +4,11 @@ package graft
   *
   * Until r11, `Bench` sliced extras families from REGISTRY ORDER
   * (name-token groupBy + chunks of 12), so every gate insertion shifted
-  * positions and staled the family-cold bracket tables in BASELINE.md —
-  * pl3, pl4, dq and tpch all had to be re-recorded in r11 alone. Family
-  * membership and slot are now pinned HERE, explicitly: readings are
-  * position-dependent (a family child JVM is cold only for slot 1; later
-  * slots run warmed AND pressured by the earlier ones), so a bracket is
-  * only comparable while its (family, slot) holds.
+  * positions. Extras readings are position-dependent: a family child JVM
+  * is cold only for slot 1, and later slots run warmed AND pressured by
+  * the earlier ones. So a query's reading is comparable across rounds
+  * only while its (family, slot) holds, and membership and slot are
+  * pinned HERE, explicitly.
   *
   * Rules (spec-enforced in ConfigSpec):
   *  - a NEW bench extra appends at the END of its family (slot = max+1)
@@ -21,9 +20,8 @@ package graft
   *  - every `benchExtra` registry entry MUST have a row here —
   *    [[groups]] fails loudly otherwise (no silent re-derivation).
   *
-  * The r12 freeze reproduces the exact r11 composition
-  * (`tools.BenchGroups` output), so every family-cold bracket recorded
-  * in BASELINE.md under that composition stays valid.
+  * The r12 freeze reproduces the exact r11 composition, so every reading
+  * recorded since r11 keeps its (family, slot).
   */
 object BenchFamilies {
   val maxFamilySize = 12
@@ -80,8 +78,8 @@ object BenchFamilies {
     // r15: the 17 post-r12 cell-serving/value-skip gates enter the bench
     // watch (the engine's flagship serving surface previously had zero
     // per-round perf regression signal). NEW families per the append-only
-    // rule — existing (family, slot) pairs untouched, so every committed
-    // bracket stays valid. Registry order within each.
+    // rule — existing (family, slot) pairs untouched, so every recorded
+    // reading stays comparable. Registry order within each.
     "cells0" -> Seq("q_sql_sketch_cells_tag", "q_sql_sketch_cells_tag_bucket",
       "q_sql_sketch_cells_ndv_bucket", "q_sql_sketch_cells_ndv_tag",
       "q_sql_value_skip", "q_sql_rollup_cells_basic",
@@ -114,8 +112,8 @@ object BenchFamilies {
 
   /** The child-JVM groups for the given extras set, in frozen order.
     * A benchExtra without a frozen slot is a loud error — assign it a
-    * slot (append-only) before flagging it, so its bracket column is
-    * defined from its first recorded run.
+    * slot (append-only) before flagging it, so its position is fixed
+    * from its first recorded run.
     */
   def groups(extras: Seq[String]): Seq[(String, Seq[String])] = {
     val known = slotOf // forces the uniqueness/size checks

@@ -3,10 +3,9 @@ package graft.api
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.storage.SeriesStore
+import graft.storage.{ScanProbe, SeriesStore}
 import graft.sydraql.{CompileOptions, Engine, QueryError}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
@@ -108,16 +107,17 @@ final class HttpApi(store: SeriesStore, token: Option[String] = None, maxRows: I
         val n = mapper.readTree(body(ex))
         n.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
       }
-    val start = p.getOrElse("start", "0").toLong
-    val end = p.getOrElse("end", Long.MaxValue.toString).toLong
-    var df = store.scanRange(start, end)
-    df = p.get("series_id") match {
-      case Some(id) => df.filter(col("series_id") === id.toLong)
+    def long(k: String): Option[Long] = p.get(k).map(v => v.toLongOption.getOrElse(
+      throw QueryError(QueryError.InvalidSyntax, s"$k must be an integer, got '$v'")))
+    val selector = long("series_id") match {
+      case Some(id) => ScanProbe(seriesId = Some(id))
       case None => p.get("series") match {
-        case Some(s) => df.filter(col("series") === s)
+        case Some(s) => ScanProbe(series = Some(s))
         case None => throw QueryError(QueryError.InvalidSyntax, "series or series_id required")
       }
     }
+    val df = store.scanPruned(selector.copy(
+      lo = Some(long("start").getOrElse(0L)), hi = Some(long("end").getOrElse(Long.MaxValue)))).df
     queryTotal.incrementAndGet()
     val pts = df.orderBy("time").limit(maxRows).select("time", "value").collect()
     val arr = mapper.createArrayNode()

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.api.{HttpApi, PgWireServer}
-import graft.storage.{Config, Ingest, Maintenance, SeriesStore, SydraImport}
+import graft.storage.{Config, Ingest, Maintenance, ScanProbe, SeriesStore, SydraImport}
 
 /** Unified CLI mirroring the reference's subcommand surface
   * (`/root/reference/src/sydra/server.zig:9-31`):
@@ -70,8 +70,8 @@ object Cli {
         args.toList match {
           case sidStr :: startStr :: endStr :: Nil =>
             val sid = java.lang.Long.parseUnsignedLong(sidStr)
-            store.scanRange(startStr.toLong, endStr.toLong)
-              .filter(org.apache.spark.sql.functions.col("series_id") === sid)
+            store.scanPruned(ScanProbe(Some(startStr.toLong), Some(endStr.toLong),
+                seriesId = Some(sid))).df
               .orderBy("time")
               .select("time", "value")
               .toLocalIterator().forEachRemaining { r =>

@@ -202,4 +202,70 @@ class ApiSpec extends AnyFunSuite {
       assert(raw.body().contains("\"route\":\"raw\""), raw.body().take(600))
     } finally api.stop()
   }
+  test("range reads: pruned through the skip manifest, equal to the raw source filter; non-numeric bounds are a 400") {
+    import graft.storage.{ScanProbe, SkipIndex}
+    import org.apache.spark.sql.functions.{col, map, lit}
+    import spark.implicits._
+    val store = new SeriesStore(spark, Files.createTempDirectory("graft-api-range").toString)
+    // two series, one of them under two tag sets (two series_ids), one
+    // point every 20 min over 6 hours, one null value
+    val pts = (0 until 18).flatMap { i =>
+      val t = 1700000000L + i * 1200L
+      Seq(("cpu", "a", t, Option(i.toDouble)), ("cpu", "b", t + 1, Option(-i.toDouble)),
+        ("mem", "a", t + 2, if (i == 5) None else Option(i * 10.0)))
+    }.toDF("series", "host", "time", "value")
+      .select(col("series"), map(lit("host"), col("host")).as("tags"), col("time"), col("value"))
+    store.append(pts)
+    SkipIndex.build(store, SkipIndex.dirFor(store))
+    // appended after the manifest was built, in an hour it did not index
+    store.append(Seq(("cpu", "a", 1700000000L + 8 * 3600L, Option(99.5))).toDF("series", "host", "time", "value")
+      .select(col("series"), map(lit("host"), col("host")).as("tags"), col("time"), col("value")))
+    val ids = store.source().filter(col("series") === "cpu").select("series_id").distinct()
+      .as[Long].collect().sorted.toSeq
+    assert(ids.size === 2)
+    val (lo, hi) = (1700000000L + 3600L, 1700000000L + 9 * 3600L)
+    // the manifest path is the one taken, and it prunes
+    val pruned = store.scanPruned(ScanProbe(Some(lo), Some(hi), seriesId = Some(ids.head)))
+    assert(pruned.filesRead >= 0 && pruned.filesRead < pruned.filesTotal, pruned)
+    val api = new HttpApi(store, token = Some("t0"))
+    val port = api.start()
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def points(body: String): Seq[(Long, Option[Double])] = {
+      import scala.jdk.CollectionConverters._
+      mapper.readTree(body).elements().asScala.map { n =>
+        n.get("ts").asLong -> Option(n.get("value")).filterNot(_.isNull).map(_.asDouble)
+      }.toSeq
+    }
+    def expected(sel: org.apache.spark.sql.Column, from: Long, to: Long): Seq[(Long, Option[Double])] =
+      store.source().filter(sel && col("time") >= from && col("time") <= to).orderBy("time")
+        .select("time", "value").collect().toSeq
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+    try {
+      for ((from, to) <- Seq((lo, hi), (0L, Long.MaxValue), (lo, lo), (lo + 1, lo + 2), (hi + 1, hi + 7200))) {
+        ids.foreach { id =>
+          val r = get(port, s"/api/v1/query/range?series_id=$id&start=$from&end=$to")
+          assert(r.statusCode() === 200, r.body())
+          assert(points(r.body()) === expected(col("series_id") === id, from, to), s"series_id=$id [$from, $to]")
+        }
+        Seq("cpu", "mem").foreach { s =>
+          val r = post(port, "/api/v1/query/range", s"""{"series":"$s","start":$from,"end":$to}""")
+          assert(r.statusCode() === 200, r.body())
+          assert(points(r.body()) === expected(col("series") === s, from, to), s"series=$s [$from, $to]")
+        }
+      }
+      // the late point is answered, and the null value stays null
+      assert(points(get(port, s"/api/v1/query/range?series=cpu&start=$hi&end=$hi").body()) === Nil)
+      assert(points(get(port, "/api/v1/query/range?series=cpu").body()).map(_._2).contains(Some(99.5)))
+      assert(points(get(port, "/api/v1/query/range?series=mem").body()).contains(1700000000L + 5 * 1200L + 2 -> None))
+      // edge input fails loudly: a 400 query error, not a 500
+      for (qs <- Seq("series=cpu&start=abc", "series=cpu&end=1.5", "series_id=x1&start=0", "series=cpu&end=")) {
+        val r = get(port, s"/api/v1/query/range?$qs")
+        assert(r.statusCode() === 400, s"$qs -> ${r.statusCode()} ${r.body()}")
+        assert(r.body().contains("\"code\":\"invalid_syntax\""), r.body())
+      }
+      val badPost = post(port, "/api/v1/query/range", """{"series_id":"12x"}""")
+      assert(badPost.statusCode() === 400 && badPost.body().contains("series_id must be an integer"), badPost.body())
+      assert(get(port, "/api/v1/query/range?start=0").statusCode() === 400)
+    } finally api.stop()
+  }
 }
