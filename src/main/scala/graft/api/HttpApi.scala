@@ -37,6 +37,12 @@ final class HttpApi(store: SeriesStore, token: Option[String] = None, maxRows: I
   private val pool = Executors.newFixedThreadPool(4)
 
   def start(port: Int = 0): Int = {
+    // respond() writes the headers, then the body: with Nagle on, the body
+    // waits for the client's delayed ACK of the headers (~40 ms per reply).
+    // The JDK server sets TCP_NODELAY on accepted sockets only under this
+    // property, which it reads once, when its config class loads on the
+    // first HttpServer.create in the JVM — so it is set before that.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.setExecutor(pool)
     server.createContext("/status", (ex: HttpExchange) => respond(ex, 200, """{"status":"ok"}"""))

@@ -67,8 +67,12 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
         if (server.isClosed) { try sock.close() catch { case NonFatal(_) => () }; return }
         pool.submit(new Runnable {
           def run(): Unit =
-            try handleConnection(sock)
-            catch { case NonFatal(_) => () } // connection-scoped; never kill the acceptor
+            try {
+              // messageLoop flushes after every extended-protocol message,
+              // so without NODELAY a small flush can wait on a delayed ACK
+              sock.setTcpNoDelay(true)
+              handleConnection(sock)
+            } catch { case NonFatal(_) => () } // connection-scoped; never kill the acceptor
             finally { connections.remove(sock); sock.close() }
         })
       }

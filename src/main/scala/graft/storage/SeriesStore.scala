@@ -195,13 +195,17 @@ final class SeriesStore(val spark: SparkSession, val root: String,
 
   def isEmpty: Boolean = !new java.io.File(segDir).exists()
 
-  private def fullSchema = StructType(schema.fields :+ StructField("hour_bucket", LongType))
+  /** The schema of every store read: [[schema]] plus `hour_bucket`. */
+  private[storage] val fullSchema = StructType(schema.fields :+ StructField("hour_bucket", LongType))
+
+  private def emptyFrame: DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fullSchema)
 
   /** Full scan (partition column `hour_bucket` included); empty frame for a
     * store with no flushed segments yet.
     */
   def scan(): DataFrame =
-    if (isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fullSchema)
+    if (isEmpty) emptyFrame
     else if (seriesBuckets > 0) {
       // the table scan carries the bucket spec — outputPartitioning =
       // HashPartitioning(series_id), which is what kills the Exchange in
@@ -212,12 +216,27 @@ final class SeriesStore(val spark: SparkSession, val root: String,
 
   /** Range scan with explicit partition pruning on hour_bucket + row-group
     * pruning on time (inclusive bounds, `segment.zig:156,172`).
+    *
+    * On the unbucketed layout Spark is handed only the hour directories
+    * in the window, from the local [[partitions]] listing: a read of the
+    * whole `segDir` lists every hour, and above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32 paths)
+    * it runs that listing as a Spark job, on every read. The bucketed
+    * layout reads its catalog table, which carries the bucket spec.
     */
-  def scanRange(startTs: Long, endTs: Long): DataFrame =
-    scan().filter(
-      col("hour_bucket") >= SeriesStore.hourFloor(startTs) &&
-        col("hour_bucket") <= endTs &&
+  def scanRange(startTs: Long, endTs: Long): DataFrame = {
+    val lo = SeriesStore.hourFloor(startTs)
+    val frame =
+      if (isEmpty || seriesBuckets > 0) scan()
+      else partitions().filter(h => h >= lo && h <= endTs) match {
+        case Seq() => emptyFrame
+        case hours => spark.read.schema(fullSchema).option("basePath", segDir)
+          .parquet(hours.map(h => s"$segDir/hour_bucket=$h"): _*)
+      }
+    frame.filter(
+      col("hour_bucket") >= lo && col("hour_bucket") <= endTs &&
         col("time") >= startTs && col("time") <= endTs)
+  }
 
   /** Rows satisfying `probe`, pruned the store-convention way: through
     * the skip manifest at [[SkipIndex.dirFor]] when one exists (files

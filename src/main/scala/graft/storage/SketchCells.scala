@@ -276,7 +276,7 @@ object SketchCells {
     }
 
   def readTag(spark: SparkSession, dir: String, k: String): DataFrame =
-    spark.read.parquet(tagDir(dir, k))
+    readTable(spark, dir, s"tdtag/$k")
 
   /** Recompute ONLY `days`' cells from the store (hour-partition-pruned
     * scan) and overwrite exactly those day partitions — the incremental
@@ -297,10 +297,14 @@ object SketchCells {
   def refresh(store: SeriesStore, dir: String, days: Seq[Long]): Unit = {
     if (days.isEmpty) return
     val spark = store.spark
-    // each table is self-describing: recompute it with ITS theta keys
-    val ndvKeys = requireCurrent(s"$dir/td", read(spark, dir).columns.toSeq)
+    // each table is self-describing: recompute it with ITS theta keys.
+    // The legacy guard reads each table's schema from disk, not the
+    // serving memo: it guards what this write mixes with, so it checks
+    // what is there, once per refresh rather than per query
+    def onDisk(path: String) = spark.read.parquet(path).columns.toSeq
+    val ndvKeys = requireCurrent(s"$dir/td", onDisk(s"$dir/td"))
     val tiers = groupTagsOf(spark, dir).map(k =>
-      k -> requireCurrent(tagDir(dir, k), readTag(spark, dir, k).columns.toSeq))
+      k -> requireCurrent(tagDir(dir, k), onDisk(tagDir(dir, k))))
     val touched = store.scan().filter(day.isin(days: _*))
     val remaining = touched.select(day.as("day")).distinct()
       .collect().map(_.getLong(0)).toSet
@@ -339,6 +343,30 @@ object SketchCells {
     if (days.nonEmpty && exists(store.spark, dir)) refresh(store, dir, days)
   }
 
-  def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/td")
+  def read(spark: SparkSession, dir: String): DataFrame = readTable(spark, dir, "td")
+
+  /** The cell table at `dir/table` (`td` or `tdtag/<k>`), read with its
+    * schema memoized per refresh generation of `dir` ([[MetaCache]]): a
+    * bare `spark.read.parquet` runs a one-task schema-inference job on
+    * every call, i.e. on every served query, for a schema that only a
+    * writer changes. Every writer of the tier bumps the generation, so a
+    * rebuild that adds or drops NDV keys is seen at the next read, in
+    * this JVM and in others.
+    *
+    * The memo holds the StructType, not a DataFrame (a schema does not
+    * depend on the session), plus the table's data files at load. A read
+    * that lists other files — a rewrite that bypassed the writer hook —
+    * infers again instead of trusting the memo: a schema naming a column
+    * the files lack would read it as NULL, and the engine's
+    * served-partials check, which reads these columns, would serve NULLs.
+    */
+  private def readTable(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table"
+    val (files, schema) = MetaCache.cached(dir, s"schema:$table") {
+      val df = spark.read.parquet(path)
+      (df.inputFiles.sorted.toSeq, df.schema)
+    }
+    val df = spark.read.schema(schema).parquet(path)
+    if (df.inputFiles.sorted.toSeq == files) df else spark.read.parquet(path)
+  }
 }

@@ -348,7 +348,10 @@ object SkipIndex {
   final case class SkipScan(df: DataFrame, filesRead: Int, filesTotal: Int)
 
   /** Read exactly `files` of the store (partition column recovered via
-    * basePath); the store's typed empty frame when nothing survived.
+    * basePath) with the store's own schema, so the frame has exactly
+    * [[SeriesStore.scan]]'s schema and no read runs a parquet
+    * schema-inference job; the store's typed empty frame when nothing
+    * survived.
     */
   private def readFiles(store: SeriesStore, files: Array[String]): DataFrame =
     if (files.isEmpty) store.scan().filter(lit(false))
@@ -357,7 +360,8 @@ object SkipIndex {
       val fs = new org.apache.hadoop.fs.Path(store.segDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val base = fs.makeQualified(new org.apache.hadoop.fs.Path(store.segDir)).toString
-      spark.read.option("basePath", base).parquet(files.toIndexedSeq: _*)
+      spark.read.schema(store.fullSchema).option("basePath", base)
+        .parquet(files.toIndexedSeq: _*)
     }
 
   /** The one manifest-pruned scan: rows of `store` that satisfy

@@ -428,8 +428,9 @@ object Engine {
     // TABLE: a store predating the r14 basic partials, or a tier without
     // a requested NDV key's theta cells, lacks them — fall through to
     // the raw route (correct, just unserved) until it is rebuilt. The
-    // schema is already open (the read above), so this check costs no
-    // extra metadata round-trip.
+    // read above carries the table's schema memoized per refresh
+    // generation (SketchCells.read), so this check costs no metadata
+    // round-trip and no schema-inference job.
     val needed = SketchCells.partialsNamed(ps.collect { case Agg(_, a) => a.reads }
       .flatten.toSet)
     if (!needed.forall(p => base.columns.contains(p.name))) return None
@@ -472,13 +473,12 @@ object Engine {
     def edgeRows(elo: Long, ehi: Long): DataFrame =
       // time is integer seconds and bounds are inclusive, so [elo, ehi)
       // is the inclusive range [elo, ehi - 1]. The store's pruned scan
-      // prunes through the skip manifest when one exists: scanRange's
-      // spark.read.parquet(segDir) must LIST the whole segments table
-      // before pruning — at 100 TB (or the ScaleBench store's 3,400 hour
-      // dirs: measured 16 s vs 2 s) that per-query listing dwarfs the
-      // ≤24-hour edge read the hybrid is supposed to be, while the
-      // manifest hands back the edge hours' explicit file list for one
-      // metadata read. The probe's residual is the exact edge filter.
+      // reads only the edge: through the skip manifest when one exists
+      // (the edge hours' surviving files, for one metadata read), else
+      // through scanRange's edge hour directories — never a listing of
+      // the whole segments table, which at the ScaleBench store's 3,400
+      // hour dirs measured 16 s against 2 s. The probe's residual is the
+      // exact edge filter.
       store.scanPruned(scanProbe(s.from, None).copy(lo = Some(elo),
         hi = Some(ehi - 1), tags = tagEq.toSeq.map(Seq(_)))).df
     def edgePartials(raw: DataFrame): DataFrame = {

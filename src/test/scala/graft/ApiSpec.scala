@@ -268,4 +268,66 @@ class ApiSpec extends AnyFunSuite {
       assert(get(port, "/api/v1/query/range?start=0").statusCode() === 400)
     } finally api.stop()
   }
+
+  test("served answers and manifest-pruned range reads run no schema-inference job") {
+    import graft.storage.{SkipIndex, SketchCells}
+    import graft.sydraql.{CompileOptions, Engine}
+    import org.apache.spark.sql.functions.{col, lit, map}
+    import spark.implicits._
+    val store = new SeriesStore(spark, Files.createTempDirectory("graft-api-jobs").toString)
+    // three days, one point every 30 min, integer values (exact sums)
+    store.append((0 until 144).map(i => ("cpu", i * 1800L, (i % 17).toDouble))
+      .toDF("series", "time", "value")
+      .withColumn("tags", map(lit("host"), lit("a")))
+      .select("series", "tags", "time", "value"))
+    SkipIndex.build(store, SkipIndex.dirFor(store))
+    SketchCells.build(store, SketchCells.dirFor(store))
+    val api = new HttpApi(store, token = Some("t0"))
+    val port = api.start()
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    try {
+      val ql = "select avg(value) as a, count() as n from cpu where time >= 0 and time < 172800"
+      def served() = post(port, "/api/v1/sydraql", s"""{"query":"$ql"}""")
+      served() // warm-up: the memoized serving metadata loads once
+      val (q, qJobs) = TestSpark.jobsDuring(served())
+      assert(q.statusCode() === 200, q.body().take(300))
+      assert(q.body().contains("\"route\":\"served:cells:td\""), q.body().take(600))
+      val row = mapper.readTree(q.body()).get("rows").get(0)
+      val raw = Engine.sql(spark, store.source(), ql, CompileOptions()).head()
+      assert((row.get(0).asDouble, row.get(1).asLong) === ((raw.getDouble(0), raw.getLong(1))))
+      // the aggregate's shuffle stage and its result stage, nothing else
+      assert(qJobs.size <= 2, s"a cells-only served answer ran ${qJobs.size} jobs: ${qJobs.mkString(" | ")}")
+      val (lo, hi) = (90000L, 100000L)
+      def range() = get(port, s"/api/v1/query/range?series=cpu&start=$lo&end=$hi")
+      range()
+      val (r, rJobs) = TestSpark.jobsDuring(range())
+      assert(r.statusCode() === 200, r.body())
+      import scala.jdk.CollectionConverters._
+      val pts = mapper.readTree(r.body()).elements().asScala
+        .map(n => n.get("ts").asLong -> n.get("value").asDouble).toSeq
+      assert(pts === store.source().filter(col("time") >= lo && col("time") <= hi)
+        .orderBy("time").select("time", "value").as[(Long, Double)].collect().toSeq)
+      assert(rJobs.size === 1, s"a pruned range read ran ${rJobs.size} jobs: ${rJobs.mkString(" | ")}")
+    } finally api.stop()
+  }
+
+  test("HTTP replies are not held back for the client's delayed ACK") {
+    val api = new HttpApi(new SeriesStore(spark, Files.createTempDirectory("graft-api-nodelay").toString))
+    val port = api.start()
+    // one keep-alive HTTP/1.1 connection: the server writes a reply's
+    // headers, then its body, and with Nagle on the body waits for the
+    // ACK of the headers, which the client delays (~40 ms)
+    val c = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/status")).GET().build()
+    try {
+      assert(c.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() === 200)
+      val ms = (0 until 20).map { _ =>
+        val t0 = System.nanoTime()
+        val r = c.send(req, HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() === 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(ms.size / 2) < 20.0, s"median /status reply took ${ms(ms.size / 2)} ms: ${ms.mkString(", ")}")
+    } finally api.stop()
+  }
 }

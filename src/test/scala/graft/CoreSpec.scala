@@ -12,6 +12,34 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false"))
     .getOrCreate()
+
+  /** `f`'s result and the descriptions of the Spark jobs started while
+    * it ran, on any thread ("" for a job without one). The listener bus
+    * is asynchronous, so they are read only after a fence job (not
+    * listed) has been delivered: the bus delivers in order, so every job
+    * `f` started was seen before it.
+    */
+  def jobsDuring[T](f: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == "jobs-fence")) fenced.countDown()
+        else jobs.add(props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+        ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      sc.setJobGroup("jobs-fence", "listener-bus fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job never delivered")
+      (r, jobs.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 class CoreSpec extends AnyFunSuite {

@@ -747,9 +747,10 @@ class StorageSpec extends AnyFunSuite {
     val sid = sidOf(probeName)
     val ql = s"select time, value from by_id($sid) where time >= 3600 and time <= ${2 * 3600 + 10}"
     def run() = Engine.executeOnStore(store, ql, CompileOptions(now = 0L)).df
-    // pre-manifest: the engine reads the plain source (all 8 files)
+    // pre-manifest: the engine reads the window's hour directories —
+    // hours 1 and 2, both series' files (4 of 8), unpruned by series
     val before = run()
-    assert(before.inputFiles.length === 8, "no manifest -> unrouted full source")
+    assert(before.inputFiles.length === 4, "no manifest -> hour-pruned source, every series")
     val rows = before.orderBy("time").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(rows === Seq((3610L, 1.0), (7210L, 2.0)))
     // with the store-convention manifest: 8 -> 2 files (time + bloom),
@@ -1065,23 +1066,11 @@ class StorageSpec extends AnyFunSuite {
     // job-count pin: the r13 rewrite ran ~2 Spark jobs PER affected hour
     // (12+ here); the batched rewrite is one counts job + one survivors
     // write + discovery, independent of the hour count
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val report = try {
-      val r = Maintenance.deleteRows(store, pred)
-      Thread.sleep(2000) // listener bus is async
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (report, jobs) = TestSpark.jobsDuring(Maintenance.deleteRows(store, pred))
     assert(report.deletedRows === 20L, report)
     assert(report.rewrittenHours === (0 until 6).map(_ * 3600L))
-    assert(jobs.get() <= 8,
-      s"batched delete must run O(1) jobs for 6 affected hours, ran ${jobs.get()}")
+    assert(jobs.size <= 8,
+      s"batched delete must run O(1) jobs for 6 affected hours, ran ${jobs.size}")
     // emptied hour's partition dir is gone; survivors exact elsewhere
     assert(store.partitions() === Seq(0L, 3600L, 10800L, 14400L, 18000L))
     assert(store.scan().count() === 40L)
@@ -1596,5 +1585,78 @@ class StorageSpec extends AnyFunSuite {
       hi = Some(4 * 3600L), tags = Seq(Seq("host" -> "cpu"))))
     assert(tagScan.filesRead === 7)
     assert(tagScan.df.count() === 4)
+  }
+
+  test("scanRange without a skip manifest reads only the window's hour directories") {
+    import spark.implicits._
+    val store = new SeriesStore(spark, tmp())
+    // 40 hours, above the 32-path threshold past which Spark lists a
+    // directory tree with a Spark job; three points an hour
+    val pts = for { h <- 0 until 40; i <- 0 until 3 }
+      yield ("m", Map("host" -> "a"), h * 3600L + i * 1200L, (h * 3 + i).toDouble)
+    store.append(pts.toDF("series", "tags", "time", "value"))
+    assert(store.partitions().size === 40)
+    val all = store.scan()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("time").select("time", "value", "hour_bucket").as[(Long, Double, Long)]
+        .collect().toSeq
+    def typed(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    for ((lo, hi) <- Seq(
+        (5 * 3600L + 600, 7 * 3600L + 10), // inside, clipped at both ends
+        (5 * 3600L + 1300, 5 * 3600L + 2300), // inside one hour
+        (-7200L, 3600L), // across the first stored hour
+        (38 * 3600L + 1, 45 * 3600L), // across the last
+        (Long.MinValue, Long.MaxValue), // every hour
+        (50 * 3600L, 60 * 3600L), // after every stored hour: no hour selected
+        (-9000L, -1L))) { // before every stored hour: no hour selected
+      val got = store.scanRange(lo, hi)
+      assert(typed(got) === typed(all), s"[$lo, $hi]")
+      assert(rows(got) === rows(all.filter(col("time") >= lo && col("time") <= hi)), s"[$lo, $hi]")
+    }
+    // job-count pin: a 2-hour range read lists its 2 hour directories
+    // in-process; a read of the store root lists all 40 with a Spark job
+    val (n, jobs) = TestSpark.jobsDuring(store.scanRange(3600L, 2 * 3600L + 1200).count())
+    assert(n === 5L)
+    assert(!jobs.exists(_.startsWith("Listing leaf files")),
+      s"a 2-hour scanRange must run no file-listing job, ran: ${jobs.mkString(" | ")}")
+  }
+
+  test("the cell-table schema memo follows rebuilds; refresh keeps its legacy guard") {
+    import graft.storage.SketchCells
+    import spark.implicits._
+    val store = new SeriesStore(spark, tmp())
+    val d = 86400L
+    def points(hosts: Seq[String], day: Int) = (for { h <- 0 to 3; host <- hosts }
+      yield ("m", day * d + h * 3600L, h.toDouble, host))
+      .toDF("series", "time", "value", "host")
+      .withColumn("tags", map(lit("host"), col("host")))
+      .select("series", "tags", "time", "value")
+    store.append(points(Seq("a", "b"), 0).unionByName(points(Seq("b", "c"), 1)))
+    val dir = SketchCells.dirFor(store)
+    val opts = CompileOptions(now = 0L)
+    val ql = s"select ndv(tag.host) as n from m where time >= 0 and time < ${2 * d}"
+    def check(route: String): Unit = {
+      val res = Engine.executeOnStore(store, ql, opts)
+      assert(res.stats.route === route)
+      assert(res.df.collect().toSeq === Engine.sql(spark, store.source(), ql, opts).collect().toSeq,
+        s"$route answer must equal the raw compile")
+    }
+    // no NDV keys: the td table has no theta_host partial, so ndv goes raw
+    SketchCells.build(store, dir)
+    check("raw")
+    // rebuilt WITH the key in the same JVM: the memoized schema reloads
+    // and the same query serves
+    SketchCells.build(store, dir, ndvTags = Seq("host"))
+    check("served:cells:td")
+    // and without it again: raw again
+    SketchCells.build(store, dir)
+    check("raw")
+    // an append refreshes the touched day; the refresh's legacy guard
+    // reads the memoized schema and keeps the theta keys
+    SketchCells.build(store, dir, ndvTags = Seq("host"))
+    check("served:cells:td")
+    store.append(points(Seq("d"), 1))
+    check("served:cells:td")
+    assert(Engine.executeOnStore(store, ql, opts).df.head().getDouble(0) === 4.0)
   }
 }
