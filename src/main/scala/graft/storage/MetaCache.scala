@@ -3,9 +3,10 @@ package graft.storage
 import scala.util.control.NonFatal
 
 /** Per-(dir, refresh-generation) memo for serving-path METADATA — tier
-  * existence checks, group-tag lists, the cell tables' schemas
-  * ([[SketchCells.read]]: a served read with a known schema runs no
-  * parquet schema-inference job), manifest rows and file totals.
+  * existence checks, group-tag lists, the cell tables' schemas and
+  * per-day file bytes ([[SketchCells.readTable]]: a served read with a
+  * known schema runs no parquet schema-inference job, and the bytes size
+  * its merge), manifest rows and file totals.
   *
   * Why: every engine-served query was paying 3–4 filesystem round-trips
   * of pure metadata (`SketchCells.exists` + an NDV-key parquet schema

@@ -276,7 +276,7 @@ object SketchCells {
     }
 
   def readTag(spark: SparkSession, dir: String, k: String): DataFrame =
-    readTable(spark, dir, s"tdtag/$k")
+    readTable(spark, dir, s"tdtag/$k").df
 
   /** Recompute ONLY `days`' cells from the store (hour-partition-pruned
     * scan) and overwrite exactly those day partitions — the incremental
@@ -343,7 +343,49 @@ object SketchCells {
     if (days.nonEmpty && exists(store.spark, dir)) refresh(store, dir, days)
   }
 
-  def read(spark: SparkSession, dir: String): DataFrame = readTable(spark, dir, "td")
+  def read(spark: SparkSession, dir: String): DataFrame = readTable(spark, dir, "td").df
+
+  /** A cell table as served: the frame, and its data files' bytes per
+    * day partition at the generation the frame was read under.
+    */
+  private[graft] final case class Table(df: DataFrame, dayBytes: Map[Long, Long]) {
+    /** Bytes of the day partitions in [lo, hi). */
+    def bytesIn(lo: Long, hi: Long): Long =
+      dayBytes.iterator.collect { case (d, b) if d >= lo && d < hi => b }.sum
+  }
+
+  /** The data files (path, bytes) of a file-source frame, from the file
+    * index its read already listed — no further filesystem call.
+    */
+  private def dataFiles(df: DataFrame): Seq[(String, Long)] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation, PartitioningAwareFileIndex}
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
+    }.collect { case i: PartitioningAwareFileIndex =>
+      i.allFiles().map(f => (f.getPath.toString, f.getLen))
+    }.getOrElse(Nil).sorted
+  }
+
+  /** Bytes per `day=<d>` partition directory. */
+  private def bytesByDay(files: Seq[(String, Long)]): Map[Long, Long] =
+    files.groupMapReduce { case (p, _) =>
+      new org.apache.hadoop.fs.Path(p).getParent.getName.stripPrefix("day=").toLong
+    }(_._2)(_ + _)
+
+  /** Partitions the served merge needs for `bytes` of cell files: Spark's
+    * split-size rule (`FilePartition.maxSplitBytes` over
+    * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and the
+    * default parallelism) applied to the files' own bytes. The file scan
+    * itself charges `openCostInBytes` (4 MB) per file, so it plans one task
+    * per KB-sized cell file, and the merge then needs an Exchange — a
+    * second job for a few KB of partials.
+    */
+  private[graft] def mergePartitions(spark: SparkSession, bytes: Long): Int = {
+    val split = org.apache.spark.sql.execution.datasources.FilePartition
+      .maxSplitBytes(spark, bytes)
+    math.max(1L, (bytes + split - 1) / split).toInt
+  }
 
   /** The cell table at `dir/table` (`td` or `tdtag/<k>`), read with its
     * schema memoized per refresh generation of `dir` ([[MetaCache]]): a
@@ -354,19 +396,33 @@ object SketchCells {
     * this JVM and in others.
     *
     * The memo holds the StructType, not a DataFrame (a schema does not
-    * depend on the session), plus the table's data files at load. A read
-    * that lists other files — a rewrite that bypassed the writer hook —
-    * infers again instead of trusting the memo: a schema naming a column
-    * the files lack would read it as NULL, and the engine's
-    * served-partials check, which reads these columns, would serve NULLs.
+    * depend on the session), plus the table's data files and their bytes
+    * at load. A read that lists other files — a rewrite that bypassed the
+    * writer hook — infers again instead of trusting the memo: a schema
+    * naming a column the files lack would read it as NULL, and the
+    * engine's served-partials check, which reads these columns, would
+    * serve NULLs.
+    *
+    * The frame itself is not memoized, so each read lists the table's day
+    * partitions again (a fresh file index). Measured without an
+    * end-to-end gain: a variant that memoized the frame per session,
+    * guarded by a driver-side Hadoop listing of the table's files, cut
+    * `sydraql.compile_us` from 21–24 to 16–17 ms in three traced seed-7
+    * dashboard pairs on 4 cores, but the cells-only shapes' median wall
+    * times were slower in one pair, faster in one and mixed in the third.
     */
-  private def readTable(spark: SparkSession, dir: String, table: String): DataFrame = {
+  private[graft] def readTable(spark: SparkSession, dir: String, table: String): Table = {
     val path = s"$dir/$table"
-    val (files, schema) = MetaCache.cached(dir, s"schema:$table") {
+    val (files, schema, dayBytes) = MetaCache.cached(dir, s"schema:$table") {
       val df = spark.read.parquet(path)
-      (df.inputFiles.sorted.toSeq, df.schema)
+      val files = dataFiles(df)
+      (files, df.schema, bytesByDay(files))
     }
     val df = spark.read.schema(schema).parquet(path)
-    if (df.inputFiles.sorted.toSeq == files) df else spark.read.parquet(path)
+    if (dataFiles(df) == files) Table(df, dayBytes)
+    else {
+      val fresh = spark.read.parquet(path)
+      Table(fresh, bytesByDay(dataFiles(fresh)))
+    }
   }
 }

@@ -417,11 +417,10 @@ object Engine {
     // (per-(series, day, value) digests); otherwise the td table (which
     // also carries theta cells). The equality filter applies on the
     // tier's tagval key — day-pruned KB cells of ONE tag value.
+    val table = SketchCells.readTable(spark, dir,
+      tierTagKey.fold("td")(k => s"tdtag/$k"))
     val base = tagEq.foldLeft(
-      selFiltered(tierTagKey match {
-        case Some(k) => SketchCells.readTag(spark, dir, k)
-        case None => SketchCells.read(spark, dir)
-      }).filter(col("day") >= dLo && col("day") < dHi)) {
+      selFiltered(table.df).filter(col("day") >= dLo && col("day") < dHi)) {
       case (df, (_, v)) => df.filter(col("tagval") === v)
     }
     // the partials the projected aggregates read must exist IN THIS
@@ -429,7 +428,7 @@ object Engine {
     // a requested NDV key's theta cells, lacks them — fall through to
     // the raw route (correct, just unserved) until it is rebuilt. The
     // read above carries the table's schema memoized per refresh
-    // generation (SketchCells.read), so this check costs no metadata
+    // generation (SketchCells.readTable), so this check costs no metadata
     // round-trip and no schema-inference job.
     val needed = SketchCells.partialsNamed(ps.collect { case Agg(_, a) => a.reads }
       .flatten.toSet)
@@ -486,10 +485,20 @@ object Engine {
       raw.groupBy((Seq(SketchCells.day.as("day")) ++ tagKeyOpt.map(SketchCells.tagval)): _*)
         .agg(eAggs.head, eAggs.tail: _*)
     }
+    // the cells side of the merge, sized by the probed days' cell bytes
+    // (SketchCells.mergePartitions: Spark's split-size rule without the
+    // 4 MB openCostInBytes the file scan charges per KB-sized file). A
+    // dashboard window's cells fit one split: one partition, so the merge
+    // plans with no Exchange — one job, one task. Larger windows keep the
+    // scan's parallel plan; the ragged edges' raw reads are not sized here
+    val cellRows = base.select(readCols.map(col): _*)
+    val cells =
+      if (SketchCells.mergePartitions(spark, table.bytesIn(dLo, dHi)) == 1) cellRows.coalesce(1)
+      else cellRows
     val edges = Seq((l, dLo), (dHi, h)).filter { case (a, b) => a < b }
     val unioned =
-      if (edges.isEmpty) base.select(readCols.map(col): _*)
-      else base.select(readCols.map(col): _*).unionByName(edgePartials(
+      if (edges.isEmpty) cells
+      else cells.unionByName(edgePartials(
         edges.map { case (a, b) => edgeRows(a, b) }.reduce(_ unionByName _)))
     val merged =
       if (groupCols.isEmpty) unioned.agg(aggs.head, aggs.tail: _*)

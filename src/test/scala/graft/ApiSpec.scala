@@ -281,22 +281,30 @@ class ApiSpec extends AnyFunSuite {
       .withColumn("tags", map(lit("host"), lit("a")))
       .select("series", "tags", "time", "value"))
     SkipIndex.build(store, SkipIndex.dirFor(store))
-    SketchCells.build(store, SketchCells.dirFor(store))
+    SketchCells.build(store, SketchCells.dirFor(store), groupTags = Seq("host"))
     val api = new HttpApi(store, token = Some("t0"))
     val port = api.start()
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     try {
-      val ql = "select avg(value) as a, count() as n from cpu where time >= 0 and time < 172800"
-      def served() = post(port, "/api/v1/sydraql", s"""{"query":"$ql"}""")
-      served() // warm-up: the memoized serving metadata loads once
-      val (q, qJobs) = TestSpark.jobsDuring(served())
-      assert(q.statusCode() === 200, q.body().take(300))
-      assert(q.body().contains("\"route\":\"served:cells:td\""), q.body().take(600))
-      val row = mapper.readTree(q.body()).get("rows").get(0)
-      val raw = Engine.sql(spark, store.source(), ql, CompileOptions()).head()
-      assert((row.get(0).asDouble, row.get(1).asLong) === ((raw.getDouble(0), raw.getLong(1))))
-      // the aggregate's shuffle stage and its result stage, nothing else
-      assert(qJobs.size <= 2, s"a cells-only served answer ran ${qJobs.size} jobs: ${qJobs.mkString(" | ")}")
+      Seq("served:cells:td" ->
+          "select avg(value) as a, count() as n from cpu where time >= 0 and time < 172800",
+        "served:cells:tdtag" ->
+          ("select tag.host as h, avg(value) as a, count() as n from cpu " +
+            "where time >= 0 and time < 172800 group by tag.host")).foreach { case (route, ql) =>
+        def served() = post(port, "/api/v1/sydraql", s"""{"query":"$ql"}""")
+        served() // warm-up: the memoized serving metadata loads once
+        val (q, qJobs) = TestSpark.jobsDuring(served())
+        assert(q.statusCode() === 200, q.body().take(300))
+        assert(q.body().contains(s"\"route\":\"$route\""), q.body().take(600))
+        val row = mapper.readTree(q.body()).get("rows").get(0)
+        val raw = Engine.sql(spark, store.source(), ql, CompileOptions()).head()
+        val n = raw.length
+        assert((row.get(n - 2).asDouble, row.get(n - 1).asLong) ===
+          ((raw.getDouble(n - 2), raw.getLong(n - 1))), route)
+        // the day cells fit one split, so the merge reads them in one
+        // partition with no Exchange: one job, one task
+        assert(qJobs.size === 1, s"$route answer ran ${qJobs.size} jobs: ${qJobs.mkString(" | ")}")
+      }
       val (lo, hi) = (90000L, 100000L)
       def range() = get(port, s"/api/v1/query/range?series=cpu&start=$lo&end=$hi")
       range()

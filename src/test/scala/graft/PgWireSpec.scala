@@ -45,8 +45,11 @@ class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
   private final class Client {
     val sock = new Socket("127.0.0.1", port)
     sock.setSoTimeout(60000)
+    // as drivers do (libpq, pgjdbc): NODELAY, and each message leaves in
+    // one write at its flush
+    sock.setTcpNoDelay(true)
     val in = new DataInputStream(sock.getInputStream)
-    val out = new DataOutputStream(sock.getOutputStream)
+    val out = new DataOutputStream(new java.io.BufferedOutputStream(sock.getOutputStream))
 
     def sendSslRequest(): Unit = { out.writeInt(8); out.writeInt(80877103); out.flush() }
 
@@ -563,6 +566,34 @@ class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     c.sendQuery("COPY copied (series, value) FROM STDIN")
     assert(parseError(c.readUntilReady().find(_._1 == 'E').get._2)('C') === "42601")
     c.close()
+  }
+
+  test("replies are not held back for the client's delayed ACK") {
+    val c = new Client
+    c.handshake("user" -> "sydra")
+    // one connection, 20 round trips of each protocol: a reply must not
+    // wait for the client's delayed ACK (~40 ms) before it leaves. The
+    // extended cycle is four server flushes (ParseComplete, BindComplete,
+    // CommandComplete, ReadyForQuery), the write-write-read pattern Nagle
+    // holds back
+    val set = "SET application_name = 'x'"
+    def simple(): Vector[(Char, Array[Byte])] = { c.sendQuery(set); c.readUntilReady() }
+    def extended(): Vector[(Char, Array[Byte])] = {
+      c.sendParse("", set); c.sendBind("", "", Nil); c.sendExecute(""); c.sendSync()
+      c.readUntilReady()
+    }
+    try Seq("simple" -> (() => simple()), "extended" -> (() => extended())).foreach {
+      case (name, roundTrip) =>
+        roundTrip()
+        val ms = (0 until 20).map { _ =>
+          val t0 = System.nanoTime()
+          val reply = roundTrip()
+          assert(reply.exists(_._1 == 'C') && !reply.exists(_._1 == 'E'), name)
+          (System.nanoTime() - t0) / 1e6
+        }.sorted
+        assert(ms(ms.size / 2) < 20.0,
+          s"median $name SET round trip took ${ms(ms.size / 2)} ms: ${ms.mkString(", ")}")
+    } finally c.close()
   }
 
   test("terminate ('X') closes the connection") {

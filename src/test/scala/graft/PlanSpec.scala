@@ -552,6 +552,53 @@ class PlanSpec extends AnyFunSuite {
       "quantiles must still serve from a pre-r14 store:\n" + lq.take(800))
   }
 
+  test("small-store served plans merge the day cells with no Exchange; a smaller split size keeps the parallel plan") {
+    import org.apache.spark.sql.functions.{col, lit, map, when}
+    import spark.implicits._
+    val store = new SeriesStore(spark, Files.createTempDirectory("graft-cellsplit").toString)
+    // 6 days of points, 4/day, alternating hosts a and b
+    store.append((0 until 24).map(i => ("cpu", i.toLong * 21600L, i.toDouble))
+      .toDF("series", "time", "value")
+      .withColumn("tags", map(lit("host"),
+        when(col("value").cast("long") % 2 === 0, lit("a")).otherwise(lit("b"))))
+      .select("series", "tags", "time", "value"))
+    graft.storage.SketchCells.build(store, graft.storage.SketchCells.dirFor(store),
+      groupTags = Seq("host"))
+    val shapes = Seq(
+      "td" -> (s"select avg(value) as av, count() as n from cpu " +
+        s"where time >= 86400 and time < ${3 * 86400}", Seq("86400", "259200")),
+      "tdtag" -> ("select tag.host as h, avg(value) as av, max(value) as mx from cpu " +
+        s"where time >= 0 and time < ${2 * 86400} group by tag.host order by h",
+        Seq("172800")),
+      "bucket" -> ("select time_bucket(172800, time) as b, avg(value) as av, count() as n " +
+        s"from cpu where time >= 0 and time < ${6 * 86400} " +
+        "group by time_bucket(172800, time) order by b", Seq("518400")))
+    // every shape: served cells-only, day-pruned, and equal to the raw
+    // route; `exchange` is whether the merge plans one
+    def check(exchange: Boolean): Unit = shapes.foreach { case (name, (ql, bounds)) =>
+      val df = graft.sydraql.Engine.executeOnStore(store, ql,
+        graft.sydraql.CompileOptions(now = 0L)).df
+      val p = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      assert(p.contains("sketchcells") && !p.contains("segments"), s"$name:\n" + p.take(1200))
+      assert(p.contains("Exchange") === exchange, s"$name:\n$p")
+      val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
+      assert(pf.contains("day") && bounds.forall(pf.contains),
+        s"$name: day bounds must prune cell partitions: $pf")
+      assert(df.collect().toSeq === graft.sydraql.Engine.sql(spark, store.source(), ql,
+        graft.sydraql.CompileOptions(now = 0L)).collect().toSeq, name)
+    }
+    // a few KB of cells fit one split: one partition, no Exchange
+    check(exchange = false)
+    // a split size below the cells' bytes: the scan's parallel plan and
+    // the merge's Exchange stay, with the same answers
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "512")
+    try check(exchange = true)
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("tag-grouped quantile and bucketed ndv serve from cell tiers, day-pruned; ndv-under-tag serves from theta cells") {
     import org.apache.spark.sql.functions.{col, lit, map, when}
     import spark.implicits._
