@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.storage.{ScanProbe, SeriesStore}
-import graft.sydraql.{CompileOptions, Engine, QueryError}
+import graft.sydraql.{CompileOptions, Engine, QueryError, QueryProfile}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import java.net.InetSocketAddress
@@ -12,7 +12,6 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
 
 /** The reference's HTTP surface rebuilt on the JDK server (zero extra
   * deps): ingest, range query, tag find, sydraQL, SQL-compat, metrics,
@@ -167,44 +166,33 @@ final class HttpApi(store: SeriesStore, token: Option[String] = None, maxRows: I
     val res = Engine.executeOnStore(store, sydraql, CompileOptions())
     val limited = res.df.limit(maxRows)
     val rows = limited.collect()
-    val pipelineUs = (System.nanoTime() - t0) / 1000
+    val p = QueryProfile.of(res, limited, rows.length, (System.nanoTime() - t0) / 1000)
     queryTotal.incrementAndGet()
     val out: ObjectNode = mapper.createObjectNode()
     val colsNode = out.putArray("columns")
     res.df.columns.foreach(colsNode.add)
     val data: ArrayNode = out.putArray("rows")
     rows.foreach { r => data.add(rowToJson(r)) }
+    // the profile under the reference's stats keys (http.zig:335-395);
+    // `pipeline_us` is the profile's wall time, which stops at the last
+    // row, so sydrabench's api.self_ms (reply time − pipeline_us) keeps
+    // the JSON build and the write
     val stats = out.putObject("stats")
-    stats.put("parse_us", res.stats.parseUs)
-    stats.put("validate_us", res.stats.validateUs)
-    stats.put("compile_us", res.stats.compileUs)
-    // Catalyst phase timings (QueryPlanningTracker) — the analog of the
-    // reference's optimize_ms/physical_ms stages (exec.zig:48-58)
-    try {
-      val phases = limited.queryExecution.tracker.phases
-      def us(k: String): Long =
-        phases.get(k).map(p => (p.endTimeMs - p.startTimeMs) * 1000).getOrElse(0L)
-      stats.put("optimize_us", us("optimization"))
-      stats.put("physical_us", us("planning"))
-    } catch { case NonFatal(_) => () }
-    stats.put("pipeline_us", pipelineUs)
-    stats.put("rows_emitted", rows.length)
-    stats.put("trace_id", res.stats.traceId)
-    // serve-route attribution (r15): "raw", "served:cells:td",
-    // "served:hybrid:tdtag", "insert", "delete" — so a raw-path
-    // fallthrough on a dashboard shape is visible without EXPLAIN
-    stats.put("route", res.stats.route)
-    // per-operator instrumentation (reference: operator.zig:30-48 snapshots)
-    try {
-      val ops = stats.putArray("operators")
-      org.apache.spark.sql.graftshim.GraftShim
-        .operatorStatsTimed(limited.asInstanceOf[org.apache.spark.sql.classic.DataFrame])
-        .foreach { case (name, rowsOut, _) =>
-          val o = ops.addObject()
-          o.put("name", name)
-          o.put("rows_out", rowsOut)
-        }
-    } catch { case NonFatal(_) => () } // stats are best-effort
+    stats.put("parse_us", p.stats.parseUs)
+    stats.put("validate_us", p.stats.validateUs)
+    stats.put("compile_us", p.stats.compileUs)
+    stats.put("optimize_us", p.optimizeUs)
+    stats.put("physical_us", p.physicalUs)
+    stats.put("pipeline_us", p.wallUs)
+    stats.put("rows_emitted", p.rows)
+    stats.put("trace_id", p.stats.traceId)
+    stats.put("route", p.stats.route)
+    val ops = stats.putArray("operators")
+    p.operators.foreach { o =>
+      val n = ops.addObject()
+      n.put("name", o.name)
+      n.put("rows_out", o.rowsOut)
+    }
     respond(ex, 200, mapper.writeValueAsString(out))
   }
 
@@ -250,13 +238,15 @@ final class HttpApi(store: SeriesStore, token: Option[String] = None, maxRows: I
         respond(ex, 401, """{"error":"unauthorized"}""")
       else f(ex)
     } catch {
-      case qe: QueryError =>
-        errorTotal.incrementAndGet()
-        respond(ex, 400,
-          s"""{"sqlstate":"${SqlState.fromQueryError(qe.code)}","code":"${qe.code}","error":${mapper.writeValueAsString(qe.message)}}""")
       case e: Throwable =>
         errorTotal.incrementAndGet()
-        respond(ex, 500, s"""{"sqlstate":"${SqlState.InternalError}","error":${mapper.writeValueAsString(String.valueOf(e.getMessage))}}""")
+        // an engine QueryError is the request's fault (400, with its
+        // engine code); anything else is the server's (500)
+        val (status, code) = e match {
+          case qe: QueryError => (400, s""""code":"${qe.code}",""")
+          case _ => (500, "")
+        }
+        respond(ex, status, s"""{"sqlstate":"${SqlState.of(e)}",$code"error":${mapper.writeValueAsString(SqlState.message(e))}}""")
     }
 
   private def authorized(ex: HttpExchange): Boolean = token.forall { t =>

@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
 
 import graft.storage.{Ingest, SeriesStore}
-import graft.sydraql.{CompileOptions, Engine, QueryError}
+import graft.sydraql.{CompileOptions, Engine, QueryProfile, QueryResult}
 import org.apache.spark.sql.DataFrame
 import scala.util.control.NonFatal
 
@@ -97,15 +97,6 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
     // the query twice
     val schemaCache = scala.collection.mutable.Map[String, Option[org.apache.spark.sql.types.StructType]]()
     var errorUntilSync = false
-  }
-
-  /** Engine/runtime exceptions → SQLSTATE (ANSI division errors keep the
-    * reference's 22012 mapping).
-    */
-  private def sqlStateFor(e: Throwable): String = {
-    val msg = String.valueOf(e.getMessage)
-    if (msg.contains("DIVIDE_BY_ZERO") || msg.contains("division by zero")) SqlState.DivisionByZero
-    else SqlState.InternalError
   }
 
   private def handleConnection(sock: Socket): Unit = {
@@ -308,7 +299,7 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
       try Right(copyIngest(cmd, buf.toByteArray))
       catch {
         case e: CopyRowError => Left((SqlState.InvalidTextRepresentation, e.getMessage))
-        case e: Throwable => Left((SqlState.InternalError, String.valueOf(e.getMessage)))
+        case e: Throwable => Left((SqlState.of(e), SqlState.message(e)))
       }
     }
     result match {
@@ -527,10 +518,13 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
   }
 
   /** Row schema of a statement without executing it: shims and writes have
-    * no rows; catalog and SELECT statements compile lazily. Unbound `$n`
-    * placeholders (Describe on a statement before Bind) get dummy values —
-    * the schema doesn't depend on parameter values, and answering NoData
-    * for a statement that later streams DataRows would desync the driver.
+    * no rows; catalog statements compile lazily, and sydraQL statements
+    * compile on the route Execute runs them on ([[Engine.describeOnStore]]:
+    * the same served or pruned raw route, no job, INSERT/DELETE not run).
+    * Unbound `$n` placeholders (Describe on a statement before Bind) get
+    * dummy values — the schema doesn't depend on parameter values, and
+    * answering NoData for a statement that later streams DataRows would
+    * desync the driver.
     * Cached per connection: the pgjdbc Describe+Execute flow would
     * otherwise compile every statement twice.
     */
@@ -548,10 +542,7 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
         scala.util.Try(PgCatalog.execute(store.spark, bound, serverVersion).schema).toOption
       else Translator.translate(bound) match {
         case Translator.Success(sydraql) =>
-          val verb = sydraql.trim.toLowerCase
-          if (verb.startsWith("insert") || verb.startsWith("delete")) None
-          else scala.util.Try(
-            Engine.execute(store.spark, store.source(), sydraql, CompileOptions()).df.schema).toOption
+          scala.util.Try(Engine.describeOnStore(store, sydraql, CompileOptions())).toOption.flatten
         case _: Translator.Failure => None
       }
     })
@@ -601,20 +592,17 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
           case Translator.Success(sydraql) =>
             try {
               val res = Engine.executeOnStore(store, sydraql, CompileOptions())
-              val verb = sydraql.trim.toLowerCase
-              if (verb.startsWith("insert") || verb.startsWith("delete")) {
-                val n = res.df.head().getLong(0)
-                val isInsert = verb.startsWith("insert")
-                writeCommandComplete(out, if (isInsert) s"INSERT 0 $n" else s"DELETE $n")
-                st.completedTag(portal) = if (isInsert) "INSERT 0 0" else "DELETE 0"
-              } else {
-                val it = res.df.toLocalIterator()
-                st.cursors(portal) = it
-                streamCursor(out, st, portal, it, limit)
+              commandTag(res) match {
+                case Some(tag) =>
+                  writeCommandComplete(out, tag(res.df.head().getLong(0)))
+                  st.completedTag(portal) = tag(0)
+                case None =>
+                  val it = res.df.toLocalIterator()
+                  st.cursors(portal) = it
+                  streamCursor(out, st, portal, it, limit)
               }
             } catch {
-              case qe: QueryError => extError(out, st, SqlState.fromQueryError(qe.code), qe.message)
-              case e: Throwable => extError(out, st, sqlStateFor(e), String.valueOf(e.getMessage))
+              case e: Throwable => extError(out, st, SqlState.of(e), SqlState.message(e))
             }
           case Translator.Failure(state, msg) =>
             extError(out, st, state, if (msg.isEmpty) "translation failed" else msg)
@@ -642,7 +630,7 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
     } catch {
       case e: Throwable => // runtime error mid-stream (e.g. ANSI division)
         st.cursors.remove(portal)
-        extError(out, st, sqlStateFor(e), String.valueOf(e.getMessage))
+        extError(out, st, SqlState.of(e), SqlState.message(e))
     }
   }
 
@@ -679,73 +667,56 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
     rowCount
   }
 
+  /** INSERT and DELETE answer a postgres command tag for their row count
+    * instead of rows (psql prints `INSERT 0 n` / `DELETE n`); the route
+    * the engine took says which.
+    */
+  private def commandTag(res: QueryResult): Option[Long => String] = res.stats.route match {
+    case "insert" => Some(n => s"INSERT 0 $n")
+    case "delete" => Some(n => s"DELETE $n")
+    case _ => None
+  }
+
   /** server.zig:249-318: execute, stream rows, then the NOTICE block
     * (schema, trace_id, per-operator rows_out, metrics) and
-    * CommandComplete.
+    * CommandComplete. The compile is lazy, so the Spark job runs inside
+    * the same try: a runtime error (e.g. ANSI division) produces an
+    * ErrorResponse + ReadyForQuery, not a dropped connection.
     */
   private def executeSydraql(out: DataOutputStream, sydraql: String): Unit = {
     val startNs = System.nanoTime()
-    val res =
-      try Engine.executeOnStore(store, sydraql, CompileOptions())
-      catch {
-        case qe: QueryError =>
-          writeErrorResponse(out, "ERROR", SqlState.fromQueryError(qe.code), qe.message)
-          writeReadyForQuery(out)
-          return
-        case e: Throwable =>
-          writeErrorResponse(out, "ERROR", SqlState.InternalError, String.valueOf(e.getMessage))
-          writeReadyForQuery(out)
-          return
-      }
-
-    // the compile above is lazy; the Spark job runs inside this try —
-    // runtime errors (e.g. ANSI division) must produce an ErrorResponse +
-    // ReadyForQuery, not a dropped connection
     try {
-      // INSERT/DELETE (translator-normalized verbs): no row stream, just
-      // the postgres command tag — psql prints `INSERT 0 n` / `DELETE n`.
-      val verb = sydraql.trim.toLowerCase
-      if (verb.startsWith("insert") || verb.startsWith("delete")) {
-        val n = res.df.head().getLong(0)
-        writeCommandComplete(out, if (verb.startsWith("insert")) s"INSERT 0 $n" else s"DELETE $n")
-        writeReadyForQuery(out)
-        return
+      val res = Engine.executeOnStore(store, sydraql, CompileOptions())
+      commandTag(res) match {
+        case Some(tag) => writeCommandComplete(out, tag(res.df.head().getLong(0)))
+        case None =>
+          streamRows(out, res.df, withRowDesc = true, beforeComplete = rowCount =>
+            writeNotices(out, res.df.schema,
+              QueryProfile.of(res, res.df, rowCount, (System.nanoTime() - startNs) / 1000)))
       }
-
-      streamRows(out, res.df, withRowDesc = true, beforeComplete = rowCount =>
-        writeNotices(out, res.df, res.df.schema, res.stats.traceId, rowCount, startNs,
-          planUs = res.stats.parseUs + res.stats.validateUs + res.stats.compileUs))
     } catch {
-      case e: Throwable =>
-        writeErrorResponse(out, "ERROR", sqlStateFor(e), String.valueOf(e.getMessage))
+      case e: Throwable => writeErrorResponse(out, "ERROR", SqlState.of(e), SqlState.message(e))
     }
     writeReadyForQuery(out)
   }
 
-  /** The reference's post-query NOTICE block (server.zig:294-312). */
-  private def writeNotices(out: DataOutputStream, df: DataFrame,
-      schema: org.apache.spark.sql.types.StructType, traceId: String,
-      rowCount: Long, startNs: Long, planUs: Long): Unit = {
+  /** The reference's post-query NOTICE block (server.zig:294-312),
+    * rendered from the statement's profile.
+    */
+  private def writeNotices(out: DataOutputStream,
+      schema: org.apache.spark.sql.types.StructType, p: QueryProfile): Unit = {
     if (schema.fields.nonEmpty) {
       val cols = schema.fields.map(f =>
         s"""{name:"${f.name}",type:"${displayName(f.dataType)}",nullable:${f.nullable}}""")
       writeNoticeResponse(out, cols.mkString("schema=[", ", ", "]"))
     }
-    if (traceId.nonEmpty) writeNoticeResponse(out, s"trace_id=$traceId")
-
-    var rowsScanned = 0L
-    try {
-      val stats = org.apache.spark.sql.graftshim.GraftShim
-        .operatorStatsTimed(df.asInstanceOf[org.apache.spark.sql.classic.DataFrame])
-      stats.foreach { case (name, rowsOut, elapsedUs) =>
-        writeNoticeResponse(out, s"operator=$name rows_out=$rowsOut elapsed_us=$elapsedUs")
-        if (name.toLowerCase.contains("scan")) rowsScanned += math.max(rowsOut, 0L)
-      }
-    } catch { case NonFatal(_) => () } // stats are best-effort
-
-    val streamMs = (System.nanoTime() - startNs) / 1000000
+    if (p.stats.traceId.nonEmpty) writeNoticeResponse(out, s"trace_id=${p.stats.traceId}")
+    p.operators.foreach(o =>
+      writeNoticeResponse(out, s"operator=${o.name} rows_out=${o.rowsOut} elapsed_us=${o.elapsedUs}"))
+    val scanned = p.operators.filter(_.name.toLowerCase.contains("scan")).map(o => math.max(o.rowsOut, 0L)).sum
+    val planUs = p.stats.parseUs + p.stats.validateUs + p.stats.compileUs
     writeNoticeResponse(out,
-      s"metrics rows=$rowCount scanned=$rowsScanned stream_ms=$streamMs plan_ms=${planUs / 1000}")
+      s"metrics rows=${p.rows} scanned=$scanned stream_ms=${p.wallUs / 1000} plan_ms=${planUs / 1000}")
   }
 
   private def cString(payload: Array[Byte]): String = {

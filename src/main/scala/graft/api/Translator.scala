@@ -104,8 +104,29 @@ object SqlState {
   val QueryCanceled = "57014"
   val InvalidTextRepresentation = "22P02"
 
+  /** The SQLSTATE of any error a statement raises, on every surface: an
+    * engine [[graft.sydraql.QueryError]] by its code, an ANSI division by
+    * zero (raised at row execution, after the lazy compile) as the
+    * reference's 22012, anything else as an internal error.
+    */
+  def of(e: Throwable): String = e match {
+    case qe: graft.sydraql.QueryError => fromQueryError(qe.code)
+    case _ =>
+      val msg = String.valueOf(e.getMessage)
+      if (msg.contains("DIVIDE_BY_ZERO") || msg.contains("division by zero")) DivisionByZero
+      else InternalError
+  }
+
+  /** The message an error reply carries: a QueryError's own message
+    * (without the `[code]` prefix), else the exception's.
+    */
+  def message(e: Throwable): String = e match {
+    case qe: graft.sydraql.QueryError => qe.message
+    case _ => String.valueOf(e.getMessage)
+  }
+
   /** Map engine QueryError codes onto SQLSTATE. */
-  def fromQueryError(code: String): String = code match {
+  private def fromQueryError(code: String): String = code match {
     case graft.sydraql.QueryError.InvalidSyntax => SyntaxError
     case graft.sydraql.QueryError.UnknownFunction => UndefinedFunction
     case graft.sydraql.QueryError.InvalidFunctionArity => InvalidParameterValue

@@ -145,8 +145,10 @@ object SketchCells {
     "sum" -> Served(Seq("sum_v"), _("sum_v")),
     "min" -> Served(Seq("min_v"), _("min_v")),
     "max" -> Served(Seq("max_v"), _("max_v")),
-    "count()" -> Served(Seq("n_rows"), _("n_rows")),
-    "count(value)" -> Served(Seq("n_vals"), _("n_vals")),
+    // a merged count over no cells (a window holding no cell day) is the
+    // raw route's 0, not the sum's NULL
+    "count()" -> Served(Seq("n_rows"), m => coalesce(m("n_rows"), lit(0L))),
+    "count(value)" -> Served(Seq("n_vals"), m => coalesce(m("n_vals"), lit(0L))),
     "first" -> Served(Seq("fl_first"), _("fl_first").getField("v")),
     "last" -> Served(Seq("fl_last"), _("fl_last").getField("v")),
     "delta" -> Served(Seq("nn_first", "nn_last", "n_vals"),
@@ -367,11 +369,13 @@ object SketchCells {
     }.getOrElse(Nil).sorted
   }
 
+  /** The `day=<d>` partition a data file sits in. */
+  private def dayOf(file: String): Long =
+    new org.apache.hadoop.fs.Path(file).getParent.getName.stripPrefix("day=").toLong
+
   /** Bytes per `day=<d>` partition directory. */
   private def bytesByDay(files: Seq[(String, Long)]): Map[Long, Long] =
-    files.groupMapReduce { case (p, _) =>
-      new org.apache.hadoop.fs.Path(p).getParent.getName.stripPrefix("day=").toLong
-    }(_._2)(_ + _)
+    files.groupMapReduce { case (p, _) => dayOf(p) }(_._2)(_ + _)
 
   /** Partitions the served merge needs for `bytes` of cell files: Spark's
     * split-size rule (`FilePartition.maxSplitBytes` over
@@ -395,15 +399,24 @@ object SketchCells {
     * rebuild that adds or drops NDV keys is seen at the next read, in
     * this JVM and in others.
     *
+    * Only the memoized `day=` directories inside [lo, hi) are read (with
+    * `basePath`, so `day` stays a partition column), the way
+    * [[SeriesStore.scanRange]] reads hours: a read of the table root lists
+    * every day, and above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32 paths)
+    * it runs that listing as a Spark job on every served query. A window
+    * holding no cell day reads an empty frame of the memoized schema.
+    *
     * The memo holds the StructType, not a DataFrame (a schema does not
     * depend on the session), plus the table's data files and their bytes
-    * at load. A read that lists other files — a rewrite that bypassed the
-    * writer hook — infers again instead of trusting the memo: a schema
-    * naming a column the files lack would read it as NULL, and the
-    * engine's served-partials check, which reads these columns, would
-    * serve NULLs.
+    * at load. A read that lists other files for the days it read (or
+    * cannot read a memoized day) — a rewrite that bypassed the writer
+    * hook — reads the whole table again and infers instead of trusting the
+    * memo: a schema naming a column the files lack would read it as NULL,
+    * and the engine's served-partials check, which reads these columns,
+    * would serve NULLs.
     *
-    * The frame itself is not memoized, so each read lists the table's day
+    * The frame itself is not memoized, so each read lists the window's day
     * partitions again (a fresh file index). Measured without an
     * end-to-end gain: a variant that memoized the frame per session,
     * guarded by a driver-side Hadoop listing of the table's files, cut
@@ -411,18 +424,25 @@ object SketchCells {
     * dashboard pairs on 4 cores, but the cells-only shapes' median wall
     * times were slower in one pair, faster in one and mixed in the third.
     */
-  private[graft] def readTable(spark: SparkSession, dir: String, table: String): Table = {
+  private[graft] def readTable(spark: SparkSession, dir: String, table: String,
+      lo: Long = Long.MinValue, hi: Long = Long.MaxValue): Table = {
     val path = s"$dir/$table"
     val (files, schema, dayBytes) = MetaCache.cached(dir, s"schema:$table") {
       val df = spark.read.parquet(path)
       val files = dataFiles(df)
       (files, df.schema, bytesByDay(files))
     }
-    val df = spark.read.schema(schema).parquet(path)
-    if (dataFiles(df) == files) Table(df, dayBytes)
-    else {
-      val fresh = spark.read.parquet(path)
-      Table(fresh, bytesByDay(dataFiles(fresh)))
+    def inWindow(d: Long): Boolean = d >= lo && d < hi
+    val read = scala.util.Try(dayBytes.keys.filter(inWindow).toSeq.sorted match {
+      case Seq() => spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      case ds => spark.read.schema(schema).option("basePath", path)
+        .parquet(ds.map(d => s"$path/day=$d"): _*)
+    }).toOption
+    read.filter(dataFiles(_) == files.filter { case (f, _) => inWindow(dayOf(f)) }) match {
+      case Some(df) => Table(df, dayBytes)
+      case None =>
+        val fresh = spark.read.parquet(path)
+        Table(fresh, bytesByDay(dataFiles(fresh)))
     }
   }
 }

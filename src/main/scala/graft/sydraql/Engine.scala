@@ -18,6 +18,47 @@ final case class QueryStats(
 
 final case class QueryResult(df: DataFrame, stats: QueryStats)
 
+/** One executed statement's profile, built once after its rows were drawn:
+  * the statement's [[QueryStats]], the rows drawn and the wall time from
+  * the statement's start to its last row, Catalyst's `optimization` and
+  * `planning` phases (`QueryPlanningTracker`) and the executed operators.
+  * The reference builds one stats object per query
+  * (`/root/reference/src/sydra/query/exec.zig:48-58`) and renders it in
+  * the HTTP reply and the pgwire NOTICE block; so do `HttpApi` (`stats`)
+  * and `PgWireServer`.
+  */
+final case class QueryProfile(
+    stats: QueryStats,
+    rows: Long,
+    wallUs: Long,
+    optimizeUs: Long,
+    physicalUs: Long,
+    operators: Seq[QueryProfile.Operator])
+
+object QueryProfile {
+  final case class Operator(name: String, rowsOut: Long, elapsedUs: Long)
+
+  /** The profile of `executed`, the frame whose `rows` were drawn (the
+    * result's frame, or one derived from it such as a row cap). It reads
+    * the executed plan's tracker and metrics and runs no Spark action.
+    * Both reads are best-effort: the rows are already answered, so a plan
+    * that cannot report them profiles as zero phases and no operators.
+    */
+  def of(res: QueryResult, executed: DataFrame, rows: Long, wallUs: Long): QueryProfile = {
+    val (optimizeUs, physicalUs) = scala.util.Try {
+      val phases = executed.queryExecution.tracker.phases
+      def us(k: String): Long =
+        phases.get(k).map(p => (p.endTimeMs - p.startTimeMs) * 1000).getOrElse(0L)
+      (us("optimization"), us("planning"))
+    }.getOrElse((0L, 0L))
+    val operators = scala.util.Try(
+      org.apache.spark.sql.graftshim.GraftShim.operatorStatsTimed(executed)
+        .map { case (name, rowsOut, elapsedUs) => Operator(name, rowsOut, elapsedUs) }
+    ).getOrElse(Nil)
+    QueryProfile(res.stats, rows, wallUs, optimizeUs, physicalUs, operators)
+  }
+}
+
 /** sydraQL execution pipeline: parse → validate → compile → DataFrame
   * (`exec.execute`, `/root/reference/src/sydra/query/exec.zig:14-61`; the
   * plan/optimize/physical stages dissolve into Catalyst).
@@ -416,9 +457,11 @@ object Engine {
     // any tag grouping OR tag-equality filter reads the tag tier
     // (per-(series, day, value) digests); otherwise the td table (which
     // also carries theta cells). The equality filter applies on the
-    // tier's tagval key — day-pruned KB cells of ONE tag value.
+    // tier's tagval key — day-pruned KB cells of ONE tag value. Only the
+    // window's day directories are read; the day filter below still
+    // prunes them in the scan's PartitionFilters.
     val table = SketchCells.readTable(spark, dir,
-      tierTagKey.fold("td")(k => s"tdtag/$k"))
+      tierTagKey.fold("td")(k => s"tdtag/$k"), dLo, dHi)
     val base = tagEq.foldLeft(
       selFiltered(table.df).filter(col("day") >= dLo && col("day") < dHi)) {
       case (df, (_, v)) => df.filter(col("tagval") === v)
@@ -563,13 +606,31 @@ object Engine {
     // each was paying its own marker freshness read — at dashboard QPS
     // against an object store that is the overhead the memo removes
     graft.storage.MetaCache.scoped {
-      executeOnStoreImpl(store, sydraql, options)
+      onStore(store, sydraql, options, runWrites = true).get
     }
 
-  private def executeOnStoreImpl(
+  /** The row schema [[executeOnStore]] answers `sydraql` with, from the
+    * same route resolution: a SELECT or EXPLAIN compiles on the served or
+    * pruned raw route it would execute on (lazily: the frame runs no job).
+    * INSERT and DELETE answer no rows; they are neither compiled nor run
+    * (None).
+    */
+  def describeOnStore(
       store: graft.storage.SeriesStore,
       sydraql: String,
-      options: CompileOptions): QueryResult = {
+      options: CompileOptions = CompileOptions()): Option[org.apache.spark.sql.types.StructType] =
+    graft.storage.MetaCache.scoped {
+      onStore(store, sydraql, options, runWrites = false).map(_.df.schema)
+    }
+
+  /** Parse, validate and route a statement; None only for an INSERT or
+    * DELETE when `runWrites` is off.
+    */
+  private def onStore(
+      store: graft.storage.SeriesStore,
+      sydraql: String,
+      options: CompileOptions,
+      runWrites: Boolean): Option[QueryResult] = {
     import graft.storage.Maintenance
     import org.apache.spark.sql.functions._
     val spark = store.spark
@@ -596,7 +657,7 @@ object Engine {
           case Ast.Explain(s: Ast.Select) => Some(s)
           case _ => None
         }
-        sel.flatMap(sketchServed(store, _)) match {
+        Some(sel.flatMap(sketchServed(store, _)) match {
           case Some((df, route)) if ast.isInstanceOf[Ast.Select] =>
             QueryResult(df, statsOf(route))
           case Some((df, route)) => // EXPLAIN of a served query shows the SERVED plan
@@ -613,7 +674,8 @@ object Engine {
                 store.scanPruned(scanProbe(s.from, s.where)).df
                   .select("series", "series_id", "tags", "time", "value")),
               ast, options, (t1 - t0) / 1000, (t2 - t1) / 1000)
-        }
+        })
+      case _ if !runWrites => None
       case Ast.Insert(series, cols, rows) =>
         val compiler = new Compiler(spark, store.source(), options)
         val colNames = if (cols.isEmpty) Seq("time", "value") else cols.map(_.toLowerCase)
@@ -636,7 +698,7 @@ object Engine {
         val st = statsOf("insert") // plan built; the append is execution
         store.append(pts)
         import spark.implicits._
-        QueryResult(Seq(rows.length.toLong).toDF("inserted"), st)
+        Some(QueryResult(Seq(rows.length.toLong).toDF("inserted"), st))
       case Ast.Delete(sel, where) =>
         val compiler = new Compiler(spark, store.source(), options)
         val selPred = sel match {
@@ -653,7 +715,7 @@ object Engine {
         val st = statsOf("delete") // predicate compiled; the rewrite is execution
         val report = Maintenance.deleteRows(store, pred, scanProbe(Some(sel), where))
         import spark.implicits._
-        QueryResult(Seq(report.deletedRows).toDF("deleted"), st)
+        Some(QueryResult(Seq(report.deletedRows).toDF("deleted"), st))
     }
   }
 }

@@ -24,9 +24,10 @@ object GraftShim {
     * the executed nodes. Elapsed sums the node's executed timing metrics
     * — Spark records "timing" metrics in milliseconds and "nsTiming" in
     * nanoseconds — giving the closest Spark analog of the reference's
-    * `elapsed_us`. Nodes with no timing metrics report 0.
+    * `elapsed_us`. Nodes with no timing metrics report 0. Read by
+    * `graft.sydraql.QueryProfile`, the one per-query stats object.
     */
-  def operatorStatsTimed(df: org.apache.spark.sql.classic.DataFrame): Seq[(String, Long, Long)] = {
+  def operatorStatsTimed(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long)] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     def unwrap(p: SparkPlan): SparkPlan = p match {
@@ -38,7 +39,7 @@ object GraftShim {
       val u = unwrap(p)
       u +: u.children.flatMap(walk)
     }
-    walk(df.queryExecution.executedPlan).map { p =>
+    walk(df.asInstanceOf[org.apache.spark.sql.classic.DataFrame].queryExecution.executedPlan).map { p =>
       val elapsedUs = p.metrics.values.map { m =>
         m.metricType match {
           case "timing" if m.value > 0 => m.value * 1000L

@@ -202,6 +202,57 @@ class ApiSpec extends AnyFunSuite {
       assert(raw.body().contains("\"route\":\"raw\""), raw.body().take(600))
     } finally api.stop()
   }
+  test("stats carries every key the benchmark reads, on the served, raw, insert and delete routes") {
+    import graft.storage.SketchCells
+    import org.apache.spark.sql.functions.map
+    import spark.implicits._
+    val store = new SeriesStore(spark, Files.createTempDirectory("graft-api-contract").toString)
+    store.append((0 until 8).map(i => ("cpu", i.toLong * 21600L, i.toDouble))
+      .toDF("series", "time", "value")
+      .withColumn("tags", map().cast("map<string,string>"))
+      .select("series", "tags", "time", "value"))
+    SketchCells.build(store, SketchCells.dirFor(store))
+    val api = new HttpApi(store, token = Some("t0"))
+    val port = api.start()
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // sydrabench reads a missing numeric key as 0, so a dropped key would
+    // silently zero a per-layer metric
+    val keys = Seq("parse_us", "validate_us", "compile_us", "optimize_us", "physical_us",
+      "pipeline_us", "rows_emitted", "trace_id", "route", "operators")
+    try {
+      Seq("served:cells:td" -> "select avg(value) as a from cpu where time >= 0 and time < 172800",
+        "raw" -> "select time, value from cpu where time >= 0 and time < 100000 order by time",
+        "insert" -> "insert into cpu (time, value) values (100, 1.5)",
+        "delete" -> "delete from cpu where time >= 100 and time < 101").foreach { case (route, ql) =>
+        val r = post(port, "/api/v1/sydraql", mapper.writeValueAsString(java.util.Map.of("query", ql)))
+        assert(r.statusCode() === 200, s"$route: ${r.body().take(300)}")
+        val stats = mapper.readTree(r.body()).get("stats")
+        keys.foreach(k => assert(stats.has(k), s"$route reply lacks stats.$k: $stats"))
+        assert(stats.get("route").asText === route, stats.toString)
+        val ops = stats.get("operators")
+        assert(ops.isArray && ops.size > 0, s"$route: $stats")
+        ops.forEach(o => assert(o.has("name") && o.has("rows_out"), s"$route operator $o"))
+      }
+    } finally api.stop()
+  }
+
+  test("a division by zero at row execution answers sqlstate 22012 over HTTP, as over pgwire") {
+    import spark.implicits._
+    val store = new SeriesStore(spark, Files.createTempDirectory("graft-api-div0").toString)
+    store.append(Seq(("m", 10L, 1.5), ("m", 20L, 2.0)).toDF("series", "time", "value")
+      .withColumn("tags", org.apache.spark.sql.functions.map().cast("map<string,string>"))
+      .select("series", "tags", "time", "value"))
+    val api = new HttpApi(store, token = Some("t0"))
+    val port = api.start()
+    try {
+      val r = post(port, "/api/v1/sydraql",
+        """{"query":"select value / 0 from m where time >= 0 and time < 100"}""")
+      // not a query error: the statement compiles and fails at execution
+      assert(r.statusCode() === 500, r.body())
+      assert(r.body().contains("\"sqlstate\":\"22012\""), r.body())
+    } finally api.stop()
+  }
+
   test("range reads: pruned through the skip manifest, equal to the raw source filter; non-numeric bounds are a 400") {
     import graft.storage.{ScanProbe, SkipIndex}
     import org.apache.spark.sql.functions.{col, map, lit}

@@ -42,8 +42,8 @@ class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // --------------------------------------------------------- client helpers
 
-  private final class Client {
-    val sock = new Socket("127.0.0.1", port)
+  private final class Client(serverPort: Int = port) {
+    val sock = new Socket("127.0.0.1", serverPort)
     sock.setSoTimeout(60000)
     // as drivers do (libpq, pgjdbc): NODELAY, and each message leaves in
     // one write at its flush
@@ -380,6 +380,52 @@ class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(msgs.exists(_._1 == 'T'), s"expected RowDescription, got ${msgs.map(_._1)}")
     assert(!msgs.exists(_._1 == 'n'))
     c.close()
+  }
+
+  test("Describe compiles on the route Execute runs: no job for a windowed SELECT, the served schema, no INSERT") {
+    import graft.storage.SketchCells
+    import graft.sydraql.{CompileOptions, Engine}
+    import org.apache.spark.sql.functions.map
+    val session = spark
+    import session.implicits._
+    val store = new SeriesStore(spark, Files.createTempDirectory("graft-pgwire-describe").toString)
+    val d = 86400L
+    // one point at noon on each of 40 days: 40 hour directories, above
+    // Spark's 32-path parallel-listing threshold, and no skip manifest
+    store.append((0 until 40).map(i => ("m", i * d + d / 2, i.toDouble))
+      .toDF("series", "time", "value")
+      .withColumn("tags", map().cast("map<string,string>"))
+      .select("series", "tags", "time", "value"))
+    SketchCells.build(store, SketchCells.dirFor(store))
+    val srv = new PgWireServer(store)
+    val c = new Client(srv.start())
+    def describe(name: String, sql: String) = {
+      c.sendParse(name, sql); c.sendDescribe('S', name); c.sendSync()
+      c.readUntilReady()
+    }
+    try {
+      c.handshake("user" -> "sydra")
+      val (w, jobs) = TestSpark.jobsDuring(
+        describe("w", s"SELECT time, value FROM m WHERE time >= ${3 * d} and time < ${4 * d}"))
+      assert(w.exists(_._1 == 'T'), w.map(_._1).toString)
+      assert(jobs.isEmpty, s"Describe ran ${jobs.size} jobs: ${jobs.mkString(" | ")}")
+      // a served cells shape: Describe's RowDescription is the one the
+      // simple protocol sends for the same statement
+      val served = s"SELECT avg(value) as a, count() as n FROM m WHERE time >= 0 and time < ${10 * d}"
+      assert(Engine.executeOnStore(store,
+        s"select avg(value) as a,count() as n from m where time >= 0 and time < ${10 * d}",
+        CompileOptions()).stats.route === "served:cells:td")
+      val described = describe("s", served).find(_._1 == 'T').map(_._2.toSeq)
+      c.sendQuery(served)
+      val simple = c.readUntilReady()
+      assert(simple.count(_._1 == 'D') === 1)
+      assert(described.isDefined && described === simple.find(_._1 == 'T').map(_._2.toSeq))
+      // INSERT: NoData, and nothing is written
+      val ins = describe("i", "INSERT INTO described(time, value) VALUES (42, 9.5)")
+      assert(ins.exists(_._1 == 'n') && !ins.exists(_._1 == 'T'), ins.map(_._1).toString)
+      c.sendQuery("SELECT time, value FROM described WHERE time >= 0 and time < 100")
+      assert(c.readUntilReady().count(_._1 == 'D') === 0)
+    } finally { c.close(); srv.stop() }
   }
 
   test("extended protocol: Execute on a completed portal does not re-run the statement") {

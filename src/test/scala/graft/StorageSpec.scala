@@ -1659,4 +1659,36 @@ class StorageSpec extends AnyFunSuite {
     check("served:cells:td")
     assert(Engine.executeOnStore(store, ql, opts).df.head().getDouble(0) === 4.0)
   }
+
+  test("a served window of a 40-day cell table reads only its days: one job, no listing job") {
+    import graft.storage.SketchCells
+    import spark.implicits._
+    val store = new SeriesStore(spark, tmp())
+    val d = 86400L
+    // one point at noon on each of 40 days: 40 hour and 40 cell-day
+    // directories, above Spark's 32-path parallel-listing threshold
+    store.append((0 until 40).map(i => ("m", i * d + d / 2, i.toDouble))
+      .toDF("series", "time", "value")
+      .withColumn("tags", map().cast("map<string,string>"))
+      .select("series", "tags", "time", "value"))
+    SketchCells.build(store, SketchCells.dirFor(store))
+    val opts = CompileOptions(now = 0L)
+    def ql(lo: Long, hi: Long) =
+      s"select avg(value) as a, count() as n from m where time >= ${lo * d} and time < ${hi * d}"
+    def served(lo: Long, hi: Long) = {
+      val res = Engine.executeOnStore(store, ql(lo, hi), opts)
+      assert(res.stats.route === "served:cells:td", ql(lo, hi))
+      res.df.collect().toSeq
+    }
+    def raw(lo: Long, hi: Long) = Engine.sql(spark, store.source(), ql(lo, hi), opts).collect().toSeq
+    served(0, 40) // warm-up: the per-generation memo lists the table once
+    // a 32-day window: 32 day directories, read serially on the driver
+    val (got, jobs) = TestSpark.jobsDuring(served(3, 35))
+    assert(jobs.size === 1, jobs.mkString(" | "))
+    assert(got === raw(3, 35))
+    assert(served(0, 40) === raw(0, 40))
+    // a window past the last cell day reads an empty frame of the memo's schema
+    assert(served(50, 60) === raw(50, 60))
+    assert(served(50, 60).head.getLong(1) === 0L)
+  }
 }
