@@ -135,81 +135,39 @@ object IvfIndex {
     * normal same-codebook contract the duplicates are bit-identical
     * anyway, so serving results cannot change (StorageSpec pins this).
     *
-    * All filesystem traffic goes through the Hadoop [[FileSystem]] API
-    * resolved from the index path's own scheme, so the same code runs on
-    * file://, hdfs:// and s3a:// deployments. Scratch space lives in
-    * underscore-prefixed dirs under the index root (`_compact_tmp`,
-    * `_compact_old`) which Spark's file listing ignores — a concurrent
-    * reader never sees a half-written cell as a partition. Swap order is
-    * crash-safe: nothing is deleted until the replacement is live
-    * (write tmp → rename live aside → rename tmp in → delete old), every
-    * rename's return value is checked, and a compact() that died mid-swap
-    * is repaired on the next call (restore-from-`_compact_old` pass).
-    *
-    * The crash-safety and invisible-to-concurrent-readers guarantees hold
-    * only where directory rename is ATOMIC — file:// and hdfs://. On
-    * object stores (s3a://) rename is a non-atomic copy+delete: a reader
-    * can observe a missing or partially-copied cell mid-swap, and the
-    * recovery invariant (rename is all-or-nothing) does not hold. The
-    * code still RUNS there, but s3a deployments should either quiesce
-    * readers around compaction or layer a commit-marker protocol on top
-    * (write the new cell under a versioned name, flip a manifest, never
-    * rename in place — the S3A committers' own design).
+    * Filesystem traffic goes through the Hadoop FileSystem API resolved
+    * from the index path's own scheme, so the same code runs on file://,
+    * hdfs:// and s3a:// deployments. Every multi-file cell is written to
+    * the scratch dir first, then all are swapped in through
+    * [[graft.storage.Maintenance.swapIn]] (the swap protocol, its crash
+    * recovery and its atomicity scope are in `Maintenance`'s doc; a
+    * compact() that died mid-swap is repaired on the next call).
     * Cache invalidation is scoped to this index via `refreshByPath`, not
     * the session-global `clearCache`. Returns the number of cell dirs
     * rewritten.
     */
   def compact(spark: SparkSession, path: String): Int = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import org.apache.hadoop.fs.{Path => HPath}
+    graft.storage.Maintenance.recoverSwaps(spark, path)
     val root = new HPath(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    def renameOrThrow(src: HPath, dst: HPath): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"compact: rename $src -> $dst failed")
-    val tmpRoot = new HPath(root, "_compact_tmp")
-    val oldRoot = new HPath(root, "_compact_old")
-    // Recovery: a crash between "live renamed aside" and "tmp renamed in"
-    // leaves the cell's data parked in _compact_old — restore it before
-    // doing anything else. A leftover whose live dir exists is a
-    // completed swap whose delete didn't run; drop it.
-    if (fs.exists(oldRoot)) {
-      fs.listStatus(oldRoot).foreach { s =>
-        val live = new HPath(root, s.getPath.getName)
-        if (!fs.exists(live)) renameOrThrow(s.getPath, live)
-        else fs.delete(s.getPath, true)
-      }
-      fs.delete(oldRoot, true)
-    }
-    if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true) // stale partial writes
-    val cellDirs = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-    var rewritten = 0
-    cellDirs.foreach { s =>
-      val dir = s.getPath
-      val dataFiles = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
-      if (dataFiles.length > 1) {
-        val df = spark.read.parquet(dir.toString)
+    val cells = fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket=") &&
+        fs.listStatus(s.getPath).count(_.getPath.getName.endsWith(".parquet")) > 1)
+      .map(_.getPath.getName)
+    graft.storage.Maintenance.swapIn(spark, path, cells) { scratch =>
+      cells.foreach { cell =>
+        val df = spark.read.parquet(s"$path/$cell")
         val others = df.columns.filter(_ != "vec_id").map(col)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("vec_id")).orderBy(others: _*)
-        val tmp = new HPath(tmpRoot, dir.getName)
-        // the write action fully materializes the compacted cell in tmp
-        // BEFORE the live dir is touched — no cache needed for safety
         df.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val old = new HPath(oldRoot, dir.getName)
-        fs.mkdirs(oldRoot)
-        renameOrThrow(dir, old)
-        renameOrThrow(tmp, dir)
-        fs.delete(old, true)
-        rewritten += 1
+          .coalesce(1).write.mode("overwrite").parquet(s"$scratch/$cell")
       }
     }
-    fs.delete(tmpRoot, true)
-    fs.delete(oldRoot, true)
-    if (rewritten > 0) spark.catalog.refreshByPath(path)
-    rewritten
+    if (cells.nonEmpty) spark.catalog.refreshByPath(path)
+    cells.length
   }
 
   /** Full FAISS-style IVFPQ at rest: cells partition the parquet AND rows
@@ -250,11 +208,10 @@ object IvfIndex {
     * (`_books` present ⇒ PQ codes; `residual` says which PQ flavor —
     * indistinguishable from bytes alone).
     *
-    * The rewrite lands in a sibling scratch dir and swaps in whole
-    * (park live aside → rename new in → delete old), with the same
-    * died-mid-swap recovery pass as [[compact]] and the same atomicity
-    * scope: crash-safe and reader-invisible on file:///hdfs:// (atomic
-    * directory rename); on object stores quiesce readers around it.
+    * The rewrite is one [[graft.storage.Maintenance.swapIn]] of the
+    * whole index dir, with the index's parent as the swap root (scratch
+    * and parked copies sit in the parent's `_repack_*` dirs; the swap
+    * protocol and its atomicity scope are in `Maintenance`'s doc).
     * Unlike compact's per-cell swap this one is whole-index — the cell
     * COUNT and every assignment can change, so there is no meaningful
     * per-cell increment.
@@ -269,30 +226,18 @@ object IvfIndex {
     import org.apache.hadoop.fs.{Path => HPath}
     val spark = corpus.sparkSession
     val root = new HPath(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    def renameOrThrow(src: HPath, dst: HPath): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"rebalance: rename $src -> $dst failed")
-    val parent = root.getParent
-    val tmp = new HPath(parent, root.getName + "_rebalance_tmp")
-    val old = new HPath(parent, root.getName + "_rebalance_old")
-    // Recovery: a crash between "live parked aside" and "tmp renamed in"
-    // leaves no live dir — restore the parked index. A leftover old WITH
-    // a live dir is a completed swap whose delete didn't run; drop it.
-    if (fs.exists(old)) {
-      if (!fs.exists(root)) renameOrThrow(old, root)
-      else fs.delete(old, true)
-    }
-    fs.delete(tmp, true) // stale partial rewrite
-    val cs =
-      if (fs.exists(new HPath(root, "_books")))
-        buildPq(corpus, tmp.toString, nCells, iters,
+    val parent = root.getParent.toString
+    graft.storage.Maintenance.recoverSwaps(spark, parent) // a parked index must be read
+    val isPq = root.getFileSystem(spark.sessionState.newHadoopConf())
+      .exists(new HPath(root, "_books"))
+    val cs = graft.storage.Maintenance.swapIn(spark, parent, Seq(root.getName)) { scratch =>
+      val next = s"$scratch/${root.getName}"
+      if (isPq)
+        buildPq(corpus, next, nCells, iters,
           books = Some(loadBooks(spark, path)), residual = residual,
           filesPerCell = filesPerCell)._1
-      else build(corpus, tmp.toString, nCells, iters, filesPerCell)
-    renameOrThrow(root, old)
-    renameOrThrow(tmp, root)
-    fs.delete(old, true)
+      else build(corpus, next, nCells, iters, filesPerCell)
+    }
     spark.catalog.refreshByPath(path)
     cs
   }

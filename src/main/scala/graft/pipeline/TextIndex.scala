@@ -80,12 +80,11 @@ object TextIndex {
     *  3. partition-pruned read of ONLY those buckets; per-term df is
     *     extended (old df + batch df — a term's postings live entirely
     *     in its hash bucket, so every affected row is in the read set);
-    *  4. ONE partitioned write lands every touched bucket in the
-    *     `_repack_tmp` scratch root (invisible to partition discovery),
-    *     then each bucket swaps in via pure filesystem renames through
-    *     `_repack_old` — the [[graft.storage.Maintenance.recoverSwaps]]
-    *     crash protocol, with no Spark job per bucket (a concurrent
-    *     probe never sees a half-written bucket); `meta` swaps LAST:
+    *  4. ONE partitioned write lands every touched bucket in the scratch
+    *     dir, then the buckets swap in through
+    *     [[graft.storage.Maintenance.swapIn]] (the swap protocol in
+    *     `Maintenance`'s doc — a concurrent probe never sees a
+    *     half-written bucket); `meta` swaps LAST:
     *     n_docs += |batch|, avgdl extended from the exact `sum_dl` —
     *     bit-equal to a full rebuild (StorageSpec).
     *
@@ -133,29 +132,12 @@ object TextIndex {
         .withColumn("bucket", pmod(TextAnalysis.hash31(col("term")), lit(nBuckets)))
         .select(col("term"), col("doc_id"), col("tf"), col("df"), col("dl"), col("bucket"))
       // ONE partitioned write of every touched bucket into the scratch
-      // root (invisible to Spark's listing), then per-bucket swaps are
-      // pure filesystem renames — the same crash protocol recoverSwaps
-      // repairs, without a Spark job per bucket (a small batch can touch
-      // hundreds of buckets; per-bucket jobs made append SLOWER than a
-      // rebuild at smoke scale)
-      val hp = (s: String) => new org.apache.hadoop.fs.Path(s)
-      val fs2 = hp(postingsRoot).getFileSystem(spark.sessionState.newHadoopConf())
-      val tmpAll = s"$postingsRoot/_repack_tmp/all"
-      merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmpAll)
-      fs2.mkdirs(hp(s"$postingsRoot/_repack_old"))
-      touched.foreach { b =>
-        val name = s"bucket=$b"
-        val live = hp(s"$postingsRoot/$name")
-        val oldP = hp(s"$postingsRoot/_repack_old/$name")
-        val tmpP = hp(s"$tmpAll/$name")
-        if (fs2.exists(oldP)) fs2.delete(oldP, true)
-        if (fs2.exists(live) && !fs2.rename(live, oldP))
-          throw new java.io.IOException(s"append: park $live failed")
-        if (!fs2.rename(tmpP, live))
-          throw new java.io.IOException(s"append: swap-in $name failed")
-        fs2.delete(oldP, true)
+      // dir, then one swap of the touched buckets — no Spark job per
+      // bucket (a small batch can touch hundreds of buckets; per-bucket
+      // jobs made append SLOWER than a rebuild at smoke scale)
+      graft.storage.Maintenance.swapIn(spark, postingsRoot, touched.map(b => s"bucket=$b")) { scratch =>
+        merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(scratch)
       }
-      fs2.delete(hp(s"$postingsRoot/_repack_tmp"), true)
       val newMeta = meta0
         .crossJoin(broadcast(batch.agg(count(lit(1)).as("n_b"))
           .crossJoin(bwl.agg(sum(col("dl")).as("s_b")))))
@@ -163,12 +145,10 @@ object TextIndex {
           (col("sum_dl") + col("s_b")).as("sum_dl"), col("n_buckets"))
         .withColumn("avgdl",
           floor(col("sum_dl") / col("n_docs") * 1e6 + 0.5) / 1e6)
-        .cache()
-      newMeta.count()
-      graft.storage.Maintenance.swapRewrite(spark, path, "meta") { tmp =>
-        newMeta.write.mode(SaveMode.Overwrite).parquet(tmp)
+      // the scratch write reads the live meta to completion before the swap
+      graft.storage.Maintenance.swapIn(spark, path, Seq("meta")) { scratch =>
+        newMeta.write.mode(SaveMode.Overwrite).parquet(s"$scratch/meta")
       }
-      newMeta.unpersist()
       bdf.unpersist()
       touched
     } finally { bwl.unpersist(); btf.unpersist(); () }

@@ -14,20 +14,32 @@ import org.apache.hadoop.fs.{FileSystem, FileUtil, Path => HPath}
   *    (`storage/retention.zig:4-20`) — a metadata-only partition delete.
   *
   * All filesystem traffic goes through the Hadoop [[FileSystem]] API
-  * resolved from each path's own scheme (the r7 `IvfIndex.compact` port,
-  * extended to the whole maintenance surface in r10), so the same code
-  * runs on file://, hdfs:// and s3a:// stores. Per-partition rewrites use
-  * a crash-safe swap through underscore-prefixed scratch dirs that
-  * Spark's file listing ignores — a concurrent reader never sees a
-  * half-written partition, and a malformed `hour_bucket=N.new` dir can no
-  * longer break typed partition discovery for the whole store (the old
-  * in-tree `.new` pattern). Swap order mirrors `IvfIndex.compact`:
-  * write tmp → rename live aside → rename tmp in → delete old; every
-  * rename result is checked and a crash mid-swap is repaired by
-  * [[recoverSwaps]] on the next maintenance call. As with the index,
-  * rename atomicity (and therefore the crash-safety guarantee) holds on
-  * file:// and hdfs://; s3a:// deployments should quiesce readers around
-  * maintenance or layer a commit-marker protocol on top.
+  * resolved from each path's own scheme, so the same code runs on
+  * file://, hdfs:// and s3a:// stores.
+  *
+  * The swap protocol. Every in-place rewrite in the project — the
+  * segment rewrites here, the skip manifest ([[SkipIndex.refresh]]), the
+  * text index's buckets and meta (`TextIndex.append`) and the IVF
+  * index's cells and whole-index rebalance (`IvfIndex.compact`,
+  * `IvfIndex.rebalance`) — replaces child dirs of one root through
+  * [[swapIn]], and [[recoverSwaps]] is its only recovery:
+  *  1. the replacements are written under `root/_repack_tmp`; Spark's file
+  *     listing ignores underscore-prefixed dirs, so a concurrent reader
+  *     never sees a half-written child, and the write completes before
+  *     any live dir is touched;
+  *  2. per child: the live dir is parked in `root/_repack_old`, the
+  *     replacement renamed in, the parked copy deleted; a child the write
+  *     left no replacement for is deleted by its park;
+  *  3. a crash is repaired by [[recoverSwaps]], which every rewrite entry
+  *     runs first: a parked child whose live dir is missing died between
+  *     the two renames and is restored; one whose live dir exists is a
+  *     completed swap and is dropped; the scratch root is discarded.
+  * Each child's swap is atomic; a multi-child swap that crashes leaves a
+  * prefix of children replaced. Rename atomicity (and therefore the
+  * crash-safety guarantee) holds on file:// and hdfs://; s3a://
+  * deployments should quiesce readers around maintenance or layer a
+  * commit-marker protocol on top (write under a versioned name, flip a
+  * manifest — the S3A committers' own design).
   */
 object Maintenance {
 
@@ -40,47 +52,49 @@ object Maintenance {
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"maintenance: rename $src -> $dst failed")
 
-  /** Repair partitions parked by a crashed [[swapRewrite]]: a leftover in
-    * `_repack_old` whose live dir is missing is a swap that died between
-    * the two renames — restore it; one whose live dir exists is a
-    * completed swap whose delete didn't run — drop it. Called by every
-    * per-partition maintenance entry before it does anything else.
+  /** Repair what a crashed [[swapIn]] under `root` left (the protocol in
+    * this object's doc): restore each parked child whose live dir is
+    * missing, drop the others, discard the scratch root.
     */
-  def recoverSwaps(spark: SparkSession, segRoot: String): Unit = {
-    val (fs, root) = fsFor(spark, segRoot)
-    val oldRoot = new HPath(root, "_repack_old")
-    if (fs.exists(oldRoot)) {
-      fs.listStatus(oldRoot).foreach { s =>
-        val live = new HPath(root, s.getPath.getName)
+  def recoverSwaps(spark: SparkSession, root: String): Unit = {
+    val (fs, r) = fsFor(spark, root)
+    val parked = new HPath(r, "_repack_old")
+    if (fs.exists(parked)) {
+      fs.listStatus(parked).foreach { s =>
+        val live = new HPath(r, s.getPath.getName)
         if (!fs.exists(live)) renameOrThrow(fs, s.getPath, live)
         else fs.delete(s.getPath, true)
       }
-      fs.delete(oldRoot, true)
+      fs.delete(parked, true)
     }
-    val tmpRoot = new HPath(root, "_repack_tmp")
-    if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true) // stale partial writes
+    fs.delete(new HPath(r, "_repack_tmp"), true) // stale partial writes
     ()
   }
 
-  /** Crash-safe replacement of one child dir of `segRoot`: `writeTo` is
-    * given a scratch path under `_repack_tmp` (invisible to Spark's
-    * listing), then the live dir is swapped out through `_repack_old`.
-    * Nothing is deleted until the replacement is live.
+  /** Replace the child dirs `names` of `root` (the protocol in this
+    * object's doc): `write` is given the scratch dir and puts each
+    * replacement at `<scratch>/<name>`; a name it writes nothing for is
+    * deleted. Returns what `write` returns.
     */
-  private[graft] def swapRewrite(spark: SparkSession, segRoot: String, name: String)
-      (writeTo: String => Unit): Unit = {
-    val (fs, root) = fsFor(spark, segRoot)
-    val tmp = new HPath(root, s"_repack_tmp/$name")
-    val old = new HPath(root, s"_repack_old/$name")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    writeTo(tmp.toString)
-    fs.mkdirs(old.getParent)
-    if (fs.exists(old)) fs.delete(old, true)
-    val live = new HPath(root, name)
-    renameOrThrow(fs, live, old)
-    renameOrThrow(fs, tmp, live)
-    fs.delete(old, true)
-    ()
+  private[graft] def swapIn[T](spark: SparkSession, root: String, names: Seq[String])
+      (write: String => T): T = {
+    recoverSwaps(spark, root)
+    val (fs, r) = fsFor(spark, root)
+    val scratch = new HPath(r, "_repack_tmp")
+    val parked = new HPath(r, "_repack_old")
+    val out = write(scratch.toString)
+    fs.mkdirs(parked)
+    names.foreach { name =>
+      val live = new HPath(r, name)
+      val old = new HPath(parked, name)
+      if (fs.exists(live)) renameOrThrow(fs, live, old)
+      val fresh = new HPath(scratch, name)
+      if (fs.exists(fresh)) renameOrThrow(fs, fresh, live)
+      fs.delete(old, true)
+    }
+    fs.delete(scratch, true)
+    fs.delete(parked, true)
+    out
   }
 
   /** Continuous aggregate maintenance (the TimescaleDB continuous-
@@ -140,8 +154,7 @@ object Maintenance {
       case (h, s) if !prev.get(h).contains(s) => h
     }.toSeq.sorted
     if (changed.nonEmpty) {
-      val roll = store.scan()
-        .filter(col("hour_bucket").isInCollection(changed))
+      val roll = store.scanHours(changed)
         .groupBy(col("series_id"), col("series"), col("hour_bucket"),
           (col("time") - pmod(col("time"), lit(step))).as("bucket"))
         .agg(sum(col("value")).as("sum_v"), count(col("value")).as("n"),
@@ -180,65 +193,50 @@ object Maintenance {
       .drop("__rn")
   }
 
-  /** Rewrite the whole segment table deduped (small stores / tests). At
-    * scale, compact per-partition: read one hour_bucket dir, dedup, write
-    * back — embarrassingly parallel across partitions.
+  /** Refuse an in-place segment rewrite of a bucketed store: the rewrites
+    * write plain parquet files, which a bucketed table's reads cannot
+    * open — every later scan would fail.
     */
-  def compact(store: SeriesStore): Unit = {
-    val spark = store.spark
-    val deduped = dedupLastWins(store.scan()).cache()
-    deduped.count() // materialize before overwrite
-    deduped
-      .repartition(col("hour_bucket"))
-      .sortWithinPartitions(col("series_id"), col("time"))
-      .write.mode(SaveMode.Overwrite).partitionBy("hour_bucket")
-      .parquet(s"${store.root}/segments.compact")
-    // atomic swap (manifest-entry swap in the reference, compact.zig:52-78)
-    val (fs, rootDir) = fsFor(spark, store.root)
-    val live = new HPath(rootDir, "segments")
-    val next = new HPath(rootDir, "segments.compact")
-    val bak = new HPath(rootDir, "segments.old")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(live)) renameOrThrow(fs, live, bak)
-    renameOrThrow(fs, next, live)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    // scoped release (r14): clearCache() here evicted EVERY cached frame
-    // in the session — a concurrent serving session's persisted index
-    // frames were nuked by an unrelated compaction
-    deduped.unpersist()
-    // every file path changed and last-wins dedup changed row contents —
-    // both derived tiers must follow
-    refreshTiers(store, store.partitions())
+  private def requireUnbucketed(store: SeriesStore): Unit =
+    if (store.seriesBuckets > 0)
+      throw new IllegalStateException(
+        s"store at ${store.root} uses the ${store.seriesBuckets}-bucket layout; " +
+          "compaction and DELETE rewrite only unbucketed stores")
+
+  /** The one batched segment rewrite: one read of exactly the `hours`
+    * partitions on disk, `f`, one write of the result into the scratch
+    * dir (repartitioned by hour, sorted (series_id, time) — the store's
+    * file order), swapped in per hour through [[swapIn]], then the derived
+    * tiers refreshed. However many hours it touches, the job count is
+    * constant. An hour `f` leaves no rows in is dropped.
+    */
+  private def rewriteHours(store: SeriesStore, hours: Seq[Long])
+      (f: DataFrame => DataFrame): Unit = {
+    requireUnbucketed(store)
+    recoverSwaps(store.spark, store.segDir) // a parked hour must be read
+    val present = store.partitions().filter(hours.toSet)
+    if (present.nonEmpty) {
+      val live = store.scanHours(present)
+      swapIn(store.spark, store.segDir, present.map(h => s"hour_bucket=$h")) { scratch =>
+        f(live).repartition(col("hour_bucket"))
+          .sortWithinPartitions(col("series_id"), col("time"))
+          .write.mode(SaveMode.Overwrite).partitionBy("hour_bucket").parquet(scratch)
+      }
+      refreshTiers(store, present)
+    }
   }
 
-  /** Compact selected hour partitions independently — one read+dedup+
-    * rewrite per partition dir, no global shuffle; at scale each hour is
-    * its own job (embarrassingly parallel, mirrors the reference's
-    * per-(series,hour) compaction unit). Crash-safe per-partition swap
-    * via [[swapRewrite]].
+  /** Compact every hour partition (reference: one atomic manifest-entry
+    * swap per compacted segment, `compact.zig:52-78`).
     */
-  def compactPartitions(store: SeriesStore, hours: Seq[Long]): Unit = {
-    val segRoot = s"${store.root}/segments"
-    recoverSwaps(store.spark, segRoot)
-    val (fs, _) = fsFor(store.spark, segRoot)
-    hours.foreach { h =>
-      val name = s"hour_bucket=$h"
-      if (fs.exists(new HPath(s"$segRoot/$name"))) {
-        val deduped = dedupLastWins(
-          store.spark.read.schema(store.schema).parquet(s"$segRoot/$name"))
-          .sortWithinPartitions(col("series_id"), col("time"))
-          .cache()
-        deduped.count()
-        swapRewrite(store.spark, segRoot, name) { tmp =>
-          deduped.write.mode(SaveMode.Overwrite).parquet(tmp)
-        }
-        deduped.unpersist() // scoped — never the session-wide clearCache
-        ()
-      }
-    }
-    refreshTiers(store, hours.filter(h =>
-      fs.exists(new HPath(s"$segRoot/hour_bucket=$h"))))
+  def compact(store: SeriesStore): Unit = {
+    recoverSwaps(store.spark, store.segDir) // a parked hour must be listed
+    rewriteHours(store, store.partitions())(dedupLastWins)
   }
+
+  /** Compact selected hour partitions; hours not on disk are skipped. */
+  def compactPartitions(store: SeriesStore, hours: Seq[Long]): Unit =
+    rewriteHours(store, hours)(dedupLastWins)
 
   /** Small-file compaction: re-layout every hour partition whose parquet
     * files average under `targetBytes / 2` into
@@ -251,40 +249,35 @@ object Maintenance {
     *
     * Pure layout: no dedup (that is [[compact]]'s job), rows re-sorted
     * (series_id, time) within each output file — the same order segment
-    * writes guarantee. Per-hour independent jobs through the checked,
-    * crash-recoverable [[swapRewrite]] (scratch dirs invisible to
-    * partition discovery; a crash leaves the hour restorable by
-    * [[recoverSwaps]], never a half-state at the live path).
+    * writes guarantee. Each packed hour is written to the scratch dir by
+    * its own job, and all of them are swapped in through one [[swapIn]].
     *
     * Returns (hour, files_before, files_after, bytes) per compacted hour;
     * hours already at-or-under target density are untouched.
     */
   def compactSmallFiles(store: SeriesStore, targetBytes: Long): Seq[(Long, Int, Int, Long)] = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val segRoot = s"${store.root}/segments"
+    requireUnbucketed(store)
+    val segRoot = store.segDir
     recoverSwaps(store.spark, segRoot)
-    val (fs, root) = fsFor(store.spark, segRoot)
-    val hourDirs = (if (fs.exists(root)) fs.listStatus(root) else Array.empty[org.apache.hadoop.fs.FileStatus])
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("hour_bucket="))
-    val out = hourDirs.toSeq.sortBy(_.getPath.getName).flatMap { hd =>
-      val files = fs.listStatus(hd.getPath)
+    val (fs, _) = fsFor(store.spark, segRoot)
+    val out = store.partitions().flatMap { hour =>
+      val files = fs.listStatus(new HPath(s"$segRoot/hour_bucket=$hour"))
         .filter(_.getPath.getName.endsWith(".parquet"))
       val total = files.map(_.getLen).sum
       val n = files.length
       val want = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-      if (n > want && total.toDouble / n < targetBytes / 2.0) {
-        val hour = hd.getPath.getName.stripPrefix("hour_bucket=").toLong
-        val packed = store.spark.read.schema(store.schema).parquet(hd.getPath.toString)
+      if (n > want && total.toDouble / n < targetBytes / 2.0) Some((hour, n, want, total))
+      else None
+    }
+    def dirOf(hour: Long) = s"hour_bucket=$hour"
+    swapIn(store.spark, segRoot, out.map(o => dirOf(o._1))) { scratch =>
+      out.foreach { case (hour, _, want, _) =>
+        store.spark.read.schema(store.schema).parquet(s"$segRoot/${dirOf(hour)}")
           .coalesce(want)
           .sortWithinPartitions(col("series_id"), col("time"))
-          .cache()
-        packed.count() // materialize before the overwrite
-        swapRewrite(store.spark, segRoot, hd.getPath.getName) { tmp =>
-          packed.write.mode(SaveMode.Overwrite).parquet(tmp)
-        }
-        packed.unpersist() // scoped — never the session-wide clearCache
-        Some((hour, n, want, total))
-      } else None
+          .write.mode(SaveMode.Overwrite).parquet(s"$scratch/${dirOf(hour)}")
+      }
     }
     // pure re-layout: rows (and therefore sketch cells) are unchanged,
     // but every repacked file path is new — only the manifest must follow
@@ -343,8 +336,6 @@ object Maintenance {
     dropped
   }
 
-  private def dayOf(h: Long): Long = h - Math.floorMod(h, 86400L)
-
   /** Recompute the store-convention derived tiers (skip manifest, sketch
     * cells) for the hours a maintenance op touched — the same hook
     * [[SeriesStore.append]] runs, because a delete/retention/compaction
@@ -354,13 +345,13 @@ object Maintenance {
   private def refreshTiers(store: SeriesStore, hours: Seq[Long]): Unit =
     if (hours.nonEmpty) {
       SkipIndex.autoRefresh(store, hours)
-      SketchCells.autoRefresh(store, hours.map(dayOf).distinct)
+      SketchCells.autoRefresh(store, hours.map(SeriesStore.dayOf).distinct)
     }
 
   /** What a [[deleteRows]] call did: which hour partitions were
     * rewritten, how many rows the rewrites removed (`deletedRows` —
-    * derived per partition as metadata-count-before − survivors, so the
-    * engine's DELETE response needs no separate matched-row scan), and —
+    * tallied over the rewritten hours' read, so the engine's DELETE
+    * response needs no separate matched-row scan), and —
     * when the discovery ran through the skip manifest — how many
     * candidate data files the manifest let it scan out of the store's
     * total (`scannedFiles = totalFiles = -1` on the unrouted path). The
@@ -370,10 +361,10 @@ object Maintenance {
   final case class DeleteReport(rewrittenHours: Seq[Long],
       scannedFiles: Int, totalFiles: Int, deletedRows: Long = 0L)
 
-  /** Row-level delete for `DELETE FROM <sel> WHERE <pred>`: rewrite only
-    * the hour partitions that may contain matches — survivors for ALL of
-    * them written in ONE job (r14), then swapped in per-partition with
-    * the crash-safe rename discipline; derived tiers refreshed after.
+  /** Row-level delete for `DELETE FROM <sel> WHERE <pred>`: one
+    * [[rewriteHours]] of the hour partitions that hold matches, keeping
+    * the rows `predicate` does not hold for; an hour left empty is
+    * dropped, derived tiers are refreshed after.
     *
     * Affected-partition DISCOVERY reads [[SeriesStore.scanPruned]] of
     * `probe` — the same pruned read as the matching SELECT (the engine
@@ -386,7 +377,7 @@ object Maintenance {
     */
   def deleteRows(store: SeriesStore, predicate: org.apache.spark.sql.Column,
       probe: ScanProbe = ScanProbe()): DeleteReport = {
-    val spark = store.spark
+    recoverSwaps(store.spark, store.segDir) // discovery must see a parked hour
     val discovery = store.scanPruned(probe)
     // cast: the routed path re-infers hour_bucket from dir names (int
     // when values fit), the store schema carries it as long
@@ -395,53 +386,13 @@ object Maintenance {
       .collect().map(_.getLong(0)).toSeq.sorted
     val (scanned, totalF) = (discovery.filesRead, discovery.filesTotal)
     if (affected.isEmpty) return DeleteReport(Nil, scanned, totalF)
-    val segRoot = s"${store.root}/segments"
-    recoverSwaps(spark, segRoot)
-    val (fs, root) = fsFor(spark, segRoot)
-    // BATCHED rewrite (r14): however many hour partitions a delete
-    // touches, the job count is constant — a month-wide DELETE was
-    // previously ~2 serialized Spark jobs per affected hour, and at that
-    // point job-scheduling overhead dominated the rewrite. One scan of
-    // exactly the affected partitions tallies per-hour before/after
-    // counts, one job writes every survivor to a scratch dir under
-    // `_repack_tmp` partitioned by hour (re-sorted (series_id, time),
-    // the store's file order), and the only per-hour work left is the
-    // crash-safe pair of renames through `_repack_old` — driver
-    // metadata ops, no jobs. Nothing reads the live partitions after
-    // the first rename, and a crash anywhere mid-swap is healed by
-    // [[recoverSwaps]] (a restored hour simply re-runs the delete).
-    val base = fs.makeQualified(root).toString
     val keep = !predicate || predicate.isNull
-    val live = spark.read.option("basePath", base)
-      .parquet(affected.map(h => s"$segRoot/hour_bucket=$h"): _*)
-      .withColumn("hour_bucket", col("hour_bucket").cast("long"))
-    val counts = live.groupBy(col("hour_bucket"))
-      .agg(count(lit(1)).as("before"), count(when(keep, 1)).as("after"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val deleted = counts.map { case (_, b, a) => b - a }.sum
-    val scratch = new HPath(root, "_repack_tmp/delete")
-    if (fs.exists(scratch)) fs.delete(scratch, true)
-    live.filter(keep)
-      .repartition(col("hour_bucket"))
-      .sortWithinPartitions(col("series_id"), col("time"))
-      .write.mode(SaveMode.Overwrite).partitionBy("hour_bucket")
-      .parquet(scratch.toString)
-    fs.mkdirs(new HPath(root, "_repack_old"))
-    affected.foreach { h =>
-      val name = s"hour_bucket=$h"
-      val liveDir = new HPath(root, name)
-      val old = new HPath(root, s"_repack_old/$name")
-      if (fs.exists(old)) fs.delete(old, true)
-      renameOrThrow(fs, liveDir, old)
-      val fresh = new HPath(scratch, name)
-      // an hour whose every row matched the predicate has no survivors
-      // dir — the swap-out IS the delete (recoverSwaps would restore it
-      // if we crashed before the old-side cleanup: unapplied, consistent)
-      if (fs.exists(fresh)) renameOrThrow(fs, fresh, liveDir)
-      fs.delete(old, true)
+    var deleted = 0L
+    rewriteHours(store, affected) { live =>
+      // the removed-row tally: one aggregate over exactly the rewritten hours
+      deleted = live.select(count(lit(1)) - count(when(keep, 1))).head().getLong(0)
+      live.filter(keep)
     }
-    fs.delete(scratch, true)
-    refreshTiers(store, affected)
     DeleteReport(affected, scanned, totalF, deleted)
   }
 

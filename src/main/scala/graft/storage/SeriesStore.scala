@@ -188,7 +188,7 @@ final class SeriesStore(val spark: SparkSession, val root: String,
           .distinct().collect().map(_.getLong(0)).toSeq
         if (hasSkip) SkipIndex.refresh(this, SkipIndex.dirFor(this), touched)
         if (hasCells) SketchCells.autoRefresh(this,
-          touched.map(h => h - Math.floorMod(h, 86400L)).distinct)
+          touched.map(SeriesStore.dayOf).distinct)
       }
     } finally if (hasSkip || hasCells) { df.unpersist(); () }
   }
@@ -214,26 +214,31 @@ final class SeriesStore(val spark: SparkSession, val root: String,
       spark.table(tableName).select(fullSchema.fieldNames.map(col): _*)
     } else spark.read.schema(fullSchema).parquet(segDir)
 
-  /** Range scan with explicit partition pruning on hour_bucket + row-group
-    * pruning on time (inclusive bounds, `segment.zig:156,172`).
+  /** Rows of exactly the hour partitions `hours` that exist on disk, with
+    * [[scan]]'s schema; the empty frame when none does.
     *
-    * On the unbucketed layout Spark is handed only the hour directories
-    * in the window, from the local [[partitions]] listing: a read of the
-    * whole `segDir` lists every hour, and above
+    * On the unbucketed layout Spark is handed only those hour directories
+    * (with `basePath`, so `hour_bucket` stays a partition column): a read
+    * of the whole `segDir` lists every hour, and above
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32 paths)
     * it runs that listing as a Spark job, on every read. The bucketed
     * layout reads its catalog table, which carries the bucket spec.
     */
+  def scanHours(hours: Seq[Long]): DataFrame =
+    partitions().filter(hours.toSet) match {
+      case Seq() => emptyFrame
+      case hs if seriesBuckets > 0 => scan().filter(col("hour_bucket").isin(hs: _*))
+      case hs => spark.read.schema(fullSchema).option("basePath", segDir)
+        .parquet(hs.map(h => s"$segDir/hour_bucket=$h"): _*)
+    }
+
+  /** Range scan with explicit partition pruning on hour_bucket + row-group
+    * pruning on time (inclusive bounds, `segment.zig:156,172`), through
+    * [[scanHours]] of the window's hours.
+    */
   def scanRange(startTs: Long, endTs: Long): DataFrame = {
     val lo = SeriesStore.hourFloor(startTs)
-    val frame =
-      if (isEmpty || seriesBuckets > 0) scan()
-      else partitions().filter(h => h >= lo && h <= endTs) match {
-        case Seq() => emptyFrame
-        case hours => spark.read.schema(fullSchema).option("basePath", segDir)
-          .parquet(hours.map(h => s"$segDir/hour_bucket=$h"): _*)
-      }
-    frame.filter(
+    scanHours(partitions().filter(h => h >= lo && h <= endTs)).filter(
       col("hour_bucket") >= lo && col("hour_bucket") <= endTs &&
         col("time") >= startTs && col("time") <= endTs)
   }
@@ -323,6 +328,9 @@ object SeriesStore {
     val h = Math.floorDiv(ts, 3600L)
     if (h < Long.MinValue / 3600L) Long.MinValue else h * 3600L
   }
+
+  /** The day (epoch-second floor) an hour partition belongs to. */
+  private[storage] def dayOf(hour: Long): Long = hour - Math.floorMod(hour, 86400L)
 
   private val lastSeq = new java.util.concurrent.atomic.AtomicLong()
 

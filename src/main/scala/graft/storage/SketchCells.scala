@@ -280,8 +280,9 @@ object SketchCells {
   def readTag(spark: SparkSession, dir: String, k: String): DataFrame =
     readTable(spark, dir, s"tdtag/$k").df
 
-  /** Recompute ONLY `days`' cells from the store (hour-partition-pruned
-    * scan) and overwrite exactly those day partitions — the incremental
+  /** Recompute ONLY `days`' cells from the store (a read of exactly
+    * their hour dirs, [[SeriesStore.scanHours]]) and overwrite exactly
+    * those day partitions — the incremental
     * ingest path (same dynamic-partition-overwrite shape as the
     * streaming sketch-maintenance twin). The NDV tag keys come from the
     * existing store's schema. The dynamic mode is a WRITER option only —
@@ -307,9 +308,12 @@ object SketchCells {
     val ndvKeys = requireCurrent(s"$dir/td", onDisk(s"$dir/td"))
     val tiers = groupTagsOf(spark, dir).map(k =>
       k -> requireCurrent(tagDir(dir, k), onDisk(tagDir(dir, k))))
-    val touched = store.scan().filter(day.isin(days: _*))
-    val remaining = touched.select(day.as("day")).distinct()
-      .collect().map(_.getLong(0)).toSet
+    // exactly the touched days' hour dirs: a filter on `day` (an
+    // expression of `time`) would prune no hour partition. A day keeps
+    // cells iff one of its hour dirs remains (no writer leaves an empty one)
+    val hours = store.partitions().filter(h => days.contains(SeriesStore.dayOf(h)))
+    val touched = store.scanHours(hours)
+    val remaining = hours.map(SeriesStore.dayOf).toSet
     // one sweep per table (td + each group-tag tier): dynamic-overwrite
     // the recomputed days, drop the emptied ones
     def sweep(path: String, fresh: => DataFrame): Unit = {

@@ -266,13 +266,14 @@ object SkipIndex {
   }
 
   /** Incremental refresh after appends/compaction/retention touched
-    * `hours`: recompute ONLY those hours' rows from the data (the
-    * bounded scan), carry every untouched hour's rows forward from the
-    * existing manifest (a metadata-sized read), and swap the single
-    * manifest file in crash-safely (Maintenance's `_repack` rename
-    * protocol — a died-mid-swap manifest is restored by the recovery
-    * pass the next read runs). Hours the store no longer has (retention
-    * drops) simply contribute no recomputed rows.
+    * `hours`: recompute ONLY those hours' rows from the data (a read of
+    * exactly those hour dirs, [[SeriesStore.scanHours]]), carry every
+    * untouched hour's rows forward from the existing manifest (a
+    * metadata-sized read), and swap the manifest dir in through
+    * [[Maintenance.swapIn]] (the swap protocol in [[Maintenance]]'s doc —
+    * a died-mid-swap manifest is restored by the recovery pass the next
+    * read runs). Hours the store no longer has (retention drops) simply
+    * contribute no recomputed rows.
     *
     * Schema upgrades stay incremental (r16 — a pre-r15/r16 manifest
     * used to trigger a FULL rebuild here, O(store) hidden inside an
@@ -292,12 +293,14 @@ object SkipIndex {
         s"in place — refreshed hours gain ${missing.mkString(", ")}; carried " +
         "rows keep them NULL (no pruning on those files) until their hours refresh")
     val kept = old.filter(!col("hour_bucket").isin(hours: _*))
-    val fresh = manifestRows(store.scan().filter(col("hour_bucket").isin(hours: _*)))
-    val next = kept.unionByName(fresh, allowMissingColumns = true).coalesce(1)
-    Maintenance.swapRewrite(spark, manifestDir, "m") { tmp =>
+    // hours all dropped: no file read to take `_metadata` from
+    val next = (if (store.partitions().exists(hours.toSet))
+      kept.unionByName(manifestRows(store.scanHours(hours)), allowMissingColumns = true)
+    else kept).coalesce(1)
+    Maintenance.swapIn(spark, manifestDir, Seq("m")) { scratch =>
       // `next` lazily READS the live manifest while writing to the
       // scratch path — the swap happens only after the write succeeds
-      next.write.parquet(tmp)
+      next.write.parquet(s"$scratch/m")
     }
     MetaCache.invalidate(manifestDir)
   }
@@ -354,7 +357,7 @@ object SkipIndex {
     * survived.
     */
   private def readFiles(store: SeriesStore, files: Array[String]): DataFrame =
-    if (files.isEmpty) store.scan().filter(lit(false))
+    if (files.isEmpty) store.scanHours(Nil)
     else {
       val spark = store.spark
       val fs = new org.apache.hadoop.fs.Path(store.segDir)

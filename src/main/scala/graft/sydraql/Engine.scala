@@ -650,6 +650,11 @@ object Engine {
       compileUs = (System.nanoTime() - t2) / 1000,
       traceId = traceId(),
       route = route)
+    // INSERT values and the DELETE predicate are scalars, which read only
+    // the source's column names: compile them over an empty frame of the
+    // source's schema, not a read of every hour directory
+    def scalarCompiler = new Compiler(spark,
+      store.scanHours(Nil).select("series", "series_id", "tags", "time", "value"), options)
     ast match {
       case _: Ast.Select | _: Ast.Explain =>
         val sel = ast match {
@@ -677,7 +682,7 @@ object Engine {
         })
       case _ if !runWrites => None
       case Ast.Insert(series, cols, rows) =>
-        val compiler = new Compiler(spark, store.source(), options)
+        val compiler = scalarCompiler
         val colNames = if (cols.isEmpty) Seq("time", "value") else cols.map(_.toLowerCase)
         if (!colNames.contains("time") || !colNames.contains("value"))
           throw QueryError(QueryError.InvalidSyntax, "insert columns must include time and value")
@@ -700,7 +705,7 @@ object Engine {
         import spark.implicits._
         Some(QueryResult(Seq(rows.length.toLong).toDF("inserted"), st))
       case Ast.Delete(sel, where) =>
-        val compiler = new Compiler(spark, store.source(), options)
+        val compiler = scalarCompiler
         val selPred = sel match {
           case Ast.ById(id) => col("series_id") === id
           case Ast.ByName(n) => col("series") === n

@@ -13,32 +13,59 @@ object TestSpark {
       .config("spark.ui.enabled", "false"))
     .getOrCreate()
 
-  /** `f`'s result and the descriptions of the Spark jobs started while
-    * it ran, on any thread ("" for a job without one). The listener bus
-    * is asynchronous, so they are read only after a fence job (not
-    * listed) has been delivered: the bus delivers in order, so every job
-    * `f` started was seen before it.
+  /** `f`'s result, with `listener` attached while it runs and until every
+    * event `f` caused has been delivered. The listener bus is
+    * asynchronous but delivers in order, so that holds once a fence job
+    * (group `jobs-fence`) started after `f` has been seen.
     */
-  def jobsDuring[T](f: => T): (T, Seq[String]) = {
+  private def listening[T](listener: org.apache.spark.scheduler.SparkListener)(f: => T): T = {
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val fenced = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val props = Option(js.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == "jobs-fence")) fenced.countDown()
-        else jobs.add(props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-        ()
-      }
+    val fence = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (isFence(js)) fenced.countDown()
     }
     sc.addSparkListener(listener)
+    sc.addSparkListener(fence)
     try {
       val r = f
       sc.setJobGroup("jobs-fence", "listener-bus fence")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job never delivered")
-      (r, jobs.toArray(Array.empty[String]).toSeq)
-    } finally sc.removeSparkListener(listener)
+      r
+    } finally { sc.removeSparkListener(listener); sc.removeSparkListener(fence) }
+  }
+
+  private def isFence(js: org.apache.spark.scheduler.SparkListenerJobStart): Boolean =
+    Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == "jobs-fence")
+
+  /** `f`'s result and the descriptions of the Spark jobs started while
+    * it ran, on any thread ("" for a job without one); the fence job is
+    * not listed.
+    */
+  def jobsDuring[T](f: => T): (T, Seq[String]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val r = listening(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!isFence(js)) {
+          jobs.add(Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse(""))
+          ()
+        }
+    })(f)
+    (r, jobs.toArray(Array.empty[String]).toSeq)
+  }
+
+  /** `f`'s result and the input records read by the tasks that ended
+    * while it ran (the fence job reads none).
+    */
+  def recordsReadDuring[T](f: => T): (T, Long) = {
+    val records = new java.util.concurrent.atomic.AtomicLong()
+    val r = listening(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => records.addAndGet(m.inputMetrics.recordsRead))
+    })(f)
+    (r, records.get())
   }
 }
 

@@ -409,14 +409,14 @@ class StorageSpec extends AnyFunSuite {
     assert(graft.pipeline.IvfIndex.compact(spark, idx) > 0)
     assert(serve() === before, "serving must be bit-identical through the file: URI route")
     // simulate a compact() that died between "live renamed aside" and
-    // "tmp renamed in": park one live cell dir in _compact_old, leave a
-    // stale partial write in _compact_tmp — the next compact() must
+    // "tmp renamed in": park one live cell dir in _repack_old, leave a
+    // stale partial write in _repack_tmp — the next compact() must
     // restore the cell and clear the scratch dirs before proceeding
     val cells = new java.io.File(local).listFiles().filter(_.getName.startsWith("bucket="))
     assert(cells.nonEmpty)
     val victim = cells.minBy(_.getName)
-    val oldRoot = new java.io.File(local, "_compact_old")
-    val tmpRoot = new java.io.File(local, "_compact_tmp")
+    val oldRoot = new java.io.File(local, "_repack_old")
+    val tmpRoot = new java.io.File(local, "_repack_tmp")
     assert(oldRoot.mkdirs() && tmpRoot.mkdirs())
     assert(victim.renameTo(new java.io.File(oldRoot, victim.getName)))
     Files.write(java.nio.file.Paths.get(tmpRoot.toString, "partial"), Array[Byte](1, 2, 3))
@@ -503,12 +503,13 @@ class StorageSpec extends AnyFunSuite {
         .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
     val before = serve(cs0)
     // simulate a rebalance that died between "live parked aside" and
-    // "tmp renamed in": the whole index sits in _rebalance_old
-    assert(new java.io.File(idx).renameTo(new java.io.File(base, "index_rebalance_old")))
+    // "tmp renamed in": the whole index sits in the parent's _repack_old
+    assert(new java.io.File(base, "_repack_old").mkdirs())
+    assert(new java.io.File(idx).renameTo(new java.io.File(base, "_repack_old/index")))
     val cs1 = IvfIndex.rebalance(emb, idx, nCells = 4, iters = 2)
     assert(serve(cs1).nonEmpty)
-    assert(!new java.io.File(base, "index_rebalance_old").exists(), "scratch cleared")
-    assert(!new java.io.File(base, "index_rebalance_tmp").exists(), "scratch cleared")
+    assert(!new java.io.File(base, "_repack_old").exists(), "scratch cleared")
+    assert(!new java.io.File(base, "_repack_tmp").exists(), "scratch cleared")
     // same corpus, same fit params -> same centroids; serving unchanged
     assert(cs1.toSeq === cs0.toSeq)
     assert(serve(cs1) === before)
@@ -1077,7 +1078,7 @@ class StorageSpec extends AnyFunSuite {
     assert(store.scanRange(3600L, 7199L).orderBy("time")
       .select("value").as[Double].collect().toSeq
       === (10 until 18).map(_.toDouble))
-    // crash mid-swap: hour 3 parked aside, survivors still in the delete
+    // crash mid-swap: hour 3 parked aside, survivors still in the
     // scratch dir — recoverSwaps restores the parked partition and drops
     // the scratch (re-running the delete then converges)
     val seg = new java.io.File(s"${store.root}/segments")
@@ -1085,7 +1086,7 @@ class StorageSpec extends AnyFunSuite {
     oldDir.mkdirs()
     assert(new java.io.File(seg, "hour_bucket=10800")
       .renameTo(new java.io.File(oldDir, "hour_bucket=10800")))
-    val tmpScratch = new java.io.File(seg, "_repack_tmp/delete/hour_bucket=10800")
+    val tmpScratch = new java.io.File(seg, "_repack_tmp/hour_bucket=10800")
     tmpScratch.mkdirs()
     java.nio.file.Files.write(tmpScratch.toPath.resolve("part-junk.parquet"),
       Array[Byte](1, 2, 3))
@@ -1690,5 +1691,106 @@ class StorageSpec extends AnyFunSuite {
     // a window past the last cell day reads an empty frame of the memo's schema
     assert(served(50, 60) === raw(50, 60))
     assert(served(50, 60).head.getLong(1) === 0L)
+  }
+
+  test("compact after a crash mid-swap: parked hours restored, every row kept, deduped") {
+    import spark.implicits._
+    val store = new SeriesStore(spark, tmp())
+    // 4 hours, every point written twice: the later write must win
+    def pts(v: Double) = (for { h <- 0 until 4; i <- 0 until 5 }
+      yield ("m", Map("host" -> "a"), h * 3600L + i * 600L, h * 10 + i + v))
+      .toDF("series", "tags", "time", "value")
+    store.append(pts(0.0))
+    store.append(pts(0.5))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("series", "time", "value").orderBy("time").as[(String, Long, Double)]
+        .collect().toSeq
+    val want = rows(Maintenance.dedupLastWins(store.scan()))
+    assert(want.size === 20 && want.forall(_._3 % 1 == 0.5))
+    // the state a crash between park and rename-in leaves: 2 of 4 hours
+    // parked in _repack_old, their half-written replacements in _repack_tmp
+    val seg = new java.io.File(s"${store.root}/segments")
+    val parked = new java.io.File(seg, "_repack_old")
+    parked.mkdirs()
+    for (h <- Seq(3600L, 10800L)) {
+      assert(new java.io.File(seg, s"hour_bucket=$h")
+        .renameTo(new java.io.File(parked, s"hour_bucket=$h")))
+      val junk = new java.io.File(seg, s"_repack_tmp/hour_bucket=$h")
+      junk.mkdirs()
+      Files.write(junk.toPath.resolve("part-junk.parquet"), Array[Byte](1, 2, 3))
+    }
+    assert(store.scan().count() === 20L) // parked hours invisible mid-crash
+    Maintenance.compact(store)
+    assert(store.partitions() === Seq(0L, 3600L, 7200L, 10800L))
+    assert(rows(store.scan()) === want, "compact must restore and dedup every parked hour")
+    assert(!parked.exists() && !new java.io.File(seg, "_repack_tmp").exists(),
+      "scratch dirs cleaned")
+  }
+
+  test("compactPartitions runs a constant number of jobs, however many hours it compacts") {
+    import spark.implicits._
+    def store6() = {
+      val store = new SeriesStore(spark, tmp())
+      val pts = (for { h <- 0 until 6; i <- 0 until 5 }
+        yield ("m", Map.empty[String, String], h * 3600L + i * 600L, i.toDouble))
+        .toDF("series", "tags", "time", "value")
+      store.append(pts)
+      store.append(pts)
+      store
+    }
+    val one = store6()
+    val six = store6()
+    val (_, jobs1) = TestSpark.jobsDuring(Maintenance.compactPartitions(one, Seq(0L)))
+    val (_, jobs6) = TestSpark.jobsDuring(
+      Maintenance.compactPartitions(six, (0 until 6).map(_ * 3600L)))
+    info(s"jobs: 1 hour ${jobs1.size}, 6 hours ${jobs6.size}")
+    assert(jobs6.size <= jobs1.size,
+      s"6 hours ran ${jobs6.size} jobs, 1 hour ${jobs1.size}: ${jobs6.mkString(" | ")}")
+    assert(one.scan().count() === 55L && six.scan().count() === 30L)
+    assert(six.partitions() === (0 until 6).map(_ * 3600L))
+  }
+
+  test("compaction and DELETE refuse a bucketed store before writing anything") {
+    import spark.implicits._
+    val store = new SeriesStore(spark, tmp(), seriesBuckets = 4)
+    val pts = (for { h <- 0 until 3; i <- 0 until 4 }
+      yield (s"s$i", Map.empty[String, String], h * 3600L + i, i.toDouble))
+      .toDF("series", "tags", "time", "value")
+    store.append(pts)
+    store.append(pts)
+    def refused(op: => Any) = intercept[IllegalStateException](op)
+    refused(Maintenance.compactPartitions(store, Seq(0L)))
+    refused(Maintenance.compact(store))
+    refused(Maintenance.compactSmallFiles(store, 64L * 1024 * 1024))
+    refused(Maintenance.deleteRows(store, col("value") === 1.0))
+    refused(Engine.executeOnStore(store,
+      "delete from s1 where time >= 0 and time < 20000", CompileOptions(now = 0L)))
+    assert(store.scan().count() === 24L)
+    assert(store.partitions() === Seq(0L, 3600L, 7200L))
+  }
+
+  test("a tier refresh reads only the refreshed day's hours; INSERT lists no directory tree") {
+    import graft.storage.SketchCells
+    import spark.implicits._
+    val store = new SeriesStore(spark, tmp())
+    // 48 hours (above the 32-path listing threshold), two series, a
+    // point a minute: 2,880 points a day
+    val pts = for { s <- Seq("a", "b"); t <- 0L until 48 * 3600L by 60L }
+      yield ("m", Map("host" -> s), t, t.toDouble)
+    store.append(pts.toDF("series", "tags", "time", "value"))
+    val dir = SketchCells.dirFor(store)
+    SketchCells.build(store, dir, groupTags = Seq("host"))
+    // two tables (td, one tag tier), each recomputed from day 0's points
+    val (_, records) = TestSpark.recordsReadDuring(SketchCells.refresh(store, dir, Seq(0L)))
+    info(s"refreshing one 2,880-point day of a 5,760-point store read $records records")
+    assert(records <= 2 * 2880L, s"refreshing one day read $records records")
+    val opts = CompileOptions(now = 0L)
+    val (_, jobs) = TestSpark.jobsDuring(
+      Engine.executeOnStore(store, "insert into m (time, value, host) values (100, 1.0, 'a')", opts))
+    assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs.mkString(" | "))
+    val served = Engine.executeOnStore(store,
+      s"select count() as n from m where time >= 0 and time < ${2 * 86400}", opts)
+    assert(served.stats.route.startsWith("served:cells"), served.stats.route)
+    assert(served.df.head().getLong(0) === 2 * 2880L + 1)
   }
 }
