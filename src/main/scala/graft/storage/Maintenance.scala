@@ -154,7 +154,7 @@ object Maintenance {
       case (h, s) if !prev.get(h).contains(s) => h
     }.toSeq.sorted
     if (changed.nonEmpty) {
-      val roll = store.scanHours(changed)
+      val roll = store.readHours(changed)
         .groupBy(col("series_id"), col("series"), col("hour_bucket"),
           (col("time") - pmod(col("time"), lit(step))).as("bucket"))
         .agg(sum(col("value")).as("sum_v"), count(col("value")).as("n"),
@@ -216,7 +216,7 @@ object Maintenance {
     recoverSwaps(store.spark, store.segDir) // a parked hour must be read
     val present = store.partitions().filter(hours.toSet)
     if (present.nonEmpty) {
-      val live = store.scanHours(present)
+      val live = store.readHours(present)
       swapIn(store.spark, store.segDir, present.map(h => s"hour_bucket=$h")) { scratch =>
         f(live).repartition(col("hour_bucket"))
           .sortWithinPartitions(col("series_id"), col("time"))

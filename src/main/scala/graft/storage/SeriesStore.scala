@@ -74,7 +74,7 @@ final class SeriesStore(val spark: SparkSession, val root: String,
               "has no bucket-id suffix); reopen with seriesBuckets=0 or rewrite the " +
               s"store to the $seriesBuckets-bucket layout")
       }
-      new java.io.File(segDir).mkdirs() // CREATE TABLE LOCATION needs the dir
+      segFs.mkdirs(segPath) // CREATE TABLE LOCATION needs the dir
       spark.sql(
         s"""CREATE TABLE $tableName (
            |  series STRING, series_id BIGINT, tags MAP<STRING,STRING>,
@@ -97,12 +97,17 @@ final class SeriesStore(val spark: SparkSession, val root: String,
   private def isBucketedFileName(name: String): Boolean =
     name.matches(".*_\\d{5}(\\.c\\d+)?\\..*")
 
+  /** The segments dir and its Hadoop filesystem, resolved from the root's
+    * own scheme (file://, hdfs://, s3a:// or a bare local path).
+    */
+  private def segPath = new org.apache.hadoop.fs.Path(segDir)
+  private def segFs = segPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private def sampleDataFile(): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(segDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
+    val fs = segFs
+    if (!fs.exists(segPath)) None
     else {
-      val it = fs.listFiles(p, true)
+      val it = fs.listFiles(segPath, true)
       var found: Option[String] = None
       while (found.isEmpty && it.hasNext) {
         val n = it.next().getPath.getName
@@ -193,7 +198,7 @@ final class SeriesStore(val spark: SparkSession, val root: String,
     } finally if (hasSkip || hasCells) { df.unpersist(); () }
   }
 
-  def isEmpty: Boolean = !new java.io.File(segDir).exists()
+  def isEmpty: Boolean = !segFs.exists(segPath)
 
   /** The schema of every store read: [[schema]] plus `hour_bucket`. */
   private[storage] val fullSchema = StructType(schema.fields :+ StructField("hour_bucket", LongType))
@@ -225,12 +230,17 @@ final class SeriesStore(val spark: SparkSession, val root: String,
     * layout reads its catalog table, which carries the bucket spec.
     */
   def scanHours(hours: Seq[Long]): DataFrame =
-    partitions().filter(hours.toSet) match {
-      case Seq() => emptyFrame
-      case hs if seriesBuckets > 0 => scan().filter(col("hour_bucket").isin(hs: _*))
-      case hs => spark.read.schema(fullSchema).option("basePath", segDir)
-        .parquet(hs.map(h => s"$segDir/hour_bucket=$h"): _*)
-    }
+    readHours(if (hours.isEmpty) Nil else partitions().filter(hours.toSet))
+
+  /** [[scanHours]] of hour partitions `hs` already read from
+    * [[partitions]], without listing them again.
+    */
+  private[storage] def readHours(hs: Seq[Long]): DataFrame = hs match {
+    case Seq() => emptyFrame
+    case _ if seriesBuckets > 0 => scan().filter(col("hour_bucket").isin(hs: _*))
+    case _ => spark.read.schema(fullSchema).option("basePath", segDir)
+      .parquet(hs.map(h => s"$segDir/hour_bucket=$h"): _*)
+  }
 
   /** Range scan with explicit partition pruning on hour_bucket + row-group
     * pruning on time (inclusive bounds, `segment.zig:156,172`), through
@@ -238,7 +248,7 @@ final class SeriesStore(val spark: SparkSession, val root: String,
     */
   def scanRange(startTs: Long, endTs: Long): DataFrame = {
     val lo = SeriesStore.hourFloor(startTs)
-    scanHours(partitions().filter(h => h >= lo && h <= endTs)).filter(
+    readHours(partitions().filter(h => h >= lo && h <= endTs)).filter(
       col("hour_bucket") >= lo && col("hour_bucket") <= endTs &&
         col("time") >= startTs && col("time") <= endTs)
   }
@@ -285,11 +295,11 @@ final class SeriesStore(val spark: SparkSession, val root: String,
 
   /** Hour partitions present on disk. */
   def partitions(): Seq[Long] = {
-    val d = new java.io.File(segDir)
-    if (!d.exists()) Seq.empty
-    else d.listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("hour_bucket="))
-      .map(_.getName.stripPrefix("hour_bucket=").toLong)
+    val fs = segFs
+    if (!fs.exists(segPath)) Seq.empty
+    else fs.listStatus(segPath).toSeq
+      .filter(f => f.isDirectory && f.getPath.getName.startsWith("hour_bucket="))
+      .map(_.getPath.getName.stripPrefix("hour_bucket=").toLong)
       .sorted
   }
 }

@@ -312,7 +312,7 @@ object SketchCells {
     // expression of `time`) would prune no hour partition. A day keeps
     // cells iff one of its hour dirs remains (no writer leaves an empty one)
     val hours = store.partitions().filter(h => days.contains(SeriesStore.dayOf(h)))
-    val touched = store.scanHours(hours)
+    val touched = store.readHours(hours)
     val remaining = hours.map(SeriesStore.dayOf).toSet
     // one sweep per table (td + each group-tag tier): dynamic-overwrite
     // the recomputed days, drop the emptied ones

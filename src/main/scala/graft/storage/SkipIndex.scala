@@ -294,8 +294,9 @@ object SkipIndex {
         "rows keep them NULL (no pruning on those files) until their hours refresh")
     val kept = old.filter(!col("hour_bucket").isin(hours: _*))
     // hours all dropped: no file read to take `_metadata` from
-    val next = (if (store.partitions().exists(hours.toSet))
-      kept.unionByName(manifestRows(store.scanHours(hours)), allowMissingColumns = true)
+    val present = store.partitions().filter(hours.toSet)
+    val next = (if (present.nonEmpty)
+      kept.unionByName(manifestRows(store.readHours(present)), allowMissingColumns = true)
     else kept).coalesce(1)
     Maintenance.swapIn(spark, manifestDir, Seq("m")) { scratch =>
       // `next` lazily READS the live manifest while writing to the

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 
 /** Stream-query operators over the series model. The reference has no
   * stream-query surface (SURVEY.md §2.12 — its "streaming" is only the
@@ -13,6 +14,50 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale notes: windowed aggregation shuffles on (series, window) with
   * partial aggregation and watermark-driven state eviction; keyed state is
   * per-series (the natural shard key) and O(1) per key.
+  *
+  * Event time. Every twin below that reads one event-time column reads
+  * `event_time` (its `time` column, epoch seconds, as a timestamp) under
+  * a `watermarkDelay` watermark; Spark drops rows behind the watermark
+  * before any stateful operator sees them. The keyed twins
+  * (`flatMapGroupsWithState` with an event-time timeout) follow one of two
+  * protocols, both in event time, so a replay or backfill behaves like
+  * the live run:
+  *  1. Confirmation ([[funnel]], [[transitions]], [[attribution]],
+  *     [[scd2]], [[scd2Lookup]]). A key's events wait in a `pending`
+  *     buffer until the watermark passes their time (`time <= wm`); only
+  *     then do they fold, in the twin's own sort key, so a straggler
+  *     inside the delay still lands in order. The timeout arms at the
+  *     earliest pending `time + 1`, else at `lastSeen + retentionSecs`. A
+  *     key with nothing pending and no event for `retentionSecs` is
+  *     dropped, which bounds idle-key state. State per key is its
+  *     confirmed fold plus at most the watermark delay's pending events.
+  *  2. Open buckets ([[dayOverDay]], [[bucketZScore]], [[psiDayOverDay]],
+  *     [[holtWinters]], [[lttb]]). A point folds into its `step`-aligned
+  *     bucket `b` while `b + step > wm` or `b` is still open, so a late
+  *     point for a closed bucket is dropped (append-mode aggregation
+  *     semantics). Once `wm >= b + step` the due buckets close in
+  *     ascending order: a bucket closed earlier in a step can pair with
+  *     one closed later in it. Closed results a twin pairs against are
+  *     kept only while a bucket that can use them may still close. The
+  *     timeout arms at the earliest open bucket's close, carried result's
+  *     eviction or `lastSeen + retentionSecs`, so a quiet key still
+  *     closes its buckets and is collected. State per key is at most the
+  *     watermark delay's open buckets plus the twin's bounded carry.
+  * Both end in one settle step: an idle key's state is removed;
+  * otherwise the state is updated and the timeout armed at the earliest
+  * due strictly after the watermark, or not at all when none lies ahead.
+  * [[darkSeries]] (its timeout is the output) and [[heavyHitters]] (one
+  * key per window) keep their own protocols.
+  *
+  * Delivery. The maintenance sinks ([[indexMaintenance]],
+  * [[sketchMaintenance]], [[tdigestCellMaintenance]],
+  * [[skipIndexMaintenance]]) run `foreachBatch`, which is at-least-once,
+  * over writes that are not idempotent. Each batch therefore runs behind
+  * a replay guard: a `_last_batch` sidecar in the sink's directory,
+  * published by an overwriting rename after the batch's body completes,
+  * records the last fully-applied batch id, and a redelivered id at or
+  * below it is skipped, as is an empty batch. A crash inside a body, after
+  * some writes and before the sidecar, requires a rebuild.
   */
 object StreamOps {
 
@@ -22,8 +67,10 @@ object StreamOps {
       event_time: java.sql.Timestamp)
   final case class LastSeen(lastSeen: Long)
   final case class DarkAlert(series: String, last_seen: Long, dark_since: Long)
-  final case class DodState(open: Map[Long, (Double, Long)], closed: Map[Long, Double])
-  final case class ZScoreState(open: Map[Long, (Double, Long)], closed: Map[Long, Double])
+  /** [[dayOverDay]] and [[bucketZScore]] state: open buckets' (sum, n) and
+    * closed buckets' averages.
+    */
+  final case class BucketMeans(open: Map[Long, (Double, Long)], closed: Map[Long, Double])
   final case class FunnelState(pending: Seq[(Long, Int)], times: Seq[Long],
       lastSeen: Long)
   final case class FunnelProgress(user_id: Long, stage: Int, times: Seq[Long])
@@ -52,6 +99,85 @@ object StreamOps {
   final case class DayOverDay(series: String, bucket: Long, v: Double,
       v_prev: Double, delta_1d: Double, ratio_1d: Option[Double])
 
+  /** `df` with `event_time` (its `time` column as a timestamp) under a
+    * `delay` watermark.
+    */
+  private def watermarked(df: DataFrame, delay: String): DataFrame =
+    df.withColumn("event_time", col("time").cast("timestamp"))
+      .withWatermark("event_time", delay)
+
+  /** (series, time, value) points as watermarked [[TimedPoint]]s. */
+  private def timedPoints(points: DataFrame, delay: String): Dataset[TimedPoint] = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    watermarked(points.select(col("series"), col("time").cast("long"),
+      col("value").cast("double")), delay).as[TimedPoint]
+  }
+
+  /** The settle step that ends every keyed twin's call (object doc): an
+    * `idle` key's state is removed, and `true` returned; otherwise the
+    * state becomes `next` and the timeout arms at the earliest of `dues`
+    * (epoch seconds) strictly after `wm`, or at none.
+    */
+  private[graft] def settle[S](state: GroupState[S], wm: Long, idle: Boolean,
+      dues: Iterable[Long])(next: => S): Boolean =
+    if (idle) { state.remove(); true }
+    else {
+      state.update(next)
+      val ahead = dues.filter(_ > wm)
+      if (ahead.nonEmpty) state.setTimeoutTimestamp(ahead.min * 1000L)
+      false
+    }
+
+  /** One confirmation step (object doc): `ready` is what the watermark
+    * confirms, `pending` what still waits; `idle` and `dues` are the
+    * key's [[settle]] arguments.
+    */
+  private[graft] final case class Confirmed[E](ready: Seq[E], pending: Seq[E],
+      lastSeen: Long, idle: Boolean, dues: Seq[Long])
+
+  /** Confirm a key's `pending` events plus its `fresh` ones at watermark
+    * `wm`: events with `time <= wm` are ready, `lastSeen` advances over
+    * every event, and the key is idle once nothing waits and
+    * `wm >= lastSeen + retentionSecs`.
+    */
+  private[graft] def confirm[E](pending: Seq[E], fresh: Iterator[E], lastSeen: Long,
+      wm: Long, retentionSecs: Long)(time: E => Long): Confirmed[E] = {
+    val all = pending ++ fresh
+    val seen = (lastSeen +: all.map(time)).max
+    val (ready, waiting) = all.partition(time(_) <= wm)
+    Confirmed(ready, waiting, seen, waiting.isEmpty && wm >= seen + retentionSecs,
+      waiting.map(time(_) + 1) :+ (seen + retentionSecs))
+  }
+
+  /** One open-bucket step (object doc): each of `points` folds (`add`,
+    * from `zero`) into its `step`-aligned bucket `b` while
+    * `b + step > wm` or `b` is open, then every bucket with
+    * `b + step <= wm` is handed to `close` in ascending order. Returns the
+    * still-open buckets and the latest point time seen (`Long.MinValue`
+    * for none).
+    */
+  private[graft] def closeDue[P, A](open: Map[Long, A], points: Iterator[P], wm: Long,
+      step: Long, zero: A)(time: P => Long, add: (A, P) => A)(
+      close: (Long, A) => Unit): (Map[Long, A], Long) = {
+    var buckets = open
+    var seen = Long.MinValue
+    points.foreach { p =>
+      val t = time(p)
+      seen = math.max(seen, t)
+      val b = t - math.floorMod(t, step)
+      if (b + step > wm || buckets.contains(b))
+        buckets += b -> add(buckets.getOrElse(b, zero), p)
+    }
+    val (due, still) = buckets.partition { case (b, _) => b + step <= wm }
+    due.toSeq.sortBy(_._1).foreach { case (b, a) => close(b, a) }
+    (still, seen)
+  }
+
+  /** The (sum, n) fold of a bucket's values. */
+  private def addValue(acc: (Double, Long), p: TimedPoint): (Double, Long) =
+    (acc._1 + p.value, acc._2 + 1)
+
   /** Tumbling-window aggregates with a watermark: late points beyond
     * `watermarkDelay` are dropped (in append mode) instead of growing
     * state forever. Works on a streaming or batch frame with
@@ -61,9 +187,7 @@ object StreamOps {
       points: DataFrame,
       windowDur: String = "1 hour",
       watermarkDelay: String = "10 minutes"): DataFrame =
-    points
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(points, watermarkDelay)
       .groupBy(col("series"), window(col("event_time"), windowDur))
       .agg(
         avg(col("value")).as("avg_value"),
@@ -96,9 +220,7 @@ object StreamOps {
     require(bad.isEmpty,
       s"checks not expressible in a streaming aggregate: ${bad.mkString(", ")}")
     val aggs = graft.pipeline.Checks.suiteAggs(suite)
-    points
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(points, watermarkDelay)
       .groupBy(window(col("event_time"), windowDur))
       .agg(aggs.head, aggs.tail: _*)
       .select(col("window.start").cast("long").as("window_start"),
@@ -117,9 +239,7 @@ object StreamOps {
       points: DataFrame,
       gap: String = "30 minutes",
       watermarkDelay: String = "10 minutes"): DataFrame =
-    points
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(points, watermarkDelay)
       .groupBy(col("series"), session_window(col("event_time"), gap))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
       .select(
@@ -149,9 +269,7 @@ object StreamOps {
     val v = col("value").cast("double")
     val tv = struct(t.as("t"), v.as("v"))
     val vt = struct(v.as("v"), t.as("t"))
-    points
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(points, watermarkDelay)
       .groupBy(col("series"), window(col("event_time"), s"$step seconds"))
       .agg(
         min(tv).as("__first"), max(tv).as("__last"),
@@ -337,9 +455,7 @@ object StreamOps {
       watermarkDelay: String = "10 minutes"): DataFrame = {
     require(step > 0, "alert evaluation needs a positive bucket step")
     require(forBuckets >= 1, "forBuckets must be >= 1")
-    val bucketed = points
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    val bucketed = watermarked(points, watermarkDelay)
       .groupBy(col("series"), window(col("event_time"), s"$step seconds"))
       .agg(avg(col("value")).as("v"))
       .filter(cond)
@@ -368,10 +484,7 @@ object StreamOps {
       if (points.columns.contains("tags"))
         graft.core.Functions.seriesId(col("series"), col("tags"))
       else graft.core.Functions.seriesIdBare(col("series"))
-    points
-      .withColumn("__sid", sid)
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(points.withColumn("__sid", sid), watermarkDelay)
       .dropDuplicatesWithinWatermark("__sid", "event_time")
       .drop("event_time", "__sid")
   }
@@ -388,9 +501,7 @@ object StreamOps {
       docs: DataFrame,
       windowDur: String = "1 hour",
       watermarkDelay: String = "10 minutes"): DataFrame =
-    docs
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(docs, watermarkDelay)
       .select(col("event_time"),
         explode(array_distinct(split(lower(col("text")), "\\s+"))).as("word"))
       .filter(length(col("word")) > 0)
@@ -422,9 +533,7 @@ object StreamOps {
   def topkPerWindow(points: DataFrame, k: Int, step: Long,
       watermarkDelay: String = "10 minutes"): DataFrame = {
     require(k > 0 && step > 0, "topk needs positive k and bucket step")
-    points
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(points, watermarkDelay)
       .groupBy(window(col("event_time"), s"$step seconds"), col("series"))
       .agg(avg(col("value")).as("avg_value"))
       .groupBy(window(window_time(col("window")), s"$step seconds").as("w2"))
@@ -469,10 +578,7 @@ object StreamOps {
     import spark.implicits._
     require(step > 0 && forBuckets >= 1, "dark-series detection needs a positive horizon")
     val horizon = step * forBuckets
-    points.select(col("series"), col("time").cast("long"), col("value").cast("double"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
-      .as[TimedPoint]
+    timedPoints(points, watermarkDelay)
       .groupByKey(_.series)
       .flatMapGroupsWithState[LastSeen, DarkAlert](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -523,10 +629,7 @@ object StreamOps {
     * + (offsetSecs/step) closed averages — ~26 map entries at hourly
     * buckets/day offset, constant per series, sharded on the natural
     * series key; raw points fold into (sum, n) on arrival and never
-    * accumulate. An event-time timeout closes buckets and garbage-
-    * collects the carry even when a series goes quiet. Late points for
-    * an already-closed bucket are dropped (append-mode aggregation
-    * semantics).
+    * accumulate.
     *
     * Output: (series, bucket, v, v_prev, delta_1d, ratio_1d).
     */
@@ -539,54 +642,30 @@ object StreamOps {
     import spark.implicits._
     require(step > 0 && offsetSecs > 0 && offsetSecs % step == 0,
       "offset must be a positive multiple of the bucket step")
-    points.select(col("series"), col("time").cast("long"), col("value").cast("double"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
-      .as[TimedPoint]
+    timedPoints(points, watermarkDelay)
       .groupByKey(_.series)
-      .flatMapGroupsWithState[DodState, DayOverDay](
+      .flatMapGroupsWithState[BucketMeans, DayOverDay](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (series: String, it: Iterator[TimedPoint], state: GroupState[DodState]) =>
+        (series: String, it: Iterator[TimedPoint], state: GroupState[BucketMeans]) =>
           val wm = state.getCurrentWatermarkMs() / 1000L
-          val st = state.getOption.getOrElse(DodState(Map.empty, Map.empty))
-          // fold new points into open buckets; drop late rows whose
-          // bucket already closed (it is not reopenable once emitted)
-          var open = st.open
-          it.foreach { p =>
-            val b = p.time - math.floorMod(p.time, step)
-            if (b + step > wm || open.contains(b)) {
-              val (s, n) = open.getOrElse(b, (0.0, 0L))
-              open += b -> (s + p.value, n + 1)
-            }
-          }
-          // close every due bucket in ascending order: a bucket closed
-          // earlier in this batch can be the prev of one closed later
+          val st = state.getOption.getOrElse(BucketMeans(Map.empty, Map.empty))
           var closed = st.closed
           val out = Seq.newBuilder[DayOverDay]
-          open.keys.toSeq.sorted.foreach { b =>
-            if (b + step <= wm) {
-              val (s, n) = open(b)
-              open -= b
+          val (open, _) = closeDue(st.open, it, wm, step, (0.0, 0L))(_.time, addValue) {
+            case (b, (s, n)) =>
               val v = s / n
               closed += b -> v
               closed.get(b - offsetSecs).foreach { pv =>
                 out += DayOverDay(series, b, v, pv, v - pv,
                   if (pv != 0.0) Some(v / pv) else None)
               }
-            }
           }
           // retain a closed bucket only while its pairing target can
           // still close
           closed = closed.filter { case (b, _) => wm < b + offsetSecs + step }
-          if (open.isEmpty && closed.isEmpty) state.remove()
-          else {
-            state.update(DodState(open, closed))
-            // next event-time deadline: earliest open close, else
-            // earliest carry eviction — both strictly ahead of wm
-            val due = (open.keys.map(_ + step) ++
-              closed.keys.map(_ + offsetSecs + step)).min
-            state.setTimeoutTimestamp(due * 1000L)
-          }
+          settle(state, wm, open.isEmpty && closed.isEmpty,
+            open.keys.map(_ + step) ++ closed.keys.map(_ + offsetSecs + step))(
+            BucketMeans(open, closed))
           out.result().iterator
       }
   }
@@ -628,10 +707,8 @@ object StreamOps {
     require(step > 0, "lttb needs a positive bucket step")
     val tie = tieCol.map(c => col(c).cast("double"))
       .getOrElse(col("value").cast("double"))
-    points.select(col("series"), col("time").cast("long"),
-        col("value").cast("double"), tie.as("tie"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(points.select(col("series"), col("time").cast("long"),
+        col("value").cast("double"), tie.as("tie")), watermarkDelay)
       .as[TiedPoint]
       .groupByKey(_.series)
       .flatMapGroupsWithState[LttbState, LttbPoint](
@@ -639,54 +716,39 @@ object StreamOps {
         (series: String, it: Iterator[TiedPoint], state: GroupState[LttbState]) =>
           val wm = state.getCurrentWatermarkMs() / 1000L
           val st = state.getOption.getOrElse(LttbState(Map.empty, None, None, 0L))
-          var open = st.open
-          var lastSeen = st.lastSeen
-          it.foreach { p =>
-            val b = p.time - math.floorMod(p.time, step)
-            lastSeen = math.max(lastSeen, p.time)
-            if (b + step > wm || open.contains(b))
-              open += b -> (open.getOrElse(b, Vector.empty) :+ ((p.time, p.value, p.tie)))
-          }
           var pending = st.pending
           var prevAnchor = st.prevAnchor
           val out = Seq.newBuilder[LttbPoint]
-          open.keys.toSeq.sorted.foreach { b =>
-            if (b + step <= wm) {
-              val pts = open(b); open -= b
-              // (time, tie) ascending — the batch wIn ordering
-              val a0 = pts.minBy(p => (p._1, p._3))
-              val anchor = (a0._1, a0._2)
-              pending match {
-                case Some((pb, ppts)) =>
-                  prevAnchor.foreach { case (pt, pv) =>
-                    val (nt, nv) = anchor
-                    val best = ppts.maxBy { case (t, v, k) =>
-                      val area = math.abs((pt - nt) * (v - pv) - (pt - t) * (nv - pv))
-                      (area, -t.toDouble, -k)
-                    }
-                    val area = math.abs((pt - nt) * (best._2 - pv) -
-                      (pt - best._1) * (nv - pv))
-                    out += LttbPoint(series, pb, best._1, best._2,
-                      math.floor(area * 1e4 + 0.5) / 1e4)
+          val (open, seen) = closeDue(st.open, it, wm, step,
+              Vector.empty[(Long, Double, Double)])(
+              _.time, (pts, p) => pts :+ ((p.time, p.value, p.tie))) { (b, pts) =>
+            // (time, tie) ascending — the batch wIn ordering
+            val a0 = pts.minBy(p => (p._1, p._3))
+            val anchor = (a0._1, a0._2)
+            pending match {
+              case Some((pb, ppts)) =>
+                prevAnchor.foreach { case (pt, pv) =>
+                  val (nt, nv) = anchor
+                  val best = ppts.maxBy { case (t, v, k) =>
+                    val area = math.abs((pt - nt) * (v - pv) - (pt - t) * (nv - pv))
+                    (area, -t.toDouble, -k)
                   }
-                  prevAnchor = Some { val m = ppts.minBy(p => (p._1, p._3)); (m._1, m._2) }
-                case None => ()
-              }
-              pending = Some((b, pts))
+                  val area = math.abs((pt - nt) * (best._2 - pv) -
+                    (pt - best._1) * (nv - pv))
+                  out += LttbPoint(series, pb, best._1, best._2,
+                    math.floor(area * 1e4 + 0.5) / 1e4)
+                }
+                prevAnchor = Some { val m = ppts.minBy(p => (p._1, p._3)); (m._1, m._2) }
+              case None => ()
             }
+            pending = Some((b, pts))
           }
-          if (open.isEmpty && pending.isEmpty && wm >= lastSeen + retentionSecs) {
-            state.remove(); out.result().iterator
-          } else if (open.isEmpty && pending.nonEmpty && wm >= lastSeen + retentionSecs) {
-            // dark series: the trailing bucket can never emit — drop it
-            state.remove(); out.result().iterator
-          } else {
-            state.update(LttbState(open, pending, prevAnchor, lastSeen))
-            val due = (open.keys.map(_ + step) ++ Iterable(lastSeen + retentionSecs))
-              .filter(_ > wm)
-            if (due.nonEmpty) state.setTimeoutTimestamp(due.min * 1000L)
-            out.result().iterator
-          }
+          val lastSeen = math.max(st.lastSeen, seen)
+          // a dark series' trailing bucket can never emit: retention drops it
+          settle(state, wm, open.isEmpty && wm >= lastSeen + retentionSecs,
+            open.keys.map(_ + step) ++ Iterable(lastSeen + retentionSecs))(
+            LttbState(open, pending, prevAnchor, lastSeen))
+          out.result().iterator
       }
   }
 
@@ -710,10 +772,8 @@ object StreamOps {
       watermarkDelay: String = "10 minutes",
       retentionSecs: Long = 30 * 86400L): Dataset[AttributionCredit] = {
     import spark.implicits._
-    events.select(col("user_id").cast("long"), col("event_type"),
-        col("time").cast("long"), col("event_id").cast("long"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(events.select(col("user_id").cast("long"), col("event_type"),
+        col("time").cast("long"), col("event_id").cast("long")), watermarkDelay)
       .as[(Long, String, Long, Long, java.sql.Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[AttrState, AttributionCredit](
@@ -722,28 +782,18 @@ object StreamOps {
             state: GroupState[AttrState]) =>
           val wm = state.getCurrentWatermarkMs() / 1000L
           val st = state.getOption.getOrElse(AttrState(Nil, None, None, 0L))
-          var pending = st.pending ++ it.map(e => (e._3, e._4, e._2))
-          val lastSeen = (st.lastSeen +: pending.map(_._1)).max
-          val (ready, wait) = pending.partition(_._1 <= wm)
-          pending = wait
+          val c = confirm(st.pending, it.map(e => (e._3, e._4, e._2)), st.lastSeen,
+            wm, retentionSecs)(_._1)
           var first = st.first
           var lastNp = st.lastNp
           val out = Seq.newBuilder[AttributionCredit]
-          ready.sortBy(e => (e._1, e._2)).foreach { case (t, _, et) =>
+          c.ready.sortBy(e => (e._1, e._2)).foreach { case (t, _, et) =>
             if (first.isEmpty) first = Some(et)
             if (et == convType) out += AttributionCredit(user, first.get, lastNp, t)
             else lastNp = Some(et)
           }
-          val res = out.result().iterator
-          if (pending.isEmpty && wm >= lastSeen + retentionSecs) {
-            state.remove(); res
-          } else {
-            state.update(AttrState(pending, first, lastNp, lastSeen))
-            val due = (pending.map(_._1 + 1) :+ (lastSeen + retentionSecs))
-              .filter(_ > wm)
-            if (due.nonEmpty) state.setTimeoutTimestamp(due.min * 1000L)
-            res
-          }
+          settle(state, wm, c.idle, c.dues)(AttrState(c.pending, first, lastNp, c.lastSeen))
+          out.result().iterator
       }
   }
 
@@ -762,9 +812,7 @@ object StreamOps {
     *
     * State per series = open-day histograms (≤ watermark-delay days ×
     * `bins` counts) + closed-day histograms retained one pairing horizon
-    * (2 days) — constant, sharded on series; event-time timeout closes
-    * days and garbage-collects quiet series (the [[dayOverDay]]
-    * discipline).
+    * (2 days) — constant, sharded on series.
     */
   def psiDayOverDay(
       spark: SparkSession,
@@ -776,55 +824,40 @@ object StreamOps {
       watermarkDelay: String = "10 minutes"): Dataset[SeriesPsi] = {
     import spark.implicits._
     require(hi > lo && bins > 0, "psi needs hi > lo and positive bins")
-    points.select(col("series"), col("time").cast("long"), col("value").cast("double"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
-      .as[TimedPoint]
+    timedPoints(points, watermarkDelay)
       .groupByKey(_.series)
       .flatMapGroupsWithState[PsiState, SeriesPsi](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (series: String, it: Iterator[TimedPoint], state: GroupState[PsiState]) =>
           val wm = state.getCurrentWatermarkMs() / 1000L
           val st = state.getOption.getOrElse(PsiState(Map.empty, Map.empty))
-          var open = st.open
-          it.foreach { p =>
-            val d = p.time - math.floorMod(p.time, daySecs)
-            if (d + daySecs > wm || open.contains(d)) {
-              val bin = math.max(0, math.min(bins - 1,
-                math.floor((p.value - lo) / ((hi - lo) / bins)).toInt))
-              val h = open.getOrElse(d, Map.empty[Int, Long])
-              open += d -> (h + (bin -> (h.getOrElse(bin, 0L) + 1L)))
-            }
-          }
           var closed = st.closed
           val out = Seq.newBuilder[SeriesPsi]
-          open.keys.toSeq.sorted.foreach { d =>
-            if (d + daySecs <= wm) {
-              val h = open(d); open -= d
-              closed += d -> h
-              closed.get(d - daySecs).foreach { hp =>
-                val na = hp.values.sum.toDouble
-                val nb = h.values.sum.toDouble
-                val eps = 1e-4
-                val psi = (0 until bins).map { b =>
-                  val pa = hp.getOrElse(b, 0L) / na
-                  val pb = h.getOrElse(b, 0L) / nb
-                  (pa + eps - (pb + eps)) * math.log((pa + eps) / (pb + eps))
-                }.sum
-                out += SeriesPsi(series, d,
-                  math.floor(psi * 1e4 + 0.5) / 1e4, nb.toLong, na.toLong)
-              }
+          val (open, _) = closeDue(st.open, it, wm, daySecs, Map.empty[Int, Long])(_.time,
+            { (h, p) =>
+              val bin = math.max(0, math.min(bins - 1,
+                math.floor((p.value - lo) / ((hi - lo) / bins)).toInt))
+              h + (bin -> (h.getOrElse(bin, 0L) + 1L))
+            }) { (d, h) =>
+            closed += d -> h
+            closed.get(d - daySecs).foreach { hp =>
+              val na = hp.values.sum.toDouble
+              val nb = h.values.sum.toDouble
+              val eps = 1e-4
+              val psi = (0 until bins).map { b =>
+                val pa = hp.getOrElse(b, 0L) / na
+                val pb = h.getOrElse(b, 0L) / nb
+                (pa + eps - (pb + eps)) * math.log((pa + eps) / (pb + eps))
+              }.sum
+              out += SeriesPsi(series, d,
+                math.floor(psi * 1e4 + 0.5) / 1e4, nb.toLong, na.toLong)
             }
           }
           // retain a closed day only while the NEXT day can still close
           closed = closed.filter { case (d, _) => wm < d + 2 * daySecs }
-          if (open.isEmpty && closed.isEmpty) state.remove()
-          else {
-            state.update(PsiState(open, closed))
-            val due = (open.keys.map(_ + daySecs) ++
-              closed.keys.map(_ + 2 * daySecs)).min
-            state.setTimeoutTimestamp(due * 1000L)
-          }
+          settle(state, wm, open.isEmpty && closed.isEmpty,
+            open.keys.map(_ + daySecs) ++ closed.keys.map(_ + 2 * daySecs))(
+            PsiState(open, closed))
           out.result().iterator
       }
   }
@@ -837,14 +870,10 @@ object StreamOps {
     * window), with population σ; `z` is None on a zero-σ frame, and
     * `anomaly` fires at |z| ≥ `threshold`.
     *
-    * Same state discipline as [[dayOverDay]]: `open` buckets fold raw
-    * points into (sum, n) on arrival; `closed` retains only averages
-    * inside the lookback horizon — evicted the instant the last bucket
-    * that could include them closes (wm ≥ b + lookback + step). State per
-    * series is (delay/step) open + (lookback/step) closed entries,
-    * constant, sharded on the series key; an event-time timeout closes
-    * buckets and garbage-collects when a series goes quiet. Late points
-    * for closed buckets are dropped (append-mode semantics).
+    * `closed` retains only averages inside the lookback horizon —
+    * evicted the instant the last bucket that could include them closes
+    * (wm ≥ b + lookback + step). State per series is (delay/step) open +
+    * (lookback/step) closed entries, constant, sharded on the series key.
     */
   def bucketZScore(
       spark: SparkSession,
@@ -856,30 +885,17 @@ object StreamOps {
     import spark.implicits._
     require(step > 0 && lookbackSecs > 0 && lookbackSecs % step == 0,
       "lookback must be a positive multiple of the bucket step")
-    points.select(col("series"), col("time").cast("long"), col("value").cast("double"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
-      .as[TimedPoint]
+    timedPoints(points, watermarkDelay)
       .groupByKey(_.series)
-      .flatMapGroupsWithState[ZScoreState, BucketZ](
+      .flatMapGroupsWithState[BucketMeans, BucketZ](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (series: String, it: Iterator[TimedPoint], state: GroupState[ZScoreState]) =>
+        (series: String, it: Iterator[TimedPoint], state: GroupState[BucketMeans]) =>
           val wm = state.getCurrentWatermarkMs() / 1000L
-          val st = state.getOption.getOrElse(ZScoreState(Map.empty, Map.empty))
-          var open = st.open
-          it.foreach { p =>
-            val b = p.time - math.floorMod(p.time, step)
-            if (b + step > wm || open.contains(b)) {
-              val (s, n) = open.getOrElse(b, (0.0, 0L))
-              open += b -> (s + p.value, n + 1)
-            }
-          }
+          val st = state.getOption.getOrElse(BucketMeans(Map.empty, Map.empty))
           var closed = st.closed
           val out = Seq.newBuilder[BucketZ]
-          open.keys.toSeq.sorted.foreach { b =>
-            if (b + step <= wm) {
-              val (s, n) = open(b)
-              open -= b
+          val (open, _) = closeDue(st.open, it, wm, step, (0.0, 0L))(_.time, addValue) {
+            case (b, (s, n)) =>
               val v = s / n
               closed += b -> v
               // sorted: a Map's iteration order is arbitrary, and the
@@ -893,16 +909,11 @@ object StreamOps {
               val z = if (sigma > 0) Some((v - mu) / sigma) else None
               out += BucketZ(series, b, v, mu, sigma, z,
                 z.exists(x => math.abs(x) >= threshold))
-            }
           }
           closed = closed.filter { case (b, _) => wm < b + lookbackSecs + step }
-          if (open.isEmpty && closed.isEmpty) state.remove()
-          else {
-            state.update(ZScoreState(open, closed))
-            val due = (open.keys.map(_ + step) ++
-              closed.keys.map(_ + lookbackSecs + step)).min
-            state.setTimeoutTimestamp(due * 1000L)
-          }
+          settle(state, wm, open.isEmpty && closed.isEmpty,
+            open.keys.map(_ + step) ++ closed.keys.map(_ + lookbackSecs + step))(
+            BucketMeans(open, closed))
           out.result().iterator
       }
   }
@@ -912,16 +923,11 @@ object StreamOps {
     * i−1's completion (step 0 at its first event). Emits a
     * [[FunnelProgress]] row each time a user's stage advances.
     *
-    * Exactness under disorder: an event only FOLDS into the funnel once
-    * the watermark passes its time — until then it sits in the per-user
-    * `pending` buffer — so events fold in true event-time order (a
-    * straggling earlier signup cannot be preempted by a click that
-    * arrived first). Spark drops watermark-late rows before the operator,
-    * closing the other direction. Pending is bounded by the user's event
-    * rate × the watermark delay; confirmed state is `steps.size` longs.
-    * `retentionSecs` bounds idle-user state: a user with nothing pending
-    * and no activity for that long is dropped (the standard conversion-
-    * window semantics — a funnel that never closes is a memory leak at
+    * Exactness under disorder comes from the confirmation protocol
+    * (object doc): events fold in true event-time order, so a straggling
+    * earlier signup cannot be preempted by a click that arrived first.
+    * Confirmed state is `steps.size` longs; `retentionSecs` is the
+    * conversion window (a funnel that never closes is a memory leak at
     * 100 TB user counts).
     */
   def funnel(
@@ -932,15 +938,10 @@ object StreamOps {
       retentionSecs: Long = 30 * 86400L): Dataset[FunnelProgress] = {
     import spark.implicits._
     require(steps.nonEmpty, "funnel needs at least one step")
-    val stepIdx = steps.zipWithIndex.toMap
-    events.select(col("user_id").cast("long"),
-        coalesce(element_at(
-          org.apache.spark.sql.functions.typedlit(stepIdx), col("event_type")),
-          lit(-1)).cast("int").as("step"),
-        col("time").cast("long"))
-      .filter(col("step") >= 0)
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    val step = coalesce(element_at(typedlit(steps.zipWithIndex.toMap), col("event_type")),
+      lit(-1)).cast("int")
+    watermarked(events.select(col("user_id").cast("long"), step.as("step"),
+        col("time").cast("long")).filter(col("step") >= 0), watermarkDelay)
       .as[(Long, Int, Long, java.sql.Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[FunnelState, FunnelProgress](
@@ -949,35 +950,22 @@ object StreamOps {
             state: GroupState[FunnelState]) =>
           val wm = state.getCurrentWatermarkMs() / 1000L
           val st = state.getOption.getOrElse(FunnelState(Nil, Nil, 0L))
-          var pending = st.pending ++ it.map(e => (e._3, e._2))
-          val lastSeen = (st.lastSeen +: pending.map(_._1)).max
-          // confirm: fold events whose time the watermark has passed, in
+          val c = confirm(st.pending, it.map(e => (e._3, e._2)), st.lastSeen,
+            wm, retentionSecs)(_._1)
+          var times = st.times
           // (time, step) order — true event-time order, ties resolved
           // earlier-step-first so same-second signup→click completes
-          val (ready, wait) = pending.partition(_._1 <= wm)
-          pending = wait
-          var times = st.times
-          val before = times.size
-          ready.sorted.foreach { case (t, i) =>
+          c.ready.sorted.foreach { case (t, i) =>
             // only the NEXT step can complete; an event for a later step
             // (or a repeat of a done one) is exactly what the batch
             // min-at-or-after chain excludes
             if (i == times.size && (i == 0 || t >= times(i - 1)))
               times = times :+ t
           }
-          val out =
-            if (times.size > before)
-              Iterator.single(FunnelProgress(user, times.size, times))
-            else Iterator.empty
-          if (pending.isEmpty && wm >= lastSeen + retentionSecs) {
-            state.remove(); out
-          } else {
-            state.update(FunnelState(pending, times, lastSeen))
-            val due = (pending.map(_._1 + 1) :+ (lastSeen + retentionSecs))
-              .filter(_ > wm)
-            if (due.nonEmpty) state.setTimeoutTimestamp(due.min * 1000L)
-            out
-          }
+          settle(state, wm, c.idle, c.dues)(FunnelState(c.pending, times, c.lastSeen))
+          if (times.size > st.times.size)
+            Iterator.single(FunnelProgress(user, times.size, times))
+          else Iterator.empty
       }
   }
 
@@ -989,19 +977,11 @@ object StreamOps {
     * per-user event ORDER from out-of-order micro-batches — is what this
     * operator owns.
     *
-    * Mechanics (the [[funnel]] confirmation pattern): state buffers each
-    * user's pending events; an event is *confirmed* — folded into the
-    * edge stream, in (time, event_id) order, the batch twin's exact sort
-    * key — only once the watermark passes its timestamp, so a straggler
-    * inside the delay can still land between two already-buffered events.
-    * State carries the last CONFIRMED event as the next edge's source; a
-    * timeout at the earliest pending confirmation time (or
-    * `lastSeen + retentionSecs`, which evicts the idle user) keeps
-    * progress independent of new arrivals.
+    * Confirmed events (object doc) fold in (time, event_id) order, the
+    * batch twin's exact sort key; state carries the last confirmed event
+    * as the next edge's source.
     *
-    * Scale shape: state per user = last event + the ≤ watermark-delay
-    * pending buffer, sharded on user_id — the sessionize boundedness
-    * stance; output is edge-at-a-time, nothing global.
+    * Output is edge-at-a-time, nothing global.
     */
   def transitions(
       spark: SparkSession,
@@ -1009,10 +989,8 @@ object StreamOps {
       watermarkDelay: String = "10 minutes",
       retentionSecs: Long = 30 * 86400L): Dataset[TransitionEdge] = {
     import spark.implicits._
-    events.select(col("user_id").cast("long"), col("event_type"),
-        col("time").cast("long"), col("event_id").cast("long"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(events.select(col("user_id").cast("long"), col("event_type"),
+        col("time").cast("long"), col("event_id").cast("long")), watermarkDelay)
       .as[(Long, String, Long, Long, java.sql.Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[TransState, TransitionEdge](
@@ -1021,29 +999,19 @@ object StreamOps {
             state: GroupState[TransState]) =>
           val wm = state.getCurrentWatermarkMs() / 1000L
           val st = state.getOption.getOrElse(TransState(Nil, None, 0L))
-          var pending = st.pending ++ it.map(e => (e._3, e._4, e._2))
-          val lastSeen = (st.lastSeen +: pending.map(_._1)).max
-          val (ready, wait) = pending.partition(_._1 <= wm)
-          pending = wait
+          val c = confirm(st.pending, it.map(e => (e._3, e._4, e._2)), st.lastSeen,
+            wm, retentionSecs)(_._1)
           var last = st.last
           val edges = Seq.newBuilder[TransitionEdge]
           // (time, event_id) ascending — the batch twin's sort key
-          ready.sortBy(e => (e._1, e._2)).foreach { case (t, _, et) =>
+          c.ready.sortBy(e => (e._1, e._2)).foreach { case (t, _, et) =>
             last.foreach { case (pt, pet) =>
               edges += TransitionEdge(user, pet, et, pt, t)
             }
             last = Some((t, et))
           }
-          val out = edges.result().iterator
-          if (pending.isEmpty && wm >= lastSeen + retentionSecs) {
-            state.remove(); out
-          } else {
-            state.update(TransState(pending, last, lastSeen))
-            val due = (pending.map(_._1 + 1) :+ (lastSeen + retentionSecs))
-              .filter(_ > wm)
-            if (due.nonEmpty) state.setTimeoutTimestamp(due.min * 1000L)
-            out
-          }
+          settle(state, wm, c.idle, c.dues)(TransState(c.pending, last, c.lastSeen))
+          edges.result().iterator
       }
   }
 
@@ -1054,19 +1022,16 @@ object StreamOps {
 
   /** Streaming SCD2 — the live-CDC twin of
     * [[graft.operators.Scd2.history]]: per key, fold watermark-CONFIRMED
-    * observations in (time, event_id) order (the [[transitions]]
-    * confirmation pattern, so a straggler inside the delay still lands
-    * between already-buffered observations) and emit each episode the
-    * moment a changed attribute CLOSES it — (key, attr, valid_from,
-    * valid_to, version, is_current=false), append mode, bit-equal to
-    * the batch operator's closed rows on the same data (StreamingSpec
-    * pins it). The OPEN episode lives in state (it is the key's current
-    * dimension row); retention eviction flushes it once with
-    * is_current=true, exactly the batch operator's current row.
+    * observations (object doc) in (time, event_id) order and emit each
+    * episode the moment a changed attribute CLOSES it — (key, attr,
+    * valid_from, valid_to, version, is_current=false), append mode,
+    * bit-equal to the batch operator's closed rows on the same data
+    * (StreamingSpec pins it). The OPEN episode lives in state (it is the
+    * key's current dimension row); retention eviction flushes it once
+    * with is_current=true, exactly the batch operator's current row.
     *
-    * State per key = open episode (3 fields) + the ≤ watermark-delay
-    * pending buffer, sharded on the key — the sessionize boundedness
-    * stance. Same-attribute observations collapse in-state (no output,
+    * State per key = open episode (3 fields) + the pending buffer.
+    * Same-attribute observations collapse in-state (no output,
     * no growth): a k-state dimension emits O(changes), never O(events).
     */
   def scd2(
@@ -1075,10 +1040,8 @@ object StreamOps {
       watermarkDelay: String = "10 minutes",
       retentionSecs: Long = 30 * 86400L): Dataset[Scd2Ep] = {
     import spark.implicits._
-    events.select(col("key").cast("long"), col("time").cast("long"),
-        col("event_id").cast("long"), col("attr").cast("string"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(events.select(col("key").cast("long"), col("time").cast("long"),
+        col("event_id").cast("long"), col("attr").cast("string")), watermarkDelay)
       .as[(Long, Long, Long, String, java.sql.Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[Scd2St, Scd2Ep](
@@ -1087,14 +1050,12 @@ object StreamOps {
             state: GroupState[Scd2St]) =>
           val wm = state.getCurrentWatermarkMs() / 1000L
           val st = state.getOption.getOrElse(Scd2St(Nil, None, 0L))
-          var pending = st.pending ++ it.map(e => (e._2, e._3, e._4))
-          val lastSeen = (st.lastSeen +: pending.map(_._1)).max
-          val (ready, wait) = pending.partition(_._1 <= wm)
-          pending = wait
+          val c = confirm(st.pending, it.map(e => (e._2, e._3, e._4)), st.lastSeen,
+            wm, retentionSecs)(_._1)
           var open = st.open
           val eps = Seq.newBuilder[Scd2Ep]
           // (time, event_id) ascending — the batch operator's sort key
-          ready.sortBy(e => (e._1, e._2)).foreach { case (t, _, a) =>
+          c.ready.sortBy(e => (e._1, e._2)).foreach { case (t, _, a) =>
             open match {
               case None => open = Some((t, a, 1))
               case Some((vf, pa, v)) if a != pa =>
@@ -1103,20 +1064,12 @@ object StreamOps {
               case _ => () // unchanged attribute: collapse in-state
             }
           }
-          if (pending.isEmpty && wm >= lastSeen + retentionSecs) {
+          if (settle(state, wm, c.idle, c.dues)(Scd2St(c.pending, open, c.lastSeen)))
             // idle eviction: flush the open episode as the current row
             open.foreach { case (vf, a, v) =>
               eps += Scd2Ep(key, a, vf, None, v, is_current = true)
             }
-            state.remove()
-            eps.result().iterator
-          } else {
-            state.update(Scd2St(pending, open, lastSeen))
-            val due = (pending.map(_._1 + 1) :+ (lastSeen + retentionSecs))
-              .filter(_ > wm)
-            if (due.nonEmpty) state.setTimeoutTimestamp(due.min * 1000L)
-            eps.result().iterator
-          }
+          eps.result().iterator
       }
   }
 
@@ -1147,11 +1100,9 @@ object StreamOps {
       watermarkDelay: String = "10 minutes",
       retentionSecs: Long = 30 * 86400L): Dataset[EnrichedFact] = {
     import spark.implicits._
-    events.select(col("key").cast("long"), col("time").cast("long"),
+    watermarked(events.select(col("key").cast("long"), col("time").cast("long"),
         col("event_id").cast("long"), col("kind").cast("string"),
-        col("attr").cast("string"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+        col("attr").cast("string")), watermarkDelay)
       .as[(Long, Long, Long, String, String, java.sql.Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[LookupSt, EnrichedFact](
@@ -1160,14 +1111,12 @@ object StreamOps {
             state: GroupState[LookupSt]) =>
           val wm = state.getCurrentWatermarkMs() / 1000L
           val st = state.getOption.getOrElse(LookupSt(Nil, None, 0L))
-          var pending = st.pending ++ it.map(e => (e._2, e._3, e._4, e._5))
-          val lastSeen = (st.lastSeen +: pending.map(_._1)).max
-          val (ready, wait) = pending.partition(_._1 <= wm)
-          pending = wait
+          val c = confirm(st.pending, it.map(e => (e._2, e._3, e._4, e._5)), st.lastSeen,
+            wm, retentionSecs)(_._1)
           var open = st.open
           val out = Seq.newBuilder[EnrichedFact]
           // (time, obs-before-fact, event_id): the as-of equality match
-          ready.sortBy(e => (e._1, if (e._3 == "obs") 0 else 1, e._2))
+          c.ready.sortBy(e => (e._1, if (e._3 == "obs") 0 else 1, e._2))
             .foreach { case (t, oid, kind, a) =>
               if (kind == "obs") open match {
                 case None => open = Some((t, a, 1))
@@ -1180,15 +1129,8 @@ object StreamOps {
                 case None => EnrichedFact(key, t, oid, None, None, None)
               })
             }
-          if (pending.isEmpty && wm >= lastSeen + retentionSecs) {
-            state.remove(); out.result().iterator
-          } else {
-            state.update(LookupSt(pending, open, lastSeen))
-            val due = (pending.map(_._1 + 1) :+ (lastSeen + retentionSecs))
-              .filter(_ > wm)
-            if (due.nonEmpty) state.setTimeoutTimestamp(due.min * 1000L)
-            out.result().iterator
-          }
+          settle(state, wm, c.idle, c.dues)(LookupSt(c.pending, open, c.lastSeen))
+          out.result().iterator
       }
   }
 
@@ -1252,9 +1194,8 @@ object StreamOps {
     val h = hash31(col("word"))
     def bucket(i: Int): Column =
       pmod(pmod(h * lit(CmsA(i)) + lit(CmsB(i)), lit(CmsP)), lit(width.toLong))
-    words.select(col("word").cast("string"), col("time").cast("long"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(words.select(col("word").cast("string"), col("time").cast("long")),
+        watermarkDelay)
       .select(col("event_time"),
         posexplode(array(CmsA.indices.map(bucket): _*)).as(Seq("row_i", "bucket")))
       .groupBy(window(col("event_time"), s"$windowSecs seconds").as("w"),
@@ -1300,26 +1241,13 @@ object StreamOps {
     require(period >= 2, "seasonal period must be >= 2")
     require(step > 0, "step must be positive")
     val m = period
-    points.select(col("series"), col("time").cast("long"), col("value").cast("double"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
-      .as[TimedPoint]
+    timedPoints(points, watermarkDelay)
       .groupByKey(_.series)
       .flatMapGroupsWithState[HwState, HwPoint](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (series: String, it: Iterator[TimedPoint], state: GroupState[HwState]) =>
           val wm = state.getCurrentWatermarkMs() / 1000L
           val s0 = state.getOption.getOrElse(HwState(Map.empty, Vector.empty, Vector.empty, 0L))
-          var open = s0.open
-          var lastSeen = s0.lastSeen
-          it.foreach { p =>
-            val b = p.time - math.floorMod(p.time, step)
-            lastSeen = math.max(lastSeen, p.time)
-            if (b + step > wm || open.contains(b)) {
-              val (sum, n) = open.getOrElse(b, (0.0, 0L))
-              open += b -> (sum + p.value, n + 1)
-            }
-          }
           var buf = s0.buf
           var st = s0.st
           val out = Seq.newBuilder[HwPoint]
@@ -1331,9 +1259,8 @@ object StreamOps {
             st = Vector(l2, b2) ++ st.slice(3, m + 2) :+ sN
             out += HwPoint(series, bucket, st(0), st(1), st(0) + st(1) + st(2))
           }
-          open.keys.toSeq.sorted.foreach { b =>
-            if (b + step <= wm) {
-              val (sum, n) = open(b); open -= b
+          val (open, seen) = closeDue(s0.open, it, wm, step, (0.0, 0L))(_.time, addValue) {
+            case (b, (sum, n)) =>
               val mean = math.floor(sum / n * 1e6 + 0.5) / 1e6
               if (st.nonEmpty) fold(b, mean)
               else {
@@ -1347,17 +1274,12 @@ object StreamOps {
                   buf = Vector.empty
                 }
               }
-            }
           }
-          if (open.isEmpty && wm >= lastSeen + retentionSecs) {
-            state.remove(); out.result().iterator
-          } else {
-            state.update(HwState(open, buf, st, lastSeen))
-            val due = (open.keys.map(_ + step) ++ Iterable(lastSeen + retentionSecs))
-              .filter(_ > wm)
-            if (due.nonEmpty) state.setTimeoutTimestamp(due.min * 1000L)
-            out.result().iterator
-          }
+          val lastSeen = math.max(s0.lastSeen, seen)
+          settle(state, wm, open.isEmpty && wm >= lastSeen + retentionSecs,
+            open.keys.map(_ + step) ++ Iterable(lastSeen + retentionSecs))(
+            HwState(open, buf, st, lastSeen))
+          out.result().iterator
       }
   }
 
@@ -1404,9 +1326,8 @@ object StreamOps {
     require(k >= 2, "heavy hitters needs k >= 2")
     require(windowSecs > 0, "windowSecs must be positive")
     require(numShards >= 1, "numShards must be >= 1")
-    words.select(col("word").cast("string"), col("time").cast("long"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(words.select(col("word").cast("string"), col("time").cast("long")),
+        watermarkDelay)
       .withColumn("window", col("time") - pmod(col("time"), lit(windowSecs)))
       .withColumn("shard", pmod(hash(col("word")), lit(numShards)).cast("int"))
       .as[HhEvent]
@@ -1454,41 +1375,37 @@ object StreamOps {
     * wall ("a retrieval tier that re-indexes the corpus per batch"):
     * cost per trigger ∝ batch size + touched-bucket bytes.
     *
-    * Delivery: foreachBatch is at-least-once and `append` is NOT
-    * idempotent, so a `_last_batch` sidecar (written through a checked
-    * rename AFTER the append completes) records the last fully-applied
-    * batch id; a replayed batch id ≤ sidecar is skipped. A crash
-    * mid-append (after some bucket swaps, before the sidecar) still
-    * requires a rebuild — the batch operator's documented contract;
-    * StreamingSpec pins multi-wave append-then-probe ≡ full rebuild and
-    * the replay guard.
+    * Delivery is the replay-guarded one (object doc), the sidecar next to
+    * the index; StreamingSpec pins multi-wave append-then-probe ≡ full
+    * rebuild and the replay guard.
     */
   def indexMaintenance(docs: DataFrame, path: String, checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    guardedSink(docs, path, checkpoint, trigger) { b =>
+      graft.pipeline.TextIndex.append(b.sparkSession, b, path)
+    }
+
+  /** `stream`'s micro-batches applied by `body` behind the replay guard
+    * kept in `guardDir` (object doc).
+    */
+  private def guardedSink(stream: DataFrame, guardDir: String, checkpoint: String,
+      trigger: Trigger)(body: DataFrame => Unit): StreamingQuery =
+    stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withReplayGuard(path, batchId, batch) { b =>
-          graft.pipeline.TextIndex.append(b.sparkSession, b, path)
-        }
+        withReplayGuard(guardDir, batchId, batch)(body)
       }
       .start()
 
-  /** At-least-once → effectively-once guard for foreachBatch sinks whose
-    * append is NOT idempotent: a `_last_batch` sidecar (written through a
-    * checked rename AFTER the body completes) records the last
-    * fully-applied batch id; replayed ids ≤ sidecar are skipped. A crash
-    * mid-body (after some writes, before the sidecar) still requires a
-    * rebuild — the documented contract of both maintenance sinks.
+  /** Apply `body` to a non-empty `batch` whose id is above the one in
+    * `path/_last_batch`, then record the id there.
     */
   private def withReplayGuard(path: String, batchId: Long, batch: DataFrame)(
       body: DataFrame => Unit): Unit = {
-    val spark = batch.sparkSession
+    val conf = batch.sparkSession.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(s"$path/_last_batch")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = p.getFileSystem(conf)
     val last: Long =
       if (!fs.exists(p)) -1L
       else {
@@ -1508,67 +1425,76 @@ object StreamOps {
       val tmp = new org.apache.hadoop.fs.Path(s"$path/_last_batch.tmp")
       val out = fs.create(tmp, true)
       try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        p.toUri, spark.sessionState.newHadoopConf())
-      fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
+        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
   }
+
+  private def pathExists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
+
+  /** The distinct `unit`-aligned floors of `batch`'s `time`: the days or
+    * hours it touches, metadata-sized (bounded by the batch's span).
+    */
+  private def touched(batch: DataFrame, unit: Long): Seq[Long] =
+    batch.select(col("time") - pmod(col("time"), lit(unit)))
+      .distinct().collect().map(_.getLong(0)).toSeq
+
+  /** A cell table's update for one batch, staged: the stored cells of
+    * `days` (a partition-pruned read of `dir`, or none when `stored` is
+    * false) unioned with the batch's `fresh` cells, merged, and
+    * materialised, because the plan reads the path [[publishDays]]
+    * replaces.
+    */
+  private def stageDays(dir: String, stored: Boolean, days: Seq[Long], fresh: DataFrame)(
+      merge: DataFrame => DataFrame): DataFrame = {
+    val current =
+      if (!stored) fresh.limit(0)
+      else fresh.sparkSession.read.parquet(dir)
+        .filter(col("day").isin(days: _*))
+        .select(fresh.columns.map(col).toSeq: _*)
+    merge(current.unionByName(fresh)).localCheckpoint(true)
+  }
+
+  /** Overwrite exactly the `day` partitions `cells` carries in `dir`. */
+  private def publishDays(dir: String, cells: DataFrame): Unit =
+    cells.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").parquet(dir)
 
   /** Streaming maintenance of the at-rest HLL cell store
     * (`Approx.hllCells`' schema, the store `q_ts_hll_rollup` /
     * `q_ts_rolling_ndv` read): per micro-batch, sketch the batch into
-    * (series, day) cells, MERGE them with the stored cells of the
-    * touched days only (partition-pruned read — untouched days are never
+    * (series, day) cells, MERGE them with the stored cells of the touched
+    * days only (partition-pruned read — untouched days are never
     * opened), and rewrite exactly those day partitions via dynamic
     * partition overwrite. The ingest-side half of the sketch tier: a
     * day's NDV stays a KB-sized blob that absorbs events incrementally —
     * no raw-event retention, no full-store rewrite per batch.
     *
-    * Cost per trigger ∝ batch size + touched-day cell bytes. Same
-    * delivery contract as [[indexMaintenance]] (replay-guard sidecar;
-    * crash mid-overwrite requires rebuild). StreamingSpec pins
-    * multi-wave maintenance ≡ one-shot batch build, and the replay guard.
+    * Cost per trigger ∝ batch size + touched-day cell bytes. Replay-guarded
+    * (object doc). StreamingSpec pins multi-wave maintenance ≡ one-shot
+    * batch build, and the replay guard.
     */
   def sketchMaintenance(events: DataFrame, path: String, checkpoint: String,
       lgK: Int = 12,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withReplayGuard(path, batchId, batch) { b =>
-          val spark = b.sparkSession
-          val cellDir = s"$path/cells"
-          val fresh = graft.functions.Approx.hllCells(
-            b.select(col("series"), col("uid"),
-              (col("time") - pmod(col("time"), lit(86400L))).as("day")),
-            col("uid"), Seq(col("series"), col("day")), lgK)
-          // touched days: metadata-sized (bounded by the batch's day span)
-          val days = fresh.select("day").distinct()
-            .collect().map(_.getLong(0))
-          val fs = new org.apache.hadoop.fs.Path(cellDir)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          val existing =
-            if (!fs.exists(new org.apache.hadoop.fs.Path(cellDir))) fresh.limit(0)
-            else spark.read.parquet(cellDir)
-              .filter(col("day").isin(days.toSeq: _*))   // partition-pruned
-              .select(fresh.columns.map(col).toSeq: _*)
-          val merged = existing.unionByName(fresh)
-            .groupBy(col("series"), col("day"))
-            .agg(hll_union_agg(col("hll"), lit(false)).as("hll"),
-              sum(col("n_rows")).as("n_rows"))
-            .select(col("series"), col("day"), col("hll"), col("n_rows"))
-            // materialize BEFORE the overwrite — the plan reads the same
-            // path it is about to replace
-            .localCheckpoint(true)
-          merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("day").parquet(cellDir)
-        }
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    guardedSink(events, path, checkpoint, trigger) { b =>
+      val cellDir = s"$path/cells"
+      val fresh = graft.functions.Approx.hllCells(
+        b.select(col("series"), col("uid"),
+          (col("time") - pmod(col("time"), lit(86400L))).as("day")),
+        col("uid"), Seq(col("series"), col("day")), lgK)
+      publishDays(cellDir, stageDays(cellDir, pathExists(b.sparkSession, cellDir),
+          touched(b, 86400L), fresh) {
+        _.groupBy(col("series"), col("day"))
+          .agg(hll_union_agg(col("hll"), lit(false)).as("hll"),
+            sum(col("n_rows")).as("n_rows"))
+          .select(col("series"), col("day"), col("hll"), col("n_rows"))
+      })
+    }
 
   /** Streaming maintenance of the ENGINE's t-digest cell store
     * ([[graft.storage.SketchCells]] — the tier `q_sql_sketch_cells`
@@ -1584,11 +1510,10 @@ object StreamOps {
     * one-shot digest over the same points — both honor the same t-digest
     * quantile error contract, which is what the gates pin (the
     * q_ts_tdigest stance); exact n_rows rides every cell for the parts
-    * that must be exact. Same delivery contract as [[sketchMaintenance]]
-    * (replay-guard sidecar; crash mid-overwrite requires rebuild).
-    * StreamingSpec pins multi-wave upkeep: exact per-cell n_rows, the
-    * engine serving end-to-end from the maintained store within exact
-    * bounds, and replay idempotence.
+    * that must be exact. Replay-guarded (object doc). StreamingSpec pins
+    * multi-wave upkeep: exact per-cell n_rows, the engine serving
+    * end-to-end from the maintained store within exact bounds, and
+    * replay idempotence.
     *
     * Tag-keyed tiers (r13): when the store carries
     * [[graft.storage.SketchCells.tagDir]] tiers, each is maintained the
@@ -1608,9 +1533,7 @@ object StreamOps {
     * q_ts_tdigest stance applied to NDV.
     */
   def tdigestCellMaintenance(points: DataFrame, path: String, checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     // Tier COLUMN SETS, read once per stream (r15, ADVICE): the legacy
     // guard was opening every tier's parquet footer on every micro-batch for
     // pure validation — metadata round-trips that scale with the tag
@@ -1621,82 +1544,57 @@ object StreamOps {
     // validation requires still run per batch, against the memo.
     val tierColsMemo =
       new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-    points.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withReplayGuard(path, batchId, batch) { b =>
-          val spark = b.sparkSession
-          val cellDir = s"$path/td"
-          def tierCols(d: String): Seq[String] =
-            tierColsMemo.computeIfAbsent(d, dd => spark.read.parquet(dd).columns.toSeq)
-          // EVERYTHING that can fail — input validation, legacy-schema
-          // guards, and the materialization of every merged frame — runs
-          // BEFORE the first publish (r14, ADVICE): the replay guard
-          // marks the batch done only after the whole body succeeds, so
-          // a failure AFTER the td overwrite (a tag-less stream against
-          // a tag-tiered store, a bad tag-tier schema) would replay the
-          // batch into already-merged, non-idempotent digests —
-          // deterministic double-counting. Validate-then-stage-then-
-          // publish shrinks that to the transient-write-failure window
-          // the scaladoc's rebuild contract already covers.
-          val cells = graft.storage.SketchCells
-          val groupKs = cells.groupTagsOf(spark, path)
-          val fs = new org.apache.hadoop.fs.Path(cellDir)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          val tdExists = fs.exists(new org.apache.hadoop.fs.Path(cellDir))
-          // ALL schema validation runs here, before any aggregation or
-          // write: the store's one legacy guard refuses hll_* cells and
-          // tables without the current partials (a dynamic overwrite
-          // would mix schemas across day partitions) and hands back each
-          // table's own theta_<k> NDV keys (r14) — maintained per batch
-          // like the digests, merge = blob union
-          val ndvKs =
-            if (tdExists) cells.requireCurrent(cellDir, tierCols(cellDir))
-            else Seq.empty
-          // (table dir, tag-tier key, theta keys): td first, then each tier
-          val tables: Seq[(String, Option[String], Seq[String])] =
-            (cellDir, None, ndvKs) +: groupKs.map { k =>
-              val tDir = cells.tagDir(path, k)
-              (tDir, Some(k), cells.requireCurrent(tDir, tierCols(tDir)))
-            }
-          if (groupKs.nonEmpty || ndvKs.nonEmpty)
-            require(b.columns.contains("tags"),
-              "this cell store carries tag-keyed tiers or theta NDV cells (" +
-                (groupKs ++ ndvKs).distinct.mkString(", ") +
-                ") but the stream batch has no tags column — feed " +
-                "(series, series_id, tags, time, value)")
-          // touched days: metadata-sized (bounded by the batch's day span)
-          val days = b.select(cells.day).distinct().collect().map(_.getLong(0))
-          // per table (td, then each tag tier — r13): the batch's fresh
-          // cells MERGED with the touched days' stored cells, then STAGED
-          // before anything is written
-          val staged: Seq[(String, DataFrame)] = tables.map { case (dir, tagKey, nk) =>
-            val fresh = cells.cellsOf(b, tagKey, nk)
-            val current =
-              if (tagKey.isEmpty && !tdExists) fresh.limit(0)
-              else spark.read.parquet(dir)
-                .filter(col("day").isin(days.toSeq: _*)) // partition-pruned
-                .select(fresh.columns.map(col).toSeq: _*)
-            (dir, cells.mergeCells(current.unionByName(fresh), tagKey.isDefined, nk)
-              // materialize BEFORE any overwrite — the plan reads the same
-              // path it is about to replace, and staging must complete
-              // before the first publish
-              .localCheckpoint(true))
-          }
-          // PUBLISH: every input validated, every merged frame already
-          // materialized — nothing after this point recomputes
-          staged.foreach { case (dir, m) =>
-            m.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("day").parquet(dir)
-          }
-          // writer hook: the engine's serving-metadata memo (existence,
-          // key lists) must reload after an out-of-build publish
-          graft.storage.SketchCells.invalidate(path)
+    guardedSink(points, path, checkpoint, trigger) { b =>
+      val spark = b.sparkSession
+      val cellDir = s"$path/td"
+      def tierCols(d: String): Seq[String] =
+        tierColsMemo.computeIfAbsent(d, dd => spark.read.parquet(dd).columns.toSeq)
+      // EVERYTHING that can fail — input validation, legacy-schema
+      // guards, and the materialization of every merged frame — runs
+      // BEFORE the first publish (r14, ADVICE): the replay guard
+      // marks the batch done only after the whole body succeeds, so
+      // a failure AFTER the td overwrite (a tag-less stream against
+      // a tag-tiered store, a bad tag-tier schema) would replay the
+      // batch into already-merged, non-idempotent digests —
+      // deterministic double-counting. Validate-then-stage-then-
+      // publish shrinks that to the transient-write-failure window
+      // the rebuild contract already covers.
+      val cells = graft.storage.SketchCells
+      val groupKs = cells.groupTagsOf(spark, path)
+      val tdExists = pathExists(spark, cellDir)
+      // ALL schema validation runs here, before any aggregation or
+      // write: the store's one legacy guard refuses hll_* cells and
+      // tables without the current partials (a dynamic overwrite
+      // would mix schemas across day partitions) and hands back each
+      // table's own theta_<k> NDV keys (r14) — maintained per batch
+      // like the digests, merge = blob union
+      val ndvKs =
+        if (tdExists) cells.requireCurrent(cellDir, tierCols(cellDir))
+        else Seq.empty
+      // (table dir, tag-tier key, theta keys): td first, then each tier
+      val tables: Seq[(String, Option[String], Seq[String])] =
+        (cellDir, None, ndvKs) +: groupKs.map { k =>
+          val tDir = cells.tagDir(path, k)
+          (tDir, Some(k), cells.requireCurrent(tDir, tierCols(tDir)))
         }
+      if (groupKs.nonEmpty || ndvKs.nonEmpty)
+        require(b.columns.contains("tags"),
+          "this cell store carries tag-keyed tiers or theta NDV cells (" +
+            (groupKs ++ ndvKs).distinct.mkString(", ") +
+            ") but the stream batch has no tags column — feed " +
+            "(series, series_id, tags, time, value)")
+      // per table (td, then each tag tier — r13): STAGE every merge
+      // before the first publish, so nothing after it recomputes
+      val days = touched(b, 86400L)
+      val staged = tables.map { case (dir, tagKey, nk) =>
+        dir -> stageDays(dir, tagKey.isDefined || tdExists, days,
+          cells.cellsOf(b, tagKey, nk))(cells.mergeCells(_, tagKey.isDefined, nk))
       }
-      .start()
+      staged.foreach { case (dir, m) => publishDays(dir, m) }
+      // writer hook: the engine's serving-metadata memo (existence,
+      // key lists) must reload after an out-of-build publish
+      cells.invalidate(path)
+    }
   }
 
   /** Streaming maintenance of the data-skipping manifest
@@ -1707,37 +1605,21 @@ object StreamOps {
     * grows, without ever rebuilding the manifest from the full store.
     *
     * Cost per trigger ∝ batch size (the append + the touched hours'
-    * recompute) + one metadata-sized manifest carry-forward. Same
-    * delivery contract as [[indexMaintenance]] (replay-guard sidecar
-    * next to the manifest; crash mid-body requires a rebuild);
+    * recompute) + one metadata-sized manifest carry-forward.
+    * Replay-guarded (object doc), the sidecar next to the manifest;
     * StreamingSpec pins maintained-manifest ≡ full rebuild of the final
     * store, plus replayed-batch idempotence.
     */
   def skipIndexMaintenance(points: DataFrame, storeRoot: String,
       manifestDir: String, checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    points.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withReplayGuard(manifestDir, batchId, batch) { b =>
-          val spark = b.sparkSession
-          val store = new graft.storage.SeriesStore(spark, storeRoot)
-          store.append(b.select("series", "tags", "time", "value"))
-          // touched hours: metadata-sized (bounded by the batch's span)
-          val hours = b.select(
-              (col("time") - pmod(col("time"), lit(3600L))).as("h"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          val fs = new org.apache.hadoop.fs.Path(s"$manifestDir/m")
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          if (fs.exists(new org.apache.hadoop.fs.Path(s"$manifestDir/m")))
-            graft.storage.SkipIndex.refresh(store, manifestDir, hours)
-          else graft.storage.SkipIndex.build(store, manifestDir)
-        }
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    guardedSink(points, manifestDir, checkpoint, trigger) { b =>
+      val store = new graft.storage.SeriesStore(b.sparkSession, storeRoot)
+      store.append(b.select("series", "tags", "time", "value"))
+      if (pathExists(b.sparkSession, s"$manifestDir/m"))
+        graft.storage.SkipIndex.refresh(store, manifestDir, touched(b, 3600L))
+      else graft.storage.SkipIndex.build(store, manifestDir)
+    }
 
   /** Streaming windowed distinct-user counts — the live twin of the HLL
     * rollup tier (`q_ts_hll_rollup` / `q_ts_rolling_ndv`): per
@@ -1755,9 +1637,8 @@ object StreamOps {
       watermarkDelay: String = "10 minutes",
       rsd: Double = 0.02): DataFrame = {
     require(windowSecs > 0, "windowSecs must be positive")
-    points.select(col("series").cast("string"), col("time").cast("long"), col("uid"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(points.select(col("series").cast("string"), col("time").cast("long"),
+        col("uid")), watermarkDelay)
       .groupBy(col("series"), window(col("event_time"), s"$windowSecs seconds").as("w"))
       .agg(approx_count_distinct(col("uid"), rsd).as("ndv"),
         count(lit(1)).as("n"))
@@ -1788,10 +1669,8 @@ object StreamOps {
       watermarkDelay: String = "10 minutes",
       compression: Double = 100.0): DataFrame = {
     require(windowSecs > 0, "windowSecs must be positive")
-    points.select(col("series").cast("string"), col("time").cast("long"),
-        col("value").cast("double"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(points.select(col("series").cast("string"), col("time").cast("long"),
+        col("value").cast("double")), watermarkDelay)
       .groupBy(col("series"), window(col("event_time"), s"$windowSecs seconds").as("w"))
       .agg(graft.functions.TDigest.agg(col("value"), compression).as("td"),
         count(lit(1)).as("n"))
@@ -1843,10 +1722,8 @@ object StreamOps {
       floor((col("value") - lo) / width).cast("long")))
     val counts = (0 until bins).map(b =>
       sum(when(bin === b.toLong, 1L).otherwise(0L)).as(s"c$b"))
-    val agg = points.select(col("series").cast("string"), col("time").cast("long"),
-        col("value").cast("double"))
-      .withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", watermarkDelay)
+    val agg = watermarked(points.select(col("series").cast("string"),
+        col("time").cast("long"), col("value").cast("double")), watermarkDelay)
       .groupBy(col("series"), window(col("event_time"), s"$windowSecs seconds").as("w"))
       .agg(count(lit(1)).as("n"), counts: _*)
     val term = (0 until bins).map { b =>

@@ -1793,4 +1793,20 @@ class StorageSpec extends AnyFunSuite {
     assert(served.stats.route.startsWith("served:cells"), served.stats.route)
     assert(served.df.head().getLong(0) === 2 * 2880L + 1)
   }
+
+  test("a store rooted at a file:// URI reads back what it appended") {
+    import spark.implicits._
+    val store = new SeriesStore(spark, "file://" + tmp())
+    // three hours, a point every ten minutes
+    val pts = for (t <- 0L until 3 * 3600L by 600L)
+      yield ("m", Map("host" -> "a"), t, t.toDouble)
+    store.append(pts.toDF("series", "tags", "time", "value"))
+    assert(!store.isEmpty)
+    assert(store.scan().count() === pts.size.toLong)
+    assert(store.partitions() === Seq(0L, 3600L, 7200L))
+    assert(store.scanRange(3600L, 7199L).count() === 6L)
+    val q = Engine.executeOnStore(store,
+      "select count() as n from m where time >= 3600 and time < 7200", CompileOptions(now = 0L))
+    assert(q.df.head().getLong(0) === 6L)
+  }
 }

@@ -1861,4 +1861,89 @@ class StreamingSpec extends AnyFunSuite {
       .awaitTermination(120000)
     assert(rows(mdir) === rows(full), "replayed batches must not re-append")
   }
+
+  /** Rows `twin` emits over ndjson files read with `schema`, one file per
+    * micro-batch in the order given, through one checkpointed
+    * AvailableNow run per element of `runs` (the files that run adds).
+    */
+  private def rowsAcrossRuns[T](schema: String, runs: Seq[Seq[(String, Seq[String])]])(
+      twin: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[T]): Seq[T] = {
+    val dir = Files.createTempDirectory("graft-restart")
+    val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
+    val acc = scala.collection.mutable.ArrayBuffer[T]()
+    val t0 = System.currentTimeMillis() - 60000L
+    var written = 0
+    runs.foreach { files =>
+      files.foreach { case (name, lines) =>
+        ndjsonDir(lines, dir, name)
+        // the file source takes files oldest first
+        Files.setLastModifiedTime(dir.resolve(name),
+          java.nio.file.attribute.FileTime.fromMillis(t0 + 1000L * written))
+        written += 1
+      }
+      val q = twin(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .json(dir.toString))
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[T], _: Long) =>
+          acc.synchronized { acc ++= b.collect() }
+          ()
+        }
+        .start()
+      try { q.awaitTermination(60000); () } finally q.stop()
+    }
+    acc.toSeq
+  }
+
+  test("funnel state and pending events recover across a checkpointed restart") {
+    // user 1's signup confirms before the restart, its click waits in
+    // pending across it, and its purchase arrives after it
+    val before = "a.ndjson" -> Seq(
+      """{"user_id":1,"event_type":"signup","time":100}""",
+      """{"user_id":1,"event_type":"click","time":150}""",
+      """{"user_id":2,"event_type":"signup","time":120}""",
+      """{"user_id":3,"event_type":"click","time":130}""")
+    val after = "b.ndjson" -> Seq(
+      """{"user_id":1,"event_type":"purchase","time":300}""",
+      """{"user_id":2,"event_type":"purchase","time":310}""",
+      """{"user_id":4,"event_type":"signup","time":320}""",
+      """{"user_id":999,"event_type":"signup","time":100000}""")
+    def rows(runs: Seq[Seq[(String, Seq[String])]]) =
+      rowsAcrossRuns("user_id LONG, event_type STRING, time LONG", runs) { ev =>
+        StreamOps.funnel(spark, ev, Seq("signup", "click", "purchase"),
+          watermarkDelay = "5 seconds")
+      }.map(p => (p.user_id, p.stage, p.times)).sortBy(_.toString)
+    val split = rows(Seq(Seq(before), Seq(after)))
+    assert(split === rows(Seq(Seq(before, after))))
+    assert(split === Seq(
+      (1L, 1, Seq(100L)), (1L, 3, Seq(100L, 150L, 300L)),
+      (2L, 1, Seq(120L)), (4L, 1, Seq(320L))).sortBy(_.toString))
+  }
+
+  test("day-over-day open buckets and closed carry recover across a checkpointed restart") {
+    // before the restart bucket 0 closes and bucket 600 stays open; after
+    // it, 1200 pairs with the carried 0 and 1800 with the restored 600
+    val before = "a.ndjson" -> Seq(
+      """{"series":"a","time":10,"value":1.0}""",
+      """{"series":"a","time":20,"value":3.0}""",
+      """{"series":"b","time":30,"value":0.0}""",
+      """{"series":"a","time":650,"value":4.0}""")
+    val after = "b.ndjson" -> Seq(
+      """{"series":"b","time":1210,"value":7.0}""",
+      """{"series":"a","time":1250,"value":1.0}""",
+      """{"series":"a","time":1260,"value":5.0}""",
+      """{"series":"a","time":1850,"value":6.0}""",
+      """{"series":"zz","time":100000,"value":1.0}""")
+    def rows(runs: Seq[Seq[(String, Seq[String])]]) =
+      rowsAcrossRuns("series STRING, time LONG, value DOUBLE", runs) { pts =>
+        StreamOps.dayOverDay(spark, pts, 600L, 1200L, watermarkDelay = "5 seconds")
+      }.sortBy(d => (d.series, d.bucket))
+    val split = rows(Seq(Seq(before), Seq(after)))
+    assert(split === rows(Seq(Seq(before, after))))
+    assert(split === Seq(
+      StreamOps.DayOverDay("a", 1200L, 3.0, 2.0, 1.0, Some(1.5)),
+      StreamOps.DayOverDay("a", 1800L, 6.0, 4.0, 2.0, Some(1.5)),
+      StreamOps.DayOverDay("b", 1200L, 7.0, 0.0, 7.0, None)))
+  }
 }
