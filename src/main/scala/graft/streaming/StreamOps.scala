@@ -99,12 +99,12 @@ object StreamOps {
   final case class DayOverDay(series: String, bucket: Long, v: Double,
       v_prev: Double, delta_1d: Double, ratio_1d: Option[Double])
 
-  /** `df` with `event_time` (its `time` column as a timestamp) under a
-    * `delay` watermark.
+  /** `df` with `ts` (its `from` column as a timestamp) under a `delay`
+    * watermark.
     */
-  private def watermarked(df: DataFrame, delay: String): DataFrame =
-    df.withColumn("event_time", col("time").cast("timestamp"))
-      .withWatermark("event_time", delay)
+  private def watermarked(df: DataFrame, delay: String, ts: String = "event_time",
+      from: String = "time"): DataFrame =
+    df.withColumn(ts, col(from).cast("timestamp")).withWatermark(ts, delay)
 
   /** (series, time, value) points as watermarked [[TimedPoint]]s. */
   private def timedPoints(points: DataFrame, delay: String): Dataset[TimedPoint] = {
@@ -300,13 +300,10 @@ object StreamOps {
     */
   def intervalJoin(points: DataFrame, markers: DataFrame, windowSecs: Long,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    val p = points
-      .withColumn("pts", col("time").cast("timestamp"))
-      .withWatermark("pts", watermarkDelay)
+    val p = watermarked(points, watermarkDelay, "pts")
     val m = markers.select(col("series").as("m_series"),
         col("time").as("m_time"), col("value").as("m_value"))
-      .withColumn("mts", col("m_time").cast("timestamp"))
-      .withWatermark("mts", watermarkDelay)
+      .transform(watermarked(_, watermarkDelay, "mts", "m_time"))
     p.join(m,
         col("series") === col("m_series") &&
           col("pts") >= col("mts") &&
@@ -340,15 +337,12 @@ object StreamOps {
   def rangeJoin(points: DataFrame, intervals: DataFrame, maxDurationSecs: Long,
       watermarkDelay: String = "10 minutes"): DataFrame = {
     require(maxDurationSecs > 0, "streaming range join needs a positive duration cap")
-    val p = points
-      .withColumn("pts", col("time").cast("timestamp"))
-      .withWatermark("pts", watermarkDelay)
+    val p = watermarked(points, watermarkDelay, "pts")
     val i = intervals.select(col("series").as("i_series"),
         col("w_start"), col("w_end"), col("w_value"))
       .filter(col("w_start") < col("w_end") &&
         col("w_end") - col("w_start") <= maxDurationSecs)
-      .withColumn("ists", col("w_start").cast("timestamp"))
-      .withWatermark("ists", watermarkDelay)
+      .transform(watermarked(_, watermarkDelay, "ists", "w_start"))
     p.join(i,
         col("series") === col("i_series") &&
           col("pts") >= col("ists") &&
@@ -399,13 +393,10 @@ object StreamOps {
       bucket: String = "1 hour",
       watermarkDelay: String = "10 minutes"): DataFrame = {
     require(toleranceSecs > 0, "streaming as-of needs a positive tolerance")
-    val p = points
-      .withColumn("pts", col("time").cast("timestamp"))
-      .withWatermark("pts", watermarkDelay)
+    val p = watermarked(points, watermarkDelay, "pts")
     val m = markers.select(col("series").as("m_series"),
         col("time").as("m_time"), col("value").as("m_value"))
-      .withColumn("mts", col("m_time").cast("timestamp"))
-      .withWatermark("mts", watermarkDelay)
+      .transform(watermarked(_, watermarkDelay, "mts", "m_time"))
     p.join(m,
         col("series") === col("m_series") &&
           col("mts") >= col("pts") - expr(s"INTERVAL $toleranceSecs SECONDS") &&
