@@ -187,6 +187,9 @@ final class HttpApi(store: SeriesStore, token: Option[String] = None, maxRows: I
     stats.put("rows_emitted", p.rows)
     stats.put("trace_id", p.stats.traceId)
     stats.put("route", p.stats.route)
+    stats.put("merge_site", p.mergeSite)
+    stats.put("cell_files", p.cellFiles)
+    stats.put("cell_bytes", p.cellBytes)
     val ops = stats.putArray("operators")
     p.operators.foreach { o =>
       val n = ops.addObject()
@@ -212,7 +215,14 @@ final class HttpApi(store: SeriesStore, token: Option[String] = None, maxRows: I
   }
 
   private def handleMetrics(ex: HttpExchange): Unit = {
-    val nSeries = if (store.isEmpty) 0L else store.catalog().count()
+    // the series gauge from the td cells when the store has them (a read
+    // of KB cells, on the driver when they fit one split), else a scan
+    val nSeries = if (store.isEmpty) 0L else graft.storage.MetaCache.scoped {
+      val cells = graft.storage.SketchCells.dirFor(store)
+      if (graft.storage.SketchCells.exists(store.spark, cells))
+        graft.storage.SketchCells.seriesCount(store.spark, cells)
+      else store.catalog().count()
+    }
     val text =
       s"""# TYPE sydra_ingest_total counter
          |sydra_ingest_total ${ingestTotal.get}

@@ -713,6 +713,9 @@ final class PgWireServer(store: SeriesStore, maxRows: Int = Int.MaxValue) {
     if (p.stats.traceId.nonEmpty) writeNoticeResponse(out, s"trace_id=${p.stats.traceId}")
     p.operators.foreach(o =>
       writeNoticeResponse(out, s"operator=${o.name} rows_out=${o.rowsOut} elapsed_us=${o.elapsedUs}"))
+    if (p.stats.served.isDefined)
+      writeNoticeResponse(out,
+        s"merge_site=${p.mergeSite} cell_files=${p.cellFiles} cell_bytes=${p.cellBytes}")
     val scanned = p.operators.filter(_.name.toLowerCase.contains("scan")).map(o => math.max(o.rowsOut, 0L)).sum
     val planUs = p.stats.parseUs + p.stats.validateUs + p.stats.compileUs
     writeNoticeResponse(out,

@@ -49,4 +49,11 @@ object Functions {
   def timeBucket(step: Column, ts: Column, origin: Column): Column =
     floor((ts.cast("double") - origin.cast("double")) / step.cast("double"))
       .cast("long") * step.cast("long") + origin.cast("long")
+
+  /** The 3-arg [[timeBucket]]'s arithmetic on one value, for grouping on
+    * the driver (origin 0 is the 2-arg form: subtracting and adding 0
+    * changes nothing).
+    */
+  def timeBucketOf(step: Long, ts: Long, origin: Long): Long =
+    math.floor((ts.toDouble - origin.toDouble) / step.toDouble).toLong * step + origin
 }

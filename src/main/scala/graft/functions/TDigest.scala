@@ -180,6 +180,23 @@ object TDigest {
     t
   }
 
+  /** One step of the merge aggregate: an empty accumulator adopts
+    * `other` (keeping its compression), any other absorbs it.
+    */
+  private[functions] def mergeInto(acc: TDigest, other: TDigest): TDigest =
+    if (acc.isEmpty) other else { acc.merge(other); acc }
+
+  /** [[mergeAgg]]'s answer over serialized digests (NULLs skipped), folded
+    * in the given order on the driver: NULL when none.
+    */
+  def mergeAll(blobs: Iterator[Any]): Array[Byte] = {
+    val d = blobs.foldLeft(new TDigest(100.0)) {
+      case (acc, null) => acc
+      case (acc, b) => mergeInto(acc, deserialize(b.asInstanceOf[Array[Byte]]))
+    }
+    if (d.isEmpty) null else d.serialize()
+  }
+
   // ---- Column API -------------------------------------------------------
 
   /** Aggregate raw doubles into a serialized digest (BinaryType). */
@@ -267,13 +284,12 @@ case class TDigestMergeAgg(
     if (v == null) buffer
     else {
       // an empty buffer ADOPTS the first input (keeps its compression)
-      val other = TDigest.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buffer.isEmpty) other else { buffer.merge(other); buffer }
+      TDigest.mergeInto(buffer, TDigest.deserialize(v.asInstanceOf[Array[Byte]]))
     }
   }
 
   override def merge(buffer: TDigest, input: TDigest): TDigest =
-    if (buffer.isEmpty) input else { buffer.merge(input); buffer }
+    TDigest.mergeInto(buffer, input)
 
   override def eval(buffer: TDigest): Any =
     if (buffer.isEmpty) null else buffer.serialize()

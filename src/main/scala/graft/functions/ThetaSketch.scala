@@ -53,6 +53,16 @@ object ThetaSketch {
   def unionEstimate(a: Column, b: Column): Column =
     GraftShim.column(ThetaScalar(GraftShim.expression(a), GraftShim.expression(b), "or"))
 
+  /** [[unionAgg]]'s answer over serialized sketches (NULLs skipped), on
+    * the driver: NULL when the union is empty.
+    */
+  def unionAll(blobs: Iterator[Any], lgK: Int = 12): Array[Byte] = {
+    val u = newUnion(lgK)
+    blobs.foreach(b => if (b != null) u.union(wrap(b.asInstanceOf[Array[Byte]])))
+    val r = u.getResult
+    if (r.isEmpty) null else r.toByteArray
+  }
+
   private[functions] def newUnion(lgK: Int): Union =
     Sketches.setOperationBuilder().setLogNominalEntries(lgK).buildUnion()
 

@@ -73,7 +73,7 @@ private[graft] object MetaCache {
   // property, far too heavy for a per-lookup stat; FS settings do not
   // change mid-process in this engine's deployment shape
   @volatile private var conf: org.apache.hadoop.conf.Configuration = _
-  private def hadoopConf(): org.apache.hadoop.conf.Configuration = {
+  private[storage] def hadoopConf(): org.apache.hadoop.conf.Configuration = {
     if (conf == null) conf =
       org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)

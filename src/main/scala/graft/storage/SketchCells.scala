@@ -1,7 +1,11 @@
 package graft.storage
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** At-rest day-cell store for a [[SeriesStore]] — the engine-facing
   * slice of the sketch tier: one row of mergeable partials per
@@ -22,6 +26,10 @@ import org.apache.spark.sql.functions._
   * ([[graft.streaming.StreamOps.tdigestCellMaintenance]]: [[cellsOf]] +
   * [[mergeCells]]) and the engine's served and hybrid merges all read
   * these two tables, so the writers and the reader cannot drift apart.
+  * Each partial also carries its merge on the driver ([[Partial.local]]):
+  * a served window whose cells fit one split ([[mergePartitions]]) is
+  * read ([[readLocal]], behind a listing freshness guard) and merged
+  * ([[mergeLocal]]) in-process, with no Spark job.
   *
   * Scale shape: the build is one partial-aggregated pass over the store
   * per table (digest state is bounded per cell); the store is
@@ -61,10 +69,53 @@ object SketchCells {
   def invalidate(dir: String): Unit = MetaCache.invalidate(dir)
 
   /** One cell partial: its column, its aggregate over raw points
-    * (`time`, `value`, `tags`), and its merge aggregate over a frame of
-    * partials carrying that column.
+    * (`time`, `value`, `tags`), its merge aggregate over a frame of
+    * partials carrying that column, and the same merge on the driver
+    * ([[Local]]).
     */
-  private[graft] final case class Partial(name: String, raw: Column, merge: Column)
+  private[graft] final case class Partial(name: String, raw: Column, merge: Column, local: Local)
+
+  /** A partial's merge on the driver: one group's values of a column of
+    * type `t`, in Catalyst's internal form (NULLs included) and in merge
+    * order, to the merged value. It answers what the Spark merge
+    * aggregate answers over the same cells in one partition in the same
+    * order.
+    */
+  private[graft] type Local = (DataType, Iterator[Any]) => Any
+
+  private object Local {
+    /** `first`: the first value, NULL or not. */
+    val first: Local = (_, vs) => if (vs.hasNext) vs.next() else null
+
+    /** `sum`: Spark's `Sum` — NULLs skipped, NULL when none, each value
+      * added to the running sum or to 0 (so a lone -0.0 sums to 0.0).
+      */
+    val sum: Local = (t, vs) => t match {
+      case LongType => vs.foldLeft(null: Any) {
+        case (r, null) => r
+        case (r, v) => (if (r == null) 0L else r.asInstanceOf[Long]) + v.asInstanceOf[Long]
+      }
+      case DoubleType => vs.foldLeft(null: Any) {
+        case (r, null) => r
+        case (r, v) => (if (r == null) 0.0 else r.asInstanceOf[Double]) + v.asInstanceOf[Double]
+      }
+      case other => throw new IllegalArgumentException(s"no driver sum over $other")
+    }
+
+    /** `min`/`max` under Spark's own ordering of `t` (NaN above every
+      * number, -0.0 equal to 0.0, NULL struct fields first); NULLs
+      * skipped, and an equal later value does not replace the kept one,
+      * as `least`/`greatest` keep theirs.
+      */
+    def extreme(max: Boolean): Local = { (t, vs) =>
+      val o = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(t)
+      vs.foldLeft(null: Any)((r, v) =>
+        if (v != null && (r == null || (if (max) o.gt(v, r) else o.lt(v, r)))) v else r)
+    }
+
+    val tdigest: Local = (_, vs) => graft.functions.TDigest.mergeAll(vs)
+    val theta: Local = (_, vs) => graft.functions.ThetaSketch.unionAll(vs)
+  }
 
   /** The cell's day: the epoch-second floor every writer groups by. */
   private[graft] def day: Column = col("time") - pmod(col("time"), lit(86400L))
@@ -102,22 +153,24 @@ object SketchCells {
     * routes hash identical bytes; merge = blob union.
     */
   private[graft] def partials(thetaKeys: Seq[String]): Seq[Partial] = Seq(
-    Partial("series", first(col("series")), first(col("series"))),
+    Partial("series", first(col("series")), first(col("series")), Local.first),
     Partial("td", graft.functions.TDigest.agg(col("value")),
-      graft.functions.TDigest.mergeAgg(col("td"))),
-    Partial("n_rows", count(lit(1)), sum(col("n_rows"))),
-    Partial("sum_v", sum(col("value")), sum(col("sum_v"))),
-    Partial("min_v", min(col("value")), min(col("min_v"))),
-    Partial("max_v", max(col("value")), max(col("max_v"))),
+      graft.functions.TDigest.mergeAgg(col("td")), Local.tdigest),
+    Partial("n_rows", count(lit(1)), sum(col("n_rows")), Local.sum),
+    Partial("sum_v", sum(col("value")), sum(col("sum_v")), Local.sum),
+    Partial("min_v", min(col("value")), min(col("min_v")), Local.extreme(max = false)),
+    Partial("max_v", max(col("value")), max(col("max_v")), Local.extreme(max = true)),
     // non-null count — the avg/count(value) denominator
-    Partial("n_vals", count(col("value")), sum(col("n_vals"))),
-    Partial("fl_first", min(point), min(col("fl_first"))),
-    Partial("fl_last", max(point), max(col("fl_last"))),
-    Partial("nn_first", min(when(col("value").isNotNull, point)), min(col("nn_first"))),
-    Partial("nn_last", max(when(col("value").isNotNull, point)), max(col("nn_last")))) ++
+    Partial("n_vals", count(col("value")), sum(col("n_vals")), Local.sum),
+    Partial("fl_first", min(point), min(col("fl_first")), Local.extreme(max = false)),
+    Partial("fl_last", max(point), max(col("fl_last")), Local.extreme(max = true)),
+    Partial("nn_first", min(when(col("value").isNotNull, point)), min(col("nn_first")),
+      Local.extreme(max = false)),
+    Partial("nn_last", max(when(col("value").isNotNull, point)), max(col("nn_last")),
+      Local.extreme(max = true))) ++
     thetaKeys.map(k => Partial(s"theta_$k",
       graft.functions.ThetaSketch.agg(try_element_at(col("tags"), lit(k)).cast("string")),
-      graft.functions.ThetaSketch.unionAgg(col(s"theta_$k"))))
+      graft.functions.ThetaSketch.unionAgg(col(s"theta_$k")), Local.theta))
 
   /** The rows of [[partials]] named in `names`, in table order. */
   private[graft] def partialsNamed(names: Set[String]): Seq[Partial] =
@@ -351,14 +404,27 @@ object SketchCells {
 
   def read(spark: SparkSession, dir: String): DataFrame = readTable(spark, dir, "td").df
 
-  /** A cell table as served: the frame, and its data files' bytes per
-    * day partition at the generation the frame was read under.
+  /** A cell table's metadata as memoized per refresh generation: its
+    * data files (path, bytes), sorted by path, and its schema.
     */
-  private[graft] final case class Table(df: DataFrame, dayBytes: Map[Long, Long]) {
+  private[graft] final case class Meta(files: Seq[(String, Long)], schema: StructType) {
+    /** Bytes per `day=<d>` partition directory. */
+    val dayBytes: Map[Long, Long] =
+      files.groupMapReduce { case (p, _) => dayOf(p) }(_._2)(_ + _)
+
+    /** The data files of the day partitions in [lo, hi), in path order. */
+    def filesIn(lo: Long, hi: Long): Seq[(String, Long)] =
+      files.filter { case (p, _) => val d = dayOf(p); d >= lo && d < hi }
+
     /** Bytes of the day partitions in [lo, hi). */
     def bytesIn(lo: Long, hi: Long): Long =
       dayBytes.iterator.collect { case (d, b) if d >= lo && d < hi => b }.sum
   }
+
+  /** A cell table as served by Spark: the frame, and the metadata it was
+    * read under.
+    */
+  private[graft] final case class Table(df: DataFrame, meta: Meta)
 
   /** The data files (path, bytes) of a file-source frame, from the file
     * index its read already listed — no further filesystem call.
@@ -377,10 +443,6 @@ object SketchCells {
   private def dayOf(file: String): Long =
     new org.apache.hadoop.fs.Path(file).getParent.getName.stripPrefix("day=").toLong
 
-  /** Bytes per `day=<d>` partition directory. */
-  private def bytesByDay(files: Seq[(String, Long)]): Map[Long, Long] =
-    files.groupMapReduce { case (p, _) => dayOf(p) }(_._2)(_ + _)
-
   /** Partitions the served merge needs for `bytes` of cell files: Spark's
     * split-size rule (`FilePartition.maxSplitBytes` over
     * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and the
@@ -388,6 +450,10 @@ object SketchCells {
     * itself charges `openCostInBytes` (4 MB) per file, so it plans one task
     * per KB-sized cell file, and the merge then needs an Exchange — a
     * second job for a few KB of partials.
+    *
+    * One partition is also the bound for merging on the driver
+    * ([[readLocal]]): at default settings, cells up to `openCostInBytes`
+    * (4 MB) are read and merged in-process with no Spark job.
     */
   private[graft] def mergePartitions(spark: SparkSession, bytes: Long): Int = {
     val split = org.apache.spark.sql.execution.datasources.FilePartition
@@ -395,13 +461,26 @@ object SketchCells {
     math.max(1L, (bytes + split - 1) / split).toInt
   }
 
-  /** The cell table at `dir/table` (`td` or `tdtag/<k>`), read with its
-    * schema memoized per refresh generation of `dir` ([[MetaCache]]): a
-    * bare `spark.read.parquet` runs a one-task schema-inference job on
-    * every call, i.e. on every served query, for a schema that only a
-    * writer changes. Every writer of the tier bumps the generation, so a
-    * rebuild that adds or drops NDV keys is seen at the next read, in
-    * this JVM and in others.
+  /** The metadata of the cell table at `dir/table` (`td` or
+    * `tdtag/<k>`), memoized per refresh generation of `dir`
+    * ([[MetaCache]]): a bare `spark.read.parquet` runs a one-task
+    * schema-inference job on every call, i.e. on every served query, for
+    * a schema that only a writer changes. Every writer of the tier bumps
+    * the generation, so a rebuild that adds or drops NDV keys is seen at
+    * the next read, in this JVM and in others.
+    *
+    * The memo holds the StructType, not a DataFrame (a schema does not
+    * depend on the session), plus the table's data files and their bytes
+    * at load.
+    */
+  private[graft] def meta(spark: SparkSession, dir: String, table: String): Meta =
+    MetaCache.cached(dir, s"schema:$table") {
+      val df = spark.read.parquet(s"$dir/$table")
+      Meta(dataFiles(df), df.schema)
+    }
+
+  /** The cell table at `dir/table` as a Spark frame, read with its
+    * memoized [[meta]].
     *
     * Only the memoized `day=` directories inside [lo, hi) are read (with
     * `basePath`, so `day` stays a partition column), the way
@@ -411,14 +490,12 @@ object SketchCells {
     * it runs that listing as a Spark job on every served query. A window
     * holding no cell day reads an empty frame of the memoized schema.
     *
-    * The memo holds the StructType, not a DataFrame (a schema does not
-    * depend on the session), plus the table's data files and their bytes
-    * at load. A read that lists other files for the days it read (or
-    * cannot read a memoized day) — a rewrite that bypassed the writer
-    * hook — reads the whole table again and infers instead of trusting the
-    * memo: a schema naming a column the files lack would read it as NULL,
-    * and the engine's served-partials check, which reads these columns,
-    * would serve NULLs.
+    * A read that lists other files for the days it read (or cannot read a
+    * memoized day) — a rewrite that bypassed the writer hook — reads the
+    * whole table again and infers instead of trusting the memo: a schema
+    * naming a column the files lack would read it as NULL, and the
+    * engine's served-partials check, which reads these columns, would
+    * serve NULLs.
     *
     * The frame itself is not memoized, so each read lists the window's day
     * partitions again (a fresh file index). Measured without an
@@ -427,26 +504,153 @@ object SketchCells {
     * `sydraql.compile_us` from 21–24 to 16–17 ms in three traced seed-7
     * dashboard pairs on 4 cores, but the cells-only shapes' median wall
     * times were slower in one pair, faster in one and mixed in the third.
+    * That measurement covers the Spark route only: a window that fits one
+    * split builds no frame at all ([[readLocal]]).
     */
   private[graft] def readTable(spark: SparkSession, dir: String, table: String,
       lo: Long = Long.MinValue, hi: Long = Long.MaxValue): Table = {
     val path = s"$dir/$table"
-    val (files, schema, dayBytes) = MetaCache.cached(dir, s"schema:$table") {
-      val df = spark.read.parquet(path)
-      val files = dataFiles(df)
-      (files, df.schema, bytesByDay(files))
-    }
-    def inWindow(d: Long): Boolean = d >= lo && d < hi
-    val read = scala.util.Try(dayBytes.keys.filter(inWindow).toSeq.sorted match {
-      case Seq() => spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      case ds => spark.read.schema(schema).option("basePath", path)
+    val m = meta(spark, dir, table)
+    val read = scala.util.Try(m.dayBytes.keys.filter(d => d >= lo && d < hi).toSeq.sorted match {
+      case Seq() => spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+      case ds => spark.read.schema(m.schema).option("basePath", path)
         .parquet(ds.map(d => s"$path/day=$d"): _*)
     }).toOption
-    read.filter(dataFiles(_) == files.filter { case (f, _) => inWindow(dayOf(f)) }) match {
-      case Some(df) => Table(df, dayBytes)
+    read.filter(dataFiles(_) == m.filesIn(lo, hi)) match {
+      case Some(df) => Table(df, m)
       case None =>
         val fresh = spark.read.parquet(path)
-        Table(fresh, bytesByDay(dataFiles(fresh)))
+        Table(fresh, Meta(dataFiles(fresh), fresh.schema))
     }
+  }
+
+  /** A window's cells as read on the driver: one row per cell, `day`
+    * first and then the columns asked for, in Catalyst's internal form, in
+    * day, file and row order; and the files read (path, bytes).
+    */
+  private[graft] final case class LocalCells(rows: Seq[InternalRow], files: Seq[(String, Long)])
+
+  /** Cell files opened by [[readLocal]], so tests can pin which requests
+    * read cells.
+    */
+  private[graft] val localFilesRead = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Read columns `cols` of the cell table `dir/table`'s days in [lo, hi)
+    * on the driver, with no Spark job and no DataFrame: for a window whose
+    * cells fit one split ([[mergePartitions]]), a job's planning and
+    * scheduling cost several times the merge itself.
+    *
+    * Freshness guard: the memoized days in the window are listed again
+    * through the root's Hadoop `FileSystem`, and the listing must equal
+    * the memo's (path, bytes) for those days. Any difference — a day
+    * rewritten behind the writer hook (a new file name or length), a day
+    * gone, or a file lacking one of `cols` — answers None, and the caller
+    * takes the Spark route, which re-reads and re-infers ([[readTable]]).
+    * Like that route, it reads only the memo's days.
+    *
+    * The parquet read options are built once per call; each file opens
+    * from its listed `FileStatus`, with no further filesystem call.
+    */
+  private[graft] def readLocal(dir: String, table: String, m: Meta, lo: Long, hi: Long,
+      cols: Seq[String]): Option[LocalCells] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.example.data.Group
+    val conf = MetaCache.hadoopConf()
+    val root = new Path(s"$dir/$table")
+    val fs = root.getFileSystem(conf)
+    def isData(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+    val days = m.dayBytes.keys.filter(d => d >= lo && d < hi).toSeq.sorted
+    val listed: Seq[(Long, FileStatus)] =
+      try days.flatMap(d => fs.listStatus(new Path(root, s"day=$d")).toSeq.filter(isData)
+        .sortBy(_.getPath.toString).map(d -> _))
+      catch { case _: java.io.FileNotFoundException => return None }
+    val files = listed.map { case (_, st) => (st.getPath.toString, st.getLen) }
+    if (files.sorted != m.filesIn(lo, hi)) return None
+    val types = cols.map(c => m.schema(c).dataType)
+    // a parquet value of Spark type `t` in Catalyst's internal form
+    def value(g: Group, i: Int, t: DataType): Any =
+      if (g.getFieldRepetitionCount(i) == 0) null
+      else t match {
+        case LongType => g.getLong(i, 0)
+        case DoubleType => g.getDouble(i, 0)
+        case _: StringType => UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
+        case BinaryType => g.getBinary(i, 0).getBytes
+        case st: StructType =>
+          val sg = g.getGroup(i, 0)
+          new GenericInternalRow(st.fields.map(f =>
+            value(sg, sg.getType.getFieldIndex(f.name), f.dataType)))
+        case other => throw new IllegalStateException(s"no driver read of $other cells")
+      }
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    // one file's rows (day, `cols`…); None when it lacks one of `cols`
+    def readFile(day: Long, st: FileStatus): Option[Seq[InternalRow]] = {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf), options)
+      localFilesRead.incrementAndGet()
+      try {
+        val fileSchema = reader.getFooter.getFileMetaData.getSchema
+        if (!cols.forall(fileSchema.containsField)) None
+        else {
+          val requested = new org.apache.parquet.schema.MessageType(fileSchema.getName,
+            cols.map(c => fileSchema.getType(fileSchema.getFieldIndex(c))): _*)
+          reader.setRequestedSchema(requested)
+          val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(requested, fileSchema)
+          val rows = Seq.newBuilder[InternalRow]
+          var pages = reader.readNextRowGroup()
+          while (pages != null) {
+            val records = io.getRecordReader(pages,
+              new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(requested))
+            var n = 0L
+            while (n < pages.getRowCount) {
+              val g = records.read()
+              rows += new GenericInternalRow(
+                (day +: types.indices.map(i => value(g, i, types(i)))).toArray)
+              n += 1
+            }
+            pages = reader.readNextRowGroup()
+          }
+          Some(rows.result())
+        }
+      } finally reader.close()
+    }
+    val rows = Seq.newBuilder[InternalRow]
+    val complete = listed.forall { case (day, st) =>
+      readFile(day, st).exists { rs => rows ++= rs; true }
+    }
+    if (complete) Some(LocalCells(rows.result(), files)) else None
+  }
+
+  /** The merge aggregates of `parts` on the driver: `rows` grouped by
+    * `key` (None: one global group, present even over no rows, as a
+    * global aggregate answers one row), each group's values of each
+    * partial (`(partial, column index, type)`) merged in row order by
+    * [[Partial.local]]. One row per group, in no particular order: the
+    * key's values, then the merged partials.
+    */
+  private[graft] def mergeLocal(rows: Seq[InternalRow], key: Option[InternalRow => Seq[Any]],
+      parts: Seq[(Partial, Int, DataType)]): Seq[InternalRow] = {
+    val groups = key.fold(Seq(Seq.empty[Any] -> rows))(rows.groupBy(_).toSeq)
+    groups.map { case (k, rs) =>
+      new GenericInternalRow((k ++ parts.map { case (p, i, t) =>
+        p.local(t, rs.iterator.map(_.get(i, t)))
+      }).toArray)
+    }
+  }
+
+  /** The store's series count from its `td` cells (distinct `series_id`)
+    * instead of a scan of every point. Cells that fit one split
+    * ([[mergePartitions]]) are read on the driver ([[readLocal]]); larger
+    * tables, or a failed freshness guard, count with Spark.
+    */
+  def seriesCount(spark: SparkSession, dir: String): Long = {
+    val m = meta(spark, dir, "td")
+    val local =
+      if (mergePartitions(spark, m.files.map(_._2).sum) > 1) None
+      else readLocal(dir, "td", m, Long.MinValue, Long.MaxValue, Seq("series_id"))
+    local.fold(readTable(spark, dir, "td").df.select("series_id").distinct().count())(
+      _.rows.map(_.getLong(1)).distinct.size.toLong)
   }
 }

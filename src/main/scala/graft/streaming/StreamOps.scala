@@ -324,7 +324,8 @@ object StreamOps {
     * `point ≤ start + maxDuration`), so Spark evicts a buffered interval
     * once the point watermark passes `w_start + maxDuration`, and a
     * buffered point once the interval watermark passes its time. The
-    * actual end bound `time < w_end` rides along as a residual filter —
+    * actual end bound `time < w_end` rides along as a residual conjunct
+    * (on the timestamps `pts < iend`) —
     * exactly the batch operator's bucket-join + containment-filter split,
     * transposed to state eviction. Intervals LONGER than the cap are
     * dropped defensively (a partial match would silently diverge from the
@@ -343,11 +344,17 @@ object StreamOps {
       .filter(col("w_start") < col("w_end") &&
         col("w_end") - col("w_start") <= maxDurationSecs)
       .transform(watermarked(_, watermarkDelay, "ists", "w_start"))
-    p.join(i,
+    // the end bound compares the watermarked point timestamp with the
+    // interval end's: written over the raw `time`, Spark's state-watermark
+    // analysis of the join condition (where Catalyst also pushes a filter
+    // on the join's output) cannot evaluate `time` and logs a stack trace
+    // each time the query plans; over `pts` it solves the bound, and the
+    // eviction watermark stays the smaller `w_start` one
+    p.join(i.withColumn("iend", col("w_end").cast("timestamp")),
         col("series") === col("i_series") &&
           col("pts") >= col("ists") &&
           col("pts") <= col("ists") + expr(s"INTERVAL $maxDurationSecs SECONDS") &&
-          col("time") < col("w_end"))
+          col("pts") < col("iend"))
       .select(col("series"), col("time"), col("value"),
         col("w_start"), col("w_end"), col("w_value"))
   }

@@ -14,7 +14,28 @@ final case class QueryStats(
     // which execution route answered (r15 — EXPLAIN was the only
     // visibility): "raw", "served:cells:td", "served:cells:tdtag",
     // "served:hybrid:td", "served:hybrid:tdtag", "insert", "delete"
-    route: String = "raw")
+    route: String = "raw",
+    // a served route's cell read: where its merge ran and what it read
+    served: Option[ServedRead] = None)
+
+/** A served answer's cell read: where its merge ran (`driver`: the cells
+  * read and merged in-process, no Spark job; `spark`: a Spark plan), the
+  * cell table, and the data files (path, bytes) of the window's days the
+  * route read.
+  */
+final case class ServedRead(site: String, table: String, files: Seq[(String, Long)]) {
+  def bytes: Long = files.map(_._2).sum
+
+  /** The read as EXPLAIN shows it above a driver merge's plan, whose
+    * local scan names no file: the table, the days and each file.
+    */
+  def explain: String = {
+    val days = files.map { case (f, _) => new org.apache.hadoop.fs.Path(f).getParent.getName }.distinct
+    val head = s"== Driver cell merge ==\nCellRead $table ${days.mkString("[", ", ", "]")} " +
+      s"files=${files.size} bytes=$bytes"
+    (head +: files.map { case (f, b) => s"  $f ($b bytes)" }).mkString("", "\n", "\n")
+  }
+}
 
 final case class QueryResult(df: DataFrame, stats: QueryStats)
 
@@ -33,7 +54,12 @@ final case class QueryProfile(
     wallUs: Long,
     optimizeUs: Long,
     physicalUs: Long,
-    operators: Seq[QueryProfile.Operator])
+    operators: Seq[QueryProfile.Operator]) {
+  /** Where a served merge ran (`driver` or `spark`); `none` off the served routes. */
+  def mergeSite: String = stats.served.fold("none")(_.site)
+  def cellFiles: Int = stats.served.fold(0)(_.files.size)
+  def cellBytes: Long = stats.served.fold(0L)(_.bytes)
+}
 
 object QueryProfile {
   final case class Operator(name: String, rowsOut: Long, elapsedUs: Long)
@@ -253,9 +279,29 @@ object Engine {
     * gates pin (the same reason the at-rest tier q_ts_tdigest is
     * correct); edge digests/thetas are built by the raw route's own
     * aggregators, so the hybrid never mixes estimator families.
+    *
+    * Merge site: a window with no ragged edge and no FILL whose cells fit
+    * one split (`SketchCells.mergePartitions`, the rule that coalesces the
+    * Spark merge to one task) is answered on the DRIVER, with no Spark
+    * job: `SketchCells.readLocal` reads only the window's `day=` cell
+    * files, behind a freshness guard that lists them again and compares
+    * them with the memoized (path, bytes); the selector, tag equality and
+    * grouping apply in Scala; each needed partial merges by its
+    * `Partial.local` twin of the Spark merge aggregate, in day, file, row
+    * order; groups sort under Spark's orderings, OFFSET before LIMIT; and
+    * one `LocalRelation` row per group carries the merged partials
+    * (`__<name>`), projected by the same `Served.result` columns, which
+    * Spark folds on the driver. A failed guard takes the Spark route,
+    * which re-reads. Describe (`describe`) builds that frame over no cell
+    * and reads no file: the schema does not depend on the rows. Basic
+    * aggregates equal the Spark route's up to the fold order of double
+    * sums; digests merge in another order than the one-task Spark merge
+    * (which reads its files largest first), within the same error
+    * contract. Larger windows, ragged windows and FILL keep the Spark
+    * plan.
     */
   private def sketchServed(store: graft.storage.SeriesStore,
-      s: Ast.Select): Option[(DataFrame, String)] = {
+      s: Ast.Select, describe: Boolean): Option[(DataFrame, String, ServedRead)] = {
     import graft.storage.SketchCells
     import org.apache.spark.sql.functions.{col, lit}
     val spark = store.spark
@@ -446,6 +492,89 @@ object Engine {
     // < 24 h, so edges < 48 h ≤ interior at 2+ days); every multi-day
     // dashboard window keeps the hybrid.
     if ((dLo - l) + (h - dHi) >= dHi - dLo) return None
+    // any tag grouping OR tag-equality filter reads the tag tier
+    // (per-(series, day, value) digests); otherwise the td table (which
+    // also carries theta cells)
+    val tableName = tierTagKey.fold("td")(k => s"tdtag/$k")
+    val needed = SketchCells.partialsNamed(ps.collect { case Agg(_, a) => a.reads }
+      .flatten.toSet)
+    val edges = Seq((l, dLo), (dHi, h)).filter { case (a, b) => a < b }
+    // route attribution (r15): which tier answered and whether ragged
+    // edges forced the hybrid union — surfaced in QueryStats so the
+    // stats object (not just EXPLAIN) shows a raw-path fallthrough
+    val route = "served:" + (if (edges.nonEmpty) "hybrid" else "cells") +
+      ":" + (if (tierTagKey.isDefined) "tdtag" else "td")
+    // the served projection over either route's merged frame, whose
+    // columns are the group aliases and the merged partials `__<name>`
+    def project(merged: DataFrame): DataFrame = merged.select(ps.map {
+      case Grp(a, _) => col(a)
+      case Agg(a, agg) => agg.result(n => col("__" + n)).as(a)
+    }: _*)
+    // the driver route (scaladoc above): the memoized schema must carry
+    // every needed partial, or the Spark route below decides
+    val meta = SketchCells.meta(spark, dir, tableName)
+    if (edges.isEmpty && s.fill.isEmpty &&
+        needed.forall(p => meta.schema.fieldNames.contains(p.name)) &&
+        SketchCells.mergePartitions(spark, meta.bytesIn(dLo, dHi)) == 1) {
+      val cols = s.from.toSeq.map {
+        case Ast.ById(_) => "series_id"
+        case Ast.ByName(_) => "series"
+      } ++ tierTagKey.map(_ => "tagval") ++ needed.map(_.name)
+      val read =
+        if (describe) Some(SketchCells.LocalCells(Nil, Nil))
+        else SketchCells.readLocal(dir, tableName, meta, dLo, dHi, cols)
+      read match {
+        case None => ()
+        case Some(cells) =>
+          import org.apache.spark.sql.catalyst.InternalRow
+          import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+            Descending, InterpretedOrdering, SortOrder}
+          import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+          import org.apache.spark.unsafe.types.UTF8String
+          // a read row is `day`, then `cols`
+          val at = cols.zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
+          def str(r: InternalRow, c: String): UTF8String =
+            if (r.isNullAt(at(c))) null else r.getUTF8String(at(c))
+          val tagV = tagEq.map { case (_, v) => UTF8String.fromString(v) }
+          val kept = cells.rows.filter { r =>
+            s.from.forall {
+              case Ast.ById(id) => !r.isNullAt(at("series_id")) && r.getLong(at("series_id")) == id
+              case Ast.ByName(n) => UTF8String.fromString(n) == str(r, "series")
+            } && tagV.forall(_ == str(r, "tagval"))
+          }
+          val key: Option[InternalRow => Seq[Any]] =
+            if (groupKeys.isEmpty) None
+            else Some(r => groupKeys.map {
+              case BucketG(st, og, _) => graft.core.Functions.timeBucketOf(st, r.getLong(0), og)
+              case TagG(_, _) => str(r, "tagval")
+            })
+          val merged = SketchCells.mergeLocal(kept, key,
+            needed.map(p => (p, at(p.name), meta.schema(p.name).dataType)))
+          // ORDER BY's keys, then the other group keys ascending, under
+          // Spark's orderings: ASC NULLS FIRST, DESC NULLS LAST, strings in
+          // UTF-8 byte order
+          val keyTypes = groupKeys.map {
+            case _: BucketG => LongType
+            case _: TagG => StringType
+          }
+          val keyAt = groupKeys.map(grpAliases).zipWithIndex.toMap
+          val ordered = orderCols.get.map { case (a, asc) => (keyAt(a), asc) }
+          val ordering = new InterpretedOrdering(
+            (ordered ++ keyTypes.indices.filterNot(ordered.map(_._1).contains).map((_, true)))
+              .map { case (i, asc) =>
+                SortOrder(BoundReference(i, keyTypes(i), nullable = true),
+                  if (asc) Ascending else Descending)
+              })
+          val rows = merged.sorted(ordering)
+            .drop(s.offset.fold(0)(_.toInt)).take(s.limit.fold(Int.MaxValue)(_.toInt))
+          val schema = StructType(groupKeys.zip(keyTypes).map { case (k, t) =>
+            StructField(grpAliases(k), t) } ++
+            needed.map(p => StructField("__" + p.name, meta.schema(p.name).dataType)))
+          val frame = org.apache.spark.sql.graftshim.GraftShim.localFrame(spark, schema, rows)
+          return Some((project(frame), route,
+            ServedRead("driver", s"$dir/$tableName", cells.files)))
+      }
+    }
     // selector: by_id / name filter cells AND edge rows identically; an
     // absent selector (r14) is the fleet-wide shape — cells merge across
     // series, so no filter at all
@@ -454,14 +583,11 @@ object Engine {
       case Ast.ByName(n) => col("series") === n
     }
     def selFiltered(df: DataFrame): DataFrame = sel.fold(df)(df.filter)
-    // any tag grouping OR tag-equality filter reads the tag tier
-    // (per-(series, day, value) digests); otherwise the td table (which
-    // also carries theta cells). The equality filter applies on the
-    // tier's tagval key — day-pruned KB cells of ONE tag value. Only the
-    // window's day directories are read; the day filter below still
-    // prunes them in the scan's PartitionFilters.
-    val table = SketchCells.readTable(spark, dir,
-      tierTagKey.fold("td")(k => s"tdtag/$k"), dLo, dHi)
+    // the tier's cells, filtered by the tag equality on its tagval key —
+    // day-pruned KB cells of ONE tag value. Only the window's day
+    // directories are read; the day filter below still prunes them in the
+    // scan's PartitionFilters.
+    val table = SketchCells.readTable(spark, dir, tableName, dLo, dHi)
     val base = tagEq.foldLeft(
       selFiltered(table.df).filter(col("day") >= dLo && col("day") < dHi)) {
       case (df, (_, v)) => df.filter(col("tagval") === v)
@@ -473,8 +599,6 @@ object Engine {
     // read above carries the table's schema memoized per refresh
     // generation (SketchCells.readTable), so this check costs no metadata
     // round-trip and no schema-inference job.
-    val needed = SketchCells.partialsNamed(ps.collect { case Agg(_, a) => a.reads }
-      .flatten.toSet)
     if (!needed.forall(p => base.columns.contains(p.name))) return None
     // one merge aggregate carries every needed partial, merged by the
     // cell store's own merge aggregates (digest merge, theta union — the
@@ -536,9 +660,8 @@ object Engine {
     // scan's parallel plan; the ragged edges' raw reads are not sized here
     val cellRows = base.select(readCols.map(col): _*)
     val cells =
-      if (SketchCells.mergePartitions(spark, table.bytesIn(dLo, dHi)) == 1) cellRows.coalesce(1)
+      if (SketchCells.mergePartitions(spark, table.meta.bytesIn(dLo, dHi)) == 1) cellRows.coalesce(1)
       else cellRows
-    val edges = Seq((l, dLo), (dHi, h)).filter { case (a, b) => a < b }
     val unioned =
       if (edges.isEmpty) cells
       else cells.unionByName(edgePartials(
@@ -546,10 +669,7 @@ object Engine {
     val merged =
       if (groupCols.isEmpty) unioned.agg(aggs.head, aggs.tail: _*)
       else unioned.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*)
-    val out = merged.select(ps.map {
-      case Grp(a, _) => col(a)
-      case Agg(a, agg) => agg.result(n => col("__" + n)).as(a)
-    }: _*)
+    val out = project(merged)
     // fill between the projection and the sort — the compiler's exact
     // placement (grouped → fill → project → order → offset → limit);
     // the served frame's columns ARE the output names, like `grouped`'s
@@ -581,12 +701,8 @@ object Engine {
     // takes) — reached only under a total order (the guard above)
     val withOffset = s.offset.map(o => sorted.offset(o.toInt)).getOrElse(sorted)
     val served = s.limit.map(n => withOffset.limit(n.toInt)).getOrElse(withOffset)
-    // route attribution (r15): which tier answered and whether ragged
-    // edges forced the hybrid union — surfaced in QueryStats so the
-    // stats object (not just EXPLAIN) shows a raw-path fallthrough
-    val route = "served:" + (if (edges.nonEmpty) "hybrid" else "cells") +
-      ":" + (if (tierTagKey.isDefined) "tdtag" else "td")
-    Some((served, route))
+    Some((served, route,
+      ServedRead("spark", s"$dir/$tableName", table.meta.filesIn(dLo, dHi))))
   }
 
   /** Execute against a [[graft.storage.SeriesStore]]: SELECT/EXPLAIN read
@@ -611,9 +727,9 @@ object Engine {
 
   /** The row schema [[executeOnStore]] answers `sydraql` with, from the
     * same route resolution: a SELECT or EXPLAIN compiles on the served or
-    * pruned raw route it would execute on (lazily: the frame runs no job).
-    * INSERT and DELETE answer no rows; they are neither compiled nor run
-    * (None).
+    * pruned raw route it would execute on (lazily: the frame runs no job;
+    * a driver-merged served shape reads no cell file). INSERT and DELETE
+    * answer no rows; they are neither compiled nor run (None).
     */
   def describeOnStore(
       store: graft.storage.SeriesStore,
@@ -644,12 +760,13 @@ object Engine {
     // everything from validation to the built plan (serving-route
     // resolution, predicate/row compilation) — called BEFORE the arm's
     // side effect runs, so execution time never pollutes it
-    def statsOf(route: String): QueryStats = QueryStats(
+    def statsOf(route: String, served: Option[ServedRead] = None): QueryStats = QueryStats(
       parseUs = (t1 - t0) / 1000,
       validateUs = (t2 - t1) / 1000,
       compileUs = (System.nanoTime() - t2) / 1000,
       traceId = traceId(),
-      route = route)
+      route = route,
+      served = served)
     // INSERT values and the DELETE predicate are scalars, which read only
     // the source's column names: compile them over an empty frame of the
     // source's schema, not a read of every hour directory
@@ -662,16 +779,19 @@ object Engine {
           case Ast.Explain(s: Ast.Select) => Some(s)
           case _ => None
         }
-        Some(sel.flatMap(sketchServed(store, _)) match {
-          case Some((df, route)) if ast.isInstanceOf[Ast.Select] =>
-            QueryResult(df, statsOf(route))
-          case Some((df, route)) => // EXPLAIN of a served query shows the SERVED plan
+        Some(sel.flatMap(sketchServed(store, _, describe = !runWrites)) match {
+          case Some((df, route, read)) if ast.isInstanceOf[Ast.Select] =>
+            QueryResult(df, statsOf(route, Some(read)))
+          case Some((df, route, read)) =>
+            // EXPLAIN of a served query shows the SERVED plan; a driver
+            // merge's local scan names no file, so its read leads
             import spark.implicits._
             QueryResult(
-              Seq(df.queryExecution.explainString(
-                org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+              Seq((if (read.site == "driver") read.explain + "\n" else "") +
+                df.queryExecution.explainString(
+                  org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
                 .toDF("plan"),
-              statsOf(route))
+              statsOf(route, Some(read)))
           case _ =>
             // raw route: reuse the parse/validate this method already
             // did (and their measured times) — compile only

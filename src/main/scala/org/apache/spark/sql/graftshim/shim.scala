@@ -17,6 +17,18 @@ object GraftShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A frame over rows already in Catalyst's internal form: a
+    * `LocalRelation`, so a projection or limit over it folds on the driver
+    * (`ConvertToLocalRelation`) and collecting it runs no Spark job.
+    */
+  def localFrame(spark: org.apache.spark.sql.SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** Post-execution per-operator stats `(nodeName, numOutputRows,
     * elapsedUs)` — the Spark analog of the reference's per-operator
     * instrumentation (`operator.zig:30-48`, surfaced in API responses

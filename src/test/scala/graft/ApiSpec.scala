@@ -218,20 +218,36 @@ class ApiSpec extends AnyFunSuite {
     // sydrabench reads a missing numeric key as 0, so a dropped key would
     // silently zero a per-layer metric
     val keys = Seq("parse_us", "validate_us", "compile_us", "optimize_us", "physical_us",
-      "pipeline_us", "rows_emitted", "trace_id", "route", "operators")
+      "pipeline_us", "rows_emitted", "trace_id", "route", "operators",
+      "merge_site", "cell_files", "cell_bytes")
+    val servedQl = "select avg(value) as a from cpu where time >= 0 and time < 172800"
+    def statsOf(route: String, ql: String) = {
+      val r = post(port, "/api/v1/sydraql", mapper.writeValueAsString(java.util.Map.of("query", ql)))
+      assert(r.statusCode() === 200, s"$route: ${r.body().take(300)}")
+      val stats = mapper.readTree(r.body()).get("stats")
+      keys.foreach(k => assert(stats.has(k), s"$route reply lacks stats.$k: $stats"))
+      assert(stats.get("route").asText === route, stats.toString)
+      val ops = stats.get("operators")
+      assert(ops.isArray && ops.size > 0, s"$route: $stats")
+      ops.forEach(o => assert(o.has("name") && o.has("rows_out"), s"$route operator $o"))
+      stats
+    }
+    // the two days' cell files, each day one file
+    def cellRead(stats: com.fasterxml.jackson.databind.JsonNode) =
+      (stats.get("merge_site").asText, stats.get("cell_files").asInt, stats.get("cell_bytes").asLong)
     try {
-      Seq("served:cells:td" -> "select avg(value) as a from cpu where time >= 0 and time < 172800",
-        "raw" -> "select time, value from cpu where time >= 0 and time < 100000 order by time",
+      val driver = cellRead(statsOf("served:cells:td", servedQl))
+      assert(driver._1 === "driver" && driver._2 === 2 && driver._3 > 0, driver)
+      // a split size below the cells' bytes merges the same files in Spark
+      val key = "spark.sql.files.maxPartitionBytes"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "512")
+      try assert(cellRead(statsOf("served:cells:td", servedQl)) === driver.copy(_1 = "spark"))
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      Seq("raw" -> "select time, value from cpu where time >= 0 and time < 100000 order by time",
         "insert" -> "insert into cpu (time, value) values (100, 1.5)",
         "delete" -> "delete from cpu where time >= 100 and time < 101").foreach { case (route, ql) =>
-        val r = post(port, "/api/v1/sydraql", mapper.writeValueAsString(java.util.Map.of("query", ql)))
-        assert(r.statusCode() === 200, s"$route: ${r.body().take(300)}")
-        val stats = mapper.readTree(r.body()).get("stats")
-        keys.foreach(k => assert(stats.has(k), s"$route reply lacks stats.$k: $stats"))
-        assert(stats.get("route").asText === route, stats.toString)
-        val ops = stats.get("operators")
-        assert(ops.isArray && ops.size > 0, s"$route: $stats")
-        ops.forEach(o => assert(o.has("name") && o.has("rows_out"), s"$route operator $o"))
+        assert(cellRead(statsOf(route, ql)) === (("none", 0, 0L)), route)
       }
     } finally api.stop()
   }
@@ -352,9 +368,10 @@ class ApiSpec extends AnyFunSuite {
         val n = raw.length
         assert((row.get(n - 2).asDouble, row.get(n - 1).asLong) ===
           ((raw.getDouble(n - 2), raw.getLong(n - 1))), route)
-        // the day cells fit one split, so the merge reads them in one
-        // partition with no Exchange: one job, one task
-        assert(qJobs.size === 1, s"$route answer ran ${qJobs.size} jobs: ${qJobs.mkString(" | ")}")
+        // the day cells fit one split, so the driver reads and merges
+        // them in-process: no Spark job
+        assert(qJobs.isEmpty, s"$route answer ran ${qJobs.size} jobs: ${qJobs.mkString(" | ")}")
+        assert(q.body().contains("\"merge_site\":\"driver\""), q.body().take(600))
       }
       val (lo, hi) = (90000L, 100000L)
       def range() = get(port, s"/api/v1/query/range?series=cpu&start=$lo&end=$hi")
@@ -367,6 +384,36 @@ class ApiSpec extends AnyFunSuite {
       assert(pts === store.source().filter(col("time") >= lo && col("time") <= hi)
         .orderBy("time").select("time", "value").as[(Long, Double)].collect().toSeq)
       assert(rJobs.size === 1, s"a pruned range read ran ${rJobs.size} jobs: ${rJobs.mkString(" | ")}")
+    } finally api.stop()
+  }
+
+  test("the /metrics series gauge of a tiered store reads cells, not segment records") {
+    import graft.storage.SketchCells
+    import org.apache.spark.sql.functions.{lit, map}
+    import spark.implicits._
+    val store = new SeriesStore(spark, Files.createTempDirectory("graft-api-gauge").toString)
+    // five series (two names, three hosts) over three days
+    store.append((0 until 90).map(i => (s"m${i % 2}", s"h${i % 3}", i * 2880L, i.toDouble))
+      .toDF("series", "host", "time", "value")
+      .withColumn("tags", map(lit("host"), $"host"))
+      .select("series", "tags", "time", "value"))
+    val api = new HttpApi(store)
+    val port = api.start()
+    def gauge(): Long = get(port, "/metrics").body().linesIterator
+      .collectFirst { case l if l.startsWith("sydra_series ") => l.stripPrefix("sydra_series ").toLong }
+      .get
+    try {
+      val want = store.catalog().count()
+      assert(want === 6L)
+      // without tiers the gauge scans the store
+      assert(gauge() === want)
+      SketchCells.build(store, SketchCells.dirFor(store))
+      // the first scrape also loads the cell table's metadata (footers)
+      (0 until 2).foreach { i =>
+        val (n, records) = TestSpark.recordsReadDuring(gauge())
+        assert(n === want, s"scrape $i")
+        assert(records === 0L, s"scrape $i read $records records")
+      }
     } finally api.stop()
   }
 

@@ -412,12 +412,18 @@ class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
       // a served cells shape: Describe's RowDescription is the one the
       // simple protocol sends for the same statement
       val served = s"SELECT avg(value) as a, count() as n FROM m WHERE time >= 0 and time < ${10 * d}"
-      assert(Engine.executeOnStore(store,
+      val res = Engine.executeOnStore(store,
         s"select avg(value) as a,count() as n from m where time >= 0 and time < ${10 * d}",
-        CompileOptions()).stats.route === "served:cells:td")
+        CompileOptions())
+      assert(res.stats.route === "served:cells:td")
+      assert(res.stats.served.map(_.site) === Some("driver"))
+      // Describe of a driver-merged shape reads no cell file; Execute does
+      val opened = SketchCells.localFilesRead.get()
       val described = describe("s", served).find(_._1 == 'T').map(_._2.toSeq)
+      assert(SketchCells.localFilesRead.get() === opened)
       c.sendQuery(served)
       val simple = c.readUntilReady()
+      assert(SketchCells.localFilesRead.get() === opened + 10)
       assert(simple.count(_._1 == 'D') === 1)
       assert(described.isDefined && described === simple.find(_._1 == 'T').map(_._2.toSeq))
       // INSERT: NoData, and nothing is written

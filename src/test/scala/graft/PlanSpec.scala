@@ -16,6 +16,48 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, sf).queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
+  /** `f` with a split size below any cell file's bytes, so every served
+    * window takes the Spark merge whose plan the served-plan pins read
+    * (`SketchCells.mergePartitions` > 1); the setting is restored after.
+    */
+  private def onSparkRoute[T](f: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "512")
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** A cells-only served shape at default settings is answered on the
+    * driver: its route, a read set of exactly the window's
+    * `sketchcells/<table>/day=<d>` files (no segments path), no Spark job,
+    * and the raw compile's answer.
+    */
+  private def assertDriverServed(store: SeriesStore, ql: String, route: String,
+      table: String, days: Seq[Long]): Unit = {
+    import graft.sydraql.{CompileOptions, Engine}
+    val opts = CompileOptions(now = 0L)
+    Engine.executeOnStore(store, ql, opts) // the cell table's metadata loads once
+    val ((res, rows), jobs) = TestSpark.jobsDuring {
+      val r = Engine.executeOnStore(store, ql, opts)
+      (r, r.df.collect().toSeq)
+    }
+    assert(res.stats.route === route, ql)
+    val read = res.stats.served.get
+    assert(read.site === "driver", ql)
+    val dir = new org.apache.hadoop.fs.Path(
+      s"${graft.storage.SketchCells.dirFor(store)}/$table")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val want = days.flatMap(d => fs.listStatus(new org.apache.hadoop.fs.Path(dir, s"day=$d"))
+      .filter(st => st.isFile && !st.getPath.getName.startsWith(".") &&
+        !st.getPath.getName.startsWith("_"))
+      .map(st => (st.getPath.toString, st.getLen)))
+    assert(read.files.sorted === want.sorted, ql)
+    assert(read.files.forall { case (f, _) =>
+      f.contains(s"sketchcells/$table/day=") && !f.contains("segments") }, ql)
+    assert(jobs.isEmpty, s"$ql ran ${jobs.size} jobs: ${jobs.mkString(" | ")}")
+    assert(rows === Engine.sql(spark, store.source(), ql, opts).collect().toSeq, ql)
+  }
+
   test("series-bucketed store: group-by-series_id aggregate has NO Exchange") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -341,215 +383,247 @@ class PlanSpec extends AnyFunSuite {
       .select("series", "tags", "time", "value")
     store.append(pts)
     graft.storage.SketchCells.build(store, graft.storage.SketchCells.dirFor(store))
-    def planOf(ql: String) = {
-      val df = graft.sydraql.Engine.executeOnStore(store, ql,
-        graft.sydraql.CompileOptions(now = 0L)).df
-      (df, df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+    // at default settings the day-aligned cells-only shapes below merge on
+    // the driver
+    val d = 86400L
+    val w12 = s"where time >= $d and time < ${3 * d}"
+    Seq(s"select percentile_approx(value, 0.5) as p50a from cpu $w12",
+      s"select avg(value) as av, count() as n $w12",
+      "select avg(value) as av, sum(value) as sv, count() as n, count(value) as nv, " +
+        s"min(value) as mn, max(value) as mx from cpu $w12",
+      s"select percentile_approx(value, 0.5) as p, avg(value) as av from cpu $w12",
+      s"select first(value) as fv, last(value) as lv from cpu $w12",
+      s"select delta(value) as dv, rate(value) as rv from cpu $w12").foreach { ql =>
+      assertDriverServed(store, ql, "served:cells:td", "td", Seq(d, 2 * d))
     }
-    // day-aligned 2-day window over 6 days of cells → served from the
-    // cell store: day PartitionFilters, 2 of 6 day partitions read, the
-    // raw segments path absent from the plan entirely
-    val (df, p) = planOf(
-      s"select percentile_approx(value, 0.5) as p50a from cpu where time >= 86400 and time < ${3 * 86400}")
-    assert(p.contains("sketchcells"), p.take(1200))
-    assert(!p.contains("segments"), "served plan must not touch the raw store:\n" + p.take(1200))
-    // both day bounds sit in the scan's PartitionFilters — evaluated
-    // against the partition index, so 2 of the 6 day dirs are read
-    // (inputFiles can't show this: it lists the relation pre-pruning)
-    val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf.contains("day") && pf.contains("86400") && pf.contains("259200"),
-      s"day bounds must prune cell partitions: $pf")
-    // the estimate agrees with the raw route's error contract: exact p50
-    // of days 1-2 values (4..11) is 7.5; the digest over 8 points is exact
-    assert(df.head().getDouble(0) === 7.5)
-    // HOUR-aligned (not day-aligned) window → HYBRID (r14): the interior
-    // whole day [172800, 259200) comes from cells, the ragged leading
-    // edge [90000, 172800) from an hour-pruned raw scan aggregated into
-    // the same partial shapes — the plan carries BOTH paths, and the
-    // segments scan is hour_bucket-pruned to the edge
-    val (hdf, praw) = planOf(
-      s"select percentile_approx(value, 0.5) as p50a from cpu where time >= ${86400 + 3600} and time < ${3 * 86400}")
-    assert(praw.contains("sketchcells") && praw.contains("segments"),
-      "ragged window must serve hybrid (cells + edge scan):\n" + praw.take(1200))
-    val epf = praw.linesIterator.filter(_.contains("PartitionFilters"))
-      .find(_.contains("hour_bucket")).getOrElse("")
-    assert(epf.nonEmpty, s"edge scan must be hour_bucket-pruned:\n$praw")
-    // points i*21600 for i in 5..11 survive the window: p50 of 5..11 = 8
-    // (7 points — the digest is exact), bit-equal to the raw route
-    assert(hdf.head().getDouble(0) === 8.0)
-    // with a skip manifest present the edges route through its explicit
-    // edge-hour file list (no full segments listing at plan time — the
-    // ScaleBench-measured 2×~8 s saving) and the answer is unchanged
-    graft.storage.SkipIndex.build(store, graft.storage.SkipIndex.dirFor(store))
-    val (hdf2, praw2) = planOf(
-      s"select percentile_approx(value, 0.5) as p50a from cpu where time >= ${86400 + 3600} and time < ${3 * 86400}")
-    assert(praw2.contains("sketchcells") && praw2.contains("segments"),
-      "manifest-routed hybrid still reads cells + edge files:\n" + praw2.take(1200))
-    assert(hdf2.head().getDouble(0) === 8.0)
-    // a ragged window with NO whole interior day (all edge) → raw route
-    val (_, nid) = planOf(
-      s"select percentile_approx(value, 0.5) as p50a from cpu where time >= 3600 and time < 90000")
-    assert(nid.contains("segments") && !nid.contains("sketchcells"),
-      "a window with no interior day must fall through to raw:\n" + nid.take(800))
-    // r17 crossover: an interior day exists, but the edges (23 h + 23 h)
-    // are wider than it — the hybrid would scan more than half the
-    // window raw and cannot beat the raw route it wraps → raw
-    val (_, edgy) = planOf(
-      s"select percentile_approx(value, 0.5) as p50a from cpu " +
-        s"where time >= ${86400 + 3600} and time < ${4 * 86400 - 3600}")
-    assert(edgy.contains("segments") && !edgy.contains("sketchcells"),
-      "an edge-dominated window must fall through to raw:\n" + edgy.take(800))
-    // all-series (FROM-less) shape serves from cells alone (r14): the
-    // fleet-wide dashboard merge across series — here one series, but the
-    // plan must be cells-only and the bounds must prune
-    val (sdf, sp) = planOf(
-      s"select avg(value) as av, count() as n where time >= 86400 and time < ${3 * 86400}")
-    assert(sp.contains("sketchcells") && !sp.contains("segments"),
-      "all-series day-aligned window must serve cells-only:\n" + sp.take(800))
-    assert(sdf.head().getDouble(0) === 7.5 && sdf.head().getLong(1) === 8L)
-    // LIMIT on a served shape (r14 fix — it was silently dropped):
-    // ORDER BY covers the one group key → total order → served WITH the
-    // limit applied (2 rows, not 6); an UNORDERED grouped limit's
-    // tie-breaking belongs to the raw route → falls through
-    val (ldf2, lp2) = planOf(
-      "select time_bucket(86400, time) as b, avg(value) as av " +
-        s"from cpu where time >= 0 and time < ${6 * 86400} " +
-        "group by time_bucket(86400, time) order by b desc limit 2")
-    assert(lp2.contains("sketchcells") && !lp2.contains("segments"),
-      "total-order limit must stay served:\n" + lp2.take(800))
-    assert(ldf2.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      === Seq((5 * 86400L, 21.5), (4 * 86400L, 17.5)))
-    val (_, lnp) = planOf(
-      "select time_bucket(86400, time) as b, avg(value) as av " +
-        s"from cpu where time >= 0 and time < ${6 * 86400} " +
-        "group by time_bucket(86400, time) limit 2")
-    assert(lnp.contains("segments"),
-      "unordered grouped limit must fall through to raw:\n" + lnp.take(800))
-    // r14: the REVERSED conjunct order (`time < HI and time >= LO`) is the
-    // same day-aligned window — must serve, not fall through
-    val (rdf, rp) = planOf(
-      s"select percentile_approx(value, 0.5) as p50a from cpu where time < ${3 * 86400} and time >= 86400")
-    assert(rp.contains("sketchcells") && !rp.contains("segments"),
-      "reversed conjunct order must still serve from cells:\n" + rp.take(800))
-    assert(rdf.head().getDouble(0) === 7.5)
-    // an EXTRA conjunct the cells can't answer → raw route, right answer
-    val (_, xp) = planOf(
-      s"select percentile_approx(value, 0.5) as p50a from cpu where time >= 86400 and time < ${3 * 86400} and value >= 5")
-    assert(xp.contains("segments"),
-      "extra conjuncts must fall through to raw:\n" + xp.take(800))
-    // GROUP BY time_bucket with a DAY-MULTIPLE step coarsens the day
-    // cells → still served (2-day buckets from 1-day blobs), pruned the
-    // same way; values follow the rollup math exactly (days 0-5 values
-    // 4/day: bucket0 p50 over 0..7 = 3.5, bucket1 over 8..15 = 11.5,
-    // bucket2 over 16..23 = 19.5)
-    val (bdf, bp) = planOf(
+    Seq("select time_bucket(86400, time) as b, avg(value) as av " +
+        s"from cpu where time >= 0 and time < ${6 * d} " +
+        "group by time_bucket(86400, time) order by b desc limit 2",
       "select time_bucket(172800, time) as b, percentile_approx(value, 0.5) as p50a " +
-        s"from cpu where time >= 0 and time < ${6 * 86400} " +
-        "group by time_bucket(172800, time) order by b")
-    assert(bp.contains("sketchcells") && !bp.contains("segments"),
-      "day-multiple bucket query must serve from cells:\n" + bp.take(800))
-    assert(bdf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      === Seq((0L, 3.5), (172800L, 11.5), (345600L, 19.5)))
-    // fill(...) on a served bucketed shape stays served (r14): fill is
-    // post-aggregation, so the cells-only plan gains only the spine
-    // join — never a raw rescan (this fixture is dense, so the values
-    // are the unfilled ones; the gate pins real gap semantics)
-    val (fdf2, fp2) = planOf(
-      "select time_bucket(172800, time) as b, avg(value) as av " +
-        s"from cpu where time >= 0 and time < ${6 * 86400} " +
-        "group by time_bucket(172800, time) fill(previous) order by b")
-    assert(fp2.contains("sketchcells") && !fp2.contains("segments"),
-      "filled bucketed query must serve from cells:\n" + fp2.take(800))
-    assert(fdf2.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      === Seq((0L, 3.5), (172800L, 11.5), (345600L, 19.5)))
-    // 3-arg time_bucket with a DAY-ALIGNED origin serves (bucket
-    // boundaries stay on day boundaries): origin=day1 over days 0-5 at
-    // 2-day steps → buckets {-2d:[d0], 0d:[d1,d2], 2d:[d3,d4], 4d:[d5]}
-    // relative to origin 86400 — values 0..3 / 4..11 / 12..19 / 20..23
-    val (odf, op) = planOf(
+        s"from cpu where time >= 0 and time < ${6 * d} group by time_bucket(172800, time) order by b",
       "select time_bucket(172800, time, 86400) as b, avg(value) as av " +
-        s"from cpu where time >= 0 and time < ${6 * 86400} " +
-        "group by time_bucket(172800, time, 86400) order by b")
-    assert(op.contains("sketchcells") && !op.contains("segments"),
-      "day-aligned-origin bucket must serve from cells:\n" + op.take(800))
-    assert(odf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      === Seq((-86400L, 1.5), (86400L, 7.5), (259200L, 15.5), (432000L, 21.5)))
-    // a sub-day origin breaks day containment → raw route
-    val (_, onp) = planOf(
-      "select time_bucket(172800, time, 3600) as b, avg(value) as av " +
-        s"from cpu where time >= 0 and time < ${6 * 86400} " +
-        "group by time_bucket(172800, time, 3600) order by b")
-    assert(onp.contains("segments"),
-      "sub-day origin must fall through to raw:\n" + onp.take(800))
-    // a NON-day-multiple step (hourly buckets) cannot → raw route
-    val (_, hb) = planOf(
-      "select time_bucket(3600, time) as b, percentile_approx(value, 0.5) as p50a " +
-        s"from cpu where time >= 0 and time < ${6 * 86400} " +
-        "group by time_bucket(3600, time) order by b")
-    assert(hb.contains("segments"), "sub-day buckets must read raw:\n" + hb.take(800))
-    // EXPLAIN of a served query shows the SERVED plan, not the raw route
-    val ex = graft.sydraql.Engine.executeOnStore(store,
-      s"explain select percentile_approx(value, 0.5) as p50a from cpu " +
-        s"where time >= 86400 and time < ${3 * 86400}",
+        s"from cpu where time >= 0 and time < ${6 * d} " +
+        "group by time_bucket(172800, time, 86400) order by b").foreach { ql =>
+      assertDriverServed(store, ql, "served:cells:td", "td", (0 until 6).map(_ * d))
+    }
+    // EXPLAIN of a driver merge names the cell table and the days it reads
+    val dex = graft.sydraql.Engine.executeOnStore(store,
+      s"explain select percentile_approx(value, 0.5) as p50a from cpu $w12",
       graft.sydraql.CompileOptions(now = 0L)).df.head().getString(0)
-    assert(ex.contains("sketchcells") && !ex.contains("segments"),
-      "EXPLAIN must describe the served plan:\n" + ex.take(600))
-    // r14: basic aggregates serve EXACTLY from the cells' mergeable
-    // partials — same day pruning, raw segments path absent. Days 1-2
-    // hold values 4..11: avg 7.5, sum 60, n 8, min 4, max 11.
-    val (adf, ap) = planOf(
-      "select avg(value) as av, sum(value) as sv, count() as n, " +
-        "count(value) as nv, min(value) as mn, max(value) as mx " +
-        s"from cpu where time >= 86400 and time < ${3 * 86400}")
-    assert(ap.contains("sketchcells") && !ap.contains("segments"),
-      "basic aggregates must serve from cells:\n" + ap.take(800))
-    val ar = adf.head()
-    assert(ar.getDouble(0) === 7.5 && ar.getDouble(1) === 60.0 &&
-      ar.getLong(2) === 8L && ar.getLong(3) === 8L &&
-      ar.getDouble(4) === 4.0 && ar.getDouble(5) === 11.0)
-    // mixed basic + quantile projections share ONE merge aggregate
-    val (mdf, mp) = planOf(
-      "select percentile_approx(value, 0.5) as p, avg(value) as av " +
-        s"from cpu where time >= 86400 and time < ${3 * 86400}")
-    assert(mp.contains("sketchcells") && !mp.contains("segments"),
-      "mixed projections must serve from cells:\n" + mp.take(800))
-    assert(mdf.head().getDouble(1) === 7.5)
-    // first/last serve from the struct partials: days 1-2 run values
-    // 4..11 at times 4·21600..11·21600 — first 4.0, last 11.0
-    val (fldf, flp) = planOf(
-      "select first(value) as fv, last(value) as lv " +
-        s"from cpu where time >= 86400 and time < ${3 * 86400}")
-    assert(flp.contains("sketchcells") && !flp.contains("segments"),
-      "first/last must serve from cells:\n" + flp.take(800))
-    assert(fldf.head().getDouble(0) === 4.0 && fldf.head().getDouble(1) === 11.0)
-    // delta/rate from the null-skipping extremes: values 4..11 over
-    // 7 × 21600 s → delta 7, rate 7/151200 (bit-exact vs the raw route)
-    val (drdf, drp) = planOf(
-      "select delta(value) as dv, rate(value) as rv " +
-        s"from cpu where time >= 86400 and time < ${3 * 86400}")
-    assert(drp.contains("sketchcells") && !drp.contains("segments"),
-      "delta/rate must serve from cells:\n" + drp.take(800))
-    assert(drdf.head().getDouble(0) === 7.0 &&
-      drdf.head().getDouble(1) === 7.0 / 151200.0)
-    // a PRE-r14 cell store (no basic-partial columns) falls through to
-    // raw for basic aggregates — correct, just unserved — while
-    // quantiles keep serving from the remaining td blobs
-    val cellDir = graft.storage.SketchCells.dirFor(store)
-    val legacy = spark.read.parquet(s"$cellDir/td")
-      .drop("sum_v", "min_v", "max_v", "n_vals").cache()
-    legacy.count()
-    legacy.write.mode("overwrite").partitionBy("day").parquet(s"$cellDir/td")
-    legacy.unpersist()
-    val (ldf, lp) = planOf(
-      s"select avg(value) as av from cpu where time >= 86400 and time < ${3 * 86400}")
-    assert(lp.contains("segments"),
-      "basic agg on a pre-r14 cell store must fall through to raw:\n" + lp.take(800))
-    assert(ldf.head().getDouble(0) === 7.5)
-    val (_, lq) = planOf(
-      s"select percentile_approx(value, 0.5) as p from cpu where time >= 86400 and time < ${3 * 86400}")
-    assert(lq.contains("sketchcells") && !lq.contains("segments"),
-      "quantiles must still serve from a pre-r14 store:\n" + lq.take(800))
+    assert(dex.contains("Driver cell merge") && dex.contains("sketchcells/td [day=86400, day=172800]") &&
+      !dex.contains("segments"), dex.take(1200))
+    // the plan pins below read the Spark merge's plan
+    onSparkRoute {
+      def planOf(ql: String) = {
+        val df = graft.sydraql.Engine.executeOnStore(store, ql,
+          graft.sydraql.CompileOptions(now = 0L)).df
+        (df, df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+      }
+      // day-aligned 2-day window over 6 days of cells → served from the
+      // cell store: day PartitionFilters, 2 of 6 day partitions read, the
+      // raw segments path absent from the plan entirely
+      val (df, p) = planOf(
+        s"select percentile_approx(value, 0.5) as p50a from cpu where time >= 86400 and time < ${3 * 86400}")
+      assert(p.contains("sketchcells"), p.take(1200))
+      assert(!p.contains("segments"), "served plan must not touch the raw store:\n" + p.take(1200))
+      // both day bounds sit in the scan's PartitionFilters — evaluated
+      // against the partition index, so 2 of the 6 day dirs are read
+      // (inputFiles can't show this: it lists the relation pre-pruning)
+      val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
+      assert(pf.contains("day") && pf.contains("86400") && pf.contains("259200"),
+        s"day bounds must prune cell partitions: $pf")
+      // the estimate agrees with the raw route's error contract: exact p50
+      // of days 1-2 values (4..11) is 7.5; the digest over 8 points is exact
+      assert(df.head().getDouble(0) === 7.5)
+      // HOUR-aligned (not day-aligned) window → HYBRID (r14): the interior
+      // whole day [172800, 259200) comes from cells, the ragged leading
+      // edge [90000, 172800) from an hour-pruned raw scan aggregated into
+      // the same partial shapes — the plan carries BOTH paths, and the
+      // segments scan is hour_bucket-pruned to the edge
+      val (hdf, praw) = planOf(
+        s"select percentile_approx(value, 0.5) as p50a from cpu where time >= ${86400 + 3600} and time < ${3 * 86400}")
+      assert(praw.contains("sketchcells") && praw.contains("segments"),
+        "ragged window must serve hybrid (cells + edge scan):\n" + praw.take(1200))
+      val epf = praw.linesIterator.filter(_.contains("PartitionFilters"))
+        .find(_.contains("hour_bucket")).getOrElse("")
+      assert(epf.nonEmpty, s"edge scan must be hour_bucket-pruned:\n$praw")
+      // points i*21600 for i in 5..11 survive the window: p50 of 5..11 = 8
+      // (7 points — the digest is exact), bit-equal to the raw route
+      assert(hdf.head().getDouble(0) === 8.0)
+      // with a skip manifest present the edges route through its explicit
+      // edge-hour file list (no full segments listing at plan time — the
+      // ScaleBench-measured 2×~8 s saving) and the answer is unchanged
+      graft.storage.SkipIndex.build(store, graft.storage.SkipIndex.dirFor(store))
+      val (hdf2, praw2) = planOf(
+        s"select percentile_approx(value, 0.5) as p50a from cpu where time >= ${86400 + 3600} and time < ${3 * 86400}")
+      assert(praw2.contains("sketchcells") && praw2.contains("segments"),
+        "manifest-routed hybrid still reads cells + edge files:\n" + praw2.take(1200))
+      assert(hdf2.head().getDouble(0) === 8.0)
+      // a ragged window with NO whole interior day (all edge) → raw route
+      val (_, nid) = planOf(
+        s"select percentile_approx(value, 0.5) as p50a from cpu where time >= 3600 and time < 90000")
+      assert(nid.contains("segments") && !nid.contains("sketchcells"),
+        "a window with no interior day must fall through to raw:\n" + nid.take(800))
+      // r17 crossover: an interior day exists, but the edges (23 h + 23 h)
+      // are wider than it — the hybrid would scan more than half the
+      // window raw and cannot beat the raw route it wraps → raw
+      val (_, edgy) = planOf(
+        s"select percentile_approx(value, 0.5) as p50a from cpu " +
+          s"where time >= ${86400 + 3600} and time < ${4 * 86400 - 3600}")
+      assert(edgy.contains("segments") && !edgy.contains("sketchcells"),
+        "an edge-dominated window must fall through to raw:\n" + edgy.take(800))
+      // all-series (FROM-less) shape serves from cells alone (r14): the
+      // fleet-wide dashboard merge across series — here one series, but the
+      // plan must be cells-only and the bounds must prune
+      val (sdf, sp) = planOf(
+        s"select avg(value) as av, count() as n where time >= 86400 and time < ${3 * 86400}")
+      assert(sp.contains("sketchcells") && !sp.contains("segments"),
+        "all-series day-aligned window must serve cells-only:\n" + sp.take(800))
+      assert(sdf.head().getDouble(0) === 7.5 && sdf.head().getLong(1) === 8L)
+      // LIMIT on a served shape (r14 fix — it was silently dropped):
+      // ORDER BY covers the one group key → total order → served WITH the
+      // limit applied (2 rows, not 6); an UNORDERED grouped limit's
+      // tie-breaking belongs to the raw route → falls through
+      val (ldf2, lp2) = planOf(
+        "select time_bucket(86400, time) as b, avg(value) as av " +
+          s"from cpu where time >= 0 and time < ${6 * 86400} " +
+          "group by time_bucket(86400, time) order by b desc limit 2")
+      assert(lp2.contains("sketchcells") && !lp2.contains("segments"),
+        "total-order limit must stay served:\n" + lp2.take(800))
+      assert(ldf2.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        === Seq((5 * 86400L, 21.5), (4 * 86400L, 17.5)))
+      val (_, lnp) = planOf(
+        "select time_bucket(86400, time) as b, avg(value) as av " +
+          s"from cpu where time >= 0 and time < ${6 * 86400} " +
+          "group by time_bucket(86400, time) limit 2")
+      assert(lnp.contains("segments"),
+        "unordered grouped limit must fall through to raw:\n" + lnp.take(800))
+      // r14: the REVERSED conjunct order (`time < HI and time >= LO`) is the
+      // same day-aligned window — must serve, not fall through
+      val (rdf, rp) = planOf(
+        s"select percentile_approx(value, 0.5) as p50a from cpu where time < ${3 * 86400} and time >= 86400")
+      assert(rp.contains("sketchcells") && !rp.contains("segments"),
+        "reversed conjunct order must still serve from cells:\n" + rp.take(800))
+      assert(rdf.head().getDouble(0) === 7.5)
+      // an EXTRA conjunct the cells can't answer → raw route, right answer
+      val (_, xp) = planOf(
+        s"select percentile_approx(value, 0.5) as p50a from cpu where time >= 86400 and time < ${3 * 86400} and value >= 5")
+      assert(xp.contains("segments"),
+        "extra conjuncts must fall through to raw:\n" + xp.take(800))
+      // GROUP BY time_bucket with a DAY-MULTIPLE step coarsens the day
+      // cells → still served (2-day buckets from 1-day blobs), pruned the
+      // same way; values follow the rollup math exactly (days 0-5 values
+      // 4/day: bucket0 p50 over 0..7 = 3.5, bucket1 over 8..15 = 11.5,
+      // bucket2 over 16..23 = 19.5)
+      val (bdf, bp) = planOf(
+        "select time_bucket(172800, time) as b, percentile_approx(value, 0.5) as p50a " +
+          s"from cpu where time >= 0 and time < ${6 * 86400} " +
+          "group by time_bucket(172800, time) order by b")
+      assert(bp.contains("sketchcells") && !bp.contains("segments"),
+        "day-multiple bucket query must serve from cells:\n" + bp.take(800))
+      assert(bdf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        === Seq((0L, 3.5), (172800L, 11.5), (345600L, 19.5)))
+      // fill(...) on a served bucketed shape stays served (r14): fill is
+      // post-aggregation, so the cells-only plan gains only the spine
+      // join — never a raw rescan (this fixture is dense, so the values
+      // are the unfilled ones; the gate pins real gap semantics)
+      val (fdf2, fp2) = planOf(
+        "select time_bucket(172800, time) as b, avg(value) as av " +
+          s"from cpu where time >= 0 and time < ${6 * 86400} " +
+          "group by time_bucket(172800, time) fill(previous) order by b")
+      assert(fp2.contains("sketchcells") && !fp2.contains("segments"),
+        "filled bucketed query must serve from cells:\n" + fp2.take(800))
+      assert(fdf2.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        === Seq((0L, 3.5), (172800L, 11.5), (345600L, 19.5)))
+      // 3-arg time_bucket with a DAY-ALIGNED origin serves (bucket
+      // boundaries stay on day boundaries): origin=day1 over days 0-5 at
+      // 2-day steps → buckets {-2d:[d0], 0d:[d1,d2], 2d:[d3,d4], 4d:[d5]}
+      // relative to origin 86400 — values 0..3 / 4..11 / 12..19 / 20..23
+      val (odf, op) = planOf(
+        "select time_bucket(172800, time, 86400) as b, avg(value) as av " +
+          s"from cpu where time >= 0 and time < ${6 * 86400} " +
+          "group by time_bucket(172800, time, 86400) order by b")
+      assert(op.contains("sketchcells") && !op.contains("segments"),
+        "day-aligned-origin bucket must serve from cells:\n" + op.take(800))
+      assert(odf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        === Seq((-86400L, 1.5), (86400L, 7.5), (259200L, 15.5), (432000L, 21.5)))
+      // a sub-day origin breaks day containment → raw route
+      val (_, onp) = planOf(
+        "select time_bucket(172800, time, 3600) as b, avg(value) as av " +
+          s"from cpu where time >= 0 and time < ${6 * 86400} " +
+          "group by time_bucket(172800, time, 3600) order by b")
+      assert(onp.contains("segments"),
+        "sub-day origin must fall through to raw:\n" + onp.take(800))
+      // a NON-day-multiple step (hourly buckets) cannot → raw route
+      val (_, hb) = planOf(
+        "select time_bucket(3600, time) as b, percentile_approx(value, 0.5) as p50a " +
+          s"from cpu where time >= 0 and time < ${6 * 86400} " +
+          "group by time_bucket(3600, time) order by b")
+      assert(hb.contains("segments"), "sub-day buckets must read raw:\n" + hb.take(800))
+      // EXPLAIN of a served query shows the SERVED plan, not the raw route
+      val ex = graft.sydraql.Engine.executeOnStore(store,
+        s"explain select percentile_approx(value, 0.5) as p50a from cpu " +
+          s"where time >= 86400 and time < ${3 * 86400}",
+        graft.sydraql.CompileOptions(now = 0L)).df.head().getString(0)
+      assert(ex.contains("sketchcells") && !ex.contains("segments"),
+        "EXPLAIN must describe the served plan:\n" + ex.take(600))
+      // r14: basic aggregates serve EXACTLY from the cells' mergeable
+      // partials — same day pruning, raw segments path absent. Days 1-2
+      // hold values 4..11: avg 7.5, sum 60, n 8, min 4, max 11.
+      val (adf, ap) = planOf(
+        "select avg(value) as av, sum(value) as sv, count() as n, " +
+          "count(value) as nv, min(value) as mn, max(value) as mx " +
+          s"from cpu where time >= 86400 and time < ${3 * 86400}")
+      assert(ap.contains("sketchcells") && !ap.contains("segments"),
+        "basic aggregates must serve from cells:\n" + ap.take(800))
+      val ar = adf.head()
+      assert(ar.getDouble(0) === 7.5 && ar.getDouble(1) === 60.0 &&
+        ar.getLong(2) === 8L && ar.getLong(3) === 8L &&
+        ar.getDouble(4) === 4.0 && ar.getDouble(5) === 11.0)
+      // mixed basic + quantile projections share ONE merge aggregate
+      val (mdf, mp) = planOf(
+        "select percentile_approx(value, 0.5) as p, avg(value) as av " +
+          s"from cpu where time >= 86400 and time < ${3 * 86400}")
+      assert(mp.contains("sketchcells") && !mp.contains("segments"),
+        "mixed projections must serve from cells:\n" + mp.take(800))
+      assert(mdf.head().getDouble(1) === 7.5)
+      // first/last serve from the struct partials: days 1-2 run values
+      // 4..11 at times 4·21600..11·21600 — first 4.0, last 11.0
+      val (fldf, flp) = planOf(
+        "select first(value) as fv, last(value) as lv " +
+          s"from cpu where time >= 86400 and time < ${3 * 86400}")
+      assert(flp.contains("sketchcells") && !flp.contains("segments"),
+        "first/last must serve from cells:\n" + flp.take(800))
+      assert(fldf.head().getDouble(0) === 4.0 && fldf.head().getDouble(1) === 11.0)
+      // delta/rate from the null-skipping extremes: values 4..11 over
+      // 7 × 21600 s → delta 7, rate 7/151200 (bit-exact vs the raw route)
+      val (drdf, drp) = planOf(
+        "select delta(value) as dv, rate(value) as rv " +
+          s"from cpu where time >= 86400 and time < ${3 * 86400}")
+      assert(drp.contains("sketchcells") && !drp.contains("segments"),
+        "delta/rate must serve from cells:\n" + drp.take(800))
+      assert(drdf.head().getDouble(0) === 7.0 &&
+        drdf.head().getDouble(1) === 7.0 / 151200.0)
+      // a PRE-r14 cell store (no basic-partial columns) falls through to
+      // raw for basic aggregates — correct, just unserved — while
+      // quantiles keep serving from the remaining td blobs
+      val cellDir = graft.storage.SketchCells.dirFor(store)
+      val legacy = spark.read.parquet(s"$cellDir/td")
+        .drop("sum_v", "min_v", "max_v", "n_vals").cache()
+      legacy.count()
+      legacy.write.mode("overwrite").partitionBy("day").parquet(s"$cellDir/td")
+      legacy.unpersist()
+      val (ldf, lp) = planOf(
+        s"select avg(value) as av from cpu where time >= 86400 and time < ${3 * 86400}")
+      assert(lp.contains("segments"),
+        "basic agg on a pre-r14 cell store must fall through to raw:\n" + lp.take(800))
+      assert(ldf.head().getDouble(0) === 7.5)
+      val (_, lq) = planOf(
+        s"select percentile_approx(value, 0.5) as p from cpu where time >= 86400 and time < ${3 * 86400}")
+      assert(lq.contains("sketchcells") && !lq.contains("segments"),
+        "quantiles must still serve from a pre-r14 store:\n" + lq.take(800))
+    }
   }
 
   test("small-store served plans merge the day cells with no Exchange; a smaller split size keeps the parallel plan") {
@@ -573,30 +647,98 @@ class PlanSpec extends AnyFunSuite {
       "bucket" -> ("select time_bucket(172800, time) as b, avg(value) as av, count() as n " +
         s"from cpu where time >= 0 and time < ${6 * 86400} " +
         "group by time_bucket(172800, time) order by b", Seq("518400")))
-    // every shape: served cells-only, day-pruned, and equal to the raw
-    // route; `exchange` is whether the merge plans one
-    def check(exchange: Boolean): Unit = shapes.foreach { case (name, (ql, bounds)) =>
+    // a few KB of cells fit one split: the driver merges them, with no
+    // plan to exchange in and no job
+    val days = Map("td" -> Seq(1L, 2L), "tdtag" -> Seq(0L, 1L), "bucket" -> (0L until 6L))
+    shapes.foreach { case (name, (ql, _)) =>
+      assertDriverServed(store, ql, if (name == "tdtag") "served:cells:tdtag" else "served:cells:td",
+        if (name == "tdtag") "tdtag/host" else "td", days(name).map(_ * 86400L))
+    }
+    // a split size below the cells' bytes: the scan's parallel plan and
+    // the merge's Exchange stay, served cells-only, day-pruned, and equal
+    // to the raw route
+    onSparkRoute(shapes.foreach { case (name, (ql, bounds)) =>
       val df = graft.sydraql.Engine.executeOnStore(store, ql,
         graft.sydraql.CompileOptions(now = 0L)).df
       val p = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       assert(p.contains("sketchcells") && !p.contains("segments"), s"$name:\n" + p.take(1200))
-      assert(p.contains("Exchange") === exchange, s"$name:\n$p")
+      assert(p.contains("Exchange"), s"$name:\n$p")
       val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
       assert(pf.contains("day") && bounds.forall(pf.contains),
         s"$name: day bounds must prune cell partitions: $pf")
       assert(df.collect().toSeq === graft.sydraql.Engine.sql(spark, store.source(), ql,
         graft.sydraql.CompileOptions(now = 0L)).collect().toSeq, name)
+    })
+  }
+
+  test("every served cells shape answers the same schema and rows from the driver merge as from the Spark merge") {
+    import graft.sydraql.{CompileOptions, Engine}
+    import org.apache.spark.sql.functions.{col, lit, map, when}
+    import spark.implicits._
+    val store = new SeriesStore(spark, Files.createTempDirectory("graft-cellmatrix").toString)
+    val d = 86400L
+    // cpu: 6 days, 4 points/day, hosts a and b; mem: the same times, every
+    // third point untagged (a NULL tagval) and every fifth value NULL
+    val cpu = (0 until 24).map(i => ("cpu", i.toLong * 21600L, Option(i.toDouble), Option(if (i % 2 == 0) "a" else "b")))
+    val mem = (0 until 24).map(i => ("mem", i.toLong * 21600L,
+      if (i % 5 == 0) None else Some(i * 1.5), if (i % 3 == 0) None else Some(if (i % 2 == 0) "a" else "b")))
+    store.append((cpu ++ mem).toDF("series", "time", "value", "host")
+      .withColumn("tags", when(col("host").isNull, map().cast("map<string,string>"))
+        .otherwise(map(lit("host"), col("host"))))
+      .select("series", "tags", "time", "value"))
+    graft.storage.SketchCells.build(store, graft.storage.SketchCells.dirFor(store),
+      ndvTags = Seq("host"), groupTags = Seq("host"))
+    val sid = store.catalog().filter(col("series") === "cpu").head().getLong(1)
+    val byId = if (sid >= 0) s"by_id($sid)" else "cpu"
+    val w = s"where time >= $d and time < ${5 * d}"
+    val all = s"where time >= 0 and time < ${6 * d}"
+    val basic = "avg(value) as av, sum(value) as sv, count() as n, count(value) as nv, " +
+      "min(value) as mn, max(value) as mx, first(value) as fv, last(value) as lv, " +
+      "delta(value) as dv, rate(value) as rv, percentile_approx(value, 0.5) as p"
+    val shapes = Seq(
+      s"select $basic from cpu $w",
+      s"select $basic from mem $w",
+      s"select avg(value) as av, count() as n from $byId $w",
+      s"select avg(value) as av, count() as n, ndv(tag.host) as nh $w",
+      s"select $basic from cpu $w and tag.host = 'a'",
+      s"select time_bucket(172800, time) as b, $basic from mem $all " +
+        "group by time_bucket(172800, time) order by b desc limit 2 offset 1",
+      s"select time_bucket(172800, time, 86400) as b, avg(value) as av from cpu $all " +
+        "group by time_bucket(172800, time, 86400) order by b",
+      s"select tag.host as h, $basic from mem $w group by tag.host order by h",
+      s"select tag.host as h, avg(value) as av, count() as n from mem $w group by tag.host order by h desc",
+      s"select tag.host as h, ndv(tag.host) as nh, count(value) as nv from mem $w group by tag.host",
+      s"select time_bucket(172800, time) as b, tag.host as h, percentile_approx(value, 0.9) as p " +
+        s"from mem $all group by time_bucket(172800, time), tag.host order by b, h limit 4")
+    val opts = CompileOptions(now = 0L)
+    def answer(ql: String) = {
+      val res = Engine.executeOnStore(store, ql, opts)
+      (res.stats.served.map(_.site), res.df.schema, res.df.collect().toSeq)
     }
-    // a few KB of cells fit one split: one partition, no Exchange
-    check(exchange = false)
-    // a split size below the cells' bytes: the scan's parallel plan and
-    // the merge's Exchange stay, with the same answers
-    val key = "spark.sql.files.maxPartitionBytes"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "512")
-    try check(exchange = true)
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    shapes.foreach { ql =>
+      val (site, schema, rows) = answer(ql)
+      val (sparkSite, sparkSchema, sparkRows) = onSparkRoute(answer(ql))
+      assert((site, sparkSite) === ((Some("driver"), Some("spark"))), ql)
+      assert(schema === sparkSchema, ql)
+      // a grouped shape without ORDER BY has no row order to compare
+      if (ql.contains("order by") || !ql.contains("group by")) assert(rows === sparkRows, ql)
+      else assert(rows.toSet === sparkRows.toSet, ql)
+    }
+    // no cell in the window (0 bytes fit any split, so only the driver
+    // answers): one row for a global aggregate, none grouped — the raw
+    // route's answers
+    val none = s"where time >= ${10 * d} and time < ${12 * d}"
+    Seq(s"select avg(value) as av, count() as n, count(value) as nv from cpu $none",
+      s"select tag.host as h, count() as n from cpu $none group by tag.host order by h").foreach { ql =>
+      val (site, _, rows) = answer(ql)
+      assert(site === Some("driver"), ql)
+      assert(rows === Engine.sql(spark, store.source(), ql, opts).collect().toSeq, ql)
+    }
+    assert(answer(s"select count() as n from cpu $none")._3.map(_.getLong(0)) === Seq(0L))
+    // the untagged cells group under a NULL host, first ascending, last descending
+    assert(answer(shapes(7))._3.map(r => Option(r.getString(0))) === Seq(None, Some("a"), Some("b")))
+    assert(answer(shapes(8))._3.map(r => Option(r.getString(0))) === Seq(Some("b"), Some("a"), None))
   }
 
   test("tag-grouped quantile and bucketed ndv serve from cell tiers, day-pruned; ndv-under-tag serves from theta cells") {
@@ -611,101 +753,125 @@ class PlanSpec extends AnyFunSuite {
     store.append(pts)
     graft.storage.SketchCells.build(store, graft.storage.SketchCells.dirFor(store),
       ndvTags = Seq("host"), groupTags = Seq("host"))
-    def planOf(ql: String) = {
-      val df = graft.sydraql.Engine.executeOnStore(store, ql,
-        graft.sydraql.CompileOptions(now = 0L)).df
-      (df, df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    }
-    // GROUP BY tag.host over a 2-day window: served from the tag tier —
-    // tdtag path present, raw segments absent, day PartitionFilters prune
-    val (tdf, tp) = planOf(
-      "select tag.host as h, percentile_approx(value, 0.5) as p50a " +
-        s"from cpu where time >= 0 and time < ${2 * 86400} " +
-        "group by tag.host order by h")
-    assert(tp.contains("tdtag"), tp.take(1200))
-    assert(!tp.contains("segments"),
-      "tag-grouped served plan must not touch raw points:\n" + tp.take(1200))
-    val tpf = tp.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(tpf.contains("day") && tpf.contains("172800"),
-      s"day bounds must prune tag-cell partitions: $tpf")
-    // days 0-1 hold values 0..7: host a = {0,2,4,6} (p50 3.0 exact at
-    // this size), host b = {1,3,5,7} (4.0)
-    assert(tdf.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-      === Seq(("a", 3.0), ("b", 4.0)))
-    // ndv per day-multiple bucket: served from the td table's theta
-    // cells (2 hosts per bucket, theta exact)
-    val (ndf, np) = planOf(
-      "select time_bucket(172800, time) as b, ndv(tag.host) as nh " +
-        s"from cpu where time >= 0 and time < ${4 * 86400} " +
-        "group by time_bucket(172800, time) order by b")
-    assert(np.contains("sketchcells") && !np.contains("segments"),
-      "bucketed ndv must serve from theta cells:\n" + np.take(1200))
-    assert(ndf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      === Seq((0L, 2.0), (172800L, 2.0)))
-    // NDV under a TAG grouping (r14): the tag tier carries the store's
-    // theta cells, so it SERVES — here ndv of the group key itself is 1
-    // per group, exactly the raw route's answer
-    val (fdf, fp) = planOf(
+    // at default settings the same cells-only shapes merge on the driver
+    val d = 86400L
+    Seq("select tag.host as h, percentile_approx(value, 0.5) as p50a " +
+        s"from cpu where time >= 0 and time < ${2 * d} group by tag.host order by h",
       "select tag.host as h, ndv(tag.host) as nh " +
-        s"from cpu where time >= 0 and time < ${2 * 86400} " +
-        "group by tag.host order by h")
-    assert(fp.contains("tdtag") && !fp.contains("segments"),
-      "ndv under tag grouping must serve from the tag tier's theta cells:\n" + fp.take(800))
-    assert(fdf.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-      === Seq(("a", 1.0), ("b", 1.0)))
-    // …but a key WITHOUT theta cells in the tier falls through to raw
-    val (_, f2) = planOf(
-      "select tag.host as h, ndv(tag.ghost) as ng " +
-        s"from cpu where time >= 0 and time < ${2 * 86400} " +
-        "group by tag.host order by h")
-    assert(f2.contains("segments"),
-      "ndv of an uncovered key must fall through to raw:\n" + f2.take(800))
-    // COMPOSITE bucket × tag grouping: still served from the tag tier —
-    // both keys coarsen the (series, day, value) cells
-    val (cdf, cp) = planOf(
-      "select time_bucket(172800, time) as b, tag.host as h, " +
-        "percentile_approx(value, 0.5) as p50a " +
-        s"from cpu where time >= 0 and time < ${4 * 86400} " +
-        "group by time_bucket(172800, time), tag.host order by b, h")
-    assert(cp.contains("tdtag") && !cp.contains("segments"),
-      "composite grouping must serve from the tag tier:\n" + cp.take(1200))
-    // days 0-3 hold values 0..15; per 2-day bucket each host has 4
-    // values (exact at this size): bucket0 a={0,2,4,6}→3, b={1,3,5,7}→4;
-    // bucket1 a={8,...,14}→11, b={9,...,15}→12
-    assert(cdf.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-      === Seq((0L, "a", 3.0), (0L, "b", 4.0), (172800L, "a", 11.0), (172800L, "b", 12.0)))
-    // r14: DESCENDING order on a served shape sorts the SERVED frame —
-    // still tdtag-only, no raw rescan
-    val (ddf, dp) = planOf(
+        s"from cpu where time >= 0 and time < ${2 * d} group by tag.host order by h",
       "select tag.host as h, percentile_approx(value, 0.5) as p50a " +
-        s"from cpu where time >= 0 and time < ${2 * 86400} " +
-        "group by tag.host order by h desc")
-    assert(dp.contains("tdtag") && !dp.contains("segments"),
-      "desc order on a served shape must stay served:\n" + dp.take(800))
-    assert(ddf.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-      === Seq(("b", 4.0), ("a", 3.0)))
-    // r14 (ADVICE): the SAME group key projected under two aliases is a
-    // valid query the serving path can't express (one alias per key) —
-    // it must fall through to raw, not throw from inside the attempt
-    val (dupDf, dupP) = planOf(
-      "select tag.host as h1, tag.host as h2, percentile_approx(value, 0.5) as p " +
-        s"from cpu where time >= 0 and time < ${2 * 86400} " +
-        "group by tag.host order by h1")
-    assert(dupP.contains("segments"),
-      "duplicate group-key aliases must fall through to raw:\n" + dupP.take(800))
-    assert(dupDf.collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      === Seq(("a", "a"), ("b", "b")))
-    // r14: basic aggregates under a tag grouping serve from the tag
-    // tier's partials (host a days 0-1 = {0,2,4,6}: avg 3, n 4)
-    val (tbdf, tbp) = planOf(
+        s"from cpu where time >= 0 and time < ${2 * d} group by tag.host order by h desc",
       "select tag.host as h, avg(value) as av, count() as n " +
-        s"from cpu where time >= 0 and time < ${2 * 86400} " +
-        "group by tag.host order by h")
-    assert(tbp.contains("tdtag") && !tbp.contains("segments"),
-      "tag-grouped basic aggs must serve from the tag tier:\n" + tbp.take(800))
-    assert(tbdf.collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSeq
-      === Seq(("a", 3.0, 4L), ("b", 4.0, 4L)))
+        s"from cpu where time >= 0 and time < ${2 * d} group by tag.host order by h").foreach { ql =>
+      assertDriverServed(store, ql, "served:cells:tdtag", "tdtag/host", Seq(0L, d))
+    }
+    assertDriverServed(store,
+      "select time_bucket(172800, time) as b, tag.host as h, percentile_approx(value, 0.5) as p50a " +
+        s"from cpu where time >= 0 and time < ${4 * d} " +
+        "group by time_bucket(172800, time), tag.host order by b, h",
+      "served:cells:tdtag", "tdtag/host", (0 until 4).map(_ * d))
+    assertDriverServed(store,
+      "select time_bucket(172800, time) as b, ndv(tag.host) as nh " +
+        s"from cpu where time >= 0 and time < ${4 * d} group by time_bucket(172800, time) order by b",
+      "served:cells:td", "td", (0 until 4).map(_ * d))
+    // the plan pins below read the Spark merge's plan
+    onSparkRoute {
+      def planOf(ql: String) = {
+        val df = graft.sydraql.Engine.executeOnStore(store, ql,
+          graft.sydraql.CompileOptions(now = 0L)).df
+        (df, df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+      }
+      // GROUP BY tag.host over a 2-day window: served from the tag tier —
+      // tdtag path present, raw segments absent, day PartitionFilters prune
+      val (tdf, tp) = planOf(
+        "select tag.host as h, percentile_approx(value, 0.5) as p50a " +
+          s"from cpu where time >= 0 and time < ${2 * 86400} " +
+          "group by tag.host order by h")
+      assert(tp.contains("tdtag"), tp.take(1200))
+      assert(!tp.contains("segments"),
+        "tag-grouped served plan must not touch raw points:\n" + tp.take(1200))
+      val tpf = tp.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
+      assert(tpf.contains("day") && tpf.contains("172800"),
+        s"day bounds must prune tag-cell partitions: $tpf")
+      // days 0-1 hold values 0..7: host a = {0,2,4,6} (p50 3.0 exact at
+      // this size), host b = {1,3,5,7} (4.0)
+      assert(tdf.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+        === Seq(("a", 3.0), ("b", 4.0)))
+      // ndv per day-multiple bucket: served from the td table's theta
+      // cells (2 hosts per bucket, theta exact)
+      val (ndf, np) = planOf(
+        "select time_bucket(172800, time) as b, ndv(tag.host) as nh " +
+          s"from cpu where time >= 0 and time < ${4 * 86400} " +
+          "group by time_bucket(172800, time) order by b")
+      assert(np.contains("sketchcells") && !np.contains("segments"),
+        "bucketed ndv must serve from theta cells:\n" + np.take(1200))
+      assert(ndf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        === Seq((0L, 2.0), (172800L, 2.0)))
+      // NDV under a TAG grouping (r14): the tag tier carries the store's
+      // theta cells, so it SERVES — here ndv of the group key itself is 1
+      // per group, exactly the raw route's answer
+      val (fdf, fp) = planOf(
+        "select tag.host as h, ndv(tag.host) as nh " +
+          s"from cpu where time >= 0 and time < ${2 * 86400} " +
+          "group by tag.host order by h")
+      assert(fp.contains("tdtag") && !fp.contains("segments"),
+        "ndv under tag grouping must serve from the tag tier's theta cells:\n" + fp.take(800))
+      assert(fdf.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+        === Seq(("a", 1.0), ("b", 1.0)))
+      // …but a key WITHOUT theta cells in the tier falls through to raw
+      val (_, f2) = planOf(
+        "select tag.host as h, ndv(tag.ghost) as ng " +
+          s"from cpu where time >= 0 and time < ${2 * 86400} " +
+          "group by tag.host order by h")
+      assert(f2.contains("segments"),
+        "ndv of an uncovered key must fall through to raw:\n" + f2.take(800))
+      // COMPOSITE bucket × tag grouping: still served from the tag tier —
+      // both keys coarsen the (series, day, value) cells
+      val (cdf, cp) = planOf(
+        "select time_bucket(172800, time) as b, tag.host as h, " +
+          "percentile_approx(value, 0.5) as p50a " +
+          s"from cpu where time >= 0 and time < ${4 * 86400} " +
+          "group by time_bucket(172800, time), tag.host order by b, h")
+      assert(cp.contains("tdtag") && !cp.contains("segments"),
+        "composite grouping must serve from the tag tier:\n" + cp.take(1200))
+      // days 0-3 hold values 0..15; per 2-day bucket each host has 4
+      // values (exact at this size): bucket0 a={0,2,4,6}→3, b={1,3,5,7}→4;
+      // bucket1 a={8,...,14}→11, b={9,...,15}→12
+      assert(cdf.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
+        === Seq((0L, "a", 3.0), (0L, "b", 4.0), (172800L, "a", 11.0), (172800L, "b", 12.0)))
+      // r14: DESCENDING order on a served shape sorts the SERVED frame —
+      // still tdtag-only, no raw rescan
+      val (ddf, dp) = planOf(
+        "select tag.host as h, percentile_approx(value, 0.5) as p50a " +
+          s"from cpu where time >= 0 and time < ${2 * 86400} " +
+          "group by tag.host order by h desc")
+      assert(dp.contains("tdtag") && !dp.contains("segments"),
+        "desc order on a served shape must stay served:\n" + dp.take(800))
+      assert(ddf.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+        === Seq(("b", 4.0), ("a", 3.0)))
+      // r14 (ADVICE): the SAME group key projected under two aliases is a
+      // valid query the serving path can't express (one alias per key) —
+      // it must fall through to raw, not throw from inside the attempt
+      val (dupDf, dupP) = planOf(
+        "select tag.host as h1, tag.host as h2, percentile_approx(value, 0.5) as p " +
+          s"from cpu where time >= 0 and time < ${2 * 86400} " +
+          "group by tag.host order by h1")
+      assert(dupP.contains("segments"),
+        "duplicate group-key aliases must fall through to raw:\n" + dupP.take(800))
+      assert(dupDf.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+        === Seq(("a", "a"), ("b", "b")))
+      // r14: basic aggregates under a tag grouping serve from the tag
+      // tier's partials (host a days 0-1 = {0,2,4,6}: avg 3, n 4)
+      val (tbdf, tbp) = planOf(
+        "select tag.host as h, avg(value) as av, count() as n " +
+          s"from cpu where time >= 0 and time < ${2 * 86400} " +
+          "group by tag.host order by h")
+      assert(tbp.contains("tdtag") && !tbp.contains("segments"),
+        "tag-grouped basic aggs must serve from the tag tier:\n" + tbp.take(800))
+      assert(tbdf.collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSeq
+        === Seq(("a", 3.0, 4L), ("b", 4.0, 4L)))
+    }
   }
 
   test("at-rest IVF probe scan prunes index partitions; result matches the in-memory path") {

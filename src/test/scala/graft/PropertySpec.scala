@@ -42,6 +42,101 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("driver merges of cell partials and served results equal the Spark merge on random cells") {
+    import graft.storage.SketchCells
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.graftshim.GraftShim
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val spark = TestSpark.spark
+    val step = 2 * 86400L
+    // NULL, NaN and both zeros beside ordinary values; one point per
+    // (series, hour) slot of three days, so series share equal `t`
+    val value: Gen[Option[Double]] = Gen.frequency(
+      2 -> Gen.const(None), 1 -> Gen.const(Some(Double.NaN)), 1 -> Gen.const(Some(-0.0)),
+      1 -> Gen.const(Some(0.0)), 4 -> Gen.choose(-5, 5).map(i => Some(i.toDouble)),
+      2 -> Gen.choose(-1e3, 1e3).map(Some(_)))
+    val point = for {
+      s <- Gen.oneOf("cpu", "mem", "io")
+      host <- Gen.oneOf(Some("a"), Some("b"), None) // None: no tag, a NULL tagval
+      hour <- Gen.choose(0L, 71L)
+      v <- value
+    } yield Row(s, host.fold(Map.empty[String, String])(h => Map("host" -> h)), hour * 3600L,
+      v.map(Double.box).orNull)
+    val input = for {
+      pts <- Gen.choose(1, 40).flatMap(Gen.listOfN(_, point))
+      grouping <- Gen.choose(0, 2) // global, by tagval, by 2-day bucket
+      lo <- Gen.choose(0, 3)
+      days <- Gen.choose(0, 3) // 0 days or a window past the data: no cell
+    } yield (pts, grouping, lo, days)
+    val schema = StructType(Seq(StructField("series", StringType), StructField("tags",
+      MapType(StringType, StringType)), StructField("time", LongType), StructField("value", DoubleType)))
+    val parts = SketchCells.partials(Seq("host"))
+    def same(t: DataType, a: Any, b: Any): Boolean = (a, b, t) match {
+      case (null, null, _) => true
+      case (null, _, _) | (_, null, _) => false
+      case (x: Double, y: Double, _) =>
+        (x.isNaN && y.isNaN) || x == y || math.abs(x - y) <= 1e-9 * math.max(math.abs(x), math.abs(y))
+      case (x: Long, y: Long, _) => x == y
+      case (x: Array[Byte], y: Array[Byte], _) => java.util.Arrays.equals(x, y)
+      case _ => TypeUtils.getInterpretedOrdering(t).equiv(a, b)
+    }
+    val prop = Prop.forAll(input) { case (pts, grouping, lo, days) =>
+      val cells = SketchCells.cellsOf(spark.createDataFrame(pts.asJava, schema)
+        .withColumn("series_id", graft.core.Functions.seriesId(col("series"), col("tags"))),
+        Some("host"), Seq("host"))
+      val cs = cells.schema
+      val window = cells.queryExecution.executedPlan.executeCollect().toSeq.filter { r =>
+        val d = r.getLong(cs.fieldIndex("day")); d >= lo * 86400L && d < (lo + days) * 86400L
+      }
+      val at = cs.fieldIndex(_: String)
+      // the Spark merge over the same rows in the same order: one partition
+      val frame = GraftShim.localFrame(spark, cs, window).coalesce(1)
+      val (sparkKey, localKey) = grouping match {
+        case 0 => (Nil, None)
+        case 1 => (Seq(col("tagval").as("k")),
+          Some((r: InternalRow) => Seq(if (r.isNullAt(at("tagval"))) null else r.getUTF8String(at("tagval")))))
+        case _ => (Seq(graft.core.Functions.timeBucket(lit(step), col("day")).as("k")),
+          Some((r: InternalRow) => Seq(graft.core.Functions.timeBucketOf(step, r.getLong(at("day")), 0L))))
+      }
+      val aggs = parts.map(p => p.merge.as("__" + p.name))
+      val sparkMerged: DataFrame =
+        if (sparkKey.isEmpty) frame.agg(aggs.head, aggs.tail: _*)
+        else frame.groupBy(sparkKey: _*).agg(aggs.head, aggs.tail: _*)
+      val local = SketchCells.mergeLocal(window, localKey,
+        parts.map(p => (p, at(p.name), cs(p.name).dataType)))
+      val localMerged = GraftShim.localFrame(spark, sparkMerged.schema, local)
+      val off = if (sparkKey.isEmpty) 0 else 1
+      def byKey(rows: Seq[InternalRow]) = rows.map(r =>
+        (if (off == 0) None else Option(r.get(0, sparkMerged.schema(0).dataType))) -> r).toMap
+      val (want, got) = (byKey(sparkMerged.queryExecution.executedPlan.executeCollect().toSeq),
+        byKey(local))
+      val partialsAgree = want.keySet == got.keySet && want.forall { case (k, w) =>
+        parts.zipWithIndex.forall { case (p, i) =>
+          val t = cs(p.name).dataType
+          same(t, w.get(i + off, t), got(k).get(i + off, t))
+        }
+      }
+      // each served result, projected from either merge
+      val served = SketchCells.servedAggs.values.toSeq ++
+        Seq(SketchCells.quantileServed(0.5), SketchCells.ndvServed("host"))
+      def results(df: DataFrame) = df.select(
+        (if (off == 0) Nil else Seq(col("k"))) ++ served.zipWithIndex.map { case (a, i) =>
+          a.result(n => col("__" + n)).as(s"r$i") }: _*).collect()
+        .map(r => (if (off == 0) None else Option(r.get(0))) -> r).toMap
+      val (wr, gr) = (results(sparkMerged), results(localMerged))
+      val resultsAgree = wr.keySet == gr.keySet && wr.forall { case (k, w) =>
+        served.indices.forall(i => same(DoubleType, w.get(i + off), gr(k).get(i + off)))
+      }
+      (grouping != 0 || got.size == 1) && partialsAgree && resultsAgree
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   test("time_bucket = floor division for any ts and positive step") {
     check(Prop.forAll(Gen.chooseNum(-4102444800L, 4102444800L), Gen.chooseNum(1L, 864000L)) {
       (ts: Long, step: Long) =>

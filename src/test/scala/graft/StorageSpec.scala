@@ -1200,19 +1200,20 @@ class StorageSpec extends AnyFunSuite {
       s"select tag.host as h, percentile_approx(value, 0.5) as p " +
         s"from cpu where time >= 0 and time < ${2 * 86400} " +
         "group by tag.host order by h",
-      CompileOptions(now = 0L)).df
+      CompileOptions(now = 0L))
     // built WITHOUT a tag tier: the tag grouping falls through to raw
     SketchCells.build(store, dir)
-    assert(tagServed().queryExecution.explainString(
+    assert(tagServed().df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
       .contains("segments"))
     // REBUILD with the tag tier: the generation bump must make serving
     // see it immediately (a stale exists/groupTags memo would keep
-    // falling through)
+    // falling through); the driver merge it takes names the tier it read
     SketchCells.build(store, dir, groupTags = Seq("host"))
-    assert(tagServed().queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-      .contains("tdtag"), "rebuild must invalidate the serving-metadata memo")
+    val rebuilt = tagServed().stats
+    assert(rebuilt.route === "served:cells:tdtag" &&
+      rebuilt.served.exists(_.table.endsWith("sketchcells/tdtag/host")),
+      s"rebuild must invalidate the serving-metadata memo: $rebuilt")
     // skip-manifest half: a routed probe memoizes existence + filesTotal
     SkipIndex.build(store, SkipIndex.dirFor(store))
     def probe() = Engine.executeOnStore(store,
@@ -1220,10 +1221,10 @@ class StorageSpec extends AnyFunSuite {
       CompileOptions(now = 0L)).df.collect()
     // warm every memo this query touches, then pin: repeated queries —
     // served AND routed — cost ZERO further metadata loads
-    tagServed().collect(); probe()
+    tagServed().df.collect(); probe()
     val before = MetaCache.loads.get()
-    tagServed().collect(); probe()
-    tagServed().collect(); probe()
+    tagServed().df.collect(); probe()
+    tagServed().df.collect(); probe()
     assert(MetaCache.loads.get() === before,
       s"repeated queries must not reload serving metadata " +
         s"(loaded ${MetaCache.loads.get() - before} more)")
@@ -1231,7 +1232,7 @@ class StorageSpec extends AnyFunSuite {
     // contract), and only then
     SketchCells.refresh(store, dir, Seq(0L))
     SkipIndex.refresh(store, SkipIndex.dirFor(store), Seq(0L))
-    tagServed().collect(); probe()
+    tagServed().df.collect(); probe()
     assert(MetaCache.loads.get() > before,
       "a refresh must invalidate the memo so serving re-reads metadata")
   }
@@ -1683,14 +1684,45 @@ class StorageSpec extends AnyFunSuite {
     }
     def raw(lo: Long, hi: Long) = Engine.sql(spark, store.source(), ql(lo, hi), opts).collect().toSeq
     served(0, 40) // warm-up: the per-generation memo lists the table once
-    // a 32-day window: 32 day directories, read serially on the driver
+    // a 32-day window: 32 day directories, listed and read on the driver,
+    // where the cells (a few KB) merge with no Spark job
     val (got, jobs) = TestSpark.jobsDuring(served(3, 35))
-    assert(jobs.size === 1, jobs.mkString(" | "))
+    assert(jobs.isEmpty, jobs.mkString(" | "))
     assert(got === raw(3, 35))
     assert(served(0, 40) === raw(0, 40))
     // a window past the last cell day reads an empty frame of the memo's schema
     assert(served(50, 60) === raw(50, 60))
     assert(served(50, 60).head.getLong(1) === 0L)
+  }
+
+  test("a cell day rewritten behind the writer hook sends the next served query to the Spark merge, which reads the new cells") {
+    import graft.storage.SketchCells
+    import spark.implicits._
+    val store = new SeriesStore(spark, tmp())
+    val d = 86400L
+    def pts(xs: Seq[(Long, Double)]) = xs.toDF("time", "value")
+      .withColumn("series", lit("m")).withColumn("tags", map().cast("map<string,string>"))
+      .select("series", "tags", "time", "value")
+    // 4 days, 4 points a day, values 0..15
+    store.append(pts((0 until 16).map(i => (i * 21600L, i.toDouble))))
+    val dir = SketchCells.dirFor(store)
+    SketchCells.build(store, dir)
+    val opts = CompileOptions(now = 0L)
+    val ql = s"select count() as n, sum(value) as s from m where time >= 0 and time < ${2 * d}"
+    def served() = {
+      val res = Engine.executeOnStore(store, ql, opts)
+      assert(res.stats.route === "served:cells:td")
+      (res.stats.served.get.site, res.df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    }
+    assert(served() === (("driver", Seq((8L, 28.0)))))
+    // day 1's cells rewritten in place without the writer hook: 7 points
+    // of 100..106 — a new file name and length under day=86400
+    SketchCells.cellsOf(pts((0 until 7).map(j => (d + j * 3600L, 100.0 + j)))
+        .withColumn("series_id", graft.core.Functions.seriesId(col("series"), col("tags"))),
+        None, Nil)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").parquet(s"$dir/td")
+    assert(served() === (("spark", Seq((4L + 7L, 6.0 + 721.0)))))
   }
 
   test("compact after a crash mid-swap: parked hours restored, every row kept, deduped") {

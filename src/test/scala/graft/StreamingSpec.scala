@@ -9,6 +9,12 @@ import java.nio.file.Files
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** The cell table a served answer merged (its read set's table; "" on
+    * the raw route), whichever site merged it.
+    */
+  private def cellTable(res: graft.sydraql.QueryResult): String =
+    res.stats.served.fold("")(_.table)
+
   private def ndjsonDir(lines: Seq[String], dir: java.nio.file.Path = null, name: String = "a.ndjson"): java.nio.file.Path = {
     val d = if (dir == null) Files.createTempDirectory("graft-stream") else dir
     Files.write(d.resolve(name), lines.mkString("\n").getBytes)
@@ -1602,13 +1608,12 @@ class StreamingSpec extends AnyFunSuite {
     // END-TO-END: the engine routes percentile_approx through the
     // maintained cells (day-aligned window) and the merged-digest answer
     // sits inside the exact ±0.05-quantile window of the raw data
-    val served = graft.sydraql.Engine.executeOnStore(store,
+    val servedRes = graft.sydraql.Engine.executeOnStore(store,
       s"select percentile_approx(value, 0.5) as p50a from api " +
         s"where time >= 0 and time < ${3 * b}",
-      graft.sydraql.CompileOptions(now = 0L)).df
-    assert(served.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-      .contains("sketchcells"), "query must serve from the maintained cells")
+      graft.sydraql.CompileOptions(now = 0L))
+    assert(cellTable(servedRes).contains("sketchcells"), "query must serve from the maintained cells")
+    val served = servedRes.df
     val p50 = served.head().getDouble(0)
     val apiVals = pts.filter(_._1 == "api").map(_._3).sorted
     def q(f: Double) = apiVals((f * (apiVals.length - 1)).round.toInt)
@@ -1678,13 +1683,12 @@ class StreamingSpec extends AnyFunSuite {
     // maintained tier within the exact band (raw store lacks the wave —
     // a raw fallthrough would give the WRONG per-host medians here, so
     // this also proves the route)
-    val served = graft.sydraql.Engine.executeOnStore(store,
+    val servedRes = graft.sydraql.Engine.executeOnStore(store,
       s"select tag.host as h, percentile_approx(value, 0.5) as p50a from api " +
         s"where time >= 0 and time < ${3 * b} group by tag.host order by h",
-      graft.sydraql.CompileOptions(now = 0L)).df
-    assert(served.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-      .contains("tdtag"), "tag-grouped query must serve from the maintained tier")
+      graft.sydraql.CompileOptions(now = 0L))
+    assert(cellTable(servedRes).contains("tdtag"), "tag-grouped query must serve from the maintained tier")
+    val served = servedRes.df
     val got = served.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     for (h <- Seq("a", "b")) {
       val vals = all.filter(_._4 == h).map(_._3).sorted
@@ -1696,14 +1700,13 @@ class StreamingSpec extends AnyFunSuite {
     // the raw store lacks the wave, so correct sums/counts/extremes can
     // only come from the maintained tier (sum of integer-valued doubles
     // is exact, no rounding needed)
-    val basics = graft.sydraql.Engine.executeOnStore(store,
+    val basicsRes = graft.sydraql.Engine.executeOnStore(store,
       s"select tag.host as h, sum(value) as sv, count() as n, " +
         s"min(value) as mn, max(value) as mx from api " +
         s"where time >= 0 and time < ${3 * b} group by tag.host order by h",
-      graft.sydraql.CompileOptions(now = 0L)).df
-    assert(basics.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-      .contains("tdtag"), "basic aggs must serve from the maintained tier")
+      graft.sydraql.CompileOptions(now = 0L))
+    assert(cellTable(basicsRes).contains("tdtag"), "basic aggs must serve from the maintained tier")
+    val basics = basicsRes.df
     val gotB = basics.collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))).toMap
     for (h <- Seq("a", "b")) {
@@ -1788,26 +1791,24 @@ class StreamingSpec extends AnyFunSuite {
       .awaitTermination(120000)
     // the engine's global ndv serves from the maintained theta cells —
     // 3 hosts in the sparse-exact regime, the raw store lacks the wave
-    val served = graft.sydraql.Engine.executeOnStore(store,
+    val servedRes = graft.sydraql.Engine.executeOnStore(store,
       s"select ndv(tag.host) as nd, count() as n from api " +
         s"where time >= 0 and time < ${3 * b}",
-      graft.sydraql.CompileOptions(now = 0L)).df
-    assert(served.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-      .contains("sketchcells"), "ndv must serve from the maintained cells")
+      graft.sydraql.CompileOptions(now = 0L))
+    assert(cellTable(servedRes).contains("sketchcells"), "ndv must serve from the maintained cells")
+    val served = servedRes.df
     val row = served.head()
     assert(row.getDouble(0) === 3.0,
       s"maintained theta must see streamed host c: ndv ${row.getDouble(0)}")
     assert(row.getLong(1) === (seed.size + wave.size).toLong)
     // the tag tier's theta cells were maintained too: ndv-under-tag
     // serves per host, and host c exists ONLY in the stream
-    val perHost = graft.sydraql.Engine.executeOnStore(store,
+    val perHostRes = graft.sydraql.Engine.executeOnStore(store,
       s"select tag.host as h, ndv(tag.host) as nd from api " +
         s"where time >= 0 and time < ${3 * b} group by tag.host order by h",
-      graft.sydraql.CompileOptions(now = 0L)).df
-    assert(perHost.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-      .contains("tdtag"), "ndv-under-tag must serve from the maintained tier")
+      graft.sydraql.CompileOptions(now = 0L))
+    assert(cellTable(perHostRes).contains("tdtag"), "ndv-under-tag must serve from the maintained tier")
+    val perHost = perHostRes.df
     assert(perHost.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
       === Seq(("a", 1.0), ("b", 1.0), ("c", 1.0)))
   }
